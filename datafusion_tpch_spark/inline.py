@@ -155,6 +155,12 @@ def inline_table(spark: SparkSession, rows, schema: str) -> DataFrame:
     driver-side literal tables; see module docstring for why.
     """
     cols = _split_schema(schema)
+    for i, row in enumerate(rows):
+        if len(row) != len(cols):
+            raise ValueError(
+                f"inline_table: row {i} has {len(row)} values but the "
+                f"schema has {len(cols)} columns"
+            )
     names = ", ".join(n for n, _ in cols)
     casts = ", ".join(f"CAST({n} AS {t}) AS {n}" for n, t in cols)
 

@@ -39,6 +39,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .fanout import tasks_for
+
 # Schema for a multimodal asset table: blob + typed metadata. Metadata is
 # columnar (not a map) so Catalyst can prune/push down on it.
 ASSET_SCHEMA = StructType(
@@ -2488,16 +2490,15 @@ def partition_for_blobs(df: DataFrame, target_rows_per_partition: int = 1024) ->
     ``target_rows_per_partition`` rows: executor memory for decode UDFs is
     bounded by rows × blob size, not by the byte sizing
     ``spark.sql.files.maxPartitionBytes`` does on the compressed footer.
+    The width is ``tasks_for(rows)``, the fronts' rule without their
+    parallelism cap (the cap would break the row bound).
 
     Costs one count() job (cheap parquet-metadata scan) + one shuffle —
     call it once in front of a decode pipeline, not per operator.
     """
     if target_rows_per_partition < 1:
         raise ValueError(f"target_rows_per_partition must be >= 1, got {target_rows_per_partition}")
-    rows = df.count()
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    n = max(-(-rows // target_rows_per_partition), parallelism, 1)
-    return df.repartition(n)
+    return df.repartition(tasks_for(df.count(), target_rows_per_partition))
 
 
 # ------------------------------------------- perceptual-hash image dedup

@@ -13,6 +13,7 @@ from .audit import (  # noqa: F401
     broadcast_join_count,
     cached_build_exchange_count,
     exchange_count,
+    kernel_front_widths,
     plan_string,
     pushed_filters,
     scan_columns,

@@ -185,6 +185,56 @@ def unbounded_global_windows(df: DataFrame) -> list[str]:
     return offenders
 
 
+def _plan_children(node) -> list:
+    """Children of a JVM SparkPlan node, looking through the wrappers that
+    hide them: the adaptive root, query stages, reused exchanges and
+    cached relations."""
+    kind = node.getClass().getSimpleName()
+    if kind == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    if kind.endswith("QueryStageExec"):
+        return [node.plan()]
+    if kind == "ReusedExchangeExec":
+        return [node.child()]
+    if kind == "InMemoryTableScanExec":
+        return [node.relation().cachedPlan()]
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def kernel_front_widths(df: DataFrame) -> list[int]:
+    """Input partition count of every mapInPandas node fed by a
+    ``kernel_front``: the nearest exchange below the node (through
+    single-child nodes) is a user-numbered range exchange with a sort
+    above it.  AQE does not coalesce user-numbered exchanges, so the
+    initial plan's count is the one that runs."""
+    widths = []
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        kids = _plan_children(node)
+        stack.extend(kids)
+        if node.getClass().getSimpleName() != "MapInPandasExec":
+            continue
+        sorted_, below = False, kids
+        while len(below) == 1:
+            cur = below[0]
+            kind = cur.getClass().getSimpleName()
+            if kind == "ShuffleExchangeExec":
+                part = cur.outputPartitioning()
+                if (
+                    sorted_
+                    and cur.shuffleOrigin().toString() == "REPARTITION_BY_NUM"
+                    and part.getClass().getSimpleName()
+                    in ("RangePartitioning", "SinglePartition$")
+                ):
+                    widths.append(part.numPartitions())
+                break
+            sorted_ = sorted_ or kind == "SortExec"
+            below = _plan_children(cur)
+    return widths
+
+
 @dataclass
 class PlanAudit:
     name: str

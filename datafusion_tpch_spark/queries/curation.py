@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import hashing, text
+from ..operators.fanout import kernel_front
 from . import QuerySpec
 from .extensions import _t
 
@@ -1074,10 +1075,7 @@ def _bpe_vocab_tok(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         (docs,) = _t(spark, sf_dir, "documents")
-        # single-file fixtures scan as 1 partition — spread pre-explode
-        spread = docs.select("doc_id", "text").repartitionByRange(
-            spark.sparkContext.defaultParallelism, "doc_id"
-        )
+        spread = kernel_front(docs, "text")
         wpd = spread.select(
             "doc_id", F.explode(text.words(F.col("text"))).alias("word")
         )
@@ -1099,14 +1097,11 @@ def _bpe_doc_tokens_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The uncached rollup (vocab fold + per-doc join), materialized once
     per (session, fixture) by the caller."""
     (docs,) = _t(spark, sf_dir, "documents")
-    # single-file fixtures scan as 1 partition — spread before the explode.
     # (Measured alternative: checkpointing the (doc_id, word, cnt) table —
     # one corpus explode total — materializes |docs|·|words-per-doc| rows
     # and came out ~0.9 s SLOWER at sf0.1; the explode rerun is cheaper
     # than that write+read.)
-    spread = docs.select("doc_id", "text").repartitionByRange(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    spread = kernel_front(docs, "text")
     wpd = spread.select(
         "doc_id", F.explode(text.words(F.col("text"))).alias("word")
     )
@@ -1227,9 +1222,7 @@ def _write_bpe_artifacts(spark: SparkSession, sf_dir: str, path: str,
 
     artifact_io.delete(path.rstrip("/") + "/manifest.json", spark=spark)
     (docs,) = _t(spark, sf_dir, "documents")
-    spread = docs.select("doc_id", "text").repartitionByRange(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    spread = kernel_front(docs, "text")
     vocab = (
         spread.select(F.explode(text.words(F.col("text"))).alias("word"))
         .groupBy("word")
@@ -1295,9 +1288,7 @@ def docs_bpe_persisted_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not current:
         _write_bpe_artifacts(spark, sf_dir, path, fp, params)
     vocab_tok = spark.read.parquet(path.rstrip("/") + "/vocab_tok")
-    spread = docs.select("doc_id", "text").repartitionByRange(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    spread = kernel_front(docs, "text")
     wpd = spread.select(
         "doc_id", F.explode(text.words(F.col("text"))).alias("word")
     )
@@ -1538,40 +1529,34 @@ def docs_dsir_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one corpus pass explodes words to hash buckets (narrow); the
     feature table is FIXED at {b} buckets however large the corpus — it
-    broadcasts; totals are one scalar aggregate; scoring is one hash
+    broadcasts with its totals (a window over the B rows); scoring is one hash
     aggregation keyed on doc_id.  No vocabulary-sized state anywhere —
     the hashing trick is exactly what makes DSIR run at web scale.
     """
-    from .extensions import _docs_by_range
-
     (docs,) = _t(spark, sf_dir, "documents")
-    # range-partition the one-row-group scan so the word explode feeding
-    # both distribution estimates runs on every core (guide §2.5)
-    inst = _docs_by_range(docs, "lang", "text").select(
+    inst = kernel_front(docs, "lang", "text").select(
         "doc_id",
         (F.col("lang") == "en").alias("is_target"),
         F.explode(text.words(F.col("text"))).alias("w"),
     ).select(
         "doc_id", "is_target",
         (hashing.md5_int(F.col("w")) % _DSIR_B).alias("bucket"),
-    # vacuous (md5 of a never-null exploded word): the scored join infers
-    # isnotnull(bucket) on its buckets branch while the totals branch has
-    # no such filter, so without this the two (bucket) exchange subtrees
-    # differ and the corpus-wide explode ran TWICE (the q15/tfidf
-    # canonical-subtree lesson; executed pair in
-    # plans/r15/docs_dsir_score_{before,after}_exec.txt)
-    ).where(F.col("bucket").isNotNull())
+    )
+    # the totals ride on the bucket table as a window over its <= B rows
+    # (one task at any scale): the table then has ONE consumer, so its
+    # corpus-wide explode runs once whether or not an exchange sits below
+    whole = Window.partitionBy()
     buckets = inst.groupBy("bucket").agg(
         F.sum(F.when(F.col("is_target"), 1).otherwise(0)).alias("c_t"),
         F.sum(F.when(F.col("is_target"), 0).otherwise(1)).alias("c_r"),
-    )
-    totals = buckets.agg(
-        F.sum("c_t").alias("t_total"), F.sum("c_r").alias("r_total")
+    ).select(
+        "bucket", "c_t", "c_r",
+        F.sum("c_t").over(whole).alias("t_total"),
+        F.sum("c_r").over(whole).alias("r_total"),
     )
     scored = (
         inst.filter(~F.col("is_target"))
         .join(F.broadcast(buckets), "bucket")
-        .crossJoin(F.broadcast(totals))
         .withColumn(
             "term",
             (F.col("c_t") + 1) * (F.col("r_total") + _DSIR_B)

@@ -18,41 +18,13 @@ from pyspark.sql.window import Window
 from ..catalog import load_table
 from ..functions import hashing, text, vectors
 from ..functions.exact import davg, davg_sql, dsum, dsum_sql
+from ..operators.fanout import kernel_front
 from . import QuerySpec
 
 
 def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return [load_table(spark, sf_dir, n) for n in names]
-
-
-def _docs_by_range(docs: DataFrame, *cols: str) -> DataFrame:
-    """Range-partition (by doc_id) + sort-within-partitions front-end for
-    the codec-kernel gates — the same exchange the PNG/GIF/JPEG roundtrip
-    gates already carry, factored out.  Two reasons (guide §2.5 input
-    skew, §2.4 redundant exchanges): (1) the fixture table is ONE parquet
-    row group, so without this exchange every downstream mapInPandas
-    codec kernel runs single-threaded on the one scan task — at 100 TB
-    the scan would be thousands of splits and the exchange a no-op-cost
-    redistribution, but a one-file input must be repartitioned right
-    after the read; (2) range partitioning + in-partition sort makes the
-    kernel output GLOBALLY ordered by doc_id (mapInPandas preserves
-    per-partition order, collect concatenates partitions in range order),
-    so the per-row gates need no trailing orderBy — which would otherwise
-    RE-EXECUTE the whole kernel chain once more in the range-sampling job.
-    Partition count follows the session's parallelism, not a constant.
-
-    CONTRACT CAVEAT (round-14 advisor): the global order of (2) is a
-    property of Spark's current execution (partition enumeration order +
-    mapInPandas order preservation), not a DataFrame API guarantee.  The
-    gates riding this front therefore declare their output UNORDERED —
-    the driver/oracle comparison is order-insensitive by contract — and
-    an order-sensitive external consumer must add its own orderBy."""
-    sc = docs.sparkSession.sparkContext
-    projected = docs.select("doc_id", *cols)
-    return projected.repartitionByRange(
-        sc.defaultParallelism, "doc_id"
-    ).sortWithinPartitions("doc_id")
 
 
 # Shared-intermediate materialization: several gate families derive the
@@ -288,11 +260,8 @@ def _minhash_sig_of(docs: DataFrame) -> DataFrame:
 
 
 def _minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # range-partition the one-row-group fixture scan so the shingle
-    # explode + md5 map work runs on every core, not the single scan
-    # task (guide §2.5 input skew; the distinct below shuffles anyway)
     (docs,) = _t(spark, sf_dir, "documents")
-    return _minhash_sig_of(_docs_by_range(docs, "text"))
+    return _minhash_sig_of(kernel_front(docs, "text"))
 
 
 def _minhash_sig_sql() -> str:
@@ -430,7 +399,7 @@ def _lsh_buckets_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _session_table(
         spark, sf_dir, "lsh_buckets_raw",
         lambda: _buckets_of(
-            _docs_by_range(_t(spark, sf_dir, "documents")[0], "text")
+            kernel_front(_t(spark, sf_dir, "documents")[0], "text")
         ),
     )
 
@@ -536,10 +505,7 @@ def dedup_persisted_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     params = {"bands": _MH_BANDS, "rows": _MH_ROWS, "split": _INCR_SPLIT}
     if not li.lsh_index_is_current(path, fp, params, spark=spark):
         _build_lsh_bucket_index(docs, path, fp, params)
-    # range-partition the batch before hashing: the fixture scan is one
-    # row group, so the shingle/minhash map work would otherwise run on
-    # the single scan task (guide §2.5)
-    incoming = _docs_by_range(docs, "text").filter(
+    incoming = kernel_front(docs, "text").filter(
         F.col("doc_id") >= _INCR_SPLIT
     )
     cells = (
@@ -559,7 +525,7 @@ def _build_lsh_bucket_index(docs: DataFrame, path: str, fp: str,
     prove the serve path runs from artifacts alone."""
     from ..operators import lsh_index as li
 
-    corpus = _docs_by_range(docs, "text").filter(
+    corpus = kernel_front(docs, "text").filter(
         F.col("doc_id") < _INCR_SPLIT
     )
     cells = (
@@ -2904,13 +2870,9 @@ def doc_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-gram, keep the min of each 4-hash sliding window. Returns the compact
     per-doc summary (count + extremes of the selected-fingerprint set) so
     the oracle comparison stays small while pinning the whole set."""
-    # range-partition first: the one-row-group scan would run the heavy
-    # winnow expression single-task, and the trailing orderBy's range
-    # sampling would re-execute it a second time (guide §2.5/§2.4);
-    # range order + in-partition sort keep the output globally ordered
     (docs,) = _t(spark, sf_dir, "documents")
     fps = text.winnow_fingerprints(F.col("text"))
-    return _docs_by_range(docs, "text").select(
+    return kernel_front(docs, "text").select(
         "doc_id",
         F.size(fps).cast("long").alias("n_fps"),
         F.element_at(fps, 1).alias("min_fp"),
@@ -3795,25 +3757,16 @@ def multimodal_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk walk → IHDR → inflate → unfilter) → integer-exact per-channel
     statistics.  The oracle recomputes width, height and the per-channel
     sums from the closed-form raster, so a decoder that mis-unfilters a
-    single scanline or mis-walks a chunk hash-fails.  The doc_ids are
-    range-partitioned BEFORE the codec kernels: the fixture documents
-    parquet is one small file (one input partition), so without the
-    exchange all codec work runs single-threaded, and a downstream
-    ``orderBy`` would re-execute both kernels in the range-sampling job —
-    sorting the cheap id column upstream keeps the output globally
-    ordered (mapInPandas preserves per-partition order) while the codec
-    runs once, in parallel.  This closes the compressed-codec boundary
+    single scanline or mis-walks a chunk hash-fails.  The doc_ids come
+    through ``kernel_front``, so the codec kernels run once and their
+    output is ordered by doc_id.  This closes the compressed-codec boundary
     the PGM/BMP gate documents; depth 16 and Adam7 interlace have their
     own gates (multimodal_png16_roundtrip, multimodal_png_adam7_roundtrip),
     leaving JPEG as the honest NotImplementedError edge."""
     from ..operators.multimodal import decoded_png_stats, documents_as_png_assets
 
     (docs,) = _t(spark, sf_dir, "documents")
-    ids = (
-        docs.select("doc_id")
-        .repartitionByRange(spark.sparkContext.defaultParallelism, "doc_id")
-        .sortWithinPartitions("doc_id")
-    )
+    ids = kernel_front(docs)
     return decoded_png_stats(documents_as_png_assets(ids))
 
 
@@ -3847,20 +3800,14 @@ def multimodal_png_palette_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
     per-channel statistics kernel as the RGB gate.  The oracle
     recomputes palette colors and index raster in closed form, so a
     decoder that mis-unfilters an index scanline or mis-maps the palette
-    hash-fails.  Same parallel plan shape as multimodal_png_roundtrip:
-    range-partitioned ids upstream, two pipelined Arrow kernels, no
-    shuffle after the ids exchange."""
+    hash-fails.  Same plan shape as multimodal_png_roundtrip."""
     from ..operators.multimodal import (
         decoded_png_stats,
         documents_as_palette_png_assets,
     )
 
     (docs,) = _t(spark, sf_dir, "documents")
-    ids = (
-        docs.select("doc_id")
-        .repartitionByRange(spark.sparkContext.defaultParallelism, "doc_id")
-        .sortWithinPartitions("doc_id")
-    )
+    ids = kernel_front(docs)
     return decoded_png_stats(documents_as_palette_png_assets(ids))
 
 
@@ -3905,11 +3852,7 @@ def multimodal_png16_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     (docs,) = _t(spark, sf_dir, "documents")
-    ids = (
-        docs.select("doc_id")
-        .repartitionByRange(spark.sparkContext.defaultParallelism, "doc_id")
-        .sortWithinPartitions("doc_id")
-    )
+    ids = kernel_front(docs)
     return decoded_png_stats(documents_as_png16_assets(ids))
 
 
@@ -3948,11 +3891,7 @@ def multimodal_png_adam7_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
     (docs,) = _t(spark, sf_dir, "documents")
-    ids = (
-        docs.select("doc_id")
-        .repartitionByRange(spark.sparkContext.defaultParallelism, "doc_id")
-        .sortWithinPartitions("doc_id")
-    )
+    ids = kernel_front(docs)
     return decoded_png_stats(documents_as_adam7_png_assets(ids))
 
 
@@ -3993,11 +3932,7 @@ def multimodal_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     (docs,) = _t(spark, sf_dir, "documents")
-    ids = (
-        docs.select("doc_id")
-        .repartitionByRange(spark.sparkContext.defaultParallelism, "doc_id")
-        .sortWithinPartitions("doc_id")
-    )
+    ids = kernel_front(docs)
     return decoded_gif_stats(documents_as_gif_assets(ids))
 
 
@@ -4042,11 +3977,7 @@ def multimodal_gif89a_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     (docs,) = _t(spark, sf_dir, "documents")
-    ids = (
-        docs.select("doc_id")
-        .repartitionByRange(spark.sparkContext.defaultParallelism, "doc_id")
-        .sortWithinPartitions("doc_id")
-    )
+    ids = kernel_front(docs)
     return decoded_gif_stats_positional(documents_as_gif89a_assets(ids))
 
 
@@ -4095,11 +4026,7 @@ def multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     (docs,) = _t(spark, sf_dir, "documents")
-    ids = (
-        docs.select("doc_id")
-        .repartitionByRange(spark.sparkContext.defaultParallelism, "doc_id")
-        .sortWithinPartitions("doc_id")
-    )
+    ids = kernel_front(docs)
     return decoded_jpeg_stats(documents_as_jpeg_assets(ids))
 
 
@@ -4146,11 +4073,7 @@ def multimodal_jpeg420_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     (docs,) = _t(spark, sf_dir, "documents")
-    ids = (
-        docs.select("doc_id")
-        .repartitionByRange(spark.sparkContext.defaultParallelism, "doc_id")
-        .sortWithinPartitions("doc_id")
-    )
+    ids = kernel_front(docs)
     return decoded_jpeg_rgb_stats(documents_as_jpeg420_assets(ids))
 
 
@@ -4199,11 +4122,7 @@ def multimodal_jpeg_dri_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     (docs,) = _t(spark, sf_dir, "documents")
-    ids = (
-        docs.select("doc_id")
-        .repartitionByRange(spark.sparkContext.defaultParallelism, "doc_id")
-        .sortWithinPartitions("doc_id")
-    )
+    ids = kernel_front(docs)
     return decoded_jpeg_rgb_stats(documents_as_jpeg_dri_assets(ids))
 
 
@@ -4254,11 +4173,7 @@ def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     (docs,) = _t(spark, sf_dir, "documents")
-    ids = (
-        docs.select("doc_id")
-        .repartitionByRange(spark.sparkContext.defaultParallelism, "doc_id")
-        .sortWithinPartitions("doc_id")
-    )
+    ids = kernel_front(docs)
     return decoded_video_frame_stats(documents_as_avi_assets(ids), stride=2)
 
 
@@ -4315,11 +4230,7 @@ def multimodal_jpeg_prog_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
     (docs,) = _t(spark, sf_dir, "documents")
-    ids = (
-        docs.select("doc_id")
-        .repartitionByRange(spark.sparkContext.defaultParallelism, "doc_id")
-        .sortWithinPartitions("doc_id")
-    )
+    ids = kernel_front(docs)
     return decoded_jpeg_stats(documents_as_jpeg_prog_assets(ids))
 
 
@@ -4370,11 +4281,7 @@ def multimodal_gif_anim_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     (docs,) = _t(spark, sf_dir, "documents")
-    ids = (
-        docs.select("doc_id")
-        .repartitionByRange(spark.sparkContext.defaultParallelism, "doc_id")
-        .sortWithinPartitions("doc_id")
-    )
+    ids = kernel_front(docs)
     return decoded_gif_anim_stats(documents_as_gif_anim_assets(ids), stride=2)
 
 
@@ -4438,11 +4345,7 @@ def _phash_sig_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         (docs,) = _t(spark, sf_dir, "documents")
-        ids = (
-            docs.select("doc_id")
-            .repartitionByRange(spark.sparkContext.defaultParallelism, "doc_id")
-            .sortWithinPartitions("doc_id")
-        )
+        ids = kernel_front(docs)
         return decoded_phash_signatures(documents_as_scene_png_assets(ids))
 
     return _session_table(spark, sf_dir, "phash_sigs", build)
@@ -4801,11 +4704,7 @@ def multimodal_cross_codec_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         (docs,) = _t(spark, sf_dir, "documents")
-        ids = (
-            docs.select("doc_id")
-            .repartitionByRange(spark.sparkContext.defaultParallelism, "doc_id")
-            .sortWithinPartitions("doc_id")
-        )
+        ids = kernel_front(docs)
         return decoded_codec_signatures(documents_as_mixed_codec_assets(ids))
 
     # the signature table feeds both sides of the group join (a diamond:
@@ -4881,11 +4780,7 @@ def multimodal_audio_fp_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         (docs,) = _t(spark, sf_dir, "documents")
-        ids = (
-            docs.select("doc_id")
-            .repartitionByRange(spark.sparkContext.defaultParallelism, "doc_id")
-            .sortWithinPartitions("doc_id")
-        )
+        ids = kernel_front(docs)
         return decoded_audio_fingerprints(documents_as_tone_wav_assets(ids))
 
     fps = _session_table(spark, sf_dir, "audio_fps", build)
@@ -5057,11 +4952,7 @@ def multimodal_audio_clip_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         (docs,) = _t(spark, sf_dir, "documents")
-        ids = (
-            docs.select("doc_id")
-            .repartitionByRange(spark.sparkContext.defaultParallelism, "doc_id")
-            .sortWithinPartitions("doc_id")
-        )
+        ids = kernel_front(docs)
         return decoded_audio_frame_bits(documents_as_shifted_wav_assets(ids))
 
     bits = _session_table(spark, sf_dir, "audio_frame_bits", build)
@@ -5164,11 +5055,7 @@ def _video_frame_sig_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         (docs,) = _t(spark, sf_dir, "documents")
-        ids = (
-            docs.select("doc_id")
-            .repartitionByRange(spark.sparkContext.defaultParallelism, "doc_id")
-            .sortWithinPartitions("doc_id")
-        )
+        ids = kernel_front(docs)
         return decoded_video_frame_signatures(documents_as_avi_assets(ids))
 
     return _session_table(spark, sf_dir, "video_frame_sigs", build)
@@ -5591,11 +5478,7 @@ def multimodal_scale_invariant_dedup(spark: SparkSession, sf_dir: str) -> DataFr
 
     def build() -> DataFrame:
         (docs,) = _t(spark, sf_dir, "documents")
-        ids = (
-            docs.select("doc_id")
-            .repartitionByRange(spark.sparkContext.defaultParallelism, "doc_id")
-            .sortWithinPartitions("doc_id")
-        )
+        ids = kernel_front(docs)
         return decoded_phash_dim_signatures(
             documents_as_multires_png_assets(ids)
         )
@@ -5667,7 +5550,7 @@ def multimodal_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import asset_pixel_stats, documents_as_assets
 
     (docs,) = _t(spark, sf_dir, "documents")
-    return asset_pixel_stats(documents_as_assets(_docs_by_range(docs, "text")))
+    return asset_pixel_stats(documents_as_assets(kernel_front(docs, "text")))
 
 
 MULTIMODAL_PIXEL_STATS_SQL = """
@@ -5704,7 +5587,7 @@ def multimodal_decode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     (docs,) = _t(spark, sf_dir, "documents")
-    return decoded_image_stats(documents_as_pgm_assets(_docs_by_range(docs)))
+    return decoded_image_stats(documents_as_pgm_assets(kernel_front(docs)))
 
 
 MULTIMODAL_DECODE_ROUNDTRIP_SQL = """
@@ -5753,7 +5636,7 @@ def multimodal_exif_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (docs,) = _t(spark, sf_dir, "documents")
     return decoded_exif_metadata(
-        documents_as_exif_jpeg_assets(_docs_by_range(docs))
+        documents_as_exif_jpeg_assets(kernel_front(docs))
     )
 
 
@@ -5806,7 +5689,7 @@ def multimodal_exif_gps_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (docs,) = _t(spark, sf_dir, "documents")
     return gps_scrub_verdicts(
-        documents_as_exif_jpeg_assets(_docs_by_range(docs))
+        documents_as_exif_jpeg_assets(kernel_front(docs))
     )
 
 
@@ -5843,7 +5726,7 @@ def multimodal_exif_thumb_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (docs,) = _t(spark, sf_dir, "documents")
     return thumb_scrub_verdicts(
-        documents_as_thumb_jpeg_assets(_docs_by_range(docs))
+        documents_as_thumb_jpeg_assets(kernel_front(docs))
     )
 
 
@@ -5890,7 +5773,7 @@ def multimodal_exif_full_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (docs,) = _t(spark, sf_dir, "documents")
     return full_scrub_verdicts(
-        documents_as_full_exif_assets(_docs_by_range(docs))
+        documents_as_full_exif_assets(kernel_front(docs))
     )
 
 
@@ -5939,7 +5822,7 @@ def multimodal_orientation_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (docs,) = _t(spark, sf_dir, "documents")
     sigs = decoded_orientation_signatures(
-        documents_as_oriented_jpeg_assets(_docs_by_range(docs))
+        documents_as_oriented_jpeg_assets(kernel_front(docs))
     )
     grp = sigs.groupBy("sig").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_copies"),
@@ -5992,7 +5875,7 @@ def multimodal_wav_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import decoded_wav_stats, documents_as_wav_assets
 
     (docs,) = _t(spark, sf_dir, "documents")
-    return decoded_wav_stats(documents_as_wav_assets(_docs_by_range(docs)))
+    return decoded_wav_stats(documents_as_wav_assets(kernel_front(docs)))
 
 
 MULTIMODAL_WAV_ROUNDTRIP_SQL = """
@@ -6024,11 +5907,7 @@ def multimodal_wav_stereo_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
     (docs,) = _t(spark, sf_dir, "documents")
-    ids = (
-        docs.select("doc_id")
-        .repartitionByRange(spark.sparkContext.defaultParallelism, "doc_id")
-        .sortWithinPartitions("doc_id")
-    )
+    ids = kernel_front(docs)
     return decoded_stereo_wav_stats(documents_as_stereo_wav_assets(ids))
 
 
@@ -6061,7 +5940,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import documents_as_assets, sample_frames
 
     (docs,) = _t(spark, sf_dir, "documents")
-    assets = documents_as_assets(_docs_by_range(docs, "text")).withColumn(
+    assets = documents_as_assets(kernel_front(docs, "text")).withColumn(
         "duration_ms",
         ((1 + F.pmod(F.col("asset_id"), F.lit(5))) * 1000).cast("long"),
     )
@@ -6089,7 +5968,7 @@ def multimodal_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import audio_frame_energy, documents_as_audio
 
     (docs,) = _t(spark, sf_dir, "documents")
-    return audio_frame_energy(documents_as_audio(_docs_by_range(docs, "text")))
+    return audio_frame_energy(documents_as_audio(kernel_front(docs, "text")))
 
 
 MULTIMODAL_AUDIO_ENERGY_SQL = """

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.exact import dsum_sql
+from ..operators.fanout import kernel_front
 from ..streaming import (
     click_purchase_join_stream,
     dedup_keys_stream,
@@ -1047,11 +1048,7 @@ def dedup_persisted_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("band", "bkey")
     )
     docs = load_table(spark, sf_dir, "documents")
-    # range-partition before hashing — the one-row-group fixture scan
-    # would otherwise run the shingle/minhash map work single-task
-    from .extensions import _docs_by_range
-
-    incoming = _docs_by_range(docs, "text").filter(
+    incoming = kernel_front(docs, "text").filter(
         F.col("doc_id") >= _INCR_SPLIT
     )
     return admit_batch(

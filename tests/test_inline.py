@@ -106,3 +106,19 @@ def test_inline_float_into_integral_array_matches_literal_cast(spark):
         spark, [(1, [7, 8])], "k long, v array<bigint>"
     ).collect()[0]
     assert list(row.v) == [7, 8]
+
+
+def test_inline_row_wider_than_schema_raises(spark):
+    """A row with more values than the schema has columns must fail, not
+    lose its extra values (zip truncates silently)."""
+    import pytest
+
+    with pytest.raises(ValueError, match=r"row 1 has 3 values .* 2 columns"):
+        inline_table(spark, [(1, "a"), (2, "b", "extra")], "k int, s string")
+
+
+def test_inline_row_narrower_than_schema_raises(spark):
+    import pytest
+
+    with pytest.raises(ValueError, match=r"row 0 has 1 values .* 2 columns"):
+        inline_table(spark, [(1,), (2, "b")], "k int, s string")

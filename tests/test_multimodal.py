@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -16,6 +18,7 @@ from datafusion_tpch_spark.operators.multimodal import (
 from datafusion_tpch_spark.catalog import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
+SF01_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
 
 
 def test_extract_features_shape_and_determinism(spark):
@@ -2196,3 +2199,48 @@ def test_phash_band_saturation_flag_visible(spark, monkeypatch):
         assert r.n_near1 == 0 and r.n_near2 == 0 and r.kept
     for r in rows:
         assert r.saturated == (r.n_bands_live == 0)
+
+
+def _ordered_pixel_stats(spark, sf_dir):
+    from datafusion_tpch_spark.plans import kernel_front_widths
+    from datafusion_tpch_spark.queries import all_queries
+
+    df = all_queries()["multimodal_pixel_stats"].build(spark, sf_dir)
+    ids = [r.asset_id for r in df.select("asset_id").collect()]
+    return kernel_front_widths(df), ids
+
+
+def test_kernel_front_output_ordered_at_width_one(spark):
+    """The front's ordering contract at width 1 (sf0.01): a per-row gate
+    returns its rows globally ordered by doc_id with no orderBy."""
+    widths, ids = _ordered_pixel_stats(spark, SF01_DIR)
+    assert widths == [1]
+    assert len(ids) == 500 and ids == sorted(ids)
+
+
+def test_kernel_front_output_ordered_above_width_one(spark, tmp_path):
+    """The same contract when the front splits its input: a synthetic
+    documents table of more than ROWS_PER_PY_TASK rows, written in
+    shuffled order over several row groups."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    import pytest
+
+    from datafusion_tpch_spark.operators.fanout import ROWS_PER_PY_TASK
+
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("a width above 1 needs defaultParallelism >= 2")
+    base = pq.read_table(os.path.join(SF01_DIR, "documents.parquet"))
+    copies = -(-(ROWS_PER_PY_TASK + 1) // base.num_rows)
+    parts = []
+    for k in range(copies):
+        ids = pc.add(base["doc_id"], k * 1_000_000)
+        parts.append(base.set_column(0, "doc_id", ids))
+    table = pa.concat_tables(parts)
+    order = np.random.default_rng(7).permutation(table.num_rows)
+    pq.write_table(table.take(order), tmp_path / "documents.parquet", row_group_size=300)
+
+    widths, ids = _ordered_pixel_stats(spark, str(tmp_path))
+    assert widths and widths[0] > 1, widths
+    assert len(ids) == table.num_rows and ids == sorted(ids)

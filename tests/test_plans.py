@@ -226,10 +226,14 @@ def test_dsir_topk_not_global_window(spark):
 
 
 def test_dsir_domain_models_broadcast(spark):
-    """Both hashed-feature domain models are bucket-bounded and must
-    broadcast — a shuffled join against a 256-row side is wrong."""
+    """Both hashed-feature domain models (and their totals) ride one
+    bucket-bounded table that must broadcast — a shuffled join against a
+    256-row side is wrong."""
     df = _build(spark, "docs_dsir_score")
-    assert broadcast_join_count(df) >= 2
+    assert broadcast_join_count(df) >= 1
+    plan = _plan_str(df)
+    for shuffled in ("SortMergeJoin", "ShuffledHashJoin", "CartesianProduct"):
+        assert shuffled not in plan, plan
 
 
 def test_knn_graph_no_cartesian(spark):
@@ -469,3 +473,85 @@ def test_recall_audit_inputs_pair_distinct(spark):
         n = df.count()
         nd = df.select("doc1", "doc2").distinct().count()
         assert n == nd, f"{name}: {n} rows but {nd} distinct (doc1, doc2)"
+
+
+def test_kernel_width_rule(spark):
+    """clamp(ceil(rows / ROWS_PER_PY_TASK), 1, defaultParallelism) at the
+    edges; an unknown row count gets the full width."""
+    from datafusion_tpch_spark.operators.fanout import (
+        ROWS_PER_PY_TASK as D,
+        kernel_width,
+    )
+
+    cap = spark.sparkContext.defaultParallelism
+    got = {rows: kernel_width(spark, rows) for rows in (0, 1, D, D + 1, 10**9)}
+    assert got == {0: 1, 1: 1, D: 1, D + 1: min(2, cap), 10**9: cap}, got
+    assert kernel_width(spark, None) == cap
+    # the rule's own bounds: sf0.01's 500 documents in one task, sf0.1's
+    # 5000 at no less than four tasks' worth
+    assert 500 <= D <= 1250
+
+
+def test_kernel_front_starts_no_job(spark):
+    """Building a front reads parquet footers in-process; it must not
+    start a Spark job (no count(), no sampling)."""
+    from datafusion_tpch_spark.catalog import load_table
+    from datafusion_tpch_spark.operators import fanout
+
+    sc = spark.sparkContext
+    docs = load_table(spark, _SF01, "documents")
+    fanout._ROWS_CACHE.pop(spark, None)  # read the footers again
+    group = "kernel-front-no-job"
+    sc.setJobGroup(group, "building a front must run no jobs")
+    try:
+        before = list(sc.statusTracker().getJobIdsForGroup(group))
+        front = fanout.kernel_front(docs, "text")
+        front._jdf.queryExecution().executedPlan()
+        after = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert before == after == [], f"building a front ran jobs: {after}"
+    assert fanout.input_rows(docs) == 500
+
+
+def test_input_rows_stops_at_cap(spark, tmp_path):
+    """Once the footers read reach ``stop_at`` rows, the rest are not read:
+    a many-file input costs no more footer reads than the cap needs."""
+    from datafusion_tpch_spark.operators import fanout
+
+    for i in range(3):
+        spark.range(i * 10, i * 10 + 10).write.parquet(str(tmp_path / f"part{i}"))
+    df = spark.read.parquet(*(str(tmp_path / f"part{i}") for i in range(3)))
+    files = set(df.inputFiles())
+    assert len(files) >= 3
+    known = fanout._ROWS_CACHE.setdefault(spark, {})
+    rows = fanout.input_rows(df, stop_at=1)
+    read = files & known.keys()
+    assert rows == sum(known[f] for f in read) >= 1
+    assert len(read) < len(files), f"read all {len(files)} footers for stop_at=1"
+    assert fanout.input_rows(df) == 30
+
+
+def test_kernel_fronts_sized_from_rows(spark):
+    """Every gate whose mapInPandas is fed by ``kernel_front`` gives its
+    Python node the rule's width: one task for sf0.01's 500 documents, not
+    one per core."""
+    from datafusion_tpch_spark.catalog import load_table
+    from datafusion_tpch_spark.operators.fanout import input_rows, kernel_width
+    from datafusion_tpch_spark.plans import kernel_front_widths
+
+    docs = load_table(spark, _SF01, "documents")
+    want = kernel_width(spark, input_rows(docs))
+    assert want == 1
+    fed, offenders = [], {}
+    for name, qspec in sorted(all_queries().items()):
+        if name.endswith("_stream"):
+            continue  # micro-batch plans
+        widths = kernel_front_widths(qspec.build(spark, _SF01))
+        if widths:
+            fed.append(name)
+        if any(w != want for w in widths):
+            offenders[name] = f"python input width {sorted(set(widths))} != rule {want}"
+    assert not offenders, offenders
+    # the scan must see the fronts at all (the codec and pixel gates)
+    assert "multimodal_pixel_stats" in fed and len(fed) >= 30, fed

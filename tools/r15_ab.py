@@ -9,10 +9,14 @@ measured in r10) cannot masquerade as a result:
                      override (the session is torn down and rebuilt
                      between legs; used for the verdict-item-9 phantom
                      re-bench: parallelismFirst on/off).
-  --no-range-front   A = as shipped, B = `_docs_by_range` monkeypatched
-                     to identity (verdict item 8: does the range
-                     exchange in front of the minhash/LSH hash chains
-                     pay for itself for the self-join consumers?).
+  --no-range-front   A = as shipped, B = `kernel_front` monkeypatched
+                     to identity in every module that binds it
+                     (extensions, curation, stream), so B drops the front
+                     of every gate fed by it: the minhash/LSH signature
+                     chains, winnow, the BPE and DSIR explodes,
+                     dedup_persisted_compact and every codec/audio/video
+                     gate (verdict item 8 asked this of the minhash/LSH
+                     self-join consumers only).
                      Session-cache tables are dropped between legs so B
                      rebuilds its own frames.
 
@@ -106,7 +110,15 @@ def main() -> None:
         _warm(spark, sf_dir)
         return spark
 
-    orig_front = ext._docs_by_range
+    from datafusion_tpch_spark.queries import curation, stream
+
+    # Each module binds kernel_front at import, so patch every binding.
+    front_users = (ext, curation, stream)
+    orig_front = ext.kernel_front
+
+    def set_front(front) -> None:
+        for mod in front_users:
+            mod.kernel_front = front
 
     results: dict[str, tuple[float, float]] = {}
     # ABBA leg order: one shared JVM means later legs run JIT-warm, so a
@@ -123,13 +135,13 @@ def main() -> None:
                 spark = leg_session({})
             if no_range_front:
                 _drop_session_tables(spark)
-                ext._docs_by_range = (
+                set_front(
                     (lambda df, *cols: df) if label == "B" else orig_front
                 )
             try:
                 t = _time_one(spark, spec, sf_dir, runs)
             finally:
-                ext._docs_by_range = orig_front
+                set_front(orig_front)
             if label == "A":
                 a = min(a, t)
             else:
