@@ -24,21 +24,12 @@ class QuerySpec:
 
 
 # The driver's per-round oracle gate checks the FIRST 50 registry keys only.
-# Rotate this window across rounds so every query accumulates a driver-side
-# correctness record.  Round 14 (per the round-13 verdict): the round-14
-# additions first, then 46 of the 48-gate cohort whose latest record is
-# still r09 (the verdict's item 2: the q1-q22 fixture family, the core
-# dedup trio, the jpeg/gif roundtrips, the join-strategy gates).  The two
-# r09 gates deferred to round 15 — supplier_hhi (re-verified locally by
-# the round-13 judge this cycle, the freshest independent evidence in the
-# cohort) and pq_distortion_audit (its oracle CTE chain is exercised by
-# the two new PQ gates in this round's window) — front the r15 rotation.
-# Everything not listed keeps registration order after these.
+# The queries listed here come first, new ones at the head; everything not
+# listed keeps registration order after them.  Rotate the list across
+# rounds so every query accumulates a driver-side correctness record.
 _CHECK_FIRST = [
-    # -- round-14 additions; new queries land HERE --
     "multimodal_exif_full_scrub", "ann_pq_persisted_topk",
     "embeddings_drift_retrain", "ann_ivf_pq_persisted_topk",
-    # -- the r09 rotation-debt cohort (47 of 48) --
     "q1", "q2", "q3", "q4", "q5", "q6", "q7", "q8", "q9", "q10",
     "q11", "q12", "q13", "q14", "q15", "q16", "q17", "q18", "q19",
     "q20", "q21", "q22",

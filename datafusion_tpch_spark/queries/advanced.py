@@ -2415,8 +2415,10 @@ def events_type_dow_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: per-type chi2 contribution (summed over its 7 cells).
     """
     (ev,) = _t(spark, sf_dir, "events")
-    # the explicit not-null pair is vacuous on the fixture (event_type
-    # and ts are never null) but decisive for the plan: the cell join
+    # the explicit not-null pair is the gate's NULL contract: rows
+    # without a type or timestamp are in no cell (the oracle's WHERE says
+    # the same; tests/test_null_keys.py).  It is also decisive for the
+    # plan: the cell join
     # infers isnotnull(event_type) AND isnotnull(dow) into ITS branch's
     # scan, row_tot/col_tot each infer only one, grand neither — four
     # canonically different subtrees, so the fact table was scanned and
@@ -2462,7 +2464,8 @@ def events_type_dow_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
 EVENTS_TYPE_DOW_CHISQ_SQL = f"""
 WITH cells AS (
   SELECT event_type, EXTRACT(dow FROM ts) + 1 AS dow, COUNT(*) AS obs
-  FROM events GROUP BY event_type, EXTRACT(dow FROM ts) + 1),
+  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
+  GROUP BY event_type, EXTRACT(dow FROM ts) + 1),
 row_tot AS (
   SELECT event_type, CAST(SUM(obs) AS BIGINT) AS row_n
   FROM cells GROUP BY event_type),

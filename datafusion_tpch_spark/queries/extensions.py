@@ -6892,8 +6892,10 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer microseconds (unix_micros / epoch_us) for cross-engine
     exactness."""
     (ev,) = _t(spark, sf_dir, "events")
-    # vacuous not-nulls (fixture keys/timestamps are never null), but
-    # decisive for the plan: each stage frame feeds both the NEXT stage's
+    # the not-nulls are the gate's NULL contract: events without a user
+    # or timestamp enter no stage (the oracle's first stage says the
+    # same; tests/test_null_keys.py).  They are also decisive for the
+    # plan: each stage frame feeds both the NEXT stage's
     # join (which infers isnotnull(user_id)/isnotnull(us) into its scan)
     # and its own stage count (which inferred neither and pruned the min
     # column) — five canonically different events scans for three
@@ -6949,7 +6951,8 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 EVENTS_FUNNEL_SQL = """
 WITH fv AS (
   SELECT user_id, MIN(epoch_us(ts)) AS v_us FROM events
-  WHERE event_type = 'view' GROUP BY user_id),
+  WHERE event_type = 'view' AND user_id IS NOT NULL AND ts IS NOT NULL
+  GROUP BY user_id),
 fc AS (
   SELECT e.user_id, MIN(epoch_us(e.ts)) AS c_us
   FROM events e JOIN fv ON e.user_id = fv.user_id

@@ -9,7 +9,13 @@ at 100 TB.
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
+
+from .. import TPCH_TABLES
+from .tpch_gen import GENERATORS
 
 
 def copy_to_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> int:
@@ -17,6 +23,28 @@ def copy_to_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> int:
     Returns the row count (the COPY statement's result, examples/parquet.rs:22)."""
     df.write.mode(mode).parquet(path)
     return df.sparkSession.read.parquet(path).count()
+
+
+def export_tpch_tables(spark: SparkSession, sf: float, out_dir: str) -> None:
+    """Generate the 8 TPC-H tables at ``sf`` into ``out_dir/<table>`` once.
+
+    A table counts as exported only when its ``_SUCCESS`` marker exists.
+    Each write goes to a pid-suffixed staging directory that is renamed
+    into place, so a killed writer leaves no half-written table behind and
+    concurrent processes never read one; a table directory without the
+    marker (a partial export) is replaced, not read."""
+    for name in TPCH_TABLES:
+        path = os.path.join(out_dir, name)
+        if os.path.exists(os.path.join(path, "_SUCCESS")):
+            continue
+        stage = f"{path}.stage.{os.getpid()}"
+        copy_to_parquet(GENERATORS[name](spark, sf), stage)
+        if not os.path.exists(os.path.join(path, "_SUCCESS")):
+            shutil.rmtree(path, ignore_errors=True)
+        try:
+            os.rename(stage, path)
+        except OSError:  # lost the race: another process renamed first
+            shutil.rmtree(stage, ignore_errors=True)
 
 
 def copy_table_to_parquet(spark: SparkSession, table: str, path: str) -> int:

@@ -212,7 +212,7 @@ def click_purchase_join_stream(
 # ``spark.newSession()`` shares the applicationId while NOT sharing the
 # view registry — an app-keyed cache would "hit" on the new session and
 # then fail with TABLE_OR_VIEW_NOT_FOUND (same aliasing tpch_spec.py
-# guards with its WeakKeyDictionary of registered sessions).
+# guards with its WeakKeyDictionary of per-session views).
 _SINK_COMPLETE: "weakref.WeakKeyDictionary[SparkSession, set[str]]" = (
     weakref.WeakKeyDictionary()
 )

@@ -3,7 +3,9 @@ generated spec-complete tables, Spark SQL vs DuckDB on identical parquet.
 
 Pipeline under test: Tier-A generators (sources/tpch_gen.py) → parquet sink
 (sources/parquet_io.py, the reference's COPY surface) → both engines read
-the same files → every canonical query must agree engine-to-engine.
+the same files → every canonical query must agree engine-to-engine.  The
+tables are the spec gates' export (queries/tpch_spec.py), bound to each
+text by the same binding the gates use.
 """
 
 from __future__ import annotations
@@ -18,29 +20,20 @@ import pytest
 
 from datafusion_tpch_spark import TPCH_TABLES
 from datafusion_tpch_spark.queries import tpch_full
-from datafusion_tpch_spark.sources.parquet_io import copy_to_parquet
-from datafusion_tpch_spark.sources.tpch_gen import GENERATORS
-
-SF = 0.01
-EXPORT_DIR = "/tmp/tpch_full_sf001"
+from datafusion_tpch_spark.queries.tpch_spec import (
+    SPEC_DIR,
+    SPEC_SF as SF,
+    bind_duckdb,
+    bind_spark,
+)
+from datafusion_tpch_spark.sources.parquet_io import export_tpch_tables
 
 
 @pytest.fixture(scope="session")
 def full_schema(spark):
-    """Generate all 8 tables once, export through the parquet sink, and
-    register them in both engines."""
-    for name in TPCH_TABLES:
-        path = os.path.join(EXPORT_DIR, name)
-        if not os.path.exists(path):
-            copy_to_parquet(GENERATORS[name](spark, SF), path)
-        spark.read.parquet(path).createOrReplaceTempView(name)
-    con = duckdb.connect()
-    for name in TPCH_TABLES:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM "
-            f"read_parquet('{EXPORT_DIR}/{name}/*.parquet')"
-        )
-    return spark, con
+    """Generate all 8 tables once, exported through the parquet sink."""
+    export_tpch_tables(spark, SF, SPEC_DIR)
+    return spark, duckdb.connect()
 
 
 def _norm(v):
@@ -68,8 +61,10 @@ def _approx_eq(a, b) -> bool:
 def test_canonical_query_matches_duckdb(full_schema, name):
     spark, con = full_schema
     sql = tpch_full.queries(SF)[name]
-    got = [tuple(_norm(v) for v in row) for row in spark.sql(sql).collect()]
-    want = [tuple(_norm(v) for v in row) for row in con.execute(sql).fetchall()]
+    got = [tuple(_norm(v) for v in row)
+           for row in bind_spark(spark, sql, SPEC_DIR).collect()]
+    want = [tuple(_norm(v) for v in row)
+            for row in con.execute(bind_duckdb(sql, SPEC_DIR)).fetchall()]
     assert len(got) == len(want), f"{name}: {len(got)} vs {len(want)} rows"
     # ORDER BY keys can tie; compare as canonically sorted multisets
     key = lambda r: tuple((str(type(v)), str(v)) for v in r)  # noqa: E731
@@ -87,6 +82,28 @@ def test_nonempty_coverage(full_schema):
     spark, _ = full_schema
     nonempty = 0
     for name, sql in tpch_full.queries(SF).items():
-        if spark.sql(sql).limit(1).count() > 0:
+        if bind_spark(spark, sql, SPEC_DIR).limit(1).count() > 0:
             nonempty += 1
     assert nonempty >= 16, f"only {nonempty}/22 canonical queries hit data"
+
+
+def test_partial_export_is_regenerated(spark, tmp_path):
+    """A table directory without ``_SUCCESS`` (a writer killed mid-COPY)
+    is regenerated, not read; complete tables are not written again."""
+    for name in TPCH_TABLES:
+        if name != "nation":  # stand-ins: marked complete, never rewritten
+            os.makedirs(tmp_path / name)
+            (tmp_path / name / "_SUCCESS").touch()
+    partial = tmp_path / "nation"
+    spark.range(3).write.parquet(str(partial))
+    os.remove(partial / "_SUCCESS")
+
+    export_tpch_tables(spark, SF, str(tmp_path))
+
+    assert (partial / "_SUCCESS").exists()
+    df = spark.read.parquet(str(partial))
+    assert df.count() == 25 and "n_name" in df.columns
+    for name in TPCH_TABLES:
+        if name != "nation":
+            assert os.listdir(tmp_path / name) == ["_SUCCESS"], name
+    assert sorted(os.listdir(tmp_path)) == sorted(TPCH_TABLES)  # no stage left

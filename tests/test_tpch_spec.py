@@ -12,7 +12,8 @@ from __future__ import annotations
 
 import pytest
 
-from datafusion_tpch_spark.queries import tpch_spec
+from datafusion_tpch_spark.queries import tpch_full, tpch_spec
+from datafusion_tpch_spark.sources.parquet_io import export_tpch_tables
 
 SPEC_NAMES = sorted(s.name for s in tpch_spec.SPECS)
 
@@ -41,48 +42,49 @@ def test_division_free_adaptations_preserve_semantics(spark):
     predicate must select the same rows / value as DuckDB evaluating
     the division-free gate text."""
     # ensure the warehouse exists
-    tpch_spec._ensure_spec_tables(spark)
-    refs = tpch_spec._refs("duckdb")
+    export_tpch_tables(spark, tpch_spec.SPEC_SF, tpch_spec.SPEC_DIR)
+    texts = {q: tpch_spec.bind_duckdb(t, tpch_spec.SPEC_DIR)
+             for q, t in tpch_spec.TEXTS.items()}
 
     # q17 — value equality (scalar result)
-    canonical_q17 = f"""
+    canonical_q17 = tpch_spec.bind_duckdb("""
     SELECT CAST(sum(l_extendedprice) AS DOUBLE) / 7.0 AS avg_yearly
-    FROM {refs['lineitem']}, {refs['part']}
+    FROM lineitem, part
     WHERE p_partkey = l_partkey AND p_brand = 'Brand#23'
       AND p_container = 'MED BOX'
       AND l_quantity < (
-        SELECT 0.2 * avg(l_quantity) FROM {refs['lineitem_bare']}
+        SELECT 0.2 * avg(l_quantity) FROM lineitem
         WHERE l_partkey = p_partkey)
-    """
-    got = _duck(tpch_spec._Q17_SPEC.format(**refs))[0][0]
+    """, tpch_spec.SPEC_DIR)
+    got = _duck(texts["q17"])[0][0]
     want = _duck(canonical_q17)[0][0]
     assert got == want or abs(got - want) <= 1e-9 * max(abs(want), 1.0)
 
     # q20 — row-set equality
-    canonical_q20 = tpch_spec._Q20_SPEC.replace(
+    canonical_q20 = texts["q20"].replace(
         "2 * ps_availqty > (", "ps_availqty > (SELECT 0.5 * x FROM (", 1
     ).replace(
         "AND l_shipdate >= date '1994-01-01' AND l_shipdate < date '1995-01-01'))",
         "AND l_shipdate >= date '1994-01-01' AND l_shipdate < date "
         "'1995-01-01') t(x)))",
         1,
-    ).format(**refs)
-    assert _duck(canonical_q20) == _duck(tpch_spec._Q20_SPEC.format(**refs))
+    )
+    assert _duck(canonical_q20) == _duck(texts["q20"])
 
     # q22 — row-set equality (same 1997 anti-join, literal avg comparison)
-    canonical_q22 = tpch_spec._Q22_SPEC.replace(
+    canonical_q22 = texts["q22"].replace(
         """    AND c_acctbal * (
-      SELECT count(*) FROM {customer}
+      SELECT count(*) FROM customer
       WHERE c_acctbal > 0.00
         AND substring(c_phone, 1, 2) IN ('13', '31', '23', '29', '30', '18', '17'))
       > (
-      SELECT sum(c_acctbal) FROM {customer}""",
+      SELECT sum(c_acctbal) FROM customer""",
         """    AND c_acctbal > (
-      SELECT avg(c_acctbal) FROM {customer}""",
+      SELECT avg(c_acctbal) FROM customer""",
         1,
-    ).format(**refs)
-    assert canonical_q22 != tpch_spec._Q22_SPEC.format(**refs)
-    assert _duck(canonical_q22) == _duck(tpch_spec._Q22_SPEC.format(**refs))
+    )
+    assert canonical_q22 != texts["q22"]
+    assert _duck(canonical_q22) == _duck(texts["q22"])
 
 
 def test_spec_texts_carry_only_documented_deviations():
@@ -94,8 +96,6 @@ def test_spec_texts_carry_only_documented_deviations():
     artifact of the documented exactness adaptations."""
     import collections
     import re
-
-    from datafusion_tpch_spark.queries import tpch_full
 
     can = tpch_full.queries(0.01)
     lit = re.compile(r"'[^']*'|\b\d+(?:\.\d+)?\b")
@@ -115,9 +115,7 @@ def test_spec_texts_carry_only_documented_deviations():
     }
     for i in range(1, 23):
         name = f"q{i}"
-        spec_t = getattr(tpch_spec, f"_Q{i}_SPEC").replace("{", "").replace(
-            "}", ""
-        )
+        spec_t = tpch_spec.TEXTS[name]
         a = collections.Counter(x for x in lit.findall(can[name])
                                 if x not in noise)
         b = collections.Counter(x for x in lit.findall(spec_t)
@@ -128,3 +126,22 @@ def test_spec_texts_carry_only_documented_deviations():
         assert only_can == want_can and only_spec == want_spec, (
             name, sorted(only_can), sorted(only_spec)
         )
+
+
+@pytest.mark.parametrize("times, query, fragment", [
+    (0, "q6", "avg(l_quantity)"),                    # absent
+    (2, "q2", "r_name = 'EUROPE'"),                  # not unique
+])
+def test_derive_rejects_fragment_not_occurring_once(times, query, fragment):
+    """An adaptation must hit exactly one place in the canonical text, so
+    a drifted canonical text fails loudly instead of silently skipping
+    (absent) or over-applying (repeated) its adaptation."""
+    can = tpch_full.queries(tpch_spec.SPEC_SF)
+    assert can[query].count(fragment) == times
+    with pytest.raises(ValueError, match=rf"^{query}: fragment occurs {times} times"):
+        tpch_spec.derive(can, {query: [(fragment, "x")]})
+
+
+def test_derive_rejects_adaptation_without_canonical_text():
+    with pytest.raises(ValueError, match="q23"):
+        tpch_spec.derive(tpch_full.queries(tpch_spec.SPEC_SF), {"q23": []})

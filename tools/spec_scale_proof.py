@@ -4,11 +4,11 @@ Usage: python tools/spec_scale_proof.py [sf] [--verify]
 
 Generates the 8 spec tables at the given scale factor with the repo's
 own generators into /tmp (DECIMAL money, DATE dates — the same type
-family the sf0.01 driver warehouse carries), points the session's
-``spec_*`` views at them, and re-runs every registered ``q*_spec``
-program UNCHANGED, best-of-2 after warm-up.  With ``--verify`` each
-query is also cross-checked cell-for-cell against DuckDB running the
-gate's own oracle SQL rebased onto the same generated parquet.
+family the sf0.01 driver warehouse carries) and runs every ``q*_spec``
+gate text UNCHANGED over them through the gates' own table binding,
+best-of-2 after warm-up.  With ``--verify`` each query is also
+cross-checked cell-for-cell against DuckDB running the same text bound
+to the same generated parquet.
 
 The point: the spec gates' correctness and plan shape must not be an
 sf0.01-warehouse accident.  Feeds the "Spec-typed gates at sf1" section
@@ -21,40 +21,13 @@ import os
 import sys
 import time
 
+import duckdb
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from datafusion_tpch_spark.queries import all_queries
+from datafusion_tpch_spark.queries.tpch_spec import TEXTS, bind_duckdb, bind_spark
 from datafusion_tpch_spark.session import build_session
-
-
-def ensure_sf_tables(spark, sf: float, base: str) -> str:
-    """Generate + export the 8 spec tables at ``sf`` once per machine."""
-    from datafusion_tpch_spark.queries.tpch_spec import _SPEC_TABLES
-    from datafusion_tpch_spark.sources.parquet_io import copy_to_parquet
-    from datafusion_tpch_spark.sources.tpch_gen import GENERATORS
-
-    out = os.path.join(base, f"tpch_spec_sf{sf:g}".replace(".", "_"))
-    for name in _SPEC_TABLES:
-        path = os.path.join(out, name)
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            t0 = time.perf_counter()
-            copy_to_parquet(GENERATORS[name](spark, sf), path)
-            print(f"# generated {name} sf{sf:g} in {time.perf_counter()-t0:.1f}s",
-                  file=sys.stderr)
-    return out
-
-
-def register_views(spark, table_dir: str) -> None:
-    """Point the session's spec_* views at ``table_dir`` and mark the
-    session registered so _ensure_spec_tables doesn't re-point them at
-    the default sf0.01 warehouse."""
-    from datafusion_tpch_spark.queries import tpch_spec
-
-    for name in tpch_spec._SPEC_TABLES:
-        spark.read.parquet(os.path.join(table_dir, name)).createOrReplaceTempView(
-            f"spec_{name}"
-        )
-    tpch_spec._REGISTERED_SESSIONS[spark] = True
+from datafusion_tpch_spark.sources.parquet_io import export_tpch_tables
 
 
 def main() -> None:
@@ -64,34 +37,28 @@ def main() -> None:
     spark = build_session(
         "spec-scale", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
-    table_dir = ensure_sf_tables(spark, sf, "/tmp/spark_graft_scale")
-    register_views(spark, table_dir)
+    table_dir = os.path.join(
+        "/tmp/spark_graft_scale", f"tpch_spec_sf{sf:g}".replace(".", "_")
+    )
+    t0 = time.perf_counter()
+    export_tpch_tables(spark, sf, table_dir)
+    print(f"# tables ready in {time.perf_counter()-t0:.1f}s", file=sys.stderr)
 
-    con = None
-    if verify:
-        import duckdb
-
-        con = duckdb.connect()
-
-    from datafusion_tpch_spark.queries.tpch_spec import _SPEC_DIR
-
-    specs = {n: s for n, s in all_queries().items() if n.endswith("_spec")}
+    con = duckdb.connect() if verify else None
     total = 0.0
     fails = 0
-    for name in sorted(specs, key=lambda n: int(n[1:].split("_")[0])):
-        spec = specs[name]
-        df = spec.build(spark, table_dir)
-        sdf = df.toPandas()  # warm-up + the verify payload
+    for q in sorted(TEXTS, key=lambda q: int(q[1:])):
+        name, text = f"{q}_spec", TEXTS[q]
+        sdf = bind_spark(spark, text, table_dir).toPandas()  # warm-up + verify payload
         best = 1e9
         for _ in range(2):
             t0 = time.perf_counter()
-            spec.build(spark, table_dir).collect()
+            bind_spark(spark, text, table_dir).collect()
             best = min(best, time.perf_counter() - t0)
         total += best
         status = ""
-        if verify and spec.oracle:
-            osql = spec.oracle.replace(_SPEC_DIR, table_dir)
-            odf = con.execute(osql).fetchdf()
+        if verify:
+            odf = con.execute(bind_duckdb(text, table_dir)).fetchdf()
             s = sdf.reindex(sorted(sdf.columns), axis=1)
             o = odf.reindex(sorted(odf.columns), axis=1)
             ok = list(s.columns) == list(o.columns) and len(s) == len(o)
@@ -133,7 +100,7 @@ def main() -> None:
                 status = " MISMATCH"
                 fails += 1
         print(f"{name}: {best:.2f}s ({len(sdf)} rows){status}")
-    print(f"total: {total:.1f}s over {len(specs)} spec gates at sf{sf:g}"
+    print(f"total: {total:.1f}s over {len(TEXTS)} spec gates at sf{sf:g}"
           + (f"; {fails} verify failures" if verify else ""))
 
 
