@@ -62,27 +62,15 @@ HEADLINE = [
     "q20", "q21", "q22",
     "tables_listing", "text_quality", "text_stats", "top_docs_per_lang",
     # -- family representatives added after round 1 --
-    # (dedup_simhash_hamming1 rotated out in r13 to keep the line inside
-    # the driver tail when dedup_persisted_lsh joined — the dedup family
-    # keeps 8 other entries incl. dedup_simhash; its timing still lands
-    # in BENCH_DETAIL.json)
     "dedup_semantic", "dedup_semantic_clusters",
     "dedup_canonical", "dedup_lsh_recall_audit",
     "ann_pq_topk", "ann_ivf_pq_topk", "ann_recall_audit",
     "pq_distortion_audit",
     "embeddings_kmeans", "embeddings_knn_graph",
-    # (events_multibatch_stream rotated out in r12 to keep the line inside
-    # the driver tail — the streaming family keeps 8 other entries; its
-    # timing still lands in BENCH_DETAIL.json)
     "events_stream_stream_join",
     "events_stateful_sessions", "events_sliding_stream",
     "events_trending_stream", "events_hll_stream",
     "events_pagerank", "events_communities",
-    # (events_hll_distinct was rotated out in the interrupted r14 build to
-    # make room for embeddings_drift_retrain; restored in r15 — the round-14
-    # verdict rules a query leaving the driver-visible line a regression.
-    # The chars come from dropping the line's "detail" key, which is
-    # discoverable from this file.)
     "events_hll_distinct", "events_kmv_setops",
     "docs_token_pack", "docs_decontaminate", "docs_dsir_score",
     "docs_bm25_topk", "tfidf_top_terms",

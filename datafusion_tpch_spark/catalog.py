@@ -12,22 +12,14 @@ from a parallel, column-pruned, predicate-pushed scan.
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import FIXTURE_TABLES
+from .session import memo
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-# DataFrames are immutable plan objects and the fixture files never change
-# within a session, so the (session, dir, table) -> DataFrame mapping is
-# safe to memoize — it skips the per-read parquet footer/schema RPC that
-# otherwise taxes every query build ~0.1s.  Weak-keyed on the session so
-# entries die with it (no stale plans against a stopped context).
-_LOAD_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = None  # type: ignore[assignment]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -37,18 +29,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     vectorized reader rejects; read it as int64 nanoseconds and rebuild a
     microsecond timestamp (floor division — the same truncation DuckDB
     applies when it narrows nanos to its native micros).
+
+    DataFrames are immutable plan objects and the fixture files never
+    change within a session, so each (dir, table) is loaded once per
+    session: that skips the parquet footer/schema RPC that otherwise taxes
+    every query build ~0.1s.
     """
-    global _LOAD_CACHE
-    if _LOAD_CACHE is None:
-        _LOAD_CACHE = weakref.WeakKeyDictionary()
-    per_session = _LOAD_CACHE.setdefault(spark, {})
-    key = (os.path.normpath(sf_dir), name)
-    cached = per_session.get(key)
-    if cached is not None:
-        return cached
-    df = _load_table_uncached(spark, sf_dir, name)
-    per_session[key] = df
-    return df
+    return memo(spark, ("load_table", os.path.normpath(sf_dir), name),
+                lambda: _load_table_uncached(spark, sf_dir, name))
 
 
 # Some fixture generations write events.ts as parquet TIMESTAMP(NANOS),

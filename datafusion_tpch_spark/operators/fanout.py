@@ -9,10 +9,11 @@ that does both, with a width taken from the input's row count.
 
 from __future__ import annotations
 
-import weakref
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import memo
 
 # Rows one Python task is given.  Each mapInPandas task pays ~0.3 s of CPU
 # before its kernel runs (~0.2 s in the worker's per-task set-up, which
@@ -28,13 +29,6 @@ from pyspark.sql import DataFrame, SparkSession
 # rule has been measured on hosts of at most 4 cores; wider hosts get at
 # most ceil(rows / 1024) tasks per front, not one per core.
 ROWS_PER_PY_TASK = 1024
-
-# (session) -> {parquet file -> row count from its footer}.  The files a
-# front reads do not change within a session (the catalog memoizes their
-# DataFrames on the same assumption), so each footer is read once.
-_ROWS_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, int]]" = (
-    weakref.WeakKeyDictionary()
-)
 
 
 def tasks_for(rows: int, rows_per_task: int = ROWS_PER_PY_TASK) -> int:
@@ -66,19 +60,19 @@ def input_rows(df: DataFrame, stop_at: int | None = None) -> int | None:
     Spark job).  An upper bound when ``df`` filters; None when ``df`` reads
     no files or a footer cannot be read.  Once the total reaches
     ``stop_at`` the remaining footers are not read and the partial total
-    is returned."""
+    is returned.  The files a front reads do not change within a session
+    (the catalog memoizes their DataFrames on the same assumption), so
+    each footer is read once per session."""
     files = df.inputFiles()
     if not files:
         return None
-    known = _ROWS_CACHE.setdefault(df.sparkSession, {})
     total = 0
     for f in files:
-        if f not in known:
-            rows = _footer_rows(f)
-            if rows is None:
-                return None
-            known[f] = rows
-        total += known[f]
+        rows = memo(df.sparkSession, ("footer_rows", f),
+                    lambda f=f: _footer_rows(f))
+        if rows is None:
+            return None
+        total += rows
         if stop_at is not None and total >= stop_at:
             break
     return total

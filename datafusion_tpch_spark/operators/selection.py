@@ -81,6 +81,11 @@ def sharded_prefix(
     anywhere, preserving the strictly-previous-row semantics callers
     filter on).  ``inclusive=False`` excludes the current row.
     Also appends a ``pid`` shard column (callers may drop it).
+
+    Input contract: every column of ``df`` is hashed by the ``_pg``
+    pruning guard below, so callers pass ``df`` projected to the scalar
+    columns they need.  A ``MapType`` column fails analysis: Spark's
+    ``hash()`` rejects maps.
     """
     ranged = df.repartitionByRange(num_ranges, *order_by).withColumn(
         "pid", F.spark_partition_id()
@@ -103,10 +108,12 @@ def sharded_prefix(
     # max over a non-empty group of the never-null hash() is never null,
     # but the optimizer cannot fold that) makes both branches prune
     # identically, and AQE then computes the range exchange ONCE
-    # (plans/r15/docs_token_budget_*_exec.txt: 3 range exchanges -> 1 +
-    # 2 ReusedExchange).  hash() rather than a struct because min/max
-    # over a struct falls off the HashAggregate fast path to
-    # SortAggregate — a per-shard sort of the full input.
+    # (3 range exchanges -> 1 + 2 ReusedExchange; pinned for
+    # docs_token_budget by
+    # tests/test_plans.py::test_shared_subtrees_evaluated_once).
+    # hash() rather than a struct because min/max over a struct falls
+    # off the HashAggregate fast path to SortAggregate — a per-shard sort
+    # of the full input.
     shard_tot = ranged.groupBy("pid", *partition_by).agg(
         fagg(value).alias("_st"),
         F.max(F.hash(*[F.col(c) for c in df.columns])).alias("_pg"),

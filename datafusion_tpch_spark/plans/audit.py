@@ -30,7 +30,7 @@ def strip_cached_subtrees(plan: str) -> str:
     Shared intermediates are persist()ed (lazily — see
     ``queries/extensions._session_table``), so a consumer's plan prints
     the cached build plan indented below the ``InMemoryTableScan`` that
-    serves it.  Those build shuffles run ONCE per (application, fixture)
+    serves it.  Those build shuffles run ONCE per (session, fixture)
     and every subsequent execution reads the cache — counting them as
     per-query cost would charge the amortized build to every consumer,
     exactly what the shared-intermediate pattern exists to avoid."""

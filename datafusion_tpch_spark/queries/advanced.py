@@ -277,8 +277,8 @@ def docs_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # without it Catalyst prunes the unused cnt from this branch,
     # rewriting it to a distinct-style aggregate whose subtree no longer
     # matches per's, and the chunk explode ran TWICE (the q15/tfidf
-    # canonical-subtree lesson; executed pair in
-    # plans/r15/docs_chunk_dedup_{before,after}_exec.txt)
+    # canonical-subtree lesson; pinned by
+    # tests/test_plans.py::test_shared_subtrees_evaluated_once)
     owner = (
         per.where(F.col("cnt") >= 1)
         .groupBy("chunk")
@@ -1971,8 +1971,8 @@ def events_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     # de-duplicated TWICE.  Counting per (week, user) first — with the
     # vacuous k >= 1 guard keeping k consumed — pins the inner distinct
     # in place, so both consumers share days' exchange and the scan runs
-    # once (guide §2.4; executed pair in
-    # plans/r15/events_stickiness_{audit,after_exec}.txt).
+    # once (guide §2.4; pinned by
+    # tests/test_plans.py::test_shared_subtrees_evaluated_once).
     weekly = (
         days.groupBy("week", "user_id")
         .agg(F.count(F.lit(1)).alias("k"))
@@ -2424,8 +2424,8 @@ def events_type_dow_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # canonically different subtrees, so the fact table was scanned and
     # aggregated FOUR times despite the docstring's one-aggregation
     # claim.  With the branches identical the cells exchange is computed
-    # once and reused (the q15 lesson; executed pair in
-    # plans/r15/events_type_dow_chisq_{audit,after_exec}.txt).
+    # once and reused (the q15 lesson; pinned by
+    # tests/test_plans.py::test_shared_subtrees_evaluated_once).
     cells = (
         ev.select(
             F.col("event_type"), F.dayofweek(F.col("ts")).alias("dow")

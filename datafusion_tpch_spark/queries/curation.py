@@ -167,8 +167,8 @@ def docs_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keep the two branches canonically identical so the explode and its
     # exchange are computed once and reused, and the anti-join now sees
     # one row per (doc, word) with the multiplicity re-applied as
-    # sum(cnt) — bit-identical, counts are integers.  Executed pair:
-    # plans/r15/docs_boilerplate_strip_{before,after}_exec.txt.
+    # sum(cnt) — bit-identical, counts are integers.  Pinned by
+    # tests/test_plans.py::test_shared_subtrees_evaluated_once.
     exploded = docs.where(F.col("doc_id").isNotNull()).select(
         "doc_id", F.explode(text.words(F.col("text"))).alias("w")
     )

@@ -19,6 +19,7 @@ from ..catalog import load_table
 from ..functions import hashing, text, vectors
 from ..functions.exact import davg, davg_sql, dsum, dsum_sql
 from ..operators.fanout import kernel_front
+from ..session import memo
 from . import QuerySpec
 
 
@@ -31,34 +32,18 @@ def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
 # same expensive table (capped shingle set, LSH buckets, SimHash
 # signatures, semantic near-dup pairs) and Catalyst does not share
 # subplans across separately-submitted queries.  Materialize each once
-# per (application, fixture) — the in-session form of "write the
+# per (session, fixture) — the in-session form of "write the
 # intermediate table once", which is what a 100 TB pipeline does on disk.
 # persist() (not localCheckpoint) keeps the build LAZY — plan-only
 # consumers (explain, PLANS.md, registry smoke) trigger no jobs — and
 # keeps LINEAGE, so executor loss during a long session recomputes the
-# lost blocks instead of failing the job.  The session-scoped cache is
-# also what stops re-invocations from stacking fresh persisted copies in
-# storage memory: every caller of the same (fixture, tag) shares ONE
-# persisted frame per application.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
+# lost blocks instead of failing the job.  The session memo is also what
+# stops re-invocations from stacking fresh persisted copies in storage
+# memory: every caller of the same (fixture, tag) shares ONE persisted
+# frame per session.
 def _session_table(spark: SparkSession, sf_dir: str, tag: str,
                    build) -> DataFrame:
-    app_id = spark.sparkContext.applicationId
-    # only one SparkContext is live per process, so entries from any other
-    # applicationId belong to a stopped session — drop them instead of
-    # pinning dead cache references for process lifetime (long-lived
-    # multi-session processes such as test runners)
-    stale = [k for k in _TABLE_CACHE if k[0] != app_id]
-    for k in stale:
-        del _TABLE_CACHE[k]
-    key = (app_id, sf_dir, tag)
-    cached = _TABLE_CACHE.get(key)
-    if cached is None:
-        cached = build().persist()
-        _TABLE_CACHE[key] = cached
-    return cached
+    return memo(spark, ("table", sf_dir, tag), lambda: build().persist())
 
 
 # ===========================================================================
@@ -145,7 +130,7 @@ def _shingle_set(spark: SparkSession, sf_dir: str, checkpoint: bool = True) -> D
     The hot list is bounded by corpus boilerplate, not corpus size, so the
     broadcast stays small at 100 TB.
 
-    ``checkpoint=True`` materializes the capped set once per (app,
+    ``checkpoint=True`` materializes the capped set once per (session,
     fixture) via ``_session_table`` — it feeds jaccard, containment, and
     the recall audit, each with multiple consumers of both join sides.
     Tests pass ``checkpoint=False`` to audit the pre-checkpoint plan.
@@ -293,7 +278,7 @@ def _lsh_buckets(spark: SparkSession, sf_dir: str, checkpoint: bool = True) -> D
     applied as a count window over the bucket key: rides the same
     (band, bkey) shuffle the self-join needs; a hot bucket costs a linear
     count, never the quadratic join.  ``checkpoint=True`` materializes the
-    buckets once per (app, fixture) via ``_session_table`` — the LSH
+    buckets once per (session, fixture) via ``_session_table`` — the LSH
     gate, the recall audit, and the provenance matrix all consume the
     same table, each on both join sides; tests pass ``checkpoint=False``
     to audit the pre-checkpoint plan."""
@@ -536,9 +521,6 @@ def _build_lsh_bucket_index(docs: DataFrame, path: str, fp: str,
     li.write_lsh_index(cells, path, fp, params)
 
 
-_LSH_FP_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _cached_lsh_fingerprint(spark: SparkSession, sf_dir: str,
                             docs: DataFrame) -> str:
     """Session-memoized ``lsh_index.corpus_text_fingerprint`` (same
@@ -546,15 +528,8 @@ def _cached_lsh_fingerprint(spark: SparkSession, sf_dir: str,
     under a live session; the manifest check stays per-call)."""
     from ..operators import lsh_index as li
 
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _LSH_FP_CACHE if k[0] != app_id]:
-        del _LSH_FP_CACHE[k]
-    key = (app_id, sf_dir)
-    v = _LSH_FP_CACHE.get(key)
-    if v is None:
-        v = li.corpus_text_fingerprint(docs)
-        _LSH_FP_CACHE[key] = v
-    return v
+    return memo(spark, ("lsh_fp", sf_dir),
+                lambda: li.corpus_text_fingerprint(docs))
 
 
 DEDUP_INCREMENTAL_LSH_SQL = f"""
@@ -751,7 +726,7 @@ _SIMHASH_BITS = 16
 
 def _simhash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Signature table shared by the simhash gate and BOTH sides of the
-    multi-probe Hamming join — one materialization per (app, fixture)."""
+    multi-probe Hamming join — one materialization per (session, fixture)."""
     return _session_table(
         spark, sf_dir, "simhash", lambda: _simhash_plan(spark, sf_dir)
     )
@@ -917,7 +892,7 @@ _SEM_T = _COS_T
 def _sem_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The semantic near-dup pair table feeds four gates (pair listing,
     cluster formation, the kNN graph, the threshold sweep); materialize
-    once per (app, fixture), exactly as a real pipeline persists the
+    once per (session, fixture), exactly as a real pipeline persists the
     pair table before survivor election."""
     return _session_table(
         spark, sf_dir, "sem_pairs", lambda: _sem_pairs_plan(spark, sf_dir)
@@ -1028,7 +1003,7 @@ ORDER BY id1, id2
 def _sem_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected-component labels over the semantic pair table, shared by
     the cluster gates (canonical survivor listing + quality election) —
-    materialized once per (app, fixture), exactly as a real pipeline
+    materialized once per (session, fixture), exactly as a real pipeline
     persists cluster assignments before any election policy runs."""
     from ..operators.graph import connected_components
 
@@ -1808,13 +1783,6 @@ _IVF_ITERS = 1      # Lloyd refinement iterations at index-build time (the
 _IVF_NPROBE = 24    # cells each query probes (cell-union) — the recall knob
 _EMB_D = 64         # fixture embedding dimensionality (oracle CTEs unroll it)
 
-# Trained-centroid memo: the index is built once per (application, fixture)
-# and shared by ann_ivf_topk / ann_ivf_pq_topk / ann_recall_audit — the
-# _session_table pattern, but the artifact is a plain k-row python list
-# (the thing a production pipeline persists as its index build).
-_IVF_CENT_CACHE: dict[tuple[str, str], list] = {}
-
-
 def _ivf_trained_centroids(spark: SparkSession, sf_dir: str) -> list:
     """THE deployed IVF index: ``_IVF_K`` md5-sampled seed vectors refined
     by ``_IVF_ITERS`` exact Lloyd iterations (``operators/clustering.
@@ -1826,15 +1794,11 @@ def _ivf_trained_centroids(spark: SparkSession, sf_dir: str) -> list:
     near-uniform fixture) to ~73-80% at <25% candidate fraction — see
     ``ann_recall_audit``, which scores both paths side by side.  Driver
     traffic per iteration is k x d mean rows + the k-row centroid table —
-    corpus-size-independent."""
+    corpus-size-independent.  Trained once per (session, fixture) and
+    shared by ann_ivf_topk / ann_ivf_pq_topk / ann_recall_audit."""
     from ..operators.clustering import kmeans_refine
 
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _IVF_CENT_CACHE if k[0] != app_id]:
-        del _IVF_CENT_CACHE[k]
-    key = (app_id, sf_dir)
-    cached = _IVF_CENT_CACHE.get(key)
-    if cached is None:
+    def train() -> list:
         (emb,) = _t(spark, sf_dir, "embeddings")
         seeds = [
             (int(r.vec_id), [float(x) for x in r.embedding])
@@ -1843,9 +1807,9 @@ def _ivf_trained_centroids(spark: SparkSession, sf_dir: str) -> list:
             .limit(_IVF_K)
             .collect()
         ]
-        cached, _ = kmeans_refine(emb, seeds, iters=_IVF_ITERS, exact=True)
-        _IVF_CENT_CACHE[key] = cached
-    return cached
+        return kmeans_refine(emb, seeds, iters=_IVF_ITERS, exact=True)[0]
+
+    return memo(spark, ("ivf_centroids", sf_dir), train)
 
 
 def _ivf_query_probes(emb: DataFrame, centroids: list) -> DataFrame:
@@ -1875,7 +1839,7 @@ def _ivf_query_probes(emb: DataFrame, centroids: list) -> DataFrame:
 
 
 def _ivf_assigned_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The cell-assigned corpus, materialized once per (app, fixture) —
+    """The cell-assigned corpus, materialized once per (session, fixture) —
     the in-session form of the cell-partitioned index table a production
     store persists on disk; ann_ivf_topk and the recall audit read it
     instead of re-running the assignment kernel per query build."""
@@ -1889,7 +1853,7 @@ def _ivf_assigned_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_qprobe_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The (query, probed-cell) frame, materialized once per (app,
+    """The (query, probed-cell) frame, materialized once per (session,
     fixture): 8 x nprobe rows, but rebuilding it re-parses the k x d
     literal centroid table and re-runs the probe window every query
     build."""
@@ -2104,9 +2068,6 @@ def ann_persisted_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _serve_persisted_ivf_topk(spark, sf_dir, path)
 
 
-_CORPUS_FP_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _cached_corpus_fingerprint(spark: SparkSession, sf_dir: str,
                                emb: DataFrame) -> str:
     """Session-memoized ``ann_index.corpus_fingerprint`` — the fixture
@@ -2116,15 +2077,8 @@ def _cached_corpus_fingerprint(spark: SparkSession, sf_dir: str,
     state changes within a session are still honored."""
     from ..operators import ann_index as ai
 
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _CORPUS_FP_CACHE if k[0] != app_id]:
-        del _CORPUS_FP_CACHE[k]
-    key = (app_id, sf_dir)
-    v = _CORPUS_FP_CACHE.get(key)
-    if v is None:
-        v = ai.corpus_fingerprint(emb)
-        _CORPUS_FP_CACHE[key] = v
-    return v
+    return memo(spark, ("corpus_fp", sf_dir),
+                lambda: ai.corpus_fingerprint(emb))
 
 
 def _serve_persisted_ivf_topk(
@@ -2430,7 +2384,7 @@ FROM dist
 
 def _ivf_pq_coded_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF-PQ index (cell + PQ reconstruction per corpus vector),
-    built in ONE Arrow pass and materialized once per (app, fixture):
+    built in ONE Arrow pass and materialized once per (session, fixture):
     trained coarse quantizer shared with ann_ivf_topk; PQ sub-codebooks
     stay the deterministic md5 seeds — training them would be a second
     per-subspace k-means whose recall contribution the distortion audit
@@ -3050,8 +3004,8 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Catalyst prunes the unused count from this branch, rewriting it to a
     # distinct-style aggregate whose scan subtree no longer canonically
     # matches tf's — so AQE re-ran the whole tokenize+explode+shuffle a
-    # second time (verified in plans/r15/tfidf_top_terms_before_exec.txt:
-    # two Generate stages, no ReusedExchange).  Referencing tf keeps the
+    # second time (two Generate stages, no ReusedExchange; pinned by
+    # tests/test_plans.py::test_shared_subtrees_evaluated_once).  Referencing tf keeps the
     # branches identical up to the (doc_id, term) exchange, which the
     # final plan then computes once and reuses (guide §2.4 — the same
     # vacuous-predicate trick as q15's isnotnull(l_suppkey)).  tf is a
@@ -3661,8 +3615,8 @@ def docs_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the count into a distinct-style aggregate whose subtree would no
     # longer match tf's.  All three consumers now share ONE
     # tokenize+explode+(doc_id, term) exchange, reused by AQE — the
-    # previous shape ran the explode three times (guide §2.4; executed
-    # plan pair in plans/r15/docs_bm25_topk_{before,after}_exec.txt).
+    # previous shape ran the explode three times (guide §2.4; pinned by
+    # tests/test_plans.py::test_shared_subtrees_evaluated_once).
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     dfreq = (
         tf.where(F.col("tf") >= 1)
@@ -4336,7 +4290,7 @@ ORDER BY asset_id, frame_idx
 def _phash_sig_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sig_hi, sig_lo) dHash signature table — decode + hash fused
     in one Arrow kernel pass over real PNG blobs, materialized once per
-    (app, fixture) because the Hamming join consumes it on both sides (a
+    (session, fixture) because the Hamming join consumes it on both sides (a
     diamond: without the checkpoint each branch would re-run the codec)."""
     from ..operators.multimodal import (
         decoded_phash_signatures,
@@ -5046,7 +5000,7 @@ MULTIMODAL_AUDIO_CLIP_DEDUP_SQL = _audio_clip_sql()
 def _video_frame_sig_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-frame block-mean signature table (doc_id, frame_idx, width,
     height, sig1, sig2), every AVI/MJPEG frame entropy-decoded in one
-    fused Arrow kernel scan — materialized once per (app, fixture) and
+    fused Arrow kernel scan — materialized once per (session, fixture) and
     shared by the frame-level and clip-level video dedup gates."""
     from ..operators.multimodal import (
         decoded_video_frame_signatures,
@@ -6376,8 +6330,8 @@ def events_user_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     # raw), so the fact table was scanned and shuffled TWICE; the window
     # rides one user-keyed exchange over the compact distinct-day table
     # — bounded per user by their active-day count — and the join
-    # disappears (guide §2.4; executed pair in
-    # plans/r15/events_user_retention_{audit,after_exec}.txt).
+    # disappears (guide §2.4; pinned by
+    # tests/test_plans.py::test_shared_subtrees_evaluated_once).
     w = Window.partitionBy("user_id")
     return (
         days.withColumn("first_day", F.min("day").over(w))
@@ -6901,8 +6855,8 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # column) — five canonically different events scans for three
     # stages.  With the base frame guarded here and the stage counts
     # referencing the min column below, each stage's exchange is
-    # computed once and reused (the q15 lesson; executed pair in
-    # plans/r15/events_funnel_{audit,after_exec}.txt).
+    # computed once and reused (the q15 lesson; pinned by
+    # tests/test_plans.py::test_shared_subtrees_evaluated_once).
     e = ev.select(
         "user_id", "event_type", F.unix_micros(F.col("ts")).alias("us")
     ).where(F.col("user_id").isNotNull() & F.col("us").isNotNull())

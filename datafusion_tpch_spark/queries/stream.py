@@ -14,13 +14,12 @@ extensions.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.exact import dsum_sql
 from ..operators.fanout import kernel_front
+from ..session import memo
 from ..streaming import (
     click_purchase_join_stream,
     dedup_keys_stream,
@@ -434,37 +433,6 @@ ORDER BY event_type
 EVENTS_HLL_STREAM_SQL = _hll_stream_sql()
 
 
-# SparkSession -> {sf_dir: ((agg, open) state DataFrames, batch count)}.
-# Keyed WEAKLY by the session object, not applicationId: the cached frames
-# (localCheckpointed in that session) are session-bound, and
-# ``spark.newSession()`` shares the applicationId without sharing them —
-# an app-keyed cache would serve another session's frames.  The cached
-# DataFrames back-reference the key session, so weak keys alone never
-# collect an entry — ``_sweep_stopped_sessions`` evicts stopped sessions'
-# entries on each access instead.
-_SCD2_STREAM_STATE: (
-    "weakref.WeakKeyDictionary[SparkSession, dict[str, tuple[DataFrame, DataFrame, int]]]"
-) = weakref.WeakKeyDictionary()
-
-
-def _sweep_stopped_sessions(cache) -> None:
-    """Evict cache entries whose session's SparkContext has stopped.
-
-    Weak keys alone cannot collect these entries: the cached value holds
-    DataFrames whose ``_session`` strongly references the key session, so
-    the weakref never clears.  Sweeping on each access restores the
-    hygiene the old applicationId sweep provided — a stopped session's
-    localCheckpointed state is released instead of pinned for process
-    lifetime."""
-    for sess in list(cache.keys()):
-        try:
-            stopped = sess._sc._jsc is None
-        except Exception:
-            stopped = True
-        if stopped:
-            cache.pop(sess, None)
-
-
 def _split4_layout(spark: SparkSession, sf_dir: str) -> str:
     """The 4-file arbitrary-split events layout used to force real
     micro-batch boundaries (events_multibatch_stream, events_cdc_stream);
@@ -558,51 +526,52 @@ def events_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    _sweep_stopped_sessions(_SCD2_STREAM_STATE)
-    states = _SCD2_STREAM_STATE.setdefault(spark, {})
-    cached = states.get(sf_dir)
-    if cached is not None:
-        return scd2_finalize(cached[0], cached[1])
 
-    empty_agg, empty_open = scd2_empty_state(spark)
-    holder = {
-        "agg": empty_agg.localCheckpoint(),
-        "open": empty_open.localCheckpoint(),
-        "n": 0,
-        "max_us": None,
-    }
+    def maintain() -> tuple[DataFrame, DataFrame, int]:
+        empty_agg, empty_open = scd2_empty_state(spark)
+        holder = {
+            "agg": empty_agg.localCheckpoint(),
+            "open": empty_open.localCheckpoint(),
+            "n": 0,
+            "max_us": None,
+        }
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        us = F.unix_micros(F.col("ts"))
-        b = batch_df.select(
-            "user_id", "event_id", F.col("event_type").alias("state_type"),
-            us.alias("us"),
-        ).localCheckpoint()
-        bounds = b.agg(
-            F.min("us").alias("lo"), F.max("us").alias("hi")
-        ).collect()[0]
-        if bounds["lo"] is None:
-            return
-        if holder["max_us"] is not None and bounds["lo"] < holder["max_us"]:
-            raise AssertionError(
-                "feed violated event-time order across micro-batches"
+        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+            us = F.unix_micros(F.col("ts"))
+            b = batch_df.select(
+                "user_id", "event_id", F.col("event_type").alias("state_type"),
+                us.alias("us"),
+            ).localCheckpoint()
+            bounds = b.agg(
+                F.min("us").alias("lo"), F.max("us").alias("hi")
+            ).collect()[0]
+            if bounds["lo"] is None:
+                return
+            if (holder["max_us"] is not None
+                    and bounds["lo"] < holder["max_us"]):
+                raise AssertionError(
+                    "feed violated event-time order across micro-batches"
+                )
+            holder["max_us"] = bounds["hi"]
+            new_agg, new_open = scd2_apply_batch(
+                holder["agg"], holder["open"], b
             )
-        holder["max_us"] = bounds["hi"]
-        new_agg, new_open = scd2_apply_batch(holder["agg"], holder["open"], b)
-        holder["agg"] = new_agg.localCheckpoint()
-        holder["open"] = new_open.localCheckpoint()
-        holder["n"] += 1
+            holder["agg"] = new_agg.localCheckpoint()
+            holder["open"] = new_open.localCheckpoint()
+            holder["n"] += 1
 
-    layout = _timeordered_week_layout(spark, sf_dir)
-    schema = spark.read.parquet(layout).schema
-    feed = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(layout)
-    )
-    run_foreach_batch(spark, feed, apply_batch, "events_scd2_stream")
-    states[sf_dir] = (holder["agg"], holder["open"], holder["n"])
-    return scd2_finalize(holder["agg"], holder["open"])
+        layout = _timeordered_week_layout(spark, sf_dir)
+        schema = spark.read.parquet(layout).schema
+        feed = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(layout)
+        )
+        run_foreach_batch(spark, feed, apply_batch, "events_scd2_stream")
+        return holder["agg"], holder["open"], holder["n"]
+
+    state = memo(spark, ("stream", "events_scd2_stream", sf_dir), maintain)
+    return scd2_finalize(state[0], state[1])
 
 
 # oracle: identical derivation to the batch SCD2 gate — the stream's
@@ -626,15 +595,6 @@ ORDER BY user_id, state_type
 """
 
 
-# SparkSession -> {sf_dir: (final state DataFrame, micro-batch count)};
-# same always-on reuse contract as run_stream_to_df: the first call per
-# session maintains the state table through the real multi-batch stream,
-# later calls read the maintained table — how production consumers hit a
-# continuously-merged lakehouse table.  Weak session keys, same rationale
-# as _SCD2_STREAM_STATE.
-_CDC_STREAM_STATE: (
-    "weakref.WeakKeyDictionary[SparkSession, dict[str, tuple[DataFrame, int]]]"
-) = weakref.WeakKeyDictionary()
 
 
 def events_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -674,49 +634,49 @@ def events_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    _sweep_stopped_sessions(_CDC_STREAM_STATE)
-    states = _CDC_STREAM_STATE.setdefault(spark, {})
-    cached = states.get(sf_dir)
-    if cached is not None:
-        return cdc_finalize(cached[0], _CDC_TOMBSTONE)
 
-    cut = F.lit(_CDC_CUTOFF).cast("timestamp")
+    def maintain() -> tuple[DataFrame, int]:
+        cut = F.lit(_CDC_CUTOFF).cast("timestamp")
 
-    # base snapshot: compacted pre-cutoff state for the snapshotted keys
-    ev = load_table(spark, sf_dir, "events")
-    snap = ev.filter(
-        (F.col("ts") < cut) & (F.col("user_id") % _CDC_UNSNAPPED_MOD != 0)
-    )
-    holder = {
-        "state": cdc_compact(snap, is_feed=False).localCheckpoint(),
-        "n": 0,
-    }
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            # don't count no-op batches: the >=2-batch test must prove
-            # the incremental merge really ran across boundaries
-            return
-        comp = cdc_compact(batch_df, is_feed=True)
-        holder["state"] = cdc_merge_batch(holder["state"], comp).localCheckpoint()
-        holder["n"] += 1
-
-    # the same 4-file layout events_multibatch_stream proves batch
-    # boundaries with
-    path = _split4_layout(spark, sf_dir)
-    schema = spark.read.parquet(path).schema
-    feed = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-        .filter(
-            (F.col("ts") >= cut)
-            & (F.col("user_id") % _CDC_QUIET_MOD != _CDC_QUIET_REM)
+        # base snapshot: compacted pre-cutoff state for the snapshotted keys
+        ev = load_table(spark, sf_dir, "events")
+        snap = ev.filter(
+            (F.col("ts") < cut) & (F.col("user_id") % _CDC_UNSNAPPED_MOD != 0)
         )
-    )
-    run_foreach_batch(spark, feed, apply_batch, "events_cdc_stream")
-    states[sf_dir] = (holder["state"], holder["n"])
-    return cdc_finalize(holder["state"], _CDC_TOMBSTONE)
+        holder = {
+            "state": cdc_compact(snap, is_feed=False).localCheckpoint(),
+            "n": 0,
+        }
+
+        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+            if batch_df.isEmpty():
+                # don't count no-op batches: the >=2-batch test must prove
+                # the incremental merge really ran across boundaries
+                return
+            comp = cdc_compact(batch_df, is_feed=True)
+            holder["state"] = cdc_merge_batch(
+                holder["state"], comp
+            ).localCheckpoint()
+            holder["n"] += 1
+
+        # the same 4-file layout events_multibatch_stream proves batch
+        # boundaries with
+        path = _split4_layout(spark, sf_dir)
+        schema = spark.read.parquet(path).schema
+        feed = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(path)
+            .filter(
+                (F.col("ts") >= cut)
+                & (F.col("user_id") % _CDC_QUIET_MOD != _CDC_QUIET_REM)
+            )
+        )
+        run_foreach_batch(spark, feed, apply_batch, "events_cdc_stream")
+        return holder["state"], holder["n"]
+
+    state = memo(spark, ("stream", "events_cdc_stream", sf_dir), maintain)
+    return cdc_finalize(state[0], _CDC_TOMBSTONE)
 
 
 def _cdc_stream_oracle() -> str:
@@ -761,12 +721,6 @@ ORDER BY user_id
 EVENTS_CDC_STREAM_SQL = _cdc_stream_oracle()
 
 
-# Streaming near-dup admission: maintained verdict table per session, keyed
-# like _CDC_STREAM_STATE (first call per session runs the real multi-batch
-# stream; later calls read the maintained table).
-_INGEST_STREAM_STATE: (
-    "weakref.WeakKeyDictionary[SparkSession, dict[str, tuple[DataFrame, int]]]"
-) = weakref.WeakKeyDictionary()
 
 
 def _docs_incoming_layout(spark: SparkSession, sf_dir: str) -> str:
@@ -814,47 +768,45 @@ def docs_dedup_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.maintenance import admit_batch, admit_merge, run_foreach_batch
     from .extensions import _buckets_of, _corpus_index_cells, _lsh_buckets_raw
 
-    _sweep_stopped_sessions(_INGEST_STREAM_STATE)
-    states = _INGEST_STREAM_STATE.setdefault(spark, {})
-    cached = states.get(sf_dir)
-    if cached is not None:
-        return cached[0].orderBy("doc_id")
-
-    corpus_cells = _corpus_index_cells(
-        _lsh_buckets_raw(spark, sf_dir)
-    ).localCheckpoint()
-    holder: dict = {"verdicts": None, "n": 0}
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        v = admit_batch(
-            _buckets_of(batch_df), batch_df.select("doc_id"), corpus_cells
+    def maintain() -> tuple[DataFrame, int]:
+        corpus_cells = _corpus_index_cells(
+            _lsh_buckets_raw(spark, sf_dir)
         ).localCheckpoint()
-        holder["verdicts"] = admit_merge(holder["verdicts"], v)
-        holder["n"] += 1
-        # the merge is a pure append, so lineage grows one union node per
-        # batch — flatten it periodically so a long-running stream's plan
-        # stays O(1) deep (per-batch cost stays O(batch): the checkpoint
-        # only re-materializes every 8th batch)
-        if holder["n"] % 8 == 0:
-            holder["verdicts"] = holder["verdicts"].localCheckpoint()
+        holder: dict = {"verdicts": None, "n": 0}
 
-    path = _docs_incoming_layout(spark, sf_dir)
-    schema = spark.read.parquet(path).schema
-    feed = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    run_foreach_batch(spark, feed, apply_batch, "docs_dedup_ingest_stream")
-    if holder["verdicts"] is None:  # empty incoming slice
-        holder["verdicts"] = spark.createDataFrame(
-            [], "doc_id bigint, n_hit_buckets bigint, kept boolean"
+        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+            if batch_df.isEmpty():
+                return
+            v = admit_batch(
+                _buckets_of(batch_df), batch_df.select("doc_id"), corpus_cells
+            ).localCheckpoint()
+            holder["verdicts"] = admit_merge(holder["verdicts"], v)
+            holder["n"] += 1
+            # the merge is a pure append, so lineage grows one union node per
+            # batch — flatten it periodically so a long-running stream's plan
+            # stays O(1) deep (per-batch cost stays O(batch): the checkpoint
+            # only re-materializes every 8th batch)
+            if holder["n"] % 8 == 0:
+                holder["verdicts"] = holder["verdicts"].localCheckpoint()
+
+        path = _docs_incoming_layout(spark, sf_dir)
+        schema = spark.read.parquet(path).schema
+        feed = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(path)
         )
-    final = holder["verdicts"].localCheckpoint()
-    states[sf_dir] = (final, holder["n"])
-    return final.orderBy("doc_id")
+        run_foreach_batch(spark, feed, apply_batch, "docs_dedup_ingest_stream")
+        if holder["verdicts"] is None:  # empty incoming slice
+            holder["verdicts"] = spark.createDataFrame(
+                [], "doc_id bigint, n_hit_buckets bigint, kept boolean"
+            )
+        final = holder["verdicts"].localCheckpoint()
+        return final, holder["n"]
+
+    state = memo(spark, ("stream", "docs_dedup_ingest_stream", sf_dir),
+                 maintain)
+    return state[0].orderBy("doc_id")
 
 
 def dedup_persisted_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1056,13 +1008,6 @@ def dedup_persisted_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-# Maintained per-(cell, dim) IVF occupancy, same session-cache contract;
-# the cached value also carries the centroid list the finalize rollup
-# compares against: (occupancy DataFrame, n_batches, centroids).
-_EMB_INGEST_STREAM_STATE: (
-    "weakref.WeakKeyDictionary[SparkSession,"
-    " dict[str, tuple[DataFrame, int, list]]]"
-) = weakref.WeakKeyDictionary()
 
 _EMB_SPLIT = 400     # vec_id >= split streams in; rest is the indexed corpus
 _ING_IVF_K = 64      # deployed-index cell count for the ingest monitoring gate
@@ -1146,10 +1091,7 @@ def embeddings_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_foreach_batch,
     )
 
-    _sweep_stopped_sessions(_EMB_INGEST_STREAM_STATE)
-    states = _EMB_INGEST_STREAM_STATE.setdefault(spark, {})
-    cached = states.get(sf_dir)
-    if cached is None:
+    def maintain() -> tuple[DataFrame, int, list]:
         centroids = _emb_corpus_centroids(spark, sf_dir)
         holder: dict = {"occ": None, "n": 0}
 
@@ -1176,8 +1118,10 @@ def embeddings_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         # holder["occ"] is already a localCheckpoint (apply_batch
         # checkpoints every merge), so cache it as-is
-        states[sf_dir] = (holder["occ"], holder["n"], centroids)
-    occ, _, centroids = states[sf_dir]
+        return holder["occ"], holder["n"], centroids
+
+    key = ("stream", "embeddings_ingest_stream", sf_dir)
+    occ, _, centroids = memo(spark, key, maintain)
     return _drift_rollup(spark, occ, centroids).orderBy("cell")
 
 
@@ -1510,12 +1454,6 @@ ORDER BY query_id, rank
 EMBEDDINGS_DRIFT_RETRAIN_SQL = _drift_retrain_oracle()
 
 
-# Streaming ANN serve state: (post-ingest assigned index DataFrame,
-# n_batches, trained corpus centroids) per (session, fixture).
-_ANN_INGEST_STATE: (
-    "weakref.WeakKeyDictionary[SparkSession,"
-    " dict[str, tuple[DataFrame, int, list]]]"
-) = weakref.WeakKeyDictionary()
 
 
 def _ingest_trained_centroids(spark: SparkSession, sf_dir: str) -> list:
@@ -1575,10 +1513,7 @@ def ann_ingest_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.window import Window
 
-    _sweep_stopped_sessions(_ANN_INGEST_STATE)
-    states = _ANN_INGEST_STATE.setdefault(spark, {})
-    cached = states.get(sf_dir)
-    if cached is None:
+    def maintain() -> tuple[DataFrame, int, list]:
         centroids = _ingest_trained_centroids(spark, sf_dir)
         corpus = load_table(spark, sf_dir, "embeddings").filter(
             F.col("vec_id") < _EMB_SPLIT
@@ -1612,8 +1547,10 @@ def ann_ingest_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         idx = segments[0]
         for seg in segments[1:]:
             idx = idx.unionByName(seg)
-        states[sf_dir] = (idx, len(segments) - 1, centroids)
-    idx, _, centroids = states[sf_dir]
+        return idx, len(segments) - 1, centroids
+
+    idx, _, centroids = memo(spark, ("stream", "ann_ingest_topk", sf_dir),
+                             maintain)
     emb = load_table(spark, sf_dir, "embeddings")
     q = _ivf_query_probes(emb, centroids)
     c = idx.select(
@@ -1848,10 +1785,6 @@ def ann_persisted_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _serve_ingest_ann(spark, emb, path, cells_subdir="cells_compact")
 
 
-# Maintained per-source token meter, same session-cache contract.
-_METER_STREAM_STATE: (
-    "weakref.WeakKeyDictionary[SparkSession, dict[str, tuple[DataFrame, int]]]"
-) = weakref.WeakKeyDictionary()
 
 
 def docs_token_meter_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1879,37 +1812,35 @@ def docs_token_meter_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from .curation import _bpe_vocab_tok
 
-    _sweep_stopped_sessions(_METER_STREAM_STATE)
-    states = _METER_STREAM_STATE.setdefault(spark, {})
-    cached = states.get(sf_dir)
-    if cached is not None:
-        return cached[0].orderBy("source")
+    def maintain() -> tuple[DataFrame, int]:
+        vocab_tok = _bpe_vocab_tok(spark, sf_dir)  # session-cached
+        holder: dict = {"meter": None, "n": 0}
 
-    vocab_tok = _bpe_vocab_tok(spark, sf_dir)  # session-cached, checkpointed
-    holder: dict = {"meter": None, "n": 0}
+        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+            if batch_df.isEmpty():
+                return
+            m = meter_batch(batch_df, vocab_tok)
+            holder["meter"] = meter_merge(holder["meter"], m).localCheckpoint()
+            holder["n"] += 1
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        m = meter_batch(batch_df, vocab_tok)
-        holder["meter"] = meter_merge(holder["meter"], m).localCheckpoint()
-        holder["n"] += 1
-
-    path = _docs_incoming_layout(spark, sf_dir)
-    schema = spark.read.parquet(path).schema
-    feed = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    run_foreach_batch(spark, feed, apply_batch, "docs_token_meter_stream")
-    if holder["meter"] is None:  # empty incoming slice
-        holder["meter"] = spark.createDataFrame(
-            [], "source string, n_docs bigint, n_tokens bigint"
+        path = _docs_incoming_layout(spark, sf_dir)
+        schema = spark.read.parquet(path).schema
+        feed = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(path)
         )
-    final = holder["meter"].localCheckpoint()
-    states[sf_dir] = (final, holder["n"])
-    return final.orderBy("source")
+        run_foreach_batch(spark, feed, apply_batch, "docs_token_meter_stream")
+        if holder["meter"] is None:  # empty incoming slice
+            holder["meter"] = spark.createDataFrame(
+                [], "source string, n_docs bigint, n_tokens bigint"
+            )
+        final = holder["meter"].localCheckpoint()
+        return final, holder["n"]
+
+    state = memo(spark, ("stream", "docs_token_meter_stream", sf_dir),
+                 maintain)
+    return state[0].orderBy("source")
 
 
 def _meter_stream_oracle() -> str:
@@ -1932,18 +1863,12 @@ ORDER BY d.source
 DOCS_TOKEN_METER_STREAM_SQL = _meter_stream_oracle()
 
 
-# Maintained exact-substring admission verdicts, same session-cache
-# contract as the LSH ingest gate: (verdict DataFrame, n_batches).
-_XSUB_STREAM_STATE: (
-    "weakref.WeakKeyDictionary[SparkSession,"
-    " dict[str, tuple[DataFrame, int]]]"
-) = weakref.WeakKeyDictionary()
 
 
 def _span_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCT 60-bit hashes of the CORPUS's positional 8-token grams
     (doc_id < split) — the static span index the streaming admission
-    probes; session-cached + checkpointed, built once per (app,
+    probes; session-cached + checkpointed, built once per (session,
     fixture)."""
     from ..functions import hashing, text
     from .extensions import _INCR_SPLIT, _session_table, _t
@@ -1988,42 +1913,42 @@ def docs_substring_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         span_admit_batch,
     )
 
-    _sweep_stopped_sessions(_XSUB_STREAM_STATE)
-    states = _XSUB_STREAM_STATE.setdefault(spark, {})
-    cached = states.get(sf_dir)
-    if cached is not None:
-        return cached[0].orderBy("doc_id")
+    def maintain() -> tuple[DataFrame, int]:
+        idx = _span_index(spark, sf_dir)  # session-cached, checkpointed
+        holder: dict = {"verdicts": None, "n": 0}
 
-    idx = _span_index(spark, sf_dir)  # session-cached, checkpointed
-    holder: dict = {"verdicts": None, "n": 0}
+        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+            if batch_df.isEmpty():
+                return
+            v = span_admit_batch(batch_df, idx).localCheckpoint()
+            holder["verdicts"] = admit_merge(holder["verdicts"], v)
+            holder["n"] += 1
+            # pure append: flatten the union lineage periodically so a
+            # long-running stream's plan stays O(1) deep
+            if holder["n"] % 8 == 0:
+                holder["verdicts"] = holder["verdicts"].localCheckpoint()
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        v = span_admit_batch(batch_df, idx).localCheckpoint()
-        holder["verdicts"] = admit_merge(holder["verdicts"], v)
-        holder["n"] += 1
-        # pure append: flatten the union lineage periodically so a
-        # long-running stream's plan stays O(1) deep
-        if holder["n"] % 8 == 0:
-            holder["verdicts"] = holder["verdicts"].localCheckpoint()
-
-    path = _docs_incoming_layout(spark, sf_dir)
-    schema = spark.read.parquet(path).schema
-    feed = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    run_foreach_batch(spark, feed, apply_batch, "docs_substring_ingest_stream")
-    if holder["verdicts"] is None:  # empty incoming slice
-        holder["verdicts"] = spark.createDataFrame(
-            [], "doc_id bigint, n_spans bigint, n_dup_spans bigint,"
-            " kept boolean"
+        path = _docs_incoming_layout(spark, sf_dir)
+        schema = spark.read.parquet(path).schema
+        feed = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(path)
         )
-    final = holder["verdicts"].localCheckpoint()
-    states[sf_dir] = (final, holder["n"])
-    return final.orderBy("doc_id")
+        run_foreach_batch(
+            spark, feed, apply_batch, "docs_substring_ingest_stream"
+        )
+        if holder["verdicts"] is None:  # empty incoming slice
+            holder["verdicts"] = spark.createDataFrame(
+                [], "doc_id bigint, n_spans bigint, n_dup_spans bigint,"
+                " kept boolean"
+            )
+        final = holder["verdicts"].localCheckpoint()
+        return final, holder["n"]
+
+    state = memo(spark, ("stream", "docs_substring_ingest_stream", sf_dir),
+                 maintain)
+    return state[0].orderBy("doc_id")
 
 
 def _substring_ingest_oracle() -> str:

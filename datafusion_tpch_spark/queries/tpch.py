@@ -642,8 +642,8 @@ def _revenue_per_supplier(li: DataFrame) -> DataFrame:
     # revenue branch's scan subtree differs by that one filter — defeating
     # AQE's shuffle-stage reuse, so lineitem was scanned and aggregated
     # TWICE per q15 run.  With the branches canonically identical the
-    # revenue exchange is computed once and reused (guide §2.4; see
-    # plans/r15/q15_after.txt post-execution section).
+    # revenue exchange is computed once and reused (guide §2.4; pinned by
+    # tests/test_plans.py::test_shared_subtrees_evaluated_once).
     return (
         li.filter(
             (F.col("l_shipdate") >= _ts("1997-01-01"))

@@ -41,12 +41,13 @@ the fixture-adapted forms cover the per-SF data axis.
 
 from __future__ import annotations
 
+import hashlib
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import TPCH_TABLES
+from ..session import memo
 from ..sources.parquet_io import export_tpch_tables
 from . import QuerySpec, tpch_full
 
@@ -235,27 +236,21 @@ def bind_duckdb(text: str, table_dir: str) -> str:
                         for t in TPCH_TABLES})
 
 
-# SparkSession -> {table_dir: temp-view name prefix}.  Reading a parquet
-# directory starts a schema-inference job, so each session reads each
-# directory once, into temp views.  Keyed by the session itself (weakly,
-# so a dropped session frees its entry): temp views are session-scoped,
-# and spark.newSession() shares the applicationId but not the views.
-_VIEWS: "weakref.WeakKeyDictionary[SparkSession, dict[str, str]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def bind_spark(spark: SparkSession, text: str, table_dir: str) -> DataFrame:
-    """``text`` as a Spark DataFrame over the parquet tables in ``table_dir``."""
-    dirs = _VIEWS.setdefault(spark, {})
-    if table_dir not in dirs:
-        prefix = f"spec{len(dirs)}_"
+    """``text`` as a Spark DataFrame over the parquet tables in ``table_dir``.
+
+    Reading a parquet directory starts a schema-inference job, so each
+    session reads each directory once, into temp views named after it."""
+    def register() -> str:
+        prefix = f"spec_{hashlib.md5(table_dir.encode()).hexdigest()[:12]}_"
         for t in TPCH_TABLES:
             spark.read.parquet(os.path.join(table_dir, t)).createOrReplaceTempView(
                 prefix + t
             )
-        dirs[table_dir] = prefix
-    return spark.sql(_with(text, {t: dirs[table_dir] + t for t in TPCH_TABLES}))
+        return prefix
+
+    prefix = memo(spark, ("spec_views", table_dir), register)
+    return spark.sql(_with(text, {t: prefix + t for t in TPCH_TABLES}))
 
 
 def _gate(text: str):

@@ -11,6 +11,8 @@ code runs on local[32] and on a 1000-executor cluster).
 from __future__ import annotations
 
 import os
+import weakref
+from typing import Any, Callable
 
 from pyspark.sql import SparkSession
 
@@ -76,3 +78,38 @@ def build_session(
 
 def _active_session() -> SparkSession | None:
     return SparkSession.getActiveSession()
+
+
+# Per-session state: session -> {key: value}.  Everything the engine builds
+# once and reuses (fixture frames, persisted intermediates, fingerprints,
+# trained centroids, temp-view bindings, completed stream sinks and
+# maintained stream state) is bound to one session, so it lives here, keyed
+# by the session object, never by applicationId: ``spark.newSession()``
+# shares the applicationId but not temp views, sinks or the frames built in
+# it.  Keys are held weakly, but a cached DataFrame references its session,
+# so stopped sessions are swept on each access as well.
+_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict[tuple, Any]]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def memo(spark: SparkSession, key: tuple, build: Callable[[], Any]) -> Any:
+    """``build()``'s value for ``key`` in ``spark``, built on first use.
+    ``key[0]`` names the kind of entry, e.g. ``("table", sf_dir, tag)``;
+    nothing is stored if ``build`` raises."""
+    for s in list(_MEMO):
+        if s._sc._jsc is None:  # stopped
+            del _MEMO[s]
+    entries = _MEMO.setdefault(spark, {})
+    if key not in entries:
+        entries[key] = build()
+    return entries[key]
+
+
+def forget(spark: SparkSession, kind: str | None = None) -> dict[tuple, Any]:
+    """Drop ``spark``'s entries of ``kind`` (all when None); returns them."""
+    entries = _MEMO.get(spark, {})
+    dropped = {k: v for k, v in entries.items() if kind in (None, k[0])}
+    for k in dropped:
+        del entries[k]
+    return dropped

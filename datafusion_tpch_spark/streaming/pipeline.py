@@ -21,7 +21,6 @@ Scale notes (100 TB / unbounded):
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,6 +32,7 @@ from ..catalog import (
     EVENTS_RAW_SCHEMA,
     events_ts_is_nanos,
 )
+from ..session import memo
 
 SESSION_GAP_MIN = 30
 
@@ -206,18 +206,6 @@ def click_purchase_join_stream(
     )
 
 
-# SparkSession -> {completed sink table names}.  Keyed by the SESSION
-# object (weakly, so a dropped session frees its entry), not by
-# applicationId: memory-sink tables are session-scoped temp views, and
-# ``spark.newSession()`` shares the applicationId while NOT sharing the
-# view registry — an app-keyed cache would "hit" on the new session and
-# then fail with TABLE_OR_VIEW_NOT_FOUND (same aliasing tpch_spec.py
-# guards with its WeakKeyDictionary of per-session views).
-_SINK_COMPLETE: "weakref.WeakKeyDictionary[SparkSession, set[str]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def run_stream_to_df(
     spark: SparkSession,
     sdf: DataFrame,
@@ -248,17 +236,22 @@ def run_stream_to_df(
     cold run's wall time visible in the bench log.
     """
     import re
+
+    if reuse_key is None:
+        _run_to_sink(spark, sdf, name, name, timeout_s, output_mode,
+                     partitions)
+        return spark.table(name)
+    sink = f"{name}__{re.sub(r'[^A-Za-z0-9]', '_', reuse_key)}"
+    memo(spark, ("stream", sink), lambda: _run_to_sink(
+        spark, sdf, name, sink, timeout_s, output_mode, partitions))
+    return spark.table(sink)
+
+
+def _run_to_sink(spark: SparkSession, sdf: DataFrame, name: str, sink: str,
+                 timeout_s: int, output_mode: str, partitions: int) -> None:
     import shutil
     import tempfile
 
-    sink = (
-        f"{name}__{re.sub(r'[^A-Za-z0-9]', '_', reuse_key)}"
-        if reuse_key is not None
-        else name
-    )
-    done = _SINK_COMPLETE.setdefault(spark, set())
-    if reuse_key is not None and sink in done:
-        return spark.table(sink)
     for q in spark.streams.active:
         if q.name == sink:
             q.stop()
@@ -314,6 +307,3 @@ def run_stream_to_df(
         spark.conf.set(
             "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
         )
-    if reuse_key is not None:
-        done.add(sink)
-    return spark.table(sink)

@@ -30,7 +30,7 @@ def main() -> None:
     os.environ.setdefault(
         "SPARK_GRAFT_INDEX_DIR", tempfile.mkdtemp(prefix="idx_lifecycle_")
     )
-    from datafusion_tpch_spark.session import build_session
+    from datafusion_tpch_spark.session import build_session, forget
 
     gates = [
         "ann_persisted_index_topk",
@@ -53,16 +53,11 @@ def main() -> None:
 
     # ---- session 2: fresh process state, serve from artifacts alone -------
     spark = build_session("index-serve")
-    # new session => every per-application memo (trained centroids,
-    # session tables, fingerprint caches) keys off the new applicationId
-    # and misses; clear them explicitly anyway so the serve numbers below
-    # provably start from nothing but the parquet + manifests
-    import datafusion_tpch_spark.queries.extensions as ext
-
-    ext._TABLE_CACHE.clear()
-    ext._IVF_CENT_CACHE.clear()
-    ext._CORPUS_FP_CACHE.clear()
-    ext._LSH_FP_CACHE.clear()
+    # memo entries (trained centroids, persisted intermediates, fingerprints)
+    # belong to the session that built them, so the serve session starts
+    # with none: the serve numbers below start from nothing but the
+    # parquet + manifests
+    assert not forget(spark), "a new session starts with an empty memo"
     qs = all_queries()
     for name in gates:
         t0 = time.perf_counter()

@@ -9,9 +9,14 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from datafusion_tpch_spark import FIXTURE_TABLES
-from datafusion_tpch_spark.session import build_session
+from datafusion_tpch_spark.session import build_session, memo
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def memoized(spark, *key):
+    """The session memo's entry ``key``; fails the test if none is stored."""
+    return memo(spark, key, lambda: pytest.fail(f"nothing memoized at {key}"))
 
 # Driver-generated fixture parquet exists only on the driver machine; on a
 # bare CI runner the generator/UDTF/hash tests still run (they synthesize

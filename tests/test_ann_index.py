@@ -15,6 +15,7 @@ import pytest
 
 from datafusion_tpch_spark.operators import ann_index as ai
 from datafusion_tpch_spark.queries import extensions as ext
+from datafusion_tpch_spark.session import forget
 
 from tests.conftest import SF_DIR
 
@@ -57,7 +58,7 @@ def test_fresh_session_serves_without_retraining(spark, index_dir, monkeypatch):
     _fresh_build(spark, index_dir)  # the build job, session 1
 
     # "session 2": no trained-centroid memo, training forbidden
-    monkeypatch.setattr(ext, "_IVF_CENT_CACHE", {})
+    forget(spark, "ivf_centroids")
 
     def boom(*a, **k):  # pragma: no cover - failure path
         raise AssertionError("serve path attempted to retrain the index")

@@ -20,6 +20,7 @@ from datafusion_tpch_spark.queries.extensions import (
     _CDC_TOMBSTONE,
     _CDC_UNSNAPPED_MOD,
 )
+from tests.conftest import memoized
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -199,10 +200,8 @@ def test_cdc_stream_equals_batch_merge_state(spark):
 def test_cdc_stream_really_ran_multiple_batches(spark):
     """maxFilesPerTrigger=1 over the 4-file layout must yield >=2 real
     micro-batches — otherwise the incremental-merge claim is untested."""
-    from datafusion_tpch_spark.queries.stream import _CDC_STREAM_STATE
-
     _build(spark, "events_cdc_stream").collect()
-    (_, n_batches) = _CDC_STREAM_STATE[spark][SF_DIR]
+    (_, n_batches) = memoized(spark, "stream", "events_cdc_stream", SF_DIR)
     assert n_batches >= 2, f"only {n_batches} micro-batch(es)"
 
 
@@ -218,32 +217,6 @@ def test_scd2_stream_equals_batch_history(spark):
 
 
 def test_scd2_stream_really_ran_multiple_batches(spark):
-    from datafusion_tpch_spark.queries.stream import _SCD2_STREAM_STATE
-
     _build(spark, "events_scd2_stream").collect()
-    n_batches = _SCD2_STREAM_STATE[spark][SF_DIR][2]
+    n_batches = memoized(spark, "stream", "events_scd2_stream", SF_DIR)[2]
     assert n_batches >= 2, f"only {n_batches} micro-batch(es)"
-
-
-def test_stream_state_sweep_evicts_stopped_sessions(spark):
-    """The stream-state caches' values hold DataFrames that back-reference
-    their key session, so WeakKeyDictionary alone never collects an entry;
-    _sweep_stopped_sessions must evict stopped sessions while keeping live
-    ones."""
-    import weakref
-
-    from datafusion_tpch_spark.queries.stream import _sweep_stopped_sessions
-
-    class _FakeSC:
-        _jsc = None
-
-    class _FakeSession:
-        _sc = _FakeSC()
-
-    cache = weakref.WeakKeyDictionary()
-    dead = _FakeSession()
-    cache[dead] = {"sf": ("state", 2)}
-    cache[spark] = {"sf": ("state", 3)}
-    _sweep_stopped_sessions(cache)
-    assert dead not in cache, "stopped session's entry must be evicted"
-    assert spark in cache, "live session's entry must survive the sweep"

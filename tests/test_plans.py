@@ -14,6 +14,7 @@ from datafusion_tpch_spark.plans import (
     scan_columns,
 )
 from datafusion_tpch_spark.queries import all_queries
+from datafusion_tpch_spark.session import forget
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -324,13 +325,12 @@ def test_perceptual_dedup_gates_group_join_broadcasts(spark):
     never sort-merge; the whole plan is kernel pass + one aggregation +
     that broadcast join."""
     from datafusion_tpch_spark.plans import strip_cached_subtrees
-    from datafusion_tpch_spark.queries import extensions as ext
 
     # audit the from-scratch plan: depending on test order the signature
     # tables may already be session-persisted, and the CacheManager would
     # splice differently-shaped InMemoryTableScan trees into the audit
     spark.catalog.clearCache()
-    ext._TABLE_CACHE.clear()
+    forget(spark, "table")
     for name in (
         "multimodal_cross_codec_dedup",
         "multimodal_audio_fp_dedup",
@@ -408,7 +408,7 @@ def test_session_table_builds_are_lazy_no_jobs(spark):
     sc = spark.sparkContext
     # warm the fixture schemas so footer sniffing doesn't muddy the count
     ext._t(spark, SF_DIR, "documents", "events")
-    ext._TABLE_CACHE.clear()
+    forget(spark, "table")
     sc.setJobGroup("lazy-build-check", "plan-only build must run no jobs")
     try:
         ext.dedup_minhash_lsh(spark, SF_DIR)          # LSH bucket cache
@@ -444,6 +444,7 @@ _SINGLE_EVAL_BOUNDS = {
     "events_stickiness": (1, 0),
     "events_user_retention": (1, 0),
     "events_funnel": (3, 0),          # one scan per funnel stage
+    "q15": (2, 0),                    # revenue exchange reused; + supplier
 }
 
 
@@ -500,7 +501,7 @@ def test_kernel_front_starts_no_job(spark):
 
     sc = spark.sparkContext
     docs = load_table(spark, _SF01, "documents")
-    fanout._ROWS_CACHE.pop(spark, None)  # read the footers again
+    forget(spark, "footer_rows")  # read the footers again
     group = "kernel-front-no-job"
     sc.setJobGroup(group, "building a front must run no jobs")
     try:
@@ -524,8 +525,8 @@ def test_input_rows_stops_at_cap(spark, tmp_path):
     df = spark.read.parquet(*(str(tmp_path / f"part{i}") for i in range(3)))
     files = set(df.inputFiles())
     assert len(files) >= 3
-    known = fanout._ROWS_CACHE.setdefault(spark, {})
     rows = fanout.input_rows(df, stop_at=1)
+    known = {k[1]: v for k, v in forget(spark, "footer_rows").items()}
     read = files & known.keys()
     assert rows == sum(known[f] for f in read) >= 1
     assert len(read) < len(files), f"read all {len(files)} footers for stop_at=1"

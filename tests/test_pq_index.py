@@ -15,6 +15,7 @@ import pytest
 from datafusion_tpch_spark.operators import ann_index as ai
 from datafusion_tpch_spark.operators import pq_index as pqi
 from datafusion_tpch_spark.queries import extensions as ext
+from datafusion_tpch_spark.session import forget
 
 from tests.conftest import SF_DIR
 
@@ -106,7 +107,7 @@ def test_ivfpq_fresh_session_serves_from_artifacts(spark, index_dir,
     monkeypatch.setattr(ext, "_ivf_trained_centroids", boom)
     monkeypatch.setattr(ext, "_pq_codebook", boom)
     monkeypatch.setattr(pqi, "write_ivfpq_index", boom)
-    monkeypatch.setattr(ext, "_IVF_CENT_CACHE", {})
+    forget(spark, "ivf_centroids")
     rows2 = ext.ann_ivf_pq_persisted_topk(spark, SF_DIR).collect()
     assert [tuple(r) for r in rows2] == [tuple(r) for r in rows1]
 

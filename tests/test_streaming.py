@@ -4,6 +4,8 @@ Structured Streaming engine (AvailableNow trigger over the bounded fixture).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from datafusion_tpch_spark.catalog import load_table
@@ -14,6 +16,7 @@ from datafusion_tpch_spark.streaming import (
     run_stream_to_df,
     session_window_stream,
 )
+from tests.conftest import memoized
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -184,15 +187,12 @@ def test_sink_reuse_returns_identical_results_without_rerun(spark):
     """Always-on sink reuse (round 6): the first reuse_key call runs the
     stream and registers completion; the second returns the SAME rows from
     the completed sink — no new streaming query starts."""
-    from datafusion_tpch_spark.streaming import pipeline as pl
-
     stream = hourly_agg_stream(read_events_stream(spark, SF_DIR))
     first = run_stream_to_df(
         spark, stream, "t_reuse_hourly", reuse_key=SF_DIR
     ).orderBy("hour", "event_type").collect()
-    sink = [s for s in pl._SINK_COMPLETE.get(spark, set())
-            if s.startswith("t_reuse_hourly__")]
-    assert sink, "first call must register sink completion"
+    sink = "t_reuse_hourly__" + re.sub(r"[^A-Za-z0-9]", "_", SF_DIR)
+    memoized(spark, "stream", sink)  # first call registered completion
 
     # second build: would raise/rerun if reuse failed; assert no active
     # streaming query is ever started for this sink again
@@ -201,7 +201,7 @@ def test_sink_reuse_returns_identical_results_without_rerun(spark):
         spark, stream2, "t_reuse_hourly", reuse_key=SF_DIR
     ).orderBy("hour", "event_type").collect()
     assert second == first
-    assert all(q.name != sink[0] for q in spark.streams.active)
+    assert all(q.name != sink for q in spark.streams.active)
 
 
 def test_sink_reuse_is_session_scoped_not_app_scoped(spark):
@@ -491,14 +491,14 @@ def test_ingest_stream_is_multibatch_and_equals_batch_admission(spark):
 
     from datafusion_tpch_spark.queries import all_queries
     from datafusion_tpch_spark.queries.advanced import _scratch_path
-    from datafusion_tpch_spark.queries.stream import _INGEST_STREAM_STATE
 
     specs = all_queries()
     got = specs["docs_dedup_ingest_stream"].build(spark, SF_DIR).collect()
     path = _scratch_path("docs_incoming4", SF_DIR)
     files = [f for f in os.listdir(path) if f.endswith(".parquet")]
     assert len(files) == 4  # the stream really had 4 single-file triggers
-    assert _INGEST_STREAM_STATE[spark][SF_DIR][1] >= 4  # ≥4 non-empty batches
+    state = memoized(spark, "stream", "docs_dedup_ingest_stream", SF_DIR)
+    assert state[1] >= 4  # ≥4 non-empty batches
     batch = specs["dedup_incremental_lsh"].build(spark, SF_DIR).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, batch))
     # admission did both things at least once on this fixture
@@ -515,7 +515,6 @@ def test_token_meter_stream_is_multibatch_and_equals_batch_rollup(spark):
     from datafusion_tpch_spark.queries import all_queries
     from datafusion_tpch_spark.queries.curation import _bpe_doc_tokens
     from datafusion_tpch_spark.queries.extensions import _INCR_SPLIT
-    from datafusion_tpch_spark.queries.stream import _METER_STREAM_STATE
     from datafusion_tpch_spark.catalog import load_table
 
     specs = all_queries()
@@ -523,7 +522,7 @@ def test_token_meter_stream_is_multibatch_and_equals_batch_rollup(spark):
         r["source"]: (r["n_docs"], r["n_tokens"])
         for r in specs["docs_token_meter_stream"].build(spark, SF_DIR).collect()
     }
-    assert _METER_STREAM_STATE[spark][SF_DIR][1] >= 4
+    assert memoized(spark, "stream", "docs_token_meter_stream", SF_DIR)[1] >= 4
     per, _ = _bpe_doc_tokens(spark, SF_DIR)
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "source")
     want = {
@@ -551,7 +550,6 @@ def test_embeddings_ingest_stream_is_multibatch_and_equals_batch(spark):
     from datafusion_tpch_spark.catalog import load_table
     from datafusion_tpch_spark.queries import all_queries
     from datafusion_tpch_spark.queries.stream import (
-        _EMB_INGEST_STREAM_STATE,
         _EMB_SPLIT,
         _emb_corpus_centroids,
     )
@@ -559,9 +557,11 @@ def test_embeddings_ingest_stream_is_multibatch_and_equals_batch(spark):
 
     specs = all_queries()
     got = specs["embeddings_ingest_stream"].build(spark, SF_DIR).collect()
-    assert _EMB_INGEST_STREAM_STATE[spark][SF_DIR][1] >= 4
+    state, n_batches, _ = memoized(
+        spark, "stream", "embeddings_ingest_stream", SF_DIR
+    )
+    assert n_batches >= 4
     # maintained (cell, dim) state == batch state over the full slice
-    state = _EMB_INGEST_STREAM_STATE[spark][SF_DIR][0]
     incoming = load_table(spark, SF_DIR, "embeddings").filter(
         F.col("vec_id") >= _EMB_SPLIT
     )
@@ -584,15 +584,13 @@ def test_substring_ingest_stream_is_multibatch_and_equals_batch(spark):
     from datafusion_tpch_spark.catalog import load_table
     from datafusion_tpch_spark.queries import all_queries
     from datafusion_tpch_spark.queries.extensions import _INCR_SPLIT
-    from datafusion_tpch_spark.queries.stream import (
-        _XSUB_STREAM_STATE,
-        _span_index,
-    )
+    from datafusion_tpch_spark.queries.stream import _span_index
     from datafusion_tpch_spark.streaming.maintenance import span_admit_batch
 
     specs = all_queries()
     got = specs["docs_substring_ingest_stream"].build(spark, SF_DIR).collect()
-    assert _XSUB_STREAM_STATE[spark][SF_DIR][1] >= 4  # >=4 non-empty batches
+    state = memoized(spark, "stream", "docs_substring_ingest_stream", SF_DIR)
+    assert state[1] >= 4  # >=4 non-empty batches
     incoming = (
         load_table(spark, SF_DIR, "documents")
         .filter(F.col("doc_id") >= _INCR_SPLIT)
@@ -616,14 +614,15 @@ def test_ann_ingest_topk_is_multibatch_and_serves_streamed_rows(spark):
     from datafusion_tpch_spark.operators.similarity import ivf_assign
     from datafusion_tpch_spark.queries import all_queries
     from datafusion_tpch_spark.queries.stream import (
-        _ANN_INGEST_STATE,
         _EMB_SPLIT,
         _ingest_trained_centroids,
     )
 
     specs = all_queries()
     got = specs["ann_ingest_topk"].build(spark, SF_DIR).collect()
-    idx, n_batches, centroids = _ANN_INGEST_STATE[spark][SF_DIR]
+    idx, n_batches, centroids = memoized(
+        spark, "stream", "ann_ingest_topk", SF_DIR
+    )
     assert n_batches >= 4
     emb = load_table(spark, SF_DIR, "embeddings")
     want = ivf_assign(emb, _ingest_trained_centroids(spark, SF_DIR))

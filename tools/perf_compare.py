@@ -14,8 +14,8 @@ at the end of every run.  For a from-scratch regen, delete
 PERF_ROWS.json first.
 
 Both sides get a warm-up and best-of-2.  Streaming gates are timed COLD:
-the always-on sink-reuse caches (memory-sink registry, CDC/SCD2 state
-tables) are cleared before every timed Spark run, so the number is a full
+their always-on reuse state (completed memory sinks, maintained stream
+state) is dropped before every timed Spark run, so the number is a full
 stream execution — the same work DuckDB's batch-equivalent re-does each
 run.  The steady-state sink-read cost (what an always-on deployment's
 consumers actually pay) is reported in its own column, never folded into
@@ -44,7 +44,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from datafusion_tpch_spark import FIXTURE_TABLES
 from datafusion_tpch_spark.queries import all_queries
-from datafusion_tpch_spark.session import build_session
+from datafusion_tpch_spark.session import build_session, forget
 
 ANALYSIS = """
 ## Reading this table
@@ -69,55 +69,6 @@ steady-state read of the completed sink (what consumers of an always-on
 deployment pay per query); it is informational and excluded from every
 total and ratio.
 """
-
-
-def clear_stream_reuse(spark) -> None:
-    """Drop the always-on reuse state so the next streaming-gate build
-    replays its full stream: the memory-sink completion registry and the
-    CDC/SCD2 maintained-state caches (all session-keyed)."""
-    from datafusion_tpch_spark.queries.stream import (
-        _ANN_INGEST_STATE,
-        _CDC_STREAM_STATE,
-        _EMB_INGEST_STREAM_STATE,
-        _INGEST_STREAM_STATE,
-        _METER_STREAM_STATE,
-        _SCD2_STREAM_STATE,
-        _XSUB_STREAM_STATE,
-    )
-    from datafusion_tpch_spark.streaming.pipeline import _SINK_COMPLETE
-
-    _SINK_COMPLETE.pop(spark, None)
-    _CDC_STREAM_STATE.pop(spark, None)
-    _SCD2_STREAM_STATE.pop(spark, None)
-    _INGEST_STREAM_STATE.pop(spark, None)
-    _METER_STREAM_STATE.pop(spark, None)
-    _EMB_INGEST_STREAM_STATE.pop(spark, None)
-    _XSUB_STREAM_STATE.pop(spark, None)
-    _ANN_INGEST_STATE.pop(spark, None)
-
-
-def _stream_caches_populated(spark) -> bool:
-    from datafusion_tpch_spark.queries.stream import (
-        _ANN_INGEST_STATE,
-        _CDC_STREAM_STATE,
-        _EMB_INGEST_STREAM_STATE,
-        _INGEST_STREAM_STATE,
-        _METER_STREAM_STATE,
-        _SCD2_STREAM_STATE,
-        _XSUB_STREAM_STATE,
-    )
-    from datafusion_tpch_spark.streaming.pipeline import _SINK_COMPLETE
-
-    return bool(
-        _SINK_COMPLETE.get(spark)
-        or _CDC_STREAM_STATE.get(spark)
-        or _SCD2_STREAM_STATE.get(spark)
-        or _INGEST_STREAM_STATE.get(spark)
-        or _METER_STREAM_STATE.get(spark)
-        or _EMB_INGEST_STREAM_STATE.get(spark)
-        or _XSUB_STREAM_STATE.get(spark)
-        or _ANN_INGEST_STATE.get(spark)
-    )
 
 
 ROWS_PATH = os.path.join(
@@ -186,17 +137,18 @@ def main() -> None:
         # page cache) — the first-ever execution of a query in a process
         # can cost 5x its steady state and is not a plan property.
         # Streaming gates still run their full stream inside every TIMED
-        # window: clear_stream_reuse precedes each timed run.
-        clear_stream_reuse(spark)
+        # window: their always-on reuse state (completed memory sinks,
+        # maintained stream state) is forgotten before each timed run.
+        forget(spark, "stream")
         n = len(spec.build(spark, sf_dir).collect())
         for _ in range(2):
             # cold for streaming gates: no sink/state reuse inside the
-            # timed window — batch gates don't consult these caches
-            clear_stream_reuse(spark)
+            # timed window — batch gates don't consult these entries
+            reused = bool(forget(spark, "stream"))
             t0 = time.perf_counter()
             n = len(spec.build(spark, sf_dir).collect())
             s_best = min(s_best, time.perf_counter() - t0)
-        if _stream_caches_populated(spark):
+        if reused:
             # steady-state: read the completed sink the last run left
             t0 = time.perf_counter()
             spec.build(spark, sf_dir).collect()

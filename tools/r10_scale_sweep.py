@@ -84,14 +84,11 @@ def main() -> None:
                 best = min(best, time.perf_counter() - t0)
             print(f"{name} @ {tag}: {best:.2f}s ({n} rows)", flush=True)
 
-    # streaming gates: cold full run per scale (clear the session caches)
-    from datafusion_tpch_spark.queries.stream import (
-        _EMB_INGEST_STREAM_STATE,
-        _XSUB_STREAM_STATE,
-    )
+    # streaming gates: cold full run per scale (drop the maintained state)
+    from datafusion_tpch_spark.session import forget
 
     for sf_dir, tag in ((SRC, "1x"), (DST, "10x")):
-        _EMB_INGEST_STREAM_STATE.pop(spark, None)
+        forget(spark, "stream")
         t0 = time.perf_counter()
         n = len(qs["embeddings_ingest_stream"].build(spark, sf_dir).collect())
         print(
@@ -100,7 +97,7 @@ def main() -> None:
             flush=True,
         )
     for sf_dir, tag in ((SRC, "1x"), (DST, "10x")):
-        _XSUB_STREAM_STATE.pop(spark, None)
+        forget(spark, "stream")
         t0 = time.perf_counter()
         n = len(
             qs["docs_substring_ingest_stream"].build(spark, sf_dir).collect()

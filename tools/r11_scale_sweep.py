@@ -53,11 +53,11 @@ def main() -> None:
                 best = min(best, time.perf_counter() - t0)
             print(f"{name} @ {tag}: {best:.2f}s ({n} rows)", flush=True)
 
-    # streaming gate: cold full run per scale (clear the session cache)
-    from datafusion_tpch_spark.queries.stream import _ANN_INGEST_STATE
+    # streaming gate: cold full run per scale (drop the maintained state)
+    from datafusion_tpch_spark.session import forget
 
     for sf_dir, tag in ((SRC, "1x"), (DST, "10x")):
-        _ANN_INGEST_STATE.pop(spark, None)
+        forget(spark, "stream")
         t0 = time.perf_counter()
         n = len(qs["ann_ingest_topk"].build(spark, sf_dir).collect())
         print(

@@ -52,13 +52,13 @@ def _warm(spark, sf_dir):
 
 
 def _drop_session_tables(spark):
-    """Unpersist every session-cache frame so the next leg rebuilds its
-    own (the cache memoizes per (app, fixture) inside one session)."""
-    from datafusion_tpch_spark.queries import extensions as ext
+    """Unpersist every persisted shared intermediate so the next leg
+    rebuilds its own (they are memoized per (session, fixture))."""
+    from datafusion_tpch_spark.session import forget
 
-    for key in list(getattr(ext, "_TABLE_CACHE", {})):
+    for df in forget(spark, "table").values():
         try:
-            ext._TABLE_CACHE.pop(key).unpersist()
+            df.unpersist()
         except Exception:
             pass
 

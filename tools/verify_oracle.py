@@ -68,7 +68,10 @@ def compare(sdf: pd.DataFrame, odf: pd.DataFrame) -> "str | None":
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = build_session("verify-oracle")
+    # progress bars would be drawn over the OK/FAIL result lines
+    spark = build_session(
+        "verify-oracle", extra_conf={"spark.ui.showConsoleProgress": "false"}
+    )
     con = duckdb.connect()
     for t in FIXTURE_TABLES:
         con.execute(
