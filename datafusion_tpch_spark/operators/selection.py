@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .reuse import evaluate_once
+
 DEFAULT_RANGES = 32  # range-shard fan-out for the prefix scans
 
 
@@ -38,10 +40,7 @@ def _triangle_carry(
     shard_tot: DataFrame, partition_by: Sequence[str], agg
 ) -> DataFrame:
     """Per-(pid, group) aggregate of all EARLIER shards' totals as a
-    broadcast triangle join — #shards x #groups rows on both sides.
-    ``shard_tot`` must be the GUARDED totals frame (its ``_pg`` pruning
-    guard referenced), so this consumer prunes the upstream range
-    exchange to the same columns as the output branch and reuses it."""
+    broadcast triangle join — #shards x #groups rows on both sides."""
     renames = {c: f"_p_{c}" for c in ["pid", *partition_by]}
     prior = shard_tot.select(
         *[F.col(c).alias(n) for c, n in renames.items()],
@@ -82,13 +81,15 @@ def sharded_prefix(
     filter on).  ``inclusive=False`` excludes the current row.
     Also appends a ``pid`` shard column (callers may drop it).
 
-    Input contract: every column of ``df`` is hashed by the ``_pg``
-    pruning guard below, so callers pass ``df`` projected to the scalar
-    columns they need.  A ``MapType`` column fails analysis: Spark's
-    ``hash()`` rejects maps.
+    Input contract: the range-sharded frame goes through
+    :func:`~.reuse.evaluate_once` (the totals and output branches share
+    its one range exchange), which hashes every column of ``df``; so
+    callers pass ``df`` projected to the scalar columns they need.
     """
-    ranged = df.repartitionByRange(num_ranges, *order_by).withColumn(
-        "pid", F.spark_partition_id()
+    ranged = evaluate_once(
+        df.repartitionByRange(num_ranges, *order_by).withColumn(
+            "pid", F.spark_partition_id()
+        )
     )
     frame_end = 0 if inclusive else -1
     local_w = (
@@ -98,44 +99,24 @@ def sharded_prefix(
     )
     fagg = {"sum": F.sum, "max": F.max}[agg]
     local = fagg(value).over(local_w)
-    # The _pg aggregate over a hash of EVERY input column is a pruning
-    # guard: the totals branch only needs (order, partition, value)
-    # columns, so column pruning would give its range exchange a narrower
-    # column set than the output branch's — two separate evaluations of
-    # the whole upstream chain (scan + scoring exprs + range shuffle)
-    # instead of one reused exchange.  Referencing all columns (and
-    # keeping _pg alive through the vacuous isNotNull filter below —
-    # max over a non-empty group of the never-null hash() is never null,
-    # but the optimizer cannot fold that) makes both branches prune
-    # identically, and AQE then computes the range exchange ONCE
-    # (3 range exchanges -> 1 + 2 ReusedExchange; pinned for
-    # docs_token_budget by
-    # tests/test_plans.py::test_shared_subtrees_evaluated_once).
-    # hash() rather than a struct because min/max over a struct falls
-    # off the HashAggregate fast path to SortAggregate — a per-shard sort
-    # of the full input.
     shard_tot = ranged.groupBy("pid", *partition_by).agg(
-        fagg(value).alias("_st"),
-        F.max(F.hash(*[F.col(c) for c in df.columns])).alias("_pg"),
+        fagg(value).alias("_st")
     )
     # carry = strictly-earlier shards' totals, via the broadcast triangle
     # join over the tiny (pid, group) totals table (#shards x #groups
     # rows both sides — a partition-less window here would be flagged by
     # the global-window guard even though the input is construction-
-    # bounded, so the join form stays).  BOTH triangle sides run through
-    # `guarded` so the pruning guard survives in each branch and the one
-    # range exchange serves them all.
-    guarded = shard_tot.where(F.col("_pg").isNotNull())
+    # bounded, so the join form stays).
     if agg == "sum":
         carry = _triangle_carry(
-            guarded, partition_by,
+            shard_tot, partition_by,
             lambda c: F.coalesce(F.sum(c), F.lit(0)),
         )
         combined = F.col("_carry") + F.coalesce(F.col("_local"), F.lit(0))
     else:
         # null iff no earlier shard exists (left join finds no match),
         # preserving the strictly-previous-row semantics callers filter on
-        carry = _triangle_carry(guarded, partition_by, F.max)
+        carry = _triangle_carry(shard_tot, partition_by, F.max)
         combined = F.greatest(F.col("_local"), F.col("_carry"))
     return (
         ranged.withColumn("_local", local)

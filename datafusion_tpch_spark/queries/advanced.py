@@ -23,6 +23,7 @@ from pyspark.sql.window import Window
 
 from ..functions import hashing, text
 from ..functions.exact import dsum, dsum_sql
+from ..operators.reuse import evaluate_once
 from . import QuerySpec
 from .extensions import _t
 
@@ -272,18 +273,10 @@ def docs_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     inst = docs.select(
         "doc_id", F.explode(chunks).alias("chunk")
     )
-    per = inst.groupBy("doc_id", "chunk").agg(F.count(F.lit(1)).alias("cnt"))
-    # vacuous (cnt is a count, always >= 1), but decisive for the plan:
-    # without it Catalyst prunes the unused cnt from this branch,
-    # rewriting it to a distinct-style aggregate whose subtree no longer
-    # matches per's, and the chunk explode ran TWICE (the q15/tfidf
-    # canonical-subtree lesson; pinned by
-    # tests/test_plans.py::test_shared_subtrees_evaluated_once)
-    owner = (
-        per.where(F.col("cnt") >= 1)
-        .groupBy("chunk")
-        .agg(F.min("doc_id").alias("owner"))
+    per = evaluate_once(
+        inst.groupBy("doc_id", "chunk").agg(F.count(F.lit(1)).alias("cnt"))
     )
+    owner = per.groupBy("chunk").agg(F.min("doc_id").alias("owner"))
     return (
         per.join(owner, "chunk")
         .groupBy("doc_id")
@@ -1963,20 +1956,10 @@ def events_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("user_days"),
         F.count_distinct("day").alias("n_days"),
     )
-    # WAU as a duplicate-SENSITIVE two-level aggregate over `days`: both
-    # the re-distinct form and COUNT(DISTINCT user) are duplicate-
-    # insensitive, so Catalyst eliminated the shared `days` aggregate
-    # from this branch (distinct-over-distinct collapses to one
-    # aggregate over the raw scan) and the fact table was scanned and
-    # de-duplicated TWICE.  Counting per (week, user) first — with the
-    # vacuous k >= 1 guard keeping k consumed — pins the inner distinct
-    # in place, so both consumers share days' exchange and the scan runs
-    # once (guide §2.4; pinned by
-    # tests/test_plans.py::test_shared_subtrees_evaluated_once).
     weekly = (
-        days.groupBy("week", "user_id")
-        .agg(F.count(F.lit(1)).alias("k"))
-        .where(F.col("k") >= 1)
+        evaluate_once(
+            days.groupBy("week", "user_id").agg(F.count(F.lit(1)).alias("k"))
+        )
         .groupBy("week")
         .agg(F.count(F.lit(1)).alias("wau"))
     )
@@ -2415,24 +2398,13 @@ def events_type_dow_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: per-type chi2 contribution (summed over its 7 cells).
     """
     (ev,) = _t(spark, sf_dir, "events")
-    # the explicit not-null pair is the gate's NULL contract: rows
-    # without a type or timestamp are in no cell (the oracle's WHERE says
-    # the same; tests/test_null_keys.py).  It is also decisive for the
-    # plan: the cell join
-    # infers isnotnull(event_type) AND isnotnull(dow) into ITS branch's
-    # scan, row_tot/col_tot each infer only one, grand neither — four
-    # canonically different subtrees, so the fact table was scanned and
-    # aggregated FOUR times despite the docstring's one-aggregation
-    # claim.  With the branches identical the cells exchange is computed
-    # once and reused (the q15 lesson; pinned by
-    # tests/test_plans.py::test_shared_subtrees_evaluated_once).
-    cells = (
-        ev.select(
-            F.col("event_type"), F.dayofweek(F.col("ts")).alias("dow")
-        )
-        .where(F.col("event_type").isNotNull() & F.col("dow").isNotNull())
+    # rows without a type or timestamp are in no cell: the gate's NULL
+    # contract (the oracle's WHERE says the same; tests/test_null_keys.py)
+    cells = evaluate_once(
+        ev.select(F.col("event_type"), F.dayofweek(F.col("ts")).alias("dow"))
         .groupBy("event_type", "dow")
-        .agg(F.count(F.lit(1)).alias("obs"))
+        .agg(F.count(F.lit(1)).alias("obs")),
+        not_null=("event_type", "dow"),
     )
     row_tot = cells.groupBy("event_type").agg(F.sum("obs").alias("row_n"))
     col_tot = cells.groupBy("dow").agg(F.sum("obs").alias("col_n"))

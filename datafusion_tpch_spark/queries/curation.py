@@ -16,6 +16,7 @@ from pyspark.sql.window import Window
 
 from ..functions import hashing, text
 from ..operators.fanout import kernel_front
+from ..operators.reuse import evaluate_once
 from . import QuerySpec
 from .extensions import _t
 
@@ -160,42 +161,24 @@ def docs_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (docs,) = _t(spark, sf_dir, "documents")
     total = docs.select(F.count(F.lit(1)).alias("n_docs"))
     # ONE (doc, word) aggregation serves BOTH the document-frequency
-    # side and the strip side (guide §2.4): the previous shape exploded
-    # the corpus twice — once into distinct() for df, once raw for the
-    # anti-join — and the anti-join dragged every word INSTANCE through
-    # it.  The vacuous guards (doc_id never null; cnt is a count, >= 1)
-    # keep the two branches canonically identical so the explode and its
-    # exchange are computed once and reused, and the anti-join now sees
-    # one row per (doc, word) with the multiplicity re-applied as
-    # sum(cnt) — bit-identical, counts are integers.  Pinned by
-    # tests/test_plans.py::test_shared_subtrees_evaluated_once.
-    exploded = docs.where(F.col("doc_id").isNotNull()).select(
-        "doc_id", F.explode(text.words(F.col("text"))).alias("w")
-    )
-    per = exploded.groupBy("doc_id", "w").agg(
-        F.count(F.lit(1)).alias("cnt")
+    # side and the strip side (guide §2.4): the anti-join sees one row
+    # per (doc, word) with the multiplicity re-applied as sum(cnt) —
+    # bit-identical, counts are integers.
+    per = evaluate_once(
+        docs.select("doc_id", F.explode(text.words(F.col("text"))).alias("w"))
+        .groupBy("doc_id", "w")
+        .agg(F.count(F.lit(1)).alias("cnt")),
+        not_null=("doc_id",),
     )
     hot = (
-        per.where(F.col("cnt") >= 1)
-        .groupBy("w")
+        per.groupBy("w")
         .agg(F.count(F.lit(1)).alias("df"))
         .crossJoin(F.broadcast(total))
         .filter(F.col("df") > F.lit(_BP_DF_FRAC) * F.col("n_docs"))
         .select("w")
     )
-    # the when() is vacuous (cnt >= 1 always) but makes the anti-join key
-    # an expression over the aggregate's output, which stops
-    # PushDownLeftSemiAntiJoin from pushing the join below the shared
-    # (doc, word) aggregate — pushed, the two branches' exchange
-    # subtrees diverge again (one with the join, one without) and the
-    # explode runs twice with an extra exchange on top
     kept = (
-        per.select(
-            "doc_id",
-            F.when(F.col("cnt") >= 1, F.col("w")).alias("w"),
-            "cnt",
-        )
-        .join(F.broadcast(hot), "w", "left_anti")
+        per.join(F.broadcast(hot), "w", "left_anti")
         .groupBy("doc_id")
         .agg(F.sum("cnt").alias("n_after"))
     )

@@ -19,6 +19,7 @@ from ..catalog import load_table
 from ..functions import hashing, text, vectors
 from ..functions.exact import davg, davg_sql, dsum, dsum_sql
 from ..operators.fanout import kernel_front
+from ..operators.reuse import evaluate_once
 from ..session import memo
 from . import QuerySpec
 
@@ -2995,26 +2996,12 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number.  No driver collection anywhere.
     """
     (docs,) = _t(spark, sf_dir, "documents")
-    tf = (
+    tf = evaluate_once(
         docs.select("doc_id", F.explode(text.words(F.col("text"))).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    # df is declared FROM tf, but without the vacuous tf >= 1 guard
-    # Catalyst prunes the unused count from this branch, rewriting it to a
-    # distinct-style aggregate whose scan subtree no longer canonically
-    # matches tf's — so AQE re-ran the whole tokenize+explode+shuffle a
-    # second time (two Generate stages, no ReusedExchange; pinned by
-    # tests/test_plans.py::test_shared_subtrees_evaluated_once).  Referencing tf keeps the
-    # branches identical up to the (doc_id, term) exchange, which the
-    # final plan then computes once and reuses (guide §2.4 — the same
-    # vacuous-predicate trick as q15's isnotnull(l_suppkey)).  tf is a
-    # count, always >= 1, so the filter drops nothing.
-    df_ = (
-        tf.where(F.col("tf") >= 1)
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
+    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = docs.agg(F.count(F.lit(1)).alias("n_corpus"))
     scored = (
         tf.join(df_, "term")
@@ -3598,31 +3585,18 @@ def docs_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     no driver collection.
     """
     (docs,) = _t(spark, sf_dir, "documents")
-    # the vacuous isnotnull(doc_id) (key column, never null) keeps every
-    # consumer's scan subtree canonically identical: the scored/dl join
-    # branches infer it from their doc_id equi-joins and push it into
-    # their scans, and without it here the aggregate-only branches
-    # (dfreq, corpus stats) scan WITHOUT it — two exchange groups instead
-    # of one (the q15 lesson, commit 2d834d6)
-    words = docs.where(F.col("doc_id").isNotNull()).select(
-        "doc_id", F.explode(text.words(F.col("text"))).alias("term")
-    )
-    tf = words.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     # dl and dfreq both re-aggregate the COMPACT tf table instead of the
     # exploded words frame: dl = Σ tf per doc is identical to counting
-    # word instances (explode drops empty docs from both forms), and the
-    # vacuous tf >= 1 guard on the dfreq branch stops Catalyst pruning
-    # the count into a distinct-style aggregate whose subtree would no
-    # longer match tf's.  All three consumers now share ONE
-    # tokenize+explode+(doc_id, term) exchange, reused by AQE — the
-    # previous shape ran the explode three times (guide §2.4; pinned by
-    # tests/test_plans.py::test_shared_subtrees_evaluated_once).
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    dfreq = (
-        tf.where(F.col("tf") >= 1)
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
+    # word instances (explode drops empty docs from both forms), and all
+    # three consumers share ONE tokenize+explode+(doc_id, term) exchange.
+    tf = evaluate_once(
+        docs.select("doc_id", F.explode(text.words(F.col("text"))).alias("term"))
+        .groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).alias("tf")),
+        not_null=("doc_id",),
     )
+    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
+    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     # vocabulary-sized input: take the top-nq terms with a TakeOrdered
     # (per-partition heaps, nq-row merge), never a partition-less window
     qterms = (
@@ -6846,20 +6820,13 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer microseconds (unix_micros / epoch_us) for cross-engine
     exactness."""
     (ev,) = _t(spark, sf_dir, "events")
-    # the not-nulls are the gate's NULL contract: events without a user
-    # or timestamp enter no stage (the oracle's first stage says the
-    # same; tests/test_null_keys.py).  They are also decisive for the
-    # plan: each stage frame feeds both the NEXT stage's
-    # join (which infers isnotnull(user_id)/isnotnull(us) into its scan)
-    # and its own stage count (which inferred neither and pruned the min
-    # column) — five canonically different events scans for three
-    # stages.  With the base frame guarded here and the stage counts
-    # referencing the min column below, each stage's exchange is
-    # computed once and reused (the q15 lesson; pinned by
-    # tests/test_plans.py::test_shared_subtrees_evaluated_once).
-    e = ev.select(
-        "user_id", "event_type", F.unix_micros(F.col("ts")).alias("us")
-    ).where(F.col("user_id").isNotNull() & F.col("us").isNotNull())
+    # events without a user or timestamp enter no stage: the gate's NULL
+    # contract (the oracle's first stage says the same;
+    # tests/test_null_keys.py)
+    e = evaluate_once(
+        ev.select("user_id", "event_type", F.unix_micros(F.col("ts")).alias("us")),
+        not_null=("user_id", "us"),
+    )
     first_view = (
         e.filter(F.col("event_type") == "view")
         .groupBy("user_id")
@@ -6880,12 +6847,9 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("us").alias("p_us"))
     )
 
-    def stage(df: DataFrame, first_col: str, n: int, name: str) -> DataFrame:
-        # the where is vacuous (min over a non-empty group of never-null
-        # us) but keeps this branch consuming the min column, so it
-        # prunes identically to the join branch and reuses its exchange
+    def stage(df: DataFrame, n: int, name: str) -> DataFrame:
         return (
-            df.where(F.col(first_col).isNotNull())
+            evaluate_once(df)
             .agg(F.count(F.lit(1)).alias("n_users"))
             .select(
                 F.lit(n).alias("stage"),
@@ -6895,9 +6859,9 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return (
-        stage(first_view, "v_us", 1, "view")
-        .unionAll(stage(first_click, "c_us", 2, "view>click"))
-        .unionAll(stage(first_purch, "p_us", 3, "view>click>purchase"))
+        stage(first_view, 1, "view")
+        .unionAll(stage(first_click, 2, "view>click"))
+        .unionAll(stage(first_purch, 3, "view>click>purchase"))
         .orderBy("stage")
     )
 

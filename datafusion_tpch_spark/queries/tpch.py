@@ -23,6 +23,7 @@ from ..catalog import load_table
 from ..functions.exact import (
     davg, davg_over, davg_sql, dsum, dsum_q, dsum_sql, unq,
 )
+from ..operators.reuse import evaluate_once
 from . import QuerySpec
 
 
@@ -636,22 +637,14 @@ WHERE l_shipdate >= TIMESTAMP '1997-09-01'
 # ---------------------------------------------------------------------------
 
 def _revenue_per_supplier(li: DataFrame) -> DataFrame:
-    # the explicit isnotnull(l_suppkey) is vacuous on the data (TPC-H key
-    # column) but decisive for the plan: the supplier join pushes exactly
-    # this predicate into ITS branch's scan, and without it here the max-
-    # revenue branch's scan subtree differs by that one filter — defeating
-    # AQE's shuffle-stage reuse, so lineitem was scanned and aggregated
-    # TWICE per q15 run.  With the branches canonically identical the
-    # revenue exchange is computed once and reused (guide §2.4; pinned by
-    # tests/test_plans.py::test_shared_subtrees_evaluated_once).
-    return (
+    return evaluate_once(
         li.filter(
             (F.col("l_shipdate") >= _ts("1997-01-01"))
             & (F.col("l_shipdate") < _ts("1997-04-01"))
-            & F.col("l_suppkey").isNotNull()
         )
         .groupBy("l_suppkey")
-        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("total_revenue"))
+        .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("total_revenue")),
+        not_null=("l_suppkey",),
     )
 
 

@@ -419,47 +419,100 @@ def test_session_table_builds_are_lazy_no_jobs(spark):
     assert list(jobs) == [], f"plan-only build ran jobs: {jobs}"
 
 
-# Round-15 canonical-subtree reuse: a frame declared once must be
-# EVALUATED once.  Column pruning / join-inferred not-nulls silently fork
-# shared subtrees into canonically different branches, and AQE then
-# re-runs the whole upstream chain (scan + tokenize/scoring + shuffle)
-# per consumer; the gates below carry vacuous-but-unfoldable guards that
-# keep the branches identical (see OPTIMIZATION_r15.md).  These counts
+# A frame declared once must be EVALUATED once: the gates below share a
+# subtree between consumers through operators/reuse.evaluate_once, whose
+# docstring names the optimizer rules that would fork it.  These counts
 # audit the POST-EXECUTION final plan — runtime ReusedExchange is
 # invisible in the initial plan — at sf0.01 (at sf0.001 selective gates
-# collapse to EmptyRelation and hide the shape).
+# collapse to EmptyRelation and hide the shape).  A lost reuse shows as
+# more scans or Generates and fewer ReusedExchange nodes.
 _SF01 = "/root/testdata/sf0.01"
 
-# gate -> (max FileScan parquet, max Generate) in the executed final plan
+# gate -> (max FileScan parquet, max Generate, min ReusedExchange) in the
+# executed final plan; each value as measured before evaluate_once existed
 _SINGLE_EVAL_BOUNDS = {
-    "tfidf_top_terms": (2, 1),        # tokenize once + the n_corpus scan
-    "docs_bm25_topk": (1, 1),         # tf/dl/dfreq/stats share one explode
-    "docs_chunk_dedup": (1, 1),
-    "docs_boilerplate_strip": (3, 1),  # df+strip share; before/total scans
-    "docs_dsir_score": (2, 2),        # full corpus + the non-en slice
-    "docs_token_budget": (1, 0),      # sharded_prefix: one range exchange
-    "docs_token_pack": (1, 0),
-    "events_late_audit": (1, 0),
-    "events_type_dow_chisq": (1, 0),  # cells exchange feeds all marginals
-    "events_stickiness": (1, 0),
-    "events_user_retention": (1, 0),
-    "events_funnel": (3, 0),          # one scan per funnel stage
-    "q15": (2, 0),                    # revenue exchange reused; + supplier
+    "tfidf_top_terms": (2, 1, 1),     # tokenize once + the n_corpus scan
+    "docs_bm25_topk": (1, 1, 3),      # tf/dl/dfreq/stats share one explode
+    "docs_chunk_dedup": (1, 1, 1),
+    "docs_boilerplate_strip": (3, 1, 1),  # df+strip share; before/total scans
+    "docs_dsir_score": (2, 2, 0),     # full corpus + the non-en slice
+    "docs_negative_pairs": (3, 1, 2),  # sharded_prefix: one range exchange
+    "docs_token_budget": (1, 0, 2),
+    "docs_token_budget_bpe": (3, 1, 0),
+    "docs_token_pack": (1, 0, 2),
+    "events_concurrency": (1, 1, 2),
+    "events_late_audit": (1, 0, 2),
+    "events_type_dow_chisq": (1, 0, 3),  # cells exchange feeds all marginals
+    "events_stickiness": (1, 0, 1),
+    "events_user_retention": (1, 0, 0),
+    "events_funnel": (3, 0, 2),       # one scan per funnel stage
+    "part_skyline": (2, 0, 2),
+    "q15": (2, 0, 1),                 # revenue exchange reused; + supplier
+    "q15_window": (2, 0, 1),
 }
+
+
+def _reuse_counters(df):
+    """(FileScan parquet, Generate, ReusedExchange) in ``df``'s executed
+    final plan; collects ``df``."""
+    df.collect()  # the FINAL adaptive plan is what actually ran
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    return (
+        final.count("FileScan parquet"),
+        final.count("Generate "),
+        final.count("ReusedExchange"),
+    )
 
 
 def test_shared_subtrees_evaluated_once(spark):
     offenders = {}
-    for name, (max_scans, max_gen) in sorted(_SINGLE_EVAL_BOUNDS.items()):
+    for name, (max_scans, max_gen, min_reused) in sorted(
+        _SINGLE_EVAL_BOUNDS.items()
+    ):
         df = all_queries()[name].build(spark, _SF01)
-        df.collect()  # the FINAL adaptive plan is what actually ran
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        final = plan.split("== Initial Plan ==")[0]
-        scans = final.count("FileScan parquet")
-        gens = final.count("Generate ")
-        if scans > max_scans or gens > max_gen:
-            offenders[name] = f"scans={scans}>{max_scans} or gen={gens}>{max_gen}"
-    assert not offenders, offenders
+        scans, gens, reused = _reuse_counters(df)
+        moved = []
+        if scans > max_scans:
+            moved.append(f"FileScan {scans} > {max_scans}")
+        if gens > max_gen:
+            moved.append(f"Generate {gens} > {max_gen}")
+        if reused < min_reused:
+            moved.append(f"ReusedExchange {reused} < {min_reused}")
+        if moved:
+            offenders[name] = ", ".join(moved)
+    assert not offenders, f"shared subtree evaluated more than once: {offenders}"
+
+
+def test_evaluate_once_keeps_pruning_consumer_on_one_scan(spark, tmp_path):
+    """Two consumers of one (doc, term) count: the df side drops ``tf``,
+    which without the helper prunes its aggregate to a distinct-style one
+    that no longer matches the tf side's, so the file is scanned twice."""
+    from pyspark.sql import functions as F
+
+    from datafusion_tpch_spark.operators.reuse import evaluate_once
+
+    path = str(tmp_path / "terms.parquet")
+    spark.createDataFrame(
+        [(d, f"t{(d * w) % 7}") for d in range(40) for w in range(5)],
+        "doc_id long, term string",
+    ).write.parquet(path)
+
+    def shape(pin):
+        tf = pin(
+            spark.read.parquet(path)
+            .groupBy("doc_id", "term")
+            .agg(F.count(F.lit(1)).alias("tf"))
+        )
+        df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+        return _reuse_counters(tf.join(df_, "term"))
+
+    scans, _, reused = shape(evaluate_once)
+    assert scans == 1 and reused >= 1, (
+        f"with evaluate_once: {scans} scans, {reused} ReusedExchange"
+    )
+    scans, _, reused = shape(lambda df: df)
+    assert scans == 2, f"without evaluate_once the scan ran {scans}x, not 2x"
 
 
 def test_recall_audit_inputs_pair_distinct(spark):
