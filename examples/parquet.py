@@ -1,5 +1,5 @@
 """Export generated TPC-H tables to parquet — the Spark re-expression of
-/root/reference/examples/parquet.rs.
+the reference's examples/parquet.rs.
 
 The reference does `COPY nation TO './tpch_nation.parquet' STORED AS
 PARQUET` for a registered table and `COPY (SELECT * FROM
@@ -22,7 +22,7 @@ from datafusion_tpch_spark.sources.parquet_io import (
     copy_to_parquet,
     show_tables,
 )
-from datafusion_tpch_spark.sources.tpch_gen import call_tpch, register_tpch
+from datafusion_tpch_spark.sources.tpch_gen import register_tpch, register_tpch_udtfs
 
 
 def main() -> None:
@@ -31,6 +31,7 @@ def main() -> None:
     spark = build_session("parquet-example")
 
     register_tpch(spark, sf)
+    register_tpch_udtfs(spark)
     show_tables(spark).show()
 
     # COPY nation TO '<out>/tpch_nation.parquet'
@@ -39,7 +40,8 @@ def main() -> None:
 
     # COPY (SELECT * FROM tpch_lineitem(sf)) TO '<out>/tpch_lineitem.parquet'
     n = copy_to_parquet(
-        call_tpch(spark, "lineitem", sf), os.path.join(out, "tpch_lineitem.parquet")
+        spark.sql(f"SELECT * FROM tpch_lineitem({sf})"),
+        os.path.join(out, "tpch_lineitem.parquet"),
     )
     print(f"COPY (SELECT * FROM tpch_lineitem({sf})) -> {n} rows")
     print(f"files under {out}")

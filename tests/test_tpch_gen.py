@@ -1,7 +1,7 @@
 """Tier-A parity tests: the TPC-H generator source layer.
 
 Mirrors the reference's own test strategy — exact row x column shape
-assertions per table (`/root/reference/src/lib.rs:335-344`) — at a small
+assertions per table (`src/lib.rs:335-344`) — at a small
 scale factor, and adds what the reference lacks: value determinism checks
 and a real part/num_parts contract (the reference parses those args but
 generates the whole table regardless, src/lib.rs:85-106).
@@ -126,23 +126,49 @@ def test_exact_cardinalities(spark, sf):
         assert tpch_gen.call_tpch(spark, table, sf).count() == want, (table, sf)
 
 
-def test_lineitem_sf1_constant():
+def test_lineitem_sf1_constant(spark):
     """The reference's own SF1 shape assertion, ported: lineitem =
-    6,001,215 rows (src/lib.rs:339).  Checked through the numpy twin of
-    the generator's closed-form LCG draw, plus a brute sequential replay
-    of the stream to prove the closed form IS the sequential RNG."""
-    import numpy as np
-
-    from datafusion_tpch_spark.sources.tpch_np import line_counts
-
-    ok = np.arange(1_500_000, dtype=np.int64) + 1
-    counts = line_counts(ok)
-    assert int(counts.sum()) == 6_001_215
+    6,001,215 rows (src/lib.rs:339).  Checked by evaluating the
+    generator's closed-form LCG line-count expression in Spark over the
+    1.5M SF1 order indices, at the DataFrame path's unroll width and at
+    the SQL functions' any-sf width, plus a brute sequential replay of the
+    stream to prove the closed form IS the sequential RNG."""
+    n_orders = 1_500_000
+    widths = (n_orders.bit_length(), tpch_gen._SQL_LCG_WIDTH)
+    df = spark.range(n_orders).selectExpr(
+        "id", *(f"{tpch_gen._line_count('id', w)} AS n{w}" for w in widths)
+    )
+    sums = df.agg(*(F.sum(f"n{w}") for w in widths)).collect()[0]
+    assert list(sums) == [6_001_215] * len(widths)
     # sequential replay over a prefix — closed form == the actual stream
+    head = df.where("id < 1000").orderBy("id").collect()
+    assert len(head) == 1000
     seed, m, mul = 1434868289, 2147483647, 16807
-    for i in range(1000):
+    for i, row in enumerate(head):
         seed = (seed * mul) % m
-        assert counts[i] == (seed * 7) // m + 1
+        assert [row[f"n{w}"] for w in widths] == [(seed * 7) // m + 1] * len(widths), i
+
+
+# count and sum(xxhash64(all columns)) of every table at sf0.001: pins the
+# generated values themselves, so a helper change that moves every value
+# (and keeps both row sources equal to each other) fails here.
+VALUE_PINS = {
+    "region": (5, 7342762572660382484),
+    "nation": (25, -3262017122910428516),
+    "customer": (150, 1527369154156433353),
+    "supplier": (10, 359864420706912388),
+    "part": (200, 3333594478627477066),
+    "partsupp": (800, -2733834771150723463),
+    "orders": (1500, 8646736910381366961),
+    "lineitem": (6005, -6124875139797932440),
+}
+
+
+@pytest.mark.parametrize("table", sorted(VALUE_PINS))
+def test_generated_values_pinned(spark, table):
+    df = tpch_gen.call_tpch(spark, table, 0.001)
+    got = df.agg(F.count(F.lit(1)), F.sum(F.xxhash64(*df.columns))).collect()[0]
+    assert tuple(got) == VALUE_PINS[table]
 
 
 def test_reference_sf1_shape_assertions(spark):
