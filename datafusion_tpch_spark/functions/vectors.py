@@ -1,9 +1,10 @@
 """Vector math over ``array<float>`` embedding columns.
 
 Uses ``F.zip_with``/``F.aggregate`` (JVM-side higher-order functions) — no
-Python UDF, no collect; scales as a plain narrow projection.  The exact_*
-variants run the reduction in DECIMAL so the result is order-independent and
-bit-identical to the DuckDB oracle (see functions.exact for the rationale).
+Python UDF, no collect; scales as a plain narrow projection.  The dot
+product is fixed-point (floor-quantized products summed as int64), so the
+result is order-independent and bit-identical to the DuckDB oracle (see
+functions.exact for the rationale).
 """
 
 from __future__ import annotations
@@ -13,15 +14,6 @@ from pyspark.sql import functions as F
 
 _SCALE = 9
 _Q = float(10**_SCALE)
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Plain double-precision dot product (fast path; order-dependent)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
 
 
 def exact_dot(a: Column, b: Column) -> Column:
@@ -43,22 +35,10 @@ def norm(a: Column) -> Column:
     return F.sqrt(exact_dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Deterministic cosine similarity in [-1, 1]."""
-    return exact_dot(a, b) / (norm(a) * norm(b))
-
-
 def exact_dot_sql(a: str, b: str) -> str:
     """Oracle mirror of :func:`exact_dot` (DuckDB list lambdas)."""
     return (
         f"(CAST(list_aggregate(list_transform(list_zip({a}, {b}), "
         f"p -> CAST(floor(CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE) * {_Q:.1f}) AS BIGINT)), "
         f"'sum') AS DOUBLE) / {_Q:.1f})"
-    )
-
-
-def cosine_sql(a: str, b: str) -> str:
-    return (
-        f"({exact_dot_sql(a, b)} / "
-        f"(sqrt({exact_dot_sql(a, a)}) * sqrt({exact_dot_sql(b, b)})))"
     )

@@ -76,7 +76,11 @@ def kmeans_refine(emb: DataFrame, seeds: Centroids, iters: int = 3,
 def inertia(assigned: DataFrame, centroids: Centroids,
             vec_col: str = "embedding") -> float:
     """Sum of squared L2 distances to the assigned centroid — the k-means
-    objective; one broadcast join + one scalar aggregate."""
+    objective; one broadcast join + one scalar aggregate.
+
+    No gate calls it: it is the independent objective that
+    ``tests/test_advanced.py::test_kmeans_members_cover_corpus_and_inertia_drops``
+    and ``tests/test_clustering.py`` check Lloyd refinement against."""
     spark = assigned.sparkSession
     cent = spark.createDataFrame(
         [(cid, vec) for cid, vec in centroids], ["cell", "cvec"]

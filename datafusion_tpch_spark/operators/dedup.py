@@ -1,10 +1,15 @@
-"""Deduplication operators as reusable DataFrame transforms.
+"""The MinHash/LSH near-duplicate chain: shingle hashes → MinHash
+signature → LSH band buckets.
 
-These are the programmatic API behind queries.extensions' dedup queries:
-each takes/returns DataFrames so they compose into pipelines over any
-document table, not just the fixtures.  All are shuffle-bounded (group-bys
-and bucket joins — never an unbounded cross join), which is the property
-that matters at 100 TB.
+Every near-dup gate builds on these three transforms: the n-gram Jaccard
+and containment gates on :func:`shingle_hashes`, the banded-LSH gates
+(batch self-join, incremental admission, persisted bucket index,
+streaming ingest, curation funnels) on :func:`lsh_buckets`.  The gates
+add their own caps and session memos in ``queries.extensions``; the
+oracle SQL mirrors these parameters there.  Each transform takes any
+``(doc_id, text)`` frame, so the fixture table and one streamed
+micro-batch hash identically, and all are shuffle-bounded (a distinct,
+a group-by, a narrow explode — never a cross join).
 """
 
 from __future__ import annotations
@@ -14,45 +19,41 @@ from pyspark.sql import functions as F
 
 from ..functions import hashing, text
 
-
-def exact_survivors(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Keep one row (min id) per normalized-text fingerprint. One shuffle."""
-    fp = text.fingerprint(F.col(text_col)).alias("fp")
-    ranked = docs.select(F.col(id_col), fp)
-    keep = ranked.groupBy("fp").agg(F.min(id_col).alias(id_col))
-    return docs.join(keep, id_col, "left_semi")
+SHINGLE_N = 3              # word n-gram width
+MH_K = 16                  # signature length
+MH_BANDS = 4               # bands of MH_ROWS rows each
+MH_ROWS = MH_K // MH_BANDS
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 16,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(id, m0..m{k-1}) minhash signatures; one explode + one group-by."""
-    sh = docs.select(
-        F.col(id_col),
-        F.explode(text.shingles(F.col(text_col), shingle_n)).alias("shingle"),
-    ).withColumn("h", hashing.md5_int(F.col("shingle"))).select(id_col, "h").distinct()
+def shingle_hashes(docs: DataFrame) -> DataFrame:
+    """Distinct ``(doc_id, h)``: the int64 hash of every word
+    ``SHINGLE_N``-gram of each document."""
+    return (
+        docs.select(
+            "doc_id",
+            F.explode(text.shingles(F.col("text"), SHINGLE_N)).alias("shingle"),
+        )
+        .withColumn("h", hashing.md5_int(F.col("shingle")))
+        .select("doc_id", "h")
+        .distinct()
+    )
+
+
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """``(doc_id, m0..m{MH_K-1})``: per-permutation minimum over the
+    document's shingle hashes; one group-by."""
     aggs = [
         F.min(hashing.minhash_col(F.col("h"), a, b)).alias(f"m{i}")
-        for i, (a, b) in enumerate(hashing.perm_params(k))
+        for i, (a, b) in enumerate(hashing.perm_params(MH_K))
     ]
-    return sh.groupBy(id_col).agg(*aggs)
+    return shingle_hashes(docs).groupBy("doc_id").agg(*aggs)
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame, id_col: str = "doc_id", k: int = 16, bands: int = 4
-) -> DataFrame:
-    """Band the signature into ``bands`` buckets; candidate pairs agree on
-    at least one full band. The self-join is a bucket equi-join — fan-out
-    bounded by bucket size, not corpus size."""
-    rows = k // bands
-    # one struct-array explode, not a bands-way union: the union form
-    # re-evaluates the signature input once per band
+def lsh_buckets(docs: DataFrame) -> DataFrame:
+    """UNCAPPED ``(doc_id, band, bkey)`` bucket membership: ``bkey`` is
+    the md5 of the band's ``MH_ROWS`` signature values.  One band-struct
+    array + explode instead of a ``MH_BANDS``-way union: the union form
+    re-runs the whole shingle → signature pipeline once per band."""
     band_structs = F.array(
         *[
             F.struct(
@@ -60,55 +61,18 @@ def lsh_candidate_pairs(
                 F.md5(
                     F.concat_ws(
                         "_",
-                        *[F.col(f"m{band * rows + r}").cast("string") for r in range(rows)],
+                        *[
+                            F.col(f"m{band * MH_ROWS + r}").cast("string")
+                            for r in range(MH_ROWS)
+                        ],
                     )
                 ).alias("bkey"),
             )
-            for band in range(bands)
+            for band in range(MH_BANDS)
         ]
     )
-    buckets = signatures.select(F.col(id_col), F.explode(band_structs).alias("b")).select(
-        id_col, F.col("b.band").alias("band"), F.col("b.bkey").alias("bkey")
-    )
-    a, b = buckets.alias("a"), buckets.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id1"), F.col(f"b.{id_col}").alias("id2"))
-        .distinct()
-    )
-
-
-def jaccard_verify(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    threshold: float = 0.35,
-) -> DataFrame:
-    """Exact Jaccard on candidate pairs only (the verify step after LSH)."""
-    sh = docs.select(
-        F.col(id_col),
-        F.explode(text.shingles(F.col(text_col), shingle_n)).alias("shingle"),
-    ).withColumn("h", hashing.md5_int(F.col("shingle"))).select(id_col, "h").distinct()
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("id1"), F.col("h"))
-    b = sh.select(F.col(id_col).alias("id2"), F.col("h"))
-    common = (
-        pairs.join(a, "id1").join(b, ["id2", "h"])
-        .groupBy("id1", "id2")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    s1 = sizes.select(F.col(id_col).alias("id1"), F.col("n_sh").alias("n1"))
-    s2 = sizes.select(F.col(id_col).alias("id2"), F.col("n_sh").alias("n2"))
-    jac = F.col("common") / (F.col("n1") + F.col("n2") - F.col("common"))
-    return (
-        common.join(s1, "id1").join(s2, "id2")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
+        minhash_signatures(docs)
+        .select("doc_id", F.explode(band_structs).alias("b"))
+        .select("doc_id", F.col("b.band").alias("band"), F.col("b.bkey").alias("bkey"))
     )

@@ -1,30 +1,20 @@
-"""Table-maintenance operators: compaction (bin-packing small files) and
-sorted rewrite (clustering for data skipping).
+"""Table-maintenance operators: compaction (bin-packing small files).
 
-The two OPTIMIZE-style jobs every long-lived parquet dataset needs at
-100 TB:
-
-- **compact**: streaming ingest / fine-grained writes leave thousands of
-  small files per partition; scans then pay per-file open + footer-read +
-  scheduling cost, and the driver pays listing.  Compaction rewrites the
-  data into target-size files.  ``maxRecordsPerFile`` caps file size on
-  the way out; ``coalesce`` (no shuffle) merges when the input is merely
-  fragmented, ``repartition`` (one shuffle) when it is also skewed.
-- **rewrite_sorted**: range-partition + sort-within-partitions by a
-  cluster key so every output file covers a narrow key range.  Min/max
-  footer stats then let scans skip whole files for selective predicates —
-  the 1-D little sibling of the Z-order gate (``lineitem_zorder``), which
-  covers multi-column clustering.
-
-Both are pure DataFrame writes — no table format required; with
-Delta/Iceberg the same plans run under their OPTIMIZE entry points.
+Streaming ingest and fine-grained writes leave thousands of small files
+per partition; scans then pay per-file open + footer-read + scheduling
+cost, and the driver pays listing.  ``compact`` rewrites the data into
+target-size files: ``maxRecordsPerFile`` caps file size on the way out;
+``coalesce`` (no shuffle) merges when the input is merely fragmented,
+``repartition`` (one shuffle) when it is also skewed.  It is a pure
+DataFrame write — no table format required; with Delta/Iceberg the same
+plan runs under their OPTIMIZE entry point.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 
 def data_file_count(path: str, spark: SparkSession | None = None) -> int:
@@ -92,44 +82,3 @@ def compact(
         .parquet(out_path)
     )
     return data_file_count(out_path)
-
-
-def rewrite_sorted(
-    spark: SparkSession,
-    path: str,
-    out_path: str,
-    sort_cols: list[str],
-    n_files: int | None = 8,
-    target_records_per_file: int = 1_000_000,
-) -> int:
-    """Cluster the dataset by ``sort_cols``: range-partition into
-    ``n_files`` shards and sort within each, so parquet footer min/max on
-    the sort key becomes a file-skipping index.  Returns the output file
-    count.  ``n_files=None`` derives the shard count from the row count
-    against ``target_records_per_file`` (``sized_partitions``) — the form
-    a scheduled re-cluster job should use, so the same call packs a 1x
-    and a 100x table correctly."""
-    df = spark.read.parquet(path)
-    if n_files is None:
-        n_files = sized_partitions(df.count(), target_records_per_file)
-    (
-        df.repartitionByRange(n_files, *sort_cols)
-        .sortWithinPartitions(*sort_cols)
-        .write.mode("overwrite")
-        .parquet(out_path)
-    )
-    return data_file_count(out_path)
-
-
-def key_ranges(spark: SparkSession, path: str, key: str) -> DataFrame:
-    """Per-file min/max of ``key`` — the skipping stats a clustered layout
-    produces (each row = one file's coverage; disjoint ranges = good
-    clustering)."""
-    from pyspark.sql import functions as F
-
-    return (
-        spark.read.parquet(path)
-        .withColumn("_file", F.input_file_name())
-        .groupBy("_file")
-        .agg(F.min(key).alias("min_key"), F.max(key).alias("max_key"))
-    )

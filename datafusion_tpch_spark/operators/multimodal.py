@@ -1,28 +1,26 @@
 """Multimodal column operators: image/audio/video as opaque ``binary``
 columns with typed metadata.
 
-The Spark-side plumbing (schemas, Arrow-batched mapInPandas transforms,
-partition-size control for large blobs) is real and tested.  Decode is
-REAL for the public formats a pure-numpy/stdlib kernel can parse:
-binary PGM/PPM and 24-bit BI_RGB BMP (``decode_image``), RIFF/WAVE
-PCM16 mono/multichannel (``decode_wav``), PNG at depths 8 and 16 with
-color types 0/2/3/4/6 and Adam7 interlace (``decode_png``), GIF87a +
-GIF89a including animation/transparency/disposal (``decode_gif``,
-``decode_gif_frames``), baseline sequential + progressive JPEG with
-4:2:0/4:2:2 subsampling and DRI restart markers (``decode_jpeg``), and
-AVI/MJPEG containers (``decode_avi_mjpeg``) — plus a documented
-deterministic fake for opaque blobs.  Library-grade codecs (WebP, AVIF,
+The Spark-side plumbing (Arrow-batched mapInPandas transforms over blob
+columns) is real and tested.  Decode is REAL for the public formats a
+pure-numpy/stdlib kernel can parse: binary PGM/PPM and 24-bit BI_RGB BMP
+(``decode_image``), RIFF/WAVE PCM16 mono/multichannel (``decode_wav``),
+PNG at depths 8 and 16 with color types 0/2/3/4/6 and Adam7 interlace
+(``decode_png``), GIF87a + GIF89a including
+animation/transparency/disposal (``decode_gif``, ``decode_gif_frames``),
+baseline sequential + progressive JPEG with 4:2:0/4:2:2 subsampling and
+DRI restart markers (``decode_jpeg``), and AVI/MJPEG containers
+(``decode_avi_mjpeg``).  Library-grade codecs (WebP, AVIF,
 arithmetic/12-bit JPEG, non-MJPEG video) raise NotImplementedError by
-name at exactly the boundary where PIL/torchvision/ffmpeg slot in,
-since those libraries aren't in this environment.  The operator shapes
-(one blob in → features/signatures out, decode fused scan-side, never
-collect, never a Python loop over rows on the driver) are the part
-that must be right for 100 TB.
+name at exactly the boundary where PIL/torchvision/ffmpeg slot in, since
+those libraries aren't in this environment.  The operator shapes (one
+blob in → features/signatures out, decode fused scan-side, never
+collect, never a Python loop over rows on the driver) are the part that
+must be right for 100 TB.
 """
 
 from __future__ import annotations
 
-import hashlib
 import zlib
 from collections.abc import Iterator
 
@@ -30,42 +28,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-from .fanout import tasks_for
-
-# Schema for a multimodal asset table: blob + typed metadata. Metadata is
-# columnar (not a map) so Catalyst can prune/push down on it.
-ASSET_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("modality", StringType(), False),  # image|audio|video
-        StructField("mime", StringType(), True),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("duration_ms", LongType(), True),
-        StructField("content", BinaryType(), True),
-    ]
-)
-
-
-def synthetic_assets(spark, n: int = 64) -> DataFrame:
-    """Deterministic fake asset table for tests (no codec libs needed)."""
-    rows = []
-    for i in range(n):
-        payload = hashlib.sha256(str(i).encode()).digest() * 8  # 256 bytes
-        rows.append(
-            (i, "image", "image/png", 32 + i % 64, 32 + (i * 7) % 64, None, payload)
-        )
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
-
 
 # --- real codecs (pure numpy, public formats) -------------------------------
 #
@@ -207,85 +169,6 @@ def decode_image(content: bytes) -> np.ndarray:
         f"no pure-numpy decoder for magic {magic!r} (remaining compressed "
         "codecs — WebP/AVIF/… — require an image library: swap in PIL here "
         "in production)"
-    )
-
-
-def _decode_image_bytes(content: bytes, width: int, height: int) -> np.ndarray:
-    """Decode dispatch: REAL decode (decode_image) when the blob carries a
-    recognized uncompressed format; otherwise the documented deterministic
-    fake (derives a (height, width) uint8 'image' from the first blob
-    bytes) so opaque-blob plumbing stays testable without codec libs."""
-    if content is None:
-        raise ValueError("null blob")
-    head = bytes(content[:8])
-    if head[:2] in (b"P5", b"P6", b"BM") or head == _PNG_SIG:
-        img = decode_image(content)
-        return img if img.ndim == 2 else img.mean(axis=2).astype(np.uint8)
-    seed = np.frombuffer(content[:64], dtype=np.uint8).astype(np.uint32)
-    grid = np.arange(height * width, dtype=np.uint32).reshape(height, width)
-    return ((grid * int(seed.sum() + 1)) % 251).astype(np.uint8)
-
-
-FEATURE_SCHEMA = (
-    "asset_id long, n_bytes long, mean_px double, std_px double, phash string"
-)
-
-
-def extract_image_features(assets: DataFrame) -> DataFrame:
-    """Decode → feature-extract via Arrow-batched mapInPandas.
-
-    One pass over the blobs, executed where the data lives; the pattern to
-    copy for real pipelines (resize, embed, frame-sample all slot into the
-    same iterator)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                img = _decode_image_bytes(row.content, row.width, row.height)
-                px = img.astype(np.float64)
-                # perceptual-hash-ish fingerprint: bits of 8x8 block means
-                blocks = px[: (px.shape[0] // 8) * 8, : (px.shape[1] // 8) * 8]
-                bh, bw = blocks.shape[0] // 8, blocks.shape[1] // 8
-                means = blocks.reshape(8, bh, 8, bw).mean(axis=(1, 3))
-                bits = (means > means.mean()).flatten()
-                phash = "".join("1" if b else "0" for b in bits)
-                out.append(
-                    (
-                        row.asset_id,
-                        len(row.content),
-                        float(px.mean()),
-                        float(px.std()),
-                        phash,
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["asset_id", "n_bytes", "mean_px", "std_px", "phash"]
-            )
-
-    return assets.mapInPandas(run, FEATURE_SCHEMA)
-
-
-def resize_images(assets: DataFrame, target: tuple[int, int] = (16, 16)) -> DataFrame:
-    """Decode → resize (nearest-neighbor on the fake decode) → re-encode as
-    raw bytes. Demonstrates blob-in/blob-out transform shape."""
-    th, tw = target
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                img = _decode_image_bytes(row.content, row.width, row.height)
-                ys = (np.linspace(0, img.shape[0] - 1, th)).astype(int)
-                xs = (np.linspace(0, img.shape[1] - 1, tw)).astype(int)
-                small = img[np.ix_(ys, xs)]
-                out.append((row.asset_id, th, tw, small.tobytes()))
-            yield pd.DataFrame(
-                out, columns=["asset_id", "height", "width", "content"]
-            )
-
-    return assets.mapInPandas(
-        run, "asset_id long, height int, width int, content binary"
     )
 
 
@@ -2483,22 +2366,6 @@ def decoded_png_stats(assets: DataFrame) -> DataFrame:
             )
 
     return assets.mapInPandas(run, PNG_STATS_SCHEMA)
-
-
-def partition_for_blobs(df: DataFrame, target_rows_per_partition: int = 1024) -> DataFrame:
-    """Repartition a large-blob table so no partition exceeds
-    ``target_rows_per_partition`` rows: executor memory for decode UDFs is
-    bounded by rows × blob size, not by the byte sizing
-    ``spark.sql.files.maxPartitionBytes`` does on the compressed footer.
-    The width is ``tasks_for(rows)``, the fronts' rule without their
-    parallelism cap (the cap would break the row bound).
-
-    Costs one count() job (cheap parquet-metadata scan) + one shuffle —
-    call it once in front of a decode pipeline, not per operator.
-    """
-    if target_rows_per_partition < 1:
-        raise ValueError(f"target_rows_per_partition must be >= 1, got {target_rows_per_partition}")
-    return df.repartition(tasks_for(df.count(), target_rows_per_partition))
 
 
 # ------------------------------------------- perceptual-hash image dedup

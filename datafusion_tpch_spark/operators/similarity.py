@@ -584,37 +584,6 @@ def bucket_pair_cosine(
     )
 
 
-def verify_cosine_pairs(
-    pairs: DataFrame,
-    emb: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact verify for a candidate-pair table: joins both embeddings back
-    (small corpus side broadcasts under AQE; at scale these are plain
-    shuffle hash joins on the id) and scores each pair with the vectorized
-    quantized-cosine kernel — bit-identical to the JVM expression and the
-    oracle SQL, ~50x faster than interpreted array lambdas when the pair
-    count is large.  Returns (id1, id2, cos_sim) for pairs >= threshold."""
-    e1 = emb.select(F.col(id_col).alias("id1"), F.col(vec_col).alias("_e1"))
-    e2 = emb.select(F.col(id_col).alias("id2"), F.col(vec_col).alias("_e2"))
-    joined = pairs.join(e1, "id1").join(e2, "id2")
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            a = np.asarray([np.asarray(v, np.float64) for v in pdf["_e1"]])
-            b = np.asarray([np.asarray(v, np.float64) for v in pdf["_e2"]])
-            cos = _quantized_cosine_pairs(a, b)
-            out = pdf[["id1", "id2"]].copy()
-            out["cos_sim"] = cos
-            yield out[out["cos_sim"] >= threshold]
-
-    return joined.mapInPandas(score, "id1 long, id2 long, cos_sim double")
-
-
 def topk_cosine(
     df: DataFrame,
     query_ids: list[int],
@@ -623,7 +592,11 @@ def topk_cosine(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Brute-force top-k via the same quantized kernel; query side broadcast,
-    corpus streamed — at scale this is one corpus scan, no shuffle."""
+    corpus streamed — at scale this is one corpus scan, no shuffle.
+
+    No gate calls it: it is the independent numpy reference that
+    ``tests/test_dedup_pipeline.py::test_topk_kernel_agrees_with_jvm_expression_query``
+    checks the JVM-expression ``ann_bruteforce_topk`` gate against."""
     from pyspark.sql.window import Window
 
     spark = df.sparkSession

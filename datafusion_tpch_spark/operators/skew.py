@@ -47,14 +47,3 @@ def salted_join(
     )
     out = big_s.join(small_s, [*on, "_salt"], how)
     return out.drop("_salt")
-
-
-def key_histogram(df: DataFrame, key: str, top_n: int = 20) -> DataFrame:
-    """Per-key row counts, hottest first — the diagnostic that decides
-    whether a join needs salting (one key >> mean ⇒ yes)."""
-    return (
-        df.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .orderBy(F.col("n_rows").desc(), F.col(key))
-        .limit(top_n)
-    )

@@ -18,6 +18,7 @@ from pyspark.sql.window import Window
 from ..catalog import load_table
 from ..functions import hashing, text, vectors
 from ..functions.exact import davg, davg_sql, dsum, dsum_sql
+from ..operators import dedup
 from ..operators.fanout import kernel_front
 from ..operators.reuse import evaluate_once
 from ..session import memo
@@ -112,7 +113,6 @@ ORDER BY doc_id
 
 # --- n-gram Jaccard near-dup --------------------------------------------
 
-_SHINGLE_N = 3
 _JACCARD_T = 0.35
 # Hot-shingle document-frequency cap: a shingle present in more than this
 # many documents is boilerplate (headers, license text) — it carries no
@@ -142,14 +142,7 @@ def _shingle_set(spark: SparkSession, sf_dir: str, checkpoint: bool = True) -> D
             lambda: _shingle_set(spark, sf_dir, checkpoint=False),
         )
     (docs,) = _t(spark, sf_dir, "documents")
-    sh_all = (
-        docs.select(
-            "doc_id", F.explode(text.shingles(F.col("text"), _SHINGLE_N)).alias("shingle")
-        )
-        .withColumn("h", hashing.md5_int(F.col("shingle")))
-        .select("doc_id", "h")
-        .distinct()
-    )
+    sh_all = dedup.shingle_hashes(docs)
     # hot-shingle list: only shingles with df > cap survive the HAVING, so
     # it is tiny (boilerplate n-grams) however large the corpus — broadcast
     # anti-join beats a count window here because the window would re-sort
@@ -202,11 +195,15 @@ dedup_ngram_jaccard.__doc__ = (dedup_ngram_jaccard.__doc__ or "").format(
 )
 
 
+# oracle mirror of operators.dedup.shingle_hashes
+_SHINGLE_HASHES_SQL = f"""
+SELECT DISTINCT doc_id, {hashing.md5_int_sql('shingle')} AS h
+FROM (SELECT doc_id, unnest({text.shingles_sql('text', dedup.SHINGLE_N)}) AS shingle
+      FROM documents)"""
+
+
 DEDUP_NGRAM_JACCARD_SQL = f"""
-WITH sh_all AS (
-  SELECT DISTINCT doc_id, {hashing.md5_int_sql('shingle')} AS h
-  FROM (SELECT doc_id, unnest({text.shingles_sql('text', _SHINGLE_N)}) AS shingle
-        FROM documents)),
+WITH sh_all AS ({_SHINGLE_HASHES_SQL}),
 hot AS (SELECT h FROM sh_all GROUP BY h HAVING COUNT(*) > {_SHINGLE_MAX_DF}),
 sh AS (SELECT * FROM sh_all WHERE h NOT IN (SELECT h FROM hot)),
 sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
@@ -226,41 +223,15 @@ ORDER BY doc1, doc2
 
 # --- MinHash + LSH banding ------------------------------------------------
 
-_MH_K = 16          # signature length
-_MH_BANDS = 4       # bands of 4 rows each
-_MH_ROWS = _MH_K // _MH_BANDS
-
-
-def _minhash_sig_of(docs: DataFrame) -> DataFrame:
-    """MinHash signature rows for ANY (doc_id, text) frame — the same
-    transform whether the frame is the whole fixture table or one
-    streamed micro-batch of newly crawled documents."""
-    sh = docs.select(
-        "doc_id", F.explode(text.shingles(F.col("text"), _SHINGLE_N)).alias("shingle")
-    ).withColumn("h", hashing.md5_int(F.col("shingle"))).select("doc_id", "h").distinct()
-    aggs = [
-        F.min(hashing.minhash_col(F.col("h"), a, b)).alias(f"m{i}")
-        for i, (a, b) in enumerate(hashing.perm_params(_MH_K))
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
-
-
-def _minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    (docs,) = _t(spark, sf_dir, "documents")
-    return _minhash_sig_of(kernel_front(docs, "text"))
-
-
 def _minhash_sig_sql() -> str:
     mins = ",\n       ".join(
         f"MIN({hashing.minhash_sql('h', a, b)}) AS m{i}"
-        for i, (a, b) in enumerate(hashing.perm_params(_MH_K))
+        for i, (a, b) in enumerate(hashing.perm_params(dedup.MH_K))
     )
     return f"""
 SELECT doc_id,
        {mins}
-FROM (SELECT DISTINCT doc_id, {hashing.md5_int_sql('shingle')} AS h
-      FROM (SELECT doc_id, unnest({text.shingles_sql('text', _SHINGLE_N)}) AS shingle
-            FROM documents))
+FROM ({_SHINGLE_HASHES_SQL})
 GROUP BY doc_id
 """
 
@@ -288,35 +259,13 @@ def _lsh_buckets(spark: SparkSession, sf_dir: str, checkpoint: bool = True) -> D
             spark, sf_dir, "lsh_buckets",
             lambda: _lsh_buckets(spark, sf_dir, checkpoint=False),
         )
-    sig = _minhash_sig(spark, sf_dir)
-    # one band-struct array + explode instead of a 4-way union: the union
-    # form re-runs the whole shingle->signature pipeline once per band (and
-    # the self-join doubles it again — 8 scans); this is a single pass.
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(band).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "_",
-                        *[
-                            F.col(f"m{band * _MH_ROWS + r}").cast("string")
-                            for r in range(_MH_ROWS)
-                        ],
-                    )
-                ).alias("bkey"),
-            )
-            for band in range(_MH_BANDS)
-        ]
-    )
-    buckets = (
-        sig.select("doc_id", F.explode(band_structs).alias("b"))
-        .select("doc_id", F.col("b.band").alias("band"), F.col("b.bkey").alias("bkey"))
+    (docs,) = _t(spark, sf_dir, "documents")
+    return (
+        dedup.lsh_buckets(kernel_front(docs, "text"))
         .withColumn("n_docs", F.count(F.lit(1)).over(Window.partitionBy("band", "bkey")))
         .filter(F.col("n_docs") <= _LSH_MAX_BUCKET)
         .drop("n_docs")
     )
-    return buckets
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -346,9 +295,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _band_sql(alias: str) -> str:
     rows = []
-    for band in range(_MH_BANDS):
+    for band in range(dedup.MH_BANDS):
         cols = " || '_' || ".join(
-            f"CAST(m{band * _MH_ROWS + r} AS VARCHAR)" for r in range(_MH_ROWS)
+            f"CAST(m{band * dedup.MH_ROWS + r} AS VARCHAR)"
+            for r in range(dedup.MH_ROWS)
         )
         rows.append(
             f"SELECT doc_id, {band} AS band, md5({cols}) AS bkey FROM {alias}"
@@ -384,36 +334,9 @@ def _lsh_buckets_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``_lsh_buckets``) because a self-join must cap the cells it joins."""
     return _session_table(
         spark, sf_dir, "lsh_buckets_raw",
-        lambda: _buckets_of(
+        lambda: dedup.lsh_buckets(
             kernel_front(_t(spark, sf_dir, "documents")[0], "text")
         ),
-    )
-
-
-def _buckets_of(docs: DataFrame) -> DataFrame:
-    """UNCAPPED (doc_id, band, bkey) LSH bucket membership for ANY
-    (doc_id, text) frame — shared by the session-cached corpus index and
-    the streaming-ingest gate's per-micro-batch hashing."""
-    sig = _minhash_sig_of(docs)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(band).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "_",
-                        *[
-                            F.col(f"m{band * _MH_ROWS + r}").cast("string")
-                            for r in range(_MH_ROWS)
-                        ],
-                    )
-                ).alias("bkey"),
-            )
-            for band in range(_MH_BANDS)
-        ]
-    )
-    return sig.select("doc_id", F.explode(band_structs).alias("b")).select(
-        "doc_id", F.col("b.band").alias("band"), F.col("b.bkey").alias("bkey")
     )
 
 
@@ -488,7 +411,7 @@ def dedup_persisted_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (docs,) = _t(spark, sf_dir, "documents")
     path = li.lsh_index_path(sf_dir)
     fp = _cached_lsh_fingerprint(spark, sf_dir, docs)
-    params = {"bands": _MH_BANDS, "rows": _MH_ROWS, "split": _INCR_SPLIT}
+    params = {"bands": dedup.MH_BANDS, "rows": dedup.MH_ROWS, "split": _INCR_SPLIT}
     if not li.lsh_index_is_current(path, fp, params, spark=spark):
         _build_lsh_bucket_index(docs, path, fp, params)
     incoming = kernel_front(docs, "text").filter(
@@ -500,7 +423,7 @@ def dedup_persisted_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("band", "bkey")
     )
     return admit_batch(
-        _buckets_of(incoming), incoming.select("doc_id"), cells
+        dedup.lsh_buckets(incoming), incoming.select("doc_id"), cells
     ).orderBy("doc_id")
 
 
@@ -515,7 +438,7 @@ def _build_lsh_bucket_index(docs: DataFrame, path: str, fp: str,
         F.col("doc_id") < _INCR_SPLIT
     )
     cells = (
-        _buckets_of(corpus)
+        dedup.lsh_buckets(corpus)
         .groupBy("band", "bkey")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
     )
@@ -5890,9 +5813,9 @@ def multimodal_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-sample frames → integer-exact per-frame energy Σ(s−128)² — the
     voice-activity / silence-trim primitive, over the REAL binary column
     (np.frombuffer in the Arrow kernel; the oracle recomputes from the
-    ASCII text the blob encodes).  One narrow mapInPandas pass, no
-    shuffle; at 100 TB this runs wherever the audio shards live, with
-    `partition_for_blobs` bounding per-task memory."""
+    ASCII text the blob encodes).  One narrow mapInPandas pass behind
+    the row-sized ``kernel_front``; at 100 TB this runs wherever the
+    audio shards live."""
     from ..operators.multimodal import audio_frame_energy, documents_as_audio
 
     (docs,) = _t(spark, sf_dir, "documents")

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.exact import dsum_sql
+from ..operators import dedup
 from ..operators.fanout import kernel_front
 from ..session import memo
 from ..streaming import (
@@ -766,7 +767,7 @@ def docs_dedup_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     reshuffled per batch, which is what lets admission run continuously
     at crawl scale."""
     from ..streaming.maintenance import admit_batch, admit_merge, run_foreach_batch
-    from .extensions import _buckets_of, _corpus_index_cells, _lsh_buckets_raw
+    from .extensions import _corpus_index_cells, _lsh_buckets_raw
 
     def maintain() -> tuple[DataFrame, int]:
         corpus_cells = _corpus_index_cells(
@@ -778,7 +779,7 @@ def docs_dedup_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             if batch_df.isEmpty():
                 return
             v = admit_batch(
-                _buckets_of(batch_df), batch_df.select("doc_id"), corpus_cells
+                dedup.lsh_buckets(batch_df), batch_df.select("doc_id"), corpus_cells
             ).localCheckpoint()
             holder["verdicts"] = admit_merge(holder["verdicts"], v)
             holder["n"] += 1
@@ -838,9 +839,6 @@ def dedup_persisted_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame
     from .extensions import (
         _INCR_SPLIT,
         _LSH_MAX_BUCKET,
-        _MH_BANDS,
-        _MH_ROWS,
-        _buckets_of,
         _cached_lsh_fingerprint,
     )
 
@@ -849,12 +847,12 @@ def dedup_persisted_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame
     verd_dir = path.rstrip("/") + "/verdicts"
     cells_dir = path.rstrip("/") + "/cells"
     fp = _cached_lsh_fingerprint(spark, sf_dir, docs)
-    params = {"variant": "ingest", "bands": _MH_BANDS, "rows": _MH_ROWS,
-              "split": _INCR_SPLIT}
+    params = {"variant": "ingest", "bands": dedup.MH_BANDS,
+              "rows": dedup.MH_ROWS, "split": _INCR_SPLIT}
     if not li.lsh_index_is_current(path, fp, {**params, "ingested": True},
                                    spark=spark):
         artifact_io.delete(path, recursive=True, spark=spark)
-        membership = _buckets_of(
+        membership = dedup.lsh_buckets(
             docs.filter(F.col("doc_id") < _INCR_SPLIT)
         ).select("doc_id", "band", "bkey",
                  F.lit(False).alias("from_stream"))
@@ -880,7 +878,7 @@ def dedup_persisted_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame
         def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
             if batch_df.isEmpty():
                 return
-            bb = _buckets_of(batch_df)
+            bb = dedup.lsh_buckets(batch_df)
             v = admit_batch(bb, batch_df.select("doc_id"), corpus_cells)
             v.write.mode("append").parquet(verd_dir)
             (
@@ -955,7 +953,7 @@ def dedup_persisted_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..catalog import load_table
     from ..streaming.maintenance import admit_batch
-    from .extensions import _INCR_SPLIT, _LSH_MAX_BUCKET, _buckets_of
+    from .extensions import _INCR_SPLIT, _LSH_MAX_BUCKET
 
     # ensure the streamed index exists (idempotent, manifest-gated)
     dedup_persisted_ingest_stream(spark, sf_dir)
@@ -1004,7 +1002,7 @@ def dedup_persisted_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") >= _INCR_SPLIT
     )
     return admit_batch(
-        _buckets_of(incoming), incoming.select("doc_id"), corpus_cells
+        dedup.lsh_buckets(incoming), incoming.select("doc_id"), corpus_cells
     ).orderBy("doc_id")
 
 
@@ -1265,19 +1263,17 @@ def _drift_active_version(spark: SparkSession, base: str,
     return "v2"
 
 
-def _drift_serve_active(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _drift_serve_active(spark: SparkSession, sf_dir: str,
+                        fp: str) -> tuple[str, DataFrame]:
     """Serve-only path: read the alias, serve that generation — no drift
-    check, no training, no swap.  What a query-serving session runs while
-    the retrain job owns the control loop (and what the kill-mid-swap
-    test calls to prove the old index still serves)."""
-    from ..catalog import load_table
-    from .extensions import _cached_corpus_fingerprint, _serve_persisted_ivf_topk
+    check, no training, no swap.  Returns (version, top-k frame).  The
+    retrain gate's own serve step, and what the kill-mid-swap test calls
+    to prove the old index still serves."""
+    from .extensions import _serve_persisted_ivf_topk
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    fp = _cached_corpus_fingerprint(spark, sf_dir, emb)
     base = _drift_base_path(sf_dir)
     version = _drift_active_version(spark, base, fp)
-    return _serve_persisted_ivf_topk(spark, sf_dir, base + "/" + version)
+    return version, _serve_persisted_ivf_topk(spark, sf_dir, base + "/" + version)
 
 
 def embeddings_drift_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1318,11 +1314,7 @@ def embeddings_drift_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import load_table
     from ..operators import ann_index as ai
     from ..streaming.maintenance import ivf_ingest_batch
-    from .extensions import (
-        _cached_corpus_fingerprint,
-        _ivf_trained_centroids,
-        _serve_persisted_ivf_topk,
-    )
+    from .extensions import _cached_corpus_fingerprint, _ivf_trained_centroids
 
     emb = load_table(spark, sf_dir, "embeddings")
     fp = _cached_corpus_fingerprint(spark, sf_dir, emb)
@@ -1350,8 +1342,7 @@ def embeddings_drift_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _drift_v2_params(),
             )
         _flip_alias(spark, base, "v2", fp)
-    version = _drift_active_version(spark, base, fp)
-    serve = _serve_persisted_ivf_topk(spark, sf_dir, base + "/" + version)
+    version, serve = _drift_serve_active(spark, sf_dir, fp)
     return (
         serve
         .withColumn("n_drifted_cells", F.lit(int(n_drifted)).cast("int"))

@@ -9,13 +9,14 @@ at 100 TB.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import TPCH_TABLES
-from .tpch_gen import GENERATORS
+from .tpch_gen import GENERATORS, projection_fingerprint
 
 
 def copy_to_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> int:
@@ -25,21 +26,38 @@ def copy_to_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> int:
     return df.sparkSession.read.parquet(path).count()
 
 
-def export_tpch_tables(spark: SparkSession, sf: float, out_dir: str) -> None:
-    """Generate the 8 TPC-H tables at ``sf`` into ``out_dir/<table>`` once.
+def _marker(path: str) -> str | None:
+    try:
+        with open(os.path.join(path, "_SUCCESS")) as f:
+            return f.read()
+    except FileNotFoundError:
+        return None
 
-    A table counts as exported only when its ``_SUCCESS`` marker exists.
-    Each write goes to a pid-suffixed staging directory that is renamed
-    into place, so a killed writer leaves no half-written table behind and
-    concurrent processes never read one; a table directory without the
-    marker (a partial export) is replaced, not read."""
+
+def export_tpch_tables(spark: SparkSession, sf: float, out_dir: str) -> None:
+    """Generate the 8 TPC-H tables at ``sf`` into ``out_dir/<table>`` once
+    per generator version.
+
+    A table counts as exported only when its ``_SUCCESS`` marker holds
+    ``projection_fingerprint(table, sf)``; an export made by other
+    generator code, or at another ``sf``, is redone.  Each write goes to a
+    pid-suffixed staging directory that is renamed into place, so a killed
+    writer leaves no half-written table behind and concurrent processes
+    never read one; a table directory without a current marker (a partial
+    or stale export) is replaced, not read."""
     for name in TPCH_TABLES:
         path = os.path.join(out_dir, name)
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
+        fp = projection_fingerprint(name, sf)
+        if _marker(path) == fp:
             continue
         stage = f"{path}.stage.{os.getpid()}"
         copy_to_parquet(GENERATORS[name](spark, sf), stage)
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        with open(os.path.join(stage, "_SUCCESS"), "w") as f:
+            f.write(fp)
+        # the writer's checksum of the empty marker no longer matches it
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(os.path.join(stage, "._SUCCESS.crc"))
+        if _marker(path) != fp:
             shutil.rmtree(path, ignore_errors=True)
         try:
             os.rename(stage, path)

@@ -51,6 +51,9 @@ are pinned in ``tests/test_tpch_gen.py::EXACT_COUNTS``.
 
 from __future__ import annotations
 
+import hashlib
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import TPCH_TABLES
@@ -410,15 +413,29 @@ _PROJECTIONS = {
 
 # --- row source 1: the DataFrame generators -------------------------------------
 
-def _generator(table: str):
+def _rendered(table: str, sf: float) -> tuple[int, list[list[str]]]:
+    """Row-id count and projection stages of ``table`` with ``sf`` bound."""
     scaled, per_row = _ID_RANGE[table]
+    n = (int(_SF1[scaled] * sf) if scaled else 1) * per_row
+    return n, _PROJECTIONS[table](f"{float(sf)!r}D", max(n.bit_length(), 1))
 
+
+def projection_fingerprint(table: str, sf: float) -> str:
+    """sha256 over ``table``, ``sf`` and the projection text
+    ``GENERATORS[table](spark, sf)`` runs: equal fingerprints mean equal
+    generated rows, so an export can tell whether it is current."""
+    n, stages = _rendered(table, sf)
+    key = json.dumps([table, float(sf), n, stages])
+    return hashlib.sha256(key.encode()).hexdigest()
+
+
+def _generator(table: str):
     def generate(spark: SparkSession, sf: float = 1.0, part: int = 1,
                  num_parts: int = 1) -> DataFrame:
         _validate(sf, part, num_parts)
-        n = (int(_SF1[scaled] * sf) if scaled else 1) * per_row
+        n, stages = _rendered(table, sf)
         df = _ranged(spark, n, part, num_parts)
-        for stage in _PROJECTIONS[table](f"{float(sf)!r}D", max(n.bit_length(), 1)):
+        for stage in stages:
             df = df.selectExpr(*stage)
         return df
 

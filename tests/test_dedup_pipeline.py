@@ -1,43 +1,73 @@
-"""The scale-path dedup pipeline (LSH candidates → exact verify) composes
-and agrees with the exact all-pairs baseline; kernel implementations agree
-with each other."""
+"""The gates' dedup chain (operators/dedup.py: shingle hashes -> MinHash
+-> LSH bands, then exact verify) agrees with the exact all-pairs
+baseline; kernel implementations agree with each other."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from datafusion_tpch_spark.catalog import load_table
-from datafusion_tpch_spark.operators.dedup import (
-    exact_survivors,
-    jaccard_verify,
-    lsh_candidate_pairs,
-    minhash_signatures,
-)
+from datafusion_tpch_spark.functions import text
+from datafusion_tpch_spark.operators.dedup import shingle_hashes
 from datafusion_tpch_spark.operators.similarity import topk_cosine
 from datafusion_tpch_spark.queries import all_queries
+from datafusion_tpch_spark.queries.extensions import _JACCARD_T
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_exact_survivors_counts(spark):
+    """dedup_exact keeps one survivor per normalized-text fingerprint and
+    accounts for every document; re-deduping the survivors is a fixpoint."""
     docs = load_table(spark, SF_DIR, "documents")
-    surv = exact_survivors(docs)
-    n_docs, n_surv = docs.count(), surv.count()
+    rows = all_queries()["dedup_exact"].build(spark, SF_DIR).collect()
+    n_docs, n_surv = docs.count(), len(rows)
     assert 0 < n_surv <= n_docs
-    # survivors are distinct by fingerprint: re-dedup is a fixpoint
-    assert exact_survivors(surv).count() == n_surv
+    assert len({r.fp for r in rows}) == n_surv
+    assert sum(r.n_copies for r in rows) == n_docs
+    survivors = docs.join(
+        spark.createDataFrame([(r.survivor_id,) for r in rows], "doc_id long"),
+        "doc_id",
+    )
+    n_fp = survivors.select(text.fingerprint(F.col("text"))).distinct().count()
+    assert n_fp == n_surv
+
+
+def _jaccard_verify(docs, pairs):
+    """Exact Jaccard of each candidate (id1, id2) over the chain's own
+    uncapped shingle hashes, kept at the gates' threshold."""
+    sh = shingle_hashes(docs)
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    common = (
+        pairs.join(sh.withColumnRenamed("doc_id", "id1"), "id1")
+        .join(sh.withColumnRenamed("doc_id", "id2"), ["id2", "h"])
+        .groupBy("id1", "id2")
+        .agg(F.count(F.lit(1)).alias("common"))
+    )
+    jac = F.col("common") / (F.col("n1") + F.col("n2") - F.col("common"))
+    return (
+        common.join(sizes.toDF("id1", "n1"), "id1")
+        .join(sizes.toDF("id2", "n2"), "id2")
+        .filter(jac >= _JACCARD_T)
+        .select("id1", "id2")
+    )
 
 
 def test_lsh_then_verify_matches_exact_on_candidates(spark):
-    """verify(LSH candidates) == exact ngram pairs ∩ candidates, and
-    recall over the exact pairs is high on the fixture corpus."""
+    """verify(dedup_minhash_lsh candidates) == exact ngram pairs ∩
+    candidates, and recall over the exact pairs is high on the fixture
+    corpus."""
     docs = load_table(spark, SF_DIR, "documents")
-    sig = minhash_signatures(docs)
-    cands = lsh_candidate_pairs(sig)
-    verified = jaccard_verify(docs, cands).select("id1", "id2")
+    reg = all_queries()
+    cands = (
+        reg["dedup_minhash_lsh"]
+        .build(spark, SF_DIR)
+        .select(F.col("doc1").alias("id1"), F.col("doc2").alias("id2"))
+    )
+    verified = _jaccard_verify(docs, cands)
 
     exact = (
-        all_queries()["dedup_ngram_jaccard"]
+        reg["dedup_ngram_jaccard"]
         .build(spark, SF_DIR)
         .select(F.col("doc1").alias("id1"), F.col("doc2").alias("id2"))
     )

@@ -57,7 +57,12 @@ def test_kill_mid_swap_serves_old_index(spark, index_dir, monkeypatch):
     # v2 artifacts fully landed, but the alias never flipped
     assert os.path.exists(os.path.join(base, "v2", "manifest.json"))
     assert not os.path.exists(st._drift_alias_path(base))
-    served = st._drift_serve_active(spark, SF_DIR).collect()
+    fp = ext._cached_corpus_fingerprint(
+        spark, SF_DIR, ext._t(spark, SF_DIR, "embeddings")[0]
+    )
+    version, serve = st._drift_serve_active(spark, SF_DIR, fp)
+    assert version == "v1"
+    served = serve.collect()
     v1_expect = ext._serve_persisted_ivf_topk(
         spark, SF_DIR, base + "/v1"
     ).collect()
@@ -67,7 +72,9 @@ def test_kill_mid_swap_serves_old_index(spark, index_dir, monkeypatch):
     monkeypatch.undo()
     rows = st.embeddings_drift_retrain(spark, SF_DIR).collect()
     assert all(r.index_version == 2 for r in rows)
-    served2 = st._drift_serve_active(spark, SF_DIR).collect()
+    version2, serve2 = st._drift_serve_active(spark, SF_DIR, fp)
+    assert version2 == "v2"
+    served2 = serve2.collect()
     v2_expect = ext._serve_persisted_ivf_topk(
         spark, SF_DIR, base + "/v2"
     ).collect()

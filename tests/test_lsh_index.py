@@ -14,6 +14,7 @@ import os
 import pytest
 
 from datafusion_tpch_spark.operators import ann_index as ai
+from datafusion_tpch_spark.operators import dedup
 from datafusion_tpch_spark.operators import lsh_index as li
 from datafusion_tpch_spark.queries import extensions as ext
 
@@ -34,7 +35,7 @@ def test_build_writes_band_partitioned_artifacts(spark, index_dir):
     assert os.path.exists(os.path.join(path, "manifest.json"))
     band_dirs = [d for d in os.listdir(os.path.join(path, "cells"))
                  if d.startswith("band=")]
-    assert len(band_dirs) == ext._MH_BANDS
+    assert len(band_dirs) == dedup.MH_BANDS
 
 
 def test_matches_session_cached_admission(spark, index_dir):
@@ -63,7 +64,7 @@ def test_corpus_change_invalidates(spark, index_dir):
     docs = ext._t(spark, SF_DIR, "documents")[0]
     fp = li.corpus_text_fingerprint(docs)
     path = li.lsh_index_path(SF_DIR, index_dir)
-    params = {"bands": ext._MH_BANDS, "rows": ext._MH_ROWS,
+    params = {"bands": dedup.MH_BANDS, "rows": dedup.MH_ROWS,
               "split": ext._INCR_SPLIT}
     assert not li.lsh_index_is_current(path, fp, params)  # nothing written
     ext.dedup_persisted_lsh(spark, SF_DIR).collect()
@@ -154,8 +155,7 @@ def test_persisted_ingest_stream_durable_serve(spark, index_dir, monkeypatch):
         raise AssertionError("durable serve touched hashing/streaming")
 
     monkeypatch.setattr(mt, "run_foreach_batch", boom)
-    from datafusion_tpch_spark.queries import extensions as ext
-    monkeypatch.setattr(ext, "_buckets_of", boom)
+    monkeypatch.setattr(dedup, "lsh_buckets", boom)
     rows2 = st.dedup_persisted_ingest_stream(spark, SF_DIR).collect()
     assert [tuple(r) for r in rows2] == [tuple(r) for r in rows1]
 
@@ -194,7 +194,7 @@ def test_persisted_compact_reduces_files_and_preserves_answers(spark,
     assert n_after < n_before, (n_after, n_before)
     band_dirs = [d for d in os.listdir(os.path.join(path, "cells_compact"))
                  if d.startswith("band=")]
-    assert len(band_dirs) == ext._MH_BANDS
+    assert len(band_dirs) == dedup.MH_BANDS
     # pruning on the compacted layout
     from pyspark.sql import functions as F
 

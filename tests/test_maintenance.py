@@ -1,4 +1,4 @@
-"""Compaction and sorted-rewrite maintenance operators."""
+"""Compaction maintenance operators."""
 
 from __future__ import annotations
 
@@ -13,8 +13,6 @@ from datafusion_tpch_spark.catalog import load_table
 from datafusion_tpch_spark.operators.maintenance import (
     compact,
     data_file_count,
-    key_ranges,
-    rewrite_sorted,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -61,38 +59,6 @@ def test_compact_shuffle_mode(spark, tmpdirs, fragmented):
     assert after.count() == 1500
 
 
-def test_rewrite_sorted_produces_disjoint_ranges(spark, tmpdirs, fragmented):
-    out = os.path.join(tmpdirs, "clustered")
-    n = rewrite_sorted(spark, fragmented, out, ["o_orderkey"], n_files=4)
-    assert n >= 3  # range partitioner may merge sparse bounds
-    ranges = sorted(
-        (r["min_key"], r["max_key"])
-        for r in key_ranges(spark, out, "o_orderkey").collect()
-    )
-    # clustered layout: every file covers a disjoint key range
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 < lo2
-    # rows survive
-    assert spark.read.parquet(out).count() == 1500
-
-
-def test_clustered_scan_skips_files(spark, tmpdirs, fragmented):
-    """The point of clustering: a selective key predicate reads a subset
-    of files (observable through input_file_name on the filtered scan)."""
-    out = os.path.join(tmpdirs, "clustered2")
-    rewrite_sorted(spark, fragmented, out, ["o_orderkey"], n_files=4)
-    total = data_file_count(out)
-    touched = (
-        spark.read.parquet(out)
-        .filter(F.col("o_orderkey") < 100)
-        .withColumn("_f", F.input_file_name())
-        .select("_f")
-        .distinct()
-        .count()
-    )
-    assert touched < total
-
-
 def test_sized_partitions_derives_from_volume():
     from datafusion_tpch_spark.operators.maintenance import sized_partitions
 
@@ -117,10 +83,3 @@ def test_data_file_count_scheme_qualified(spark, tmp_path):
     assert data_file_count(f"file://{local}", spark=spark) == n_posix
     assert data_file_count(f"file://{local}/absent", spark=spark) == 0
 
-
-def test_rewrite_sorted_derives_shards_from_volume(spark, tmpdirs, fragmented):
-    out = os.path.join(tmpdirs, "clustered_auto")
-    n = rewrite_sorted(spark, fragmented, out, ["o_orderkey"],
-                       n_files=None, target_records_per_file=500)
-    # 1500 rows / 500 per file -> 3 range shards
-    assert n == 3

@@ -132,8 +132,8 @@ def test_ingest_admission_is_boundary_and_order_independent(spark):
     EVERY way of cutting the incoming crawl into micro-batches, in any
     order — the property docs_dedup_ingest_stream's single 4-way run
     can't pin."""
+    from datafusion_tpch_spark.operators.dedup import lsh_buckets
     from datafusion_tpch_spark.queries.extensions import (
-        _buckets_of,
         _corpus_index_cells,
         _INCR_SPLIT,
     )
@@ -151,7 +151,7 @@ def test_ingest_admission_is_boundary_and_order_independent(spark):
     def prop(seed, cuts, rnd):
         n = _INCR_SPLIT + 60
         docs = _docs(spark, seed, n).localCheckpoint()
-        cells = _corpus_index_cells(_buckets_of(docs)).localCheckpoint()
+        cells = _corpus_index_cells(lsh_buckets(docs)).localCheckpoint()
         incoming = docs.filter(F.col("doc_id") >= _INCR_SPLIT)
         rows = incoming.orderBy("doc_id").collect()
         slices = _cuts_to_slices(len(rows), cuts)
@@ -162,14 +162,14 @@ def test_ingest_admission_is_boundary_and_order_independent(spark):
             state = admit_merge(
                 state,
                 admit_batch(
-                    _buckets_of(batch), batch.select("doc_id"), cells
+                    lsh_buckets(batch), batch.select("doc_id"), cells
                 ).localCheckpoint(),
             )
         got = sorted(tuple(r) for r in state.collect()) if state else []
         want = sorted(
             tuple(r)
             for r in admit_batch(
-                _buckets_of(incoming), incoming.select("doc_id"), cells
+                lsh_buckets(incoming), incoming.select("doc_id"), cells
             ).collect()
         )
         assert got == want

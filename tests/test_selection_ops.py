@@ -10,6 +10,8 @@ the order, and groups smaller than k.
 
 from __future__ import annotations
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from datafusion_tpch_spark.operators.selection import (
@@ -103,6 +105,19 @@ def test_prefix_more_ranges_than_rows(spark):
         num_ranges=16,
     )
     assert {r.k: r.prefix for r in out.collect()} == {1: 1, 2: 2}
+
+
+def test_prefix_rejects_map_column(spark):
+    """Input contract: ``df`` carries scalar columns only.  A MapType
+    column fails analysis at once (evaluate_once hashes every column and
+    Spark's hash() rejects maps), never silently at run time."""
+    df = spark.createDataFrame(
+        [(1, 1, {"a": 1})], "k int, v int, m map<string, int>"
+    )
+    with pytest.raises(AnalysisException, match="HASH_MAP_TYPE"):
+        sharded_prefix(
+            df, order_by=["k"], value=F.col("v"), agg="sum", num_ranges=2
+        )
 
 
 # ---------------------------------------------------------------------------

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from datafusion_tpch_spark.catalog import load_table
-from datafusion_tpch_spark.operators.skew import key_histogram, salted_join
+from datafusion_tpch_spark.operators.skew import salted_join
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -34,10 +34,3 @@ def test_salted_left_join_equals_plain(spark):
     assert salted.count() == plain.count()
     assert salted.exceptAll(plain).count() == 0
 
-
-def test_key_histogram_orders_by_heat(spark):
-    ev = load_table(spark, SF_DIR, "events")
-    hist = key_histogram(ev, "event_type", top_n=5).collect()
-    counts = [r.n_rows for r in hist]
-    assert counts == sorted(counts, reverse=True)
-    assert sum(counts) <= ev.count()

@@ -27,6 +27,7 @@ from datafusion_tpch_spark.queries.tpch_spec import (
     bind_spark,
 )
 from datafusion_tpch_spark.sources.parquet_io import export_tpch_tables
+from datafusion_tpch_spark.sources.tpch_gen import projection_fingerprint
 
 
 @pytest.fixture(scope="session")
@@ -93,7 +94,9 @@ def test_partial_export_is_regenerated(spark, tmp_path):
     for name in TPCH_TABLES:
         if name != "nation":  # stand-ins: marked complete, never rewritten
             os.makedirs(tmp_path / name)
-            (tmp_path / name / "_SUCCESS").touch()
+            (tmp_path / name / "_SUCCESS").write_text(
+                projection_fingerprint(name, SF)
+            )
     partial = tmp_path / "nation"
     spark.range(3).write.parquet(str(partial))
     os.remove(partial / "_SUCCESS")

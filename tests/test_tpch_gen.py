@@ -187,3 +187,42 @@ def test_reference_sf1_shape_assertions(spark):
         df = tpch_gen.call_tpch(spark, table, 1.0)
         assert len(df.columns) == cols, table
         assert df.count() == rows, table
+
+
+def test_export_redone_only_when_projection_text_changes(spark, tmp_path,
+                                                         monkeypatch):
+    """export_tpch_tables keys each table's export on its projection text
+    and sf: an unchanged text rewrites nothing, a changed one re-exports
+    that table and only it, and a marker without a fingerprint (an export
+    written before fingerprints) is redone."""
+    from datafusion_tpch_spark.sources.parquet_io import export_tpch_tables
+
+    def files():
+        return {t: {p.name: p.stat().st_mtime_ns for p in (tmp_path / t).iterdir()}
+                for t in TPCH_TABLES}
+
+    export_tpch_tables(spark, 0.001, str(tmp_path))
+    before = files()
+    export_tpch_tables(spark, 0.001, str(tmp_path))
+    assert files() == before
+
+    region = tpch_gen._PROJECTIONS["region"]
+    monkeypatch.setitem(
+        tpch_gen._PROJECTIONS, "region",
+        lambda sf, width: region(sf, width)
+        + [["r_regionkey", "upper(r_name) AS r_name", "r_comment"]],
+    )
+    export_tpch_tables(spark, 0.001, str(tmp_path))
+    after = files()
+    assert after["region"] != before["region"]
+    assert {t: f for t, f in after.items() if t != "region"} == {
+        t: f for t, f in before.items() if t != "region"
+    }
+    got = spark.read.parquet(str(tmp_path / "region")).collect()
+    assert sorted(r.r_name for r in got) == sorted(n.upper() for n in tpch_gen.REGIONS)
+    # no checksum of the empty marker is left to contradict the fingerprint
+    assert not (tmp_path / "region" / "._SUCCESS.crc").exists()
+
+    (tmp_path / "nation" / "_SUCCESS").write_text("")
+    export_tpch_tables(spark, 0.001, str(tmp_path))
+    assert files()["nation"] != before["nation"]
