@@ -15,12 +15,13 @@ separation:
   a statically partition-pruned scan that never touches the other k-nprobe
   directories.  At 100 TB this is the layout every IVF store uses — the
   inverted lists ARE the partition directories.
-- ``manifest.json`` — index parameters + a corpus fingerprint (row count,
-  id-sum, value-sensitive quantized sum of the leading dimension).  A
-  serve session validates the manifest against the live corpus and only
-  rebuilds when the corpus actually changed; a FRESH session over an
-  unchanged corpus serves with zero training work
-  (``tests/test_ann_index.py`` proves this by making training raise).
+- ``manifest.json`` — format, index parameters + a corpus fingerprint
+  (row count, id-sum, value-sensitive quantized sums), written last by
+  ``artifact_io.publish``.  A serve session checks it with
+  ``artifact_io.is_current`` and only rebuilds when the corpus actually
+  changed; a FRESH session over an unchanged corpus serves with zero
+  training work (``tests/test_ann_index.py`` proves this by making
+  training raise).
 
 No reference-engine counterpart: ``/root/reference/src/lib.rs`` has no
 vector indexing; this extends the engine for the LLM-data-pipeline tier.
@@ -29,7 +30,6 @@ vector indexing; this extends the engine for the LLM-data-pipeline tier.
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -84,100 +84,39 @@ def corpus_fingerprint(emb: DataFrame) -> str:
     return f"{row.n}:{row.ids}:{row.v}:{row.l1}"
 
 
+def centroid_table(spark: SparkSession,
+                   centroids: list[tuple[int, list[float]]]) -> DataFrame:
+    """The k centroid rows as one small table (one parquet file)."""
+    from ..inline import inline_table
+
+    return inline_table(
+        spark,
+        [(int(cid), [float(x) for x in vec]) for cid, vec in sorted(centroids)],
+        "cid long, ce array<double>",
+    ).coalesce(1)
+
+
 def write_index(
     emb: DataFrame,
     centroids: list[tuple[int, list[float]]],
     path: str,
     fingerprint: str,
-    params: dict | None = None,
+    params: dict,
 ) -> None:
-    """The index build job: persist centroids + the cell-partitioned
-    corpus, then the manifest LAST — a killed build leaves no manifest, so
-    serve sessions treat the directory as absent instead of reading a
-    half-written index.  On a REBUILD the old manifest is deleted FIRST,
-    for the same reason: a kill between the artifact overwrite and the new
-    manifest must not leave yesterday's valid-looking manifest on top of
-    destroyed artifacts."""
-    from ..inline import inline_table
+    """The index build job: centroids + the cell-partitioned corpus,
+    published through ``artifact_io.publish`` (manifest last)."""
     from .similarity import ivf_assign
 
     spark = emb.sparkSession
-    artifact_io.delete(_manifest_path(path), spark=spark)
-    cent_df = inline_table(
-        spark,
-        [(int(cid), [float(x) for x in vec]) for cid, vec in sorted(centroids)],
-        "cid long, ce array<double>",
+    artifact_io.publish(
+        spark, path, FORMAT_VERSION, fingerprint, params,
+        {"centroids": centroid_table(spark, centroids),
+         "cells": ivf_assign(emb, centroids)},
+        partition_by={"cells": "cell"},
     )
-    cent_df.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "centroids")
-    )
-    ivf_assign(emb, centroids).write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(path, "cells")
-    )
-    manifest = {"format": FORMAT_VERSION, "fingerprint": fingerprint,
-                "k": len(centroids), **(params or {})}
-    write_manifest(path, manifest, spark=spark)
-
-
-def _manifest_path(path: str) -> str:
-    # object-store prefixes are URIs — never os.path.join a scheme'd path
-    return path.rstrip("/") + "/manifest.json"
-
-
-def write_manifest(path: str, manifest: dict,
-                   spark: SparkSession | None = None) -> None:
-    artifact_io.write_text(
-        _manifest_path(path), json.dumps(manifest, sort_keys=True) + "\n",
-        spark=spark,
-    )
-
-
-def update_manifest(path: str, spark: SparkSession | None = None,
-                    **extra) -> None:
-    """Merge keys into an existing manifest — e.g. the ingest gate marks
-    ``ingested=True`` only AFTER its stream completes, so a killed ingest
-    leaves an unmarked manifest and the next session rebuilds instead of
-    serving a half-appended index."""
-    m = read_manifest(path, spark=spark)
-    if m is None:
-        raise ValueError(f"no manifest to update at {path}")
-    m.update(extra)
-    write_manifest(path, m, spark=spark)
-
-
-def read_manifest(path: str, spark: SparkSession | None = None) -> dict | None:
-    text = artifact_io.read_text(_manifest_path(path), spark=spark)
-    if text is None:
-        return None
-    try:
-        return json.loads(text)
-    except ValueError:
-        return None
-
-
-def index_is_current(path: str, fingerprint: str, params: dict | None = None,
-                     spark: SparkSession | None = None) -> bool:
-    """True iff a complete index exists at ``path`` for exactly this
-    corpus AND these build parameters (an nprobe change is serve-side and
-    does NOT invalidate; a k/iters change rebuilds)."""
-    m = read_manifest(path, spark=spark)
-    if m is None or m.get("format") != FORMAT_VERSION:
-        return False
-    if m.get("fingerprint") != fingerprint:
-        return False
-    return all(m.get(k) == v for k, v in (params or {}).items())
 
 
 def load_centroids(spark: SparkSession, path: str) -> list[tuple[int, list[float]]]:
     """k rows to the driver — the bounded collect every probe needs."""
-    rows = spark.read.parquet(os.path.join(path, "centroids")).collect()
+    rows = artifact_io.load(spark, path, "centroids").collect()
     return sorted((int(r.cid), [float(x) for x in r.ce]) for r in rows)
-
-
-def load_cells(spark: SparkSession, path: str, cell_ids: list[int]) -> DataFrame:
-    """The probed inverted lists: a static IN-filter on the partition
-    column, so the scan lists only the probed directories."""
-    return (
-        spark.read.parquet(os.path.join(path, "cells"))
-        .filter(F.col("cell").isin([int(c) for c in cell_ids]))
-    )

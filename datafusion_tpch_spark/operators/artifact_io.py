@@ -1,29 +1,42 @@
-"""Storage-agnostic small-artifact IO (index manifests, stage markers).
+"""The lifecycle of every persisted artifact: validity check, publish,
+partition-pruned load, and the storage-agnostic small-file IO under them.
 
-``ann_index.py`` documents ``SPARK_GRAFT_INDEX_DIR`` as "an object-store
-prefix in a real deployment", but driver-local ``open()``/``os.remove``
-cannot reach ``s3a://`` / ``hdfs://`` / ``abfs://``.  This module routes
-every manifest/marker read, write, delete, and existence check through
-the Hadoop FileSystem API (``org.apache.hadoop.fs``) whenever the path
-carries a URI scheme — the same connector layer the executors' parquet IO
-already uses, so any store Spark can scan, the manifests can live on too.
+An index build job writes an artifact to storage once; later serving
+sessions read it back without rebuilding.  Every artifact kind (IVF, PQ,
+IVF-PQ, LSH, the streamed ingest indexes, the drift generations, the BPE
+tokenizer, the curation funnel) follows one rule: an artifact is valid
+exactly when its ``manifest.json`` matches the kind's format version, the
+corpus fingerprint and the build params, and that manifest is written
+last.  ``publish`` is the one writer of that rule:
 
-Schemeless paths (the local sandbox, pytest tmpdirs) stay on plain POSIX
-IO: no JVM round-trip per manifest read, and the functions keep working
-with no active SparkSession (e.g. unit tests that only touch manifests).
+1. delete the stale manifest, so a kill while the tables are overwritten
+   cannot leave yesterday's valid-looking manifest on top of them;
+2. write the tables, each optionally ``partitionBy`` one column;
+3. write the manifest last, so a killed build leaves none.
 
-No reference-engine counterpart: ``/root/reference/src/lib.rs`` has no
-persisted artifacts at all; this is deployment plumbing for the index
-tier built on top of it.
+``is_current`` is the one check, ``load`` the one reader (a static IN on a
+partition column lists only the probed directories), and
+``update_manifest`` records markers (``ingested``, ``compact_src_files``,
+``stages_done``) only after the data they vouch for has landed.  What the
+tables hold (centroid, codebook and merge rows, fingerprints) stays with
+each kind.
+
+Manifest and marker IO goes through the Hadoop FileSystem API
+(``org.apache.hadoop.fs``) whenever the path carries a URI scheme, so
+any store Spark can scan (``s3a://``, ``hdfs://``, ``abfs://``) can hold
+the manifests too.  Schemeless paths stay on plain POSIX IO: no JVM
+round-trip per manifest read, and no active SparkSession needed.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import shutil
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 _SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
 
@@ -109,3 +122,76 @@ def exists(path: str, spark: SparkSession | None = None) -> bool:
         return os.path.exists(path)
     fs, _, hpath = _hadoop_fs(path, spark)
     return bool(fs.exists(hpath))
+
+
+def _child(path: str, name: str) -> str:
+    # object-store prefixes are URIs — never os.path.join a scheme'd path
+    return path.rstrip("/") + "/" + name
+
+
+def _write_manifest(path: str, manifest: dict,
+                    spark: SparkSession | None = None) -> None:
+    write_text(_child(path, "manifest.json"),
+               json.dumps(manifest, sort_keys=True) + "\n", spark=spark)
+
+
+def read_manifest(path: str, spark: SparkSession | None = None) -> dict | None:
+    text = read_text(_child(path, "manifest.json"), spark=spark)
+    if text is None:
+        return None
+    try:
+        return json.loads(text)
+    except ValueError:
+        return None
+
+
+def update_manifest(path: str, spark: SparkSession | None = None,
+                    **markers) -> None:
+    """Merge markers into an existing manifest — called only AFTER the
+    data a marker vouches for has landed, so a kill before it leaves an
+    unmarked manifest and the next session redoes the work."""
+    m = read_manifest(path, spark=spark)
+    if m is None:
+        raise ValueError(f"no manifest to update at {path}")
+    m.update(markers)
+    _write_manifest(path, m, spark=spark)
+
+
+def is_current(spark: SparkSession, path: str, fmt: int, fingerprint: str,
+               params: dict) -> bool:
+    """True iff a complete artifact at ``path`` was published in format
+    ``fmt`` for exactly this corpus and these params.  Serve-side knobs
+    (nprobe, the hot-cell cap) are not params, so they never rebuild."""
+    m = read_manifest(path, spark=spark)
+    expect = {"format": fmt, "fingerprint": fingerprint, **params}
+    return m is not None and all(m.get(k) == v for k, v in expect.items())
+
+
+def publish(spark: SparkSession, path: str, fmt: int, fingerprint: str,
+            params: dict, tables: dict[str, DataFrame] | None = None,
+            partition_by: dict[str, str] | None = None) -> None:
+    """Write ``tables`` (name -> frame) under ``path`` and the manifest
+    that makes them current: stale manifest deleted FIRST, tables next
+    (a table named in ``partition_by`` is written ``partitionBy`` that
+    column), manifest LAST."""
+    delete(_child(path, "manifest.json"), spark=spark)
+    for name, df in (tables or {}).items():
+        writer = df.write.mode("overwrite")
+        if name in (partition_by or {}):
+            writer = writer.partitionBy(partition_by[name])
+        writer.parquet(_child(path, name))
+    _write_manifest(
+        path, {"format": fmt, "fingerprint": fingerprint, **params},
+        spark=spark,
+    )
+
+
+def load(spark: SparkSession, path: str, table: str,
+         column: str | None = None, values=None) -> DataFrame:
+    """Table ``table`` of the artifact at ``path``; with ``column`` given,
+    a static IN-filter on that partition column, so the scan lists only
+    the directories of ``values``."""
+    df = spark.read.parquet(_child(path, table))
+    if column is None:
+        return df
+    return df.filter(F.col(column).isin(list(values)))

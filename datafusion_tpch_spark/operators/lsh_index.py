@@ -17,12 +17,10 @@ the stored cells.
   SERVE-side parameter (like nprobe for the ANN index): raising or
   lowering the boilerplate threshold never forces a rebuild.
 - ``manifest.json`` — build parameters + a corpus fingerprint (row count,
-  id-sum, value-sensitive text checksum).  Written LAST (via
-  ``ann_index.write_manifest``), so a killed build leaves no manifest and
-  the next session rebuilds instead of serving half-written cells.
-
-All manifest IO routes through ``artifact_io`` — scheme-qualified index
-roots (``s3a://...``) go through the Hadoop FileSystem connector.
+  id-sum, value-sensitive text checksum).  ``artifact_io.publish`` writes
+  it LAST, so a killed build leaves no manifest and the next session
+  rebuilds instead of serving half-written cells; ``artifact_io.load``
+  with ``column="band"`` is the pruned probe.
 
 No reference-engine counterpart: ``/root/reference/src/lib.rs`` has no
 dedup tier; this extends the engine for the LLM-data-pipeline workload.
@@ -30,10 +28,10 @@ dedup tier; this extends the engine for the LLM-data-pipeline workload.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import ann_index
+from . import ann_index, artifact_io
 
 FORMAT_VERSION = 1
 
@@ -62,47 +60,14 @@ def write_lsh_index(
     cells: DataFrame,
     path: str,
     fingerprint: str,
-    params: dict | None = None,
+    params: dict,
 ) -> None:
     """The index build job: persist a band-keyed bucket table — the
     (band, bkey, n_docs) occupancy form for batch admission, or the
     per-doc (doc_id, band, bkey, from_stream) MEMBERSHIP form the durable
-    ingest loop appends to — band-partitioned, then the manifest LAST.
-    On a REBUILD the stale manifest is deleted FIRST (same crash
-    discipline as ``ann_index.write_index``): a kill between the cell
-    overwrite and the new manifest must not leave yesterday's
-    valid-looking manifest on top of destroyed cells."""
-    from . import artifact_io
-
-    spark = cells.sparkSession
-    artifact_io.delete(path.rstrip("/") + "/manifest.json", spark=spark)
-    cells.write.mode("overwrite").partitionBy("band").parquet(
-        path.rstrip("/") + "/cells"
+    ingest loop appends to — band-partitioned, through
+    ``artifact_io.publish`` (manifest last)."""
+    artifact_io.publish(
+        cells.sparkSession, path, FORMAT_VERSION, fingerprint, params,
+        {"cells": cells}, partition_by={"cells": "band"},
     )
-    manifest = {"format": FORMAT_VERSION, "fingerprint": fingerprint,
-                **(params or {})}
-    ann_index.write_manifest(path, manifest, spark=spark)
-
-
-def lsh_index_is_current(path: str, fingerprint: str,
-                         params: dict | None = None,
-                         spark: SparkSession | None = None) -> bool:
-    """True iff a complete bucket index exists for exactly this corpus and
-    these BUILD parameters (band/row geometry; the hot-cell cap is
-    serve-side and never invalidates)."""
-    m = ann_index.read_manifest(path, spark=spark)
-    if m is None or m.get("format") != FORMAT_VERSION:
-        return False
-    if m.get("fingerprint") != fingerprint:
-        return False
-    return all(m.get(k) == v for k, v in (params or {}).items())
-
-
-def load_lsh_cells(spark: SparkSession, path: str,
-                   bands: list[int] | None = None) -> DataFrame:
-    """The stored bucket table; with ``bands`` given, a static IN-filter
-    on the partition column so only those band directories are listed."""
-    df = spark.read.parquet(path.rstrip("/") + "/cells")
-    if bands is not None:
-        df = df.filter(F.col("band").isin([int(b) for b in bands]))
-    return df

@@ -4,10 +4,11 @@ Streaming ingest and fine-grained writes leave thousands of small files
 per partition; scans then pay per-file open + footer-read + scheduling
 cost, and the driver pays listing.  ``compact`` rewrites the data into
 target-size files: ``maxRecordsPerFile`` caps file size on the way out;
-``coalesce`` (no shuffle) merges when the input is merely fragmented,
-``repartition`` (one shuffle) when it is also skewed.  It is a pure
-DataFrame write — no table format required; with Delta/Iceberg the same
-plan runs under their OPTIMIZE entry point.
+an unpartitioned table is coalesced (no shuffle), a ``partitionBy`` table
+is repartitioned on its partition column (one shuffle) so each partition
+directory ends up with ~one file.  It is a pure DataFrame write — no
+table format required; with Delta/Iceberg the same plan runs under their
+OPTIMIZE entry point.
 """
 
 from __future__ import annotations
@@ -62,23 +63,27 @@ def compact(
     path: str,
     out_path: str,
     target_records_per_file: int = 1_000_000,
-    shuffle: bool = False,
+    partition_col: str | None = None,
 ) -> int:
     """Bin-pack the dataset at ``path`` into ~``target_records_per_file``
     files at ``out_path``; returns the output file count.
 
-    ``shuffle=False`` coalesces (narrow — each output task concatenates
-    input splits, no data movement between executors beyond locality);
-    ``shuffle=True`` round-robin repartitions, paying one shuffle to also
-    even out skewed input files.
+    Without ``partition_col`` the input is coalesced (narrow — each
+    output task concatenates input splits, no shuffle).  With it, one
+    shuffle on that column routes each partition value to one writer and
+    the output keeps the ``partitionBy`` layout, so probes of the
+    compacted table stay partition-pruned.
     """
     df = spark.read.parquet(path)
-    total = df.count()
-    n_files = sized_partitions(total, target_records_per_file)
-    df = df.repartition(n_files) if shuffle else df.coalesce(n_files)
+    n_files = sized_partitions(df.count(), target_records_per_file)
+    if partition_col is None:
+        writer = df.coalesce(n_files).write
+    else:
+        writer = (df.repartition(n_files, partition_col).write
+                  .partitionBy(partition_col))
     (
-        df.write.mode("overwrite")
+        writer.mode("overwrite")
         .option("maxRecordsPerFile", target_records_per_file)
         .parquet(out_path)
     )
-    return data_file_count(out_path)
+    return data_file_count(out_path, spark)

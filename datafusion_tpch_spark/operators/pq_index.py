@@ -5,9 +5,9 @@ The round-13 persisted tier covered IVF (``ann_index.py``), LSH
 (``lsh_index.py``) and BPE; the PQ family was the one index whose
 lifetime was still session-bound — every serve session re-derived the
 codebook and re-encoded the corpus.  This module gives PQ the same
-build-job / serve-session separation, with the same manifest discipline
-as ``ann_index.py`` (delete stale manifest FIRST, write artifacts, write
-manifest LAST, fingerprint-validate before serving):
+build-job / serve-session separation through the same lifecycle
+(``artifact_io.publish``: stale manifest deleted FIRST, artifacts, manifest
+LAST; ``artifact_io.is_current`` before serving):
 
 - ``codebooks/`` — the m x k sub-codebook rows ``(s, j, ce)`` (one tiny
   parquet file; a serve session collects m*k rows — corpus-size-
@@ -37,7 +37,6 @@ vector indexing; this extends the engine for the LLM-data-pipeline tier.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,57 +51,48 @@ def pq_index_path(sf_dir: str, root: str | None = None) -> str:
     return ann_index.index_path(sf_dir, root).rstrip("/") + "/pq"
 
 
+def codebook_table(spark: SparkSession,
+                   codebook: "list[list[list[float]]]") -> DataFrame:
+    """The m x k sub-codebook rows ``(s, j, ce)`` as one small table."""
+    from ..inline import inline_table
+
+    return inline_table(
+        spark,
+        [(int(s), int(j), [float(x) for x in codebook[s][j]])
+         for s in range(len(codebook)) for j in range(len(codebook[s]))],
+        "s int, j int, ce array<double>",
+    ).coalesce(1)
+
+
 def write_pq_index(
     emb: DataFrame,
     codebook: "list[list[list[float]]]",
     path: str,
     fingerprint: str,
-    params: dict | None = None,
+    params: dict,
 ) -> None:
-    """The PQ index build job: persist sub-codebooks + the coded corpus,
-    manifest LAST (killed build → no manifest → serve sessions rebuild
-    instead of reading half-written artifacts; stale manifest deleted
-    FIRST for the converse kill window)."""
-    from ..inline import inline_table
+    """The PQ index build job: sub-codebooks + the coded corpus, published
+    through ``artifact_io.publish`` (manifest last)."""
     from .similarity import pq_codes
 
     spark = emb.sparkSession
-    artifact_io.delete(ann_index._manifest_path(path), spark=spark)
-    cb_rows = [
-        (int(s), int(j), [float(x) for x in codebook[s][j]])
-        for s in range(len(codebook))
-        for j in range(len(codebook[s]))
-    ]
-    inline_table(
-        spark, cb_rows, "s int, j int, ce array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "codebooks")
+    artifact_io.publish(
+        spark, path, ann_index.FORMAT_VERSION, fingerprint, params,
+        {"codebooks": codebook_table(spark, codebook),
+         "codes": pq_codes(emb, codebook)},
     )
-    pq_codes(emb, codebook).write.mode("overwrite").parquet(
-        os.path.join(path, "codes")
-    )
-    manifest = {
-        "format": ann_index.FORMAT_VERSION,
-        "fingerprint": fingerprint,
-        **(params or {}),
-    }
-    ann_index.write_manifest(path, manifest, spark=spark)
 
 
 def load_pq_codebook(spark: SparkSession, path: str) -> list:
     """m x k x sub nested list from ``codebooks/`` — the bounded collect
     (m*k rows) every serve session pays once."""
-    rows = spark.read.parquet(os.path.join(path, "codebooks")).collect()
+    rows = artifact_io.load(spark, path, "codebooks").collect()
     by_s: dict[int, dict[int, list[float]]] = {}
     for r in rows:
         by_s.setdefault(int(r.s), {})[int(r.j)] = [float(x) for x in r.ce]
     return [
         [by_s[s][j] for j in sorted(by_s[s])] for s in sorted(by_s)
     ]
-
-
-def load_pq_codes(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(path, "codes"))
 
 
 def ivfpq_index_path(sf_dir: str, root: str | None = None) -> str:
@@ -117,57 +107,23 @@ def write_ivfpq_index(
     codebook: "list[list[list[float]]]",
     path: str,
     fingerprint: str,
-    params: dict | None = None,
+    params: dict,
 ) -> None:
     """The IVF-PQ index build job — the FAISS IVFx,PQy layout on
     storage: coarse centroids (k rows), sub-codebooks (m*k rows), and
     the corpus as (vec_id, cell, m-int codes) written
     ``partitionBy("cell")`` so probes are statically partition-pruned
     AND each pruned read is ~1/64 the raw bytes.  One fused Arrow pass
-    builds it (``similarity.ivf_pq_codes``); manifest discipline as
-    everywhere (stale manifest deleted FIRST, new manifest LAST)."""
-    from ..inline import inline_table
+    builds it (``similarity.ivf_pq_codes``)."""
     from .similarity import ivf_pq_codes
 
     spark = emb.sparkSession
-    artifact_io.delete(ann_index._manifest_path(path), spark=spark)
-    inline_table(
-        spark,
-        [(int(cid), [float(x) for x in vec]) for cid, vec in sorted(centroids)],
-        "cid long, ce array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "centroids")
-    )
-    cb_rows = [
-        (int(s), int(j), [float(x) for x in codebook[s][j]])
-        for s in range(len(codebook))
-        for j in range(len(codebook[s]))
-    ]
-    inline_table(
-        spark, cb_rows, "s int, j int, ce array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "codebooks")
-    )
-    ivf_pq_codes(emb, centroids, codebook).write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(os.path.join(path, "cells"))
-    manifest = {
-        "format": ann_index.FORMAT_VERSION,
-        "fingerprint": fingerprint,
-        "k": len(centroids),
-        **(params or {}),
-    }
-    ann_index.write_manifest(path, manifest, spark=spark)
-
-
-def load_ivfpq_cells(spark: SparkSession, path: str,
-                     cell_ids: "list[int]") -> DataFrame:
-    """The probed inverted lists of codes: a static IN-filter on the
-    partition column — only the probed directories are listed, and each
-    carries m ints per vector instead of the raw embedding."""
-    return (
-        spark.read.parquet(os.path.join(path, "cells"))
-        .filter(F.col("cell").isin([int(c) for c in cell_ids]))
+    artifact_io.publish(
+        spark, path, ann_index.FORMAT_VERSION, fingerprint, params,
+        {"centroids": ann_index.centroid_table(spark, centroids),
+         "codebooks": codebook_table(spark, codebook),
+         "cells": ivf_pq_codes(emb, centroids, codebook)},
+        partition_by={"cells": "cell"},
     )
 
 

@@ -1527,19 +1527,14 @@ def embeddings_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     → functions/exact.davg), and the oracle replays both iterations as
     unrolled CTEs.  Output is per-cell membership + quantized-integer
     inertia — the k-means objective without a single libm call."""
-    from ..operators.clustering import kmeans_refine
+    from ..operators.clustering import kmeans_refine, md5_seeds
     from .extensions import _l2q
 
     (emb,) = _t(spark, sf_dir, "embeddings")
     emb8 = emb.select(
         "vec_id", F.slice(F.col("embedding"), 1, _KM_D).alias("embedding")
     )
-    seeds_rows = (
-        emb8.orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
-        .limit(_KM_K)
-        .collect()
-    )
-    seeds = [(int(r.vec_id), [float(x) for x in r.embedding]) for r in seeds_rows]
+    seeds = md5_seeds(emb8, _KM_K)
     cents, assigned = kmeans_refine(emb8, seeds, iters=_KM_ITERS, exact=True)
     from ..inline import inline_table
 

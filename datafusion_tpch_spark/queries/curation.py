@@ -1197,13 +1197,12 @@ def _write_bpe_artifacts(spark: SparkSession, sf_dir: str, path: str,
     """The tokenizer TRAIN JOB — the only place merges are learned and the
     vocabulary is folded.  Writes ``merges/`` (the rank-ordered merge
     table: THE tokenizer, what a real pipeline version-controls) and
-    ``vocab_tok/`` (the deployed (word, freq, n_tok) encode table), then
-    the manifest LAST (``write_index``'s crash discipline).  Kept as a
-    named seam so the fresh-session test can make it raise."""
-    from ..operators import ann_index as ai
-    from ..operators import artifact_io
+    ``vocab_tok/`` (the deployed (word, freq, n_tok) encode table) through
+    ``artifact_io.publish`` (manifest LAST).  Kept as a named seam so the
+    fresh-session test can make it raise."""
+    from ..inline import inline_table
+    from ..operators import artifact_io as aio
 
-    artifact_io.delete(path.rstrip("/") + "/manifest.json", spark=spark)
     (docs,) = _t(spark, sf_dir, "documents")
     spread = kernel_front(docs, "text")
     vocab = (
@@ -1213,27 +1212,17 @@ def _write_bpe_artifacts(spark: SparkSession, sf_dir: str, path: str,
         .persist()
     )
     merges = _bpe_merges(vocab)
-    from ..inline import inline_table
-
-    inline_table(
-        spark, [(i + 1, p) for i, p in enumerate(merges)],
-        "rank int, pair string",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        path.rstrip("/") + "/merges"
-    )
-    (
-        vocab.select(
+    aio.publish(spark, path, _BPE_ARTIFACT_FORMAT, fp, params, {
+        "merges": inline_table(
+            spark, [(i + 1, p) for i, p in enumerate(merges)],
+            "rank int, pair string",
+        ).coalesce(1),
+        "vocab_tok": vocab.select(
             "word", "freq",
             _bpe_token_count(F.col("word"), merges).alias("n_tok"),
-        )
-        .write.mode("overwrite").parquet(path.rstrip("/") + "/vocab_tok")
-    )
+        ),
+    })
     vocab.unpersist()
-    ai.write_manifest(
-        path,
-        {"format": _BPE_ARTIFACT_FORMAT, "fingerprint": fp, **params},
-        spark=spark,
-    )
 
 
 def docs_bpe_persisted_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1254,23 +1243,16 @@ def docs_bpe_persisted_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus pays one explode + one join + one aggregation per report,
     and the fingerprint manifest invalidates on corpus change exactly like
     the ANN/LSH index tiers."""
-    from ..operators import ann_index as ai
-    from .extensions import _cached_lsh_fingerprint
+    from ..operators import artifact_io as aio
+    from .extensions import _corpus_fingerprint
 
     (docs,) = _t(spark, sf_dir, "documents")
     path = _bpe_artifact_path(sf_dir)
-    fp = _cached_lsh_fingerprint(spark, sf_dir, docs)
+    fp = _corpus_fingerprint(spark, sf_dir, "documents")
     params = {"enc_k": _BPE_ENC_K}
-    m = ai.read_manifest(path, spark=spark)
-    current = (
-        m is not None
-        and m.get("format") == _BPE_ARTIFACT_FORMAT
-        and m.get("fingerprint") == fp
-        and all(m.get(k) == v for k, v in params.items())
-    )
-    if not current:
+    if not aio.is_current(spark, path, _BPE_ARTIFACT_FORMAT, fp, params):
         _write_bpe_artifacts(spark, sf_dir, path, fp, params)
-    vocab_tok = spark.read.parquet(path.rstrip("/") + "/vocab_tok")
+    vocab_tok = aio.load(spark, path, "vocab_tok")
     spread = kernel_front(docs, "text")
     wpd = spread.select(
         "doc_id", F.explode(text.words(F.col("text"))).alias("word")
@@ -2116,42 +2098,28 @@ def docs_pipeline_resumable(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries are restart points, survivors are plain parquet any
     downstream consumer can read, and a corpus change invalidates via the
     same fingerprint manifest the index artifacts use."""
-    from ..operators import ann_index as ai
-    from ..operators import artifact_io
-    from .extensions import _cached_lsh_fingerprint
+    from ..operators import artifact_io as aio
+    from .extensions import _corpus_fingerprint
 
-    (docs,) = _t(spark, sf_dir, "documents")
     path = _funnel_path(sf_dir)
-    fp = _cached_lsh_fingerprint(spark, sf_dir, docs)
+    fp = _corpus_fingerprint(spark, sf_dir, "documents")
     params = {
         "xsub_k": _XSUB_K, "xsub_max": _XSUB_YIELD_MAX,
         "min_tok": _YIELD_MIN_TOK, "decon_n": _DECON_N,
         "eval_mod": _DECON_EVAL_MOD,
     }
-    m = ai.read_manifest(path, spark=spark)
-    current = (
-        m is not None
-        and m.get("format") == _FUNNEL_FORMAT
-        and m.get("fingerprint") == fp
-        and all(m.get(k) == v for k, v in params.items())
-    )
-    if not current:
-        artifact_io.delete(path, recursive=True, spark=spark)
-        ai.write_manifest(
-            path,
-            {"format": _FUNNEL_FORMAT, "fingerprint": fp, **params,
-             "stages_done": []},
-            spark=spark,
-        )
-        m = ai.read_manifest(path, spark=spark)
-    done = set(m.get("stages_done", []))
+    if not aio.is_current(spark, path, _FUNNEL_FORMAT, fp, params):
+        aio.delete(path, recursive=True, spark=spark)
+        aio.publish(spark, path, _FUNNEL_FORMAT, fp,
+                    {**params, "stages_done": []})
+    done = set(aio.read_manifest(path, spark=spark)["stages_done"])
     for idx in range(1, len(_FUNNEL_STAGES) + 1):
         if idx in done:
             continue
         _funnel_stage_build(spark, sf_dir, path, idx)
         done.add(idx)
         # durability point: recorded only after the stage parquet landed
-        ai.update_manifest(path, spark=spark, stages_done=sorted(done))
+        aio.update_manifest(path, spark=spark, stages_done=sorted(done))
 
     reports = [
         spark.read.parquet(_funnel_stage_dir(path, idx))

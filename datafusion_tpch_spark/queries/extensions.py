@@ -392,7 +392,7 @@ def dedup_persisted_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     admits its batch from the artifacts alone.  Build: corpus (band, bkey)
     occupancy written ``partitionBy("band")`` with a fingerprint manifest
     (manifest LAST, so a killed build is invisible; see
-    ``operators/lsh_index.py``).  Serve: hash ONLY the incoming batch, one
+    ``operators/artifact_io.py``).  Serve: hash ONLY the incoming batch, one
     semi-join against the stored cells under the serve-side hot-cell cap —
     the corpus is never rehashed, never reshuffled, never even scanned.
 
@@ -405,20 +405,21 @@ def dedup_persisted_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     per occupied cell), the probe is an equi-semi-join whose build side is
     the index, and the cap keeps per-doc fan-out bounded regardless of
     boilerplate density."""
+    from ..operators import artifact_io as aio
     from ..operators import lsh_index as li
     from ..streaming.maintenance import admit_batch
 
     (docs,) = _t(spark, sf_dir, "documents")
     path = li.lsh_index_path(sf_dir)
-    fp = _cached_lsh_fingerprint(spark, sf_dir, docs)
+    fp = _corpus_fingerprint(spark, sf_dir, "documents")
     params = {"bands": dedup.MH_BANDS, "rows": dedup.MH_ROWS, "split": _INCR_SPLIT}
-    if not li.lsh_index_is_current(path, fp, params, spark=spark):
+    if not aio.is_current(spark, path, li.FORMAT_VERSION, fp, params):
         _build_lsh_bucket_index(docs, path, fp, params)
     incoming = kernel_front(docs, "text").filter(
         F.col("doc_id") >= _INCR_SPLIT
     )
     cells = (
-        li.load_lsh_cells(spark, path)
+        aio.load(spark, path, "cells")
         .filter(F.col("n_docs") <= _LSH_MAX_BUCKET)  # serve-side cap
         .select("band", "bkey")
     )
@@ -443,17 +444,6 @@ def _build_lsh_bucket_index(docs: DataFrame, path: str, fp: str,
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
     )
     li.write_lsh_index(cells, path, fp, params)
-
-
-def _cached_lsh_fingerprint(spark: SparkSession, sf_dir: str,
-                            docs: DataFrame) -> str:
-    """Session-memoized ``lsh_index.corpus_text_fingerprint`` (same
-    rationale as ``_cached_corpus_fingerprint``: the fixture cannot change
-    under a live session; the manifest check stays per-call)."""
-    from ..operators import lsh_index as li
-
-    return memo(spark, ("lsh_fp", sf_dir),
-                lambda: li.corpus_text_fingerprint(docs))
 
 
 DEDUP_INCREMENTAL_LSH_SQL = f"""
@@ -1720,17 +1710,11 @@ def _ivf_trained_centroids(spark: SparkSession, sf_dir: str) -> list:
     traffic per iteration is k x d mean rows + the k-row centroid table —
     corpus-size-independent.  Trained once per (session, fixture) and
     shared by ann_ivf_topk / ann_ivf_pq_topk / ann_recall_audit."""
-    from ..operators.clustering import kmeans_refine
+    from ..operators.clustering import kmeans_refine, md5_seeds
 
     def train() -> list:
         (emb,) = _t(spark, sf_dir, "embeddings")
-        seeds = [
-            (int(r.vec_id), [float(x) for x in r.embedding])
-            for r in emb.select("vec_id", "embedding")
-            .orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
-            .limit(_IVF_K)
-            .collect()
-        ]
+        seeds = md5_seeds(emb, _IVF_K)
         return kmeans_refine(emb, seeds, iters=_IVF_ITERS, exact=True)[0]
 
     return memo(spark, ("ivf_centroids", sf_dir), train)
@@ -1980,29 +1964,34 @@ def ann_persisted_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     strongest statement available that persistence changed the LIFETIME
     of the index, not its answers."""
     from ..operators import ann_index as ai
+    from ..operators import artifact_io as aio
 
     (emb,) = _t(spark, sf_dir, "embeddings")
     path = ai.index_path(sf_dir)
-    fp = _cached_corpus_fingerprint(spark, sf_dir, emb)
+    fp = _corpus_fingerprint(spark, sf_dir, "embeddings")
     params = {"ivf_k": _IVF_K, "ivf_iters": _IVF_ITERS}
-    if not ai.index_is_current(path, fp, params, spark=spark):
+    if not aio.is_current(spark, path, ai.FORMAT_VERSION, fp, params):
         ai.write_index(
             emb, _ivf_trained_centroids(spark, sf_dir), path, fp, params
         )
     return _serve_persisted_ivf_topk(spark, sf_dir, path)
 
 
-def _cached_corpus_fingerprint(spark: SparkSession, sf_dir: str,
-                               emb: DataFrame) -> str:
-    """Session-memoized ``ann_index.corpus_fingerprint`` — the fixture
-    cannot change under a live session, so plan sweeps (test_plans,
-    plan_audit) pay the aggregate collect once, not once per gate build.
-    The MANIFEST check stays per-call (a cheap file read), so on-disk
-    state changes within a session are still honored."""
+def _corpus_fingerprint(spark: SparkSession, sf_dir: str, table: str) -> str:
+    """Session-memoized fingerprint of the fixture's ``embeddings``
+    (``ann_index.corpus_fingerprint``) or ``documents``
+    (``lsh_index.corpus_text_fingerprint``) table — the fixture cannot
+    change under a live session, so plan sweeps (test_plans, plan_audit)
+    pay the aggregate collect once, not once per gate build.  The
+    MANIFEST check stays per-call (a cheap file read), so on-disk state
+    changes within a session are still honored."""
     from ..operators import ann_index as ai
+    from ..operators import lsh_index as li
 
-    return memo(spark, ("corpus_fp", sf_dir),
-                lambda: ai.corpus_fingerprint(emb))
+    fingerprint = {"embeddings": ai.corpus_fingerprint,
+                   "documents": li.corpus_text_fingerprint}[table]
+    return memo(spark, ("corpus_fp", sf_dir, table),
+                lambda: fingerprint(_t(spark, sf_dir, table)[0]))
 
 
 def _serve_persisted_ivf_topk(
@@ -2011,6 +2000,7 @@ def _serve_persisted_ivf_topk(
     """The serve-session plan: artifacts in, top-k out, zero training."""
     from ..inline import inline_table
     from ..operators import ann_index as ai
+    from ..operators import artifact_io as aio
 
     centroids = ai.load_centroids(spark, path)
     (emb,) = _t(spark, sf_dir, "embeddings")
@@ -2026,7 +2016,7 @@ def _serve_persisted_ivf_topk(
          for r in rows],
         "query_id long, qe array<float>, qcell long",
     )
-    cells = ai.load_cells(spark, path, probed).select(
+    cells = aio.load(spark, path, "cells", "cell", probed).select(
         F.col("vec_id").alias("cand_id"),
         F.col("embedding").alias("ce"),
         F.col("cell").cast("long").alias("ccell"),
@@ -2078,14 +2068,10 @@ def _pq_codebook(spark: SparkSession, sf_dir: str) -> list:
     audit silently measures a different index than the one searched;
     this helper is the single definition (bounded driver collect:
     ``_PQ_K`` rows)."""
+    from ..operators.clustering import md5_seeds
+
     (emb,) = _t(spark, sf_dir, "embeddings")
-    seeds = [
-        [float(x) for x in r.embedding]
-        for r in emb.select("vec_id", "embedding")
-        .orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
-        .limit(_PQ_K)
-        .collect()
-    ]
+    seeds = [vec for _, vec in md5_seeds(emb, _PQ_K)]
     return [
         [seeds[j][s * _PQ_SUB:(s + 1) * _PQ_SUB] for j in range(_PQ_K)]
         for s in range(_PQ_M)
@@ -2218,13 +2204,14 @@ def ann_pq_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     appends (PQ scans everything), so no compaction companion is needed.
     """
     from ..operators import ann_index as ai
+    from ..operators import artifact_io as aio
     from ..operators import pq_index as pqi
 
     (emb,) = _t(spark, sf_dir, "embeddings")
     path = pqi.pq_index_path(sf_dir)
-    fp = _cached_corpus_fingerprint(spark, sf_dir, emb)
+    fp = _corpus_fingerprint(spark, sf_dir, "embeddings")
     params = {"pq_m": _PQ_M, "pq_k": _PQ_K, "pq_sub": _PQ_SUB}
-    if not ai.index_is_current(path, fp, params, spark=spark):
+    if not aio.is_current(spark, path, ai.FORMAT_VERSION, fp, params):
         pqi.write_pq_index(
             emb, _pq_codebook(spark, sf_dir), path, fp, params
         )
@@ -2236,6 +2223,7 @@ def _serve_persisted_pq_topk(
 ) -> DataFrame:
     """The serve-session plan: codebook + codes artifacts in, ADC top-k
     out, zero codebook derivation."""
+    from ..operators import artifact_io as aio
     from ..operators import pq_index as pqi
 
     codebook = pqi.load_pq_codebook(spark, path)
@@ -2243,7 +2231,7 @@ def _serve_persisted_pq_topk(
     q = emb.filter(F.col("vec_id") < _NQUERY).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
-    c = pqi.load_pq_codes(spark, path).select(
+    c = aio.load(spark, path, "codes").select(
         F.col("vec_id").alias("cand_id"),
         pqi.pq_recon_expr(codebook).alias("cr"),
     )
@@ -2493,14 +2481,15 @@ def ann_ivf_pq_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     training AND codebook derivation forcibly disabled is proven in
     ``tests/test_pq_index.py``."""
     from ..operators import ann_index as ai
+    from ..operators import artifact_io as aio
     from ..operators import pq_index as pqi
 
     (emb,) = _t(spark, sf_dir, "embeddings")
     path = pqi.ivfpq_index_path(sf_dir)
-    fp = _cached_corpus_fingerprint(spark, sf_dir, emb)
+    fp = _corpus_fingerprint(spark, sf_dir, "embeddings")
     params = {"ivf_k": _IVF_K, "ivf_iters": _IVF_ITERS,
               "pq_m": _PQ_M, "pq_k": _PQ_K, "pq_sub": _PQ_SUB}
-    if not ai.index_is_current(path, fp, params, spark=spark):
+    if not aio.is_current(spark, path, ai.FORMAT_VERSION, fp, params):
         pqi.write_ivfpq_index(
             emb, _ivf_trained_centroids(spark, sf_dir),
             _pq_codebook(spark, sf_dir), path, fp, params,
@@ -2515,6 +2504,7 @@ def _serve_persisted_ivfpq_topk(
     ADC top-k out, zero training."""
     from ..inline import inline_table
     from ..operators import ann_index as ai
+    from ..operators import artifact_io as aio
     from ..operators import pq_index as pqi
 
     centroids = ai.load_centroids(spark, path)
@@ -2528,7 +2518,7 @@ def _serve_persisted_ivfpq_topk(
          for r in rows],
         "query_id long, qe array<float>, qcell long",
     )
-    cells = pqi.load_ivfpq_cells(spark, path, probed).select(
+    cells = aio.load(spark, path, "cells", "cell", probed).select(
         F.col("vec_id").alias("cand_id"),
         F.col("cell").cast("long").alias("ccell"),
         pqi.pq_recon_expr(codebook).alias("cr"),

@@ -814,7 +814,7 @@ def dedup_persisted_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame
     """``docs_dedup_ingest_stream`` with the crawl state moved to STORAGE —
     the full durable admission loop: the corpus's LSH bucket MEMBERSHIP
     (doc_id, band, bkey) is persisted band-partitioned with a fingerprint
-    manifest (``operators/lsh_index.py``); each incoming micro-batch is
+    manifest (``operators/artifact_io.py``); each incoming micro-batch is
     hashed, admitted, its VERDICTS appended to a ``verdicts/`` parquet
     table, and the ADMITTED docs' membership appended into the index's
     band directories — so the stored index reflects the post-crawl corpus
@@ -831,27 +831,22 @@ def dedup_persisted_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame
     not its answers.  At 100 TB: per batch, hash + one semi-join whose
     build side is the (tiny) cell table + two cell-keyed parquet appends;
     the corpus is never rehashed or reshuffled."""
-    from ..operators import ann_index as ai
-    from ..operators import artifact_io
+    from ..operators import artifact_io as aio
     from ..operators import lsh_index as li
     from ..catalog import load_table
     from ..streaming.maintenance import admit_batch, run_foreach_batch
-    from .extensions import (
-        _INCR_SPLIT,
-        _LSH_MAX_BUCKET,
-        _cached_lsh_fingerprint,
-    )
+    from .extensions import _INCR_SPLIT, _LSH_MAX_BUCKET, _corpus_fingerprint
 
     docs = load_table(spark, sf_dir, "documents")
     path = li.lsh_index_path(sf_dir) + "_ingest"
     verd_dir = path.rstrip("/") + "/verdicts"
     cells_dir = path.rstrip("/") + "/cells"
-    fp = _cached_lsh_fingerprint(spark, sf_dir, docs)
+    fp = _corpus_fingerprint(spark, sf_dir, "documents")
     params = {"variant": "ingest", "bands": dedup.MH_BANDS,
               "rows": dedup.MH_ROWS, "split": _INCR_SPLIT}
-    if not li.lsh_index_is_current(path, fp, {**params, "ingested": True},
-                                   spark=spark):
-        artifact_io.delete(path, recursive=True, spark=spark)
+    if not aio.is_current(spark, path, li.FORMAT_VERSION, fp,
+                          {**params, "ingested": True}):
+        aio.delete(path, recursive=True, spark=spark)
         membership = dedup.lsh_buckets(
             docs.filter(F.col("doc_id") < _INCR_SPLIT)
         ).select("doc_id", "band", "bkey",
@@ -861,7 +856,7 @@ def dedup_persisted_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame
         # membership (what a fresh build job would read back), shared by
         # every micro-batch
         corpus_cells = (
-            li.load_lsh_cells(spark, path)
+            aio.load(spark, path, "cells")
             .filter(~F.col("from_stream"))
             .groupBy("band", "bkey")
             .agg(F.count(F.lit(1)).alias("n_docs"))
@@ -898,11 +893,11 @@ def dedup_persisted_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame
         run_foreach_batch(spark, feed, apply_batch,
                           "dedup_persisted_ingest_stream")
         corpus_cells.unpersist()
-        ai.update_manifest(path, spark=spark, ingested=True)  # LAST
+        aio.update_manifest(path, spark=spark, ingested=True)  # LAST
 
     # serve session: the verdict table from the artifacts alone
     return (
-        spark.read.parquet(verd_dir)
+        aio.load(spark, path, "verdicts")
         .select(
             "doc_id",
             F.col("n_hit_buckets").cast("bigint").alias("n_hit_buckets"),
@@ -919,6 +914,27 @@ def dedup_persisted_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame
 _COMPACT_TARGET_RECORDS = 1_000_000
 
 
+def _optimize(spark: SparkSession, path: str, table: str, marker: str,
+              partition_col: str | None = None) -> None:
+    """Incremental OPTIMIZE of one table of the artifact at ``path`` into
+    ``<table>_compact``: skipped when the table's file count equals the
+    manifest's ``marker`` (real OPTIMIZE skips already-compacted tables;
+    new appends change the count and trigger a re-compact).  The marker
+    lands AFTER the rewrite, so a killed compaction re-runs instead of
+    serving half a rewrite."""
+    from ..operators import artifact_io as aio
+    from ..operators.maintenance import compact, data_file_count
+
+    src = path.rstrip("/") + "/" + table
+    n_before = data_file_count(src, spark)
+    if aio.read_manifest(path, spark=spark).get(marker) == n_before:
+        return
+    n_after = compact(spark, src, src + "_compact", _COMPACT_TARGET_RECORDS,
+                      partition_col)
+    assert n_after <= max(n_before, 1), (table, n_after, n_before)
+    aio.update_manifest(path, spark=spark, **{marker: n_before})
+
+
 def dedup_persisted_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPTIMIZE for the durable admission index — the maintenance job the
     streamed appends make necessary: every ``dedup_persisted_ingest_stream``
@@ -930,9 +946,9 @@ def dedup_persisted_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     count derived from the row count — + ``maxRecordsPerFile``),
     PRESERVING the band partitioning so probe pruning still works, and
     the unpartitioned verdicts table via a narrow coalesce.  Incremental
-    OPTIMIZE semantics: both source file counts are recorded in the
-    manifest AFTER the rewrite, so an unchanged layout skips the job and
-    a killed compaction re-runs.  The gate then proves the rewrite by
+    OPTIMIZE semantics (``_optimize``): each source file count is recorded
+    in the manifest AFTER its rewrite, so an unchanged layout skips the
+    job and a killed compaction re-runs.  The gate then proves the rewrite by
     SERVING from the compacted layout: admission verdicts for the
     incoming batch against the corpus-capped cells, identical to
     ``dedup_incremental_lsh`` (same oracle) — compaction changed the file
@@ -944,13 +960,8 @@ def dedup_persisted_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the nightly OPTIMIZE every streaming-ingest table
     needs; with Delta/Iceberg the same plan runs under their OPTIMIZE
     entry points."""
-    from ..operators import ann_index as ai
+    from ..operators import artifact_io as aio
     from ..operators import lsh_index as li
-    from ..operators.maintenance import (
-        compact,
-        data_file_count,
-        sized_partitions,
-    )
     from ..catalog import load_table
     from ..streaming.maintenance import admit_batch
     from .extensions import _INCR_SPLIT, _LSH_MAX_BUCKET
@@ -958,39 +969,12 @@ def dedup_persisted_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ensure the streamed index exists (idempotent, manifest-gated)
     dedup_persisted_ingest_stream(spark, sf_dir)
     path = li.lsh_index_path(sf_dir) + "_ingest"
-    cells_dir = path.rstrip("/") + "/cells"
-    compact_dir = path.rstrip("/") + "/cells_compact"
-    verd_dir = path.rstrip("/") + "/verdicts"
-    verd_compact_dir = path.rstrip("/") + "/verdicts_compact"
-    # incremental OPTIMIZE: skip when BOTH streamed artifacts' layouts are
-    # unchanged since the last compaction; the marker lands in the
-    # manifest AFTER the rewrite, so a killed compaction re-runs
-    n_before = data_file_count(cells_dir)
-    nv_before = data_file_count(verd_dir)
-    m = ai.read_manifest(path, spark=spark) or {}
-    if (m.get("compact_src_files") != n_before
-            or m.get("compact_src_verdict_files") != nv_before):
-        cells = spark.read.parquet(cells_dir)
-        parts = sized_partitions(cells.count(), _COMPACT_TARGET_RECORDS)
-        (
-            cells
-            .repartition(parts, "band")
-            .write.mode("overwrite")
-            .option("maxRecordsPerFile", _COMPACT_TARGET_RECORDS)
-            .partitionBy("band")
-            .parquet(compact_dir)
-        )
-        nv_after = compact(spark, verd_dir, verd_compact_dir,
-                           _COMPACT_TARGET_RECORDS)
-        n_after = data_file_count(compact_dir)
-        assert n_after <= n_before, (n_after, n_before)
-        assert nv_after <= max(nv_before, 1), (nv_after, nv_before)
-        ai.update_manifest(path, spark=spark, compact_src_files=n_before,
-                           compact_src_verdict_files=nv_before)
+    _optimize(spark, path, "cells", "compact_src_files", "band")
+    _optimize(spark, path, "verdicts", "compact_src_verdict_files")
     # serve FROM THE COMPACTED LAYOUT: corpus-capped admission, the same
     # contract (and oracle) as the live index
     corpus_cells = (
-        spark.read.parquet(compact_dir)
+        aio.load(spark, path, "cells_compact")
         .filter(~F.col("from_stream"))
         .groupBy("band", "bkey")
         .agg(F.count(F.lit(1)).alias("n_docs"))
@@ -1046,16 +1030,12 @@ def _emb_corpus_centroids(spark: SparkSession, sf_dir: str) -> list:
     restricted to the corpus so the index is a static artifact while the
     stream runs.  Bounded driver collect (64 rows)."""
     from ..catalog import load_table
+    from ..operators.clustering import md5_seeds
+
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < _EMB_SPLIT
     )
-    return [
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb.select("vec_id", "embedding")
-        .orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
-        .limit(_ING_IVF_K)
-        .collect()
-    ]
+    return md5_seeds(emb, _ING_IVF_K)
 
 
 def embeddings_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1245,9 +1225,9 @@ def _drift_active_version(spark: SparkSession, base: str,
     import json
 
     from ..operators import ann_index as ai
-    from ..operators import artifact_io
+    from ..operators import artifact_io as aio
 
-    text = artifact_io.read_text(_drift_alias_path(base), spark=spark)
+    text = aio.read_text(_drift_alias_path(base), spark=spark)
     if text is None:
         return "v1"
     try:
@@ -1257,8 +1237,8 @@ def _drift_active_version(spark: SparkSession, base: str,
     version = alias.get("active")
     if version != "v2" or alias.get("fingerprint") != fingerprint:
         return "v1"
-    if not ai.index_is_current(base + "/v2", fingerprint,
-                               _drift_v2_params(), spark=spark):
+    if not aio.is_current(spark, base + "/v2", ai.FORMAT_VERSION,
+                          fingerprint, _drift_v2_params()):
         return "v1"
     return "v2"
 
@@ -1313,14 +1293,16 @@ def embeddings_drift_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation."""
     from ..catalog import load_table
     from ..operators import ann_index as ai
+    from ..operators import artifact_io as aio
     from ..streaming.maintenance import ivf_ingest_batch
-    from .extensions import _cached_corpus_fingerprint, _ivf_trained_centroids
+    from .extensions import _corpus_fingerprint, _ivf_trained_centroids
 
     emb = load_table(spark, sf_dir, "embeddings")
-    fp = _cached_corpus_fingerprint(spark, sf_dir, emb)
+    fp = _corpus_fingerprint(spark, sf_dir, "embeddings")
     base = _drift_base_path(sf_dir)
     v1_path = base + "/v1"
-    if not ai.index_is_current(v1_path, fp, _drift_v1_params(), spark=spark):
+    if not aio.is_current(spark, v1_path, ai.FORMAT_VERSION, fp,
+                          _drift_v1_params()):
         corpus = emb.filter(F.col("vec_id") < _EMB_SPLIT)
         ai.write_index(
             corpus, _emb_corpus_centroids(spark, sf_dir), v1_path, fp,
@@ -1335,8 +1317,8 @@ def embeddings_drift_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_drifted = report.filter(F.col("drifted")).count()  # bounded: <= k rows
     if n_drifted > 0:
         v2_path = base + "/v2"
-        if not ai.index_is_current(v2_path, fp, _drift_v2_params(),
-                                   spark=spark):
+        if not aio.is_current(spark, v2_path, ai.FORMAT_VERSION, fp,
+                              _drift_v2_params()):
             ai.write_index(
                 emb, _ivf_trained_centroids(spark, sf_dir), v2_path, fp,
                 _drift_v2_params(),
@@ -1457,19 +1439,13 @@ def _ingest_trained_centroids(spark: SparkSession, sf_dir: str) -> list:
     constants, so any partition of the incoming rows yields the same
     index (hypothesis-tested in tests/test_maintenance_algebra.py)."""
     from ..catalog import load_table
-    from ..operators.clustering import kmeans_refine
+    from ..operators.clustering import kmeans_refine, md5_seeds
     from .extensions import _IVF_ITERS, _IVF_K
 
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < _EMB_SPLIT
     )
-    seeds = [
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb.select("vec_id", "embedding")
-        .orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
-        .limit(_IVF_K)
-        .collect()
-    ]
+    seeds = md5_seeds(emb, _IVF_K)
     cents, _ = kmeans_refine(emb, seeds, iters=_IVF_ITERS, exact=True)
     return cents
 
@@ -1634,22 +1610,22 @@ def _ensure_ann_ingest_index(spark: SparkSession, sf_dir: str):
     just to check the index exists."""
     from ..catalog import load_table
     from ..operators import ann_index as ai
-    from ..operators import artifact_io
+    from ..operators import artifact_io as aio
     from ..operators.similarity import ivf_assign
     from ..streaming.maintenance import run_foreach_batch
-    from .extensions import _cached_corpus_fingerprint
+    from .extensions import _corpus_fingerprint
 
     path = ai.index_path(sf_dir) + "_ingest"
     emb = load_table(spark, sf_dir, "embeddings")
     # fingerprint covers corpus AND incoming slice (both derive from the
     # embeddings table), so either changing invalidates the marked index;
     # session-memoized so plan sweeps pay the collect once
-    fp = _cached_corpus_fingerprint(spark, sf_dir, emb)
+    fp = _corpus_fingerprint(spark, sf_dir, "embeddings")
     params = {"variant": "ingest", "split": _EMB_SPLIT}
-    if not ai.index_is_current(path, fp, {**params, "ingested": True},
-                               spark=spark):
+    if not aio.is_current(spark, path, ai.FORMAT_VERSION, fp,
+                          {**params, "ingested": True}):
         # stale or half-appended — storage-agnostic recursive delete
-        artifact_io.delete(path, recursive=True, spark=spark)
+        aio.delete(path, recursive=True, spark=spark)
         centroids = _ingest_trained_centroids(spark, sf_dir)
         ai.write_index(
             emb.filter(F.col("vec_id") < _EMB_SPLIT), centroids, path, fp,
@@ -1673,7 +1649,7 @@ def _ensure_ann_ingest_index(spark: SparkSession, sf_dir: str):
             .parquet(layout)
         )
         run_foreach_batch(spark, feed, apply_batch, "ann_persisted_ingest")
-        ai.update_manifest(path, spark=spark, ingested=True)  # durability point — LAST
+        aio.update_manifest(path, spark=spark, ingested=True)  # durability point — LAST
     return path, emb
 
 
@@ -1685,6 +1661,7 @@ def _serve_ingest_ann(spark: SparkSession, emb: DataFrame, path: str,
     side) + a statically partition-pruned scan of the probed cells."""
     from ..functions import vectors
     from ..operators import ann_index as ai
+    from ..operators import artifact_io as aio
     from ..inline import inline_table
     from .extensions import _TOPK, _ivf_query_probes
 
@@ -1700,8 +1677,7 @@ def _serve_ingest_ann(spark: SparkSession, emb: DataFrame, path: str,
         "query_id long, qe array<float>, qcell long",
     )
     c = (
-        spark.read.parquet(path.rstrip("/") + "/" + cells_subdir)
-        .filter(F.col("cell").isin(probed))
+        aio.load(spark, path, cells_subdir, "cell", probed)
         .select(
             F.col("vec_id").alias("cand_id"),
             F.col("embedding").alias("ce"),
@@ -1742,37 +1718,10 @@ def ann_persisted_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking identical to ``ann_persisted_ingest_topk`` (same oracle).
     ``tests/test_ann_index.py`` pins the file-count drop and pruning on
     the compacted directory."""
-    from ..operators import ann_index as ai
-    from ..operators.maintenance import data_file_count
-
     # ensure the streamed index exists (idempotent, manifest-gated) —
     # without building the serve gate's probe plan
     path, emb = _ensure_ann_ingest_index(spark, sf_dir)
-    cells_dir = path.rstrip("/") + "/cells"
-    compact_dir = path.rstrip("/") + "/cells_compact"
-    # incremental OPTIMIZE semantics: skip the rewrite when the source
-    # layout is unchanged since the last compaction (real OPTIMIZE skips
-    # already-compacted tables); new appends change the file count and
-    # trigger a re-compact.  The marker lands in the manifest AFTER the
-    # write, so a killed compaction re-runs instead of serving half a
-    # rewrite.
-    n_before = data_file_count(cells_dir)
-    m = ai.read_manifest(path, spark=spark) or {}
-    if m.get("compact_src_files") != n_before:
-        from ..operators.maintenance import sized_partitions
-
-        cells = spark.read.parquet(cells_dir)
-        parts = sized_partitions(cells.count(), _COMPACT_TARGET_RECORDS)
-        (
-            cells
-            .repartition(parts, "cell")
-            .write.mode("overwrite")
-            .option("maxRecordsPerFile", _COMPACT_TARGET_RECORDS)
-            .partitionBy("cell")
-            .parquet(compact_dir)
-        )
-        assert data_file_count(compact_dir) <= n_before
-        ai.update_manifest(path, spark=spark, compact_src_files=n_before)
+    _optimize(spark, path, "cells", "compact_src_files", "cell")
     return _serve_ingest_ann(spark, emb, path, cells_subdir="cells_compact")
 
 

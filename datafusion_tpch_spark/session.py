@@ -14,7 +14,7 @@ import os
 import weakref
 from typing import Any, Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _default_parallelism() -> int:
@@ -107,9 +107,13 @@ def memo(spark: SparkSession, key: tuple, build: Callable[[], Any]) -> Any:
 
 
 def forget(spark: SparkSession, kind: str | None = None) -> dict[tuple, Any]:
-    """Drop ``spark``'s entries of ``kind`` (all when None); returns them."""
+    """Drop ``spark``'s entries of ``kind`` (all when None); returns them.
+    A dropped frame that was persisted is unpersisted too, so what runs
+    after ``forget`` starts cold instead of reading Spark's cache."""
     entries = _MEMO.get(spark, {})
     dropped = {k: v for k, v in entries.items() if kind in (None, k[0])}
-    for k in dropped:
+    for k, v in dropped.items():
         del entries[k]
+        if isinstance(v, DataFrame) and v.is_cached:
+            v.unpersist()
     return dropped

@@ -14,6 +14,7 @@ import os
 import pytest
 
 from datafusion_tpch_spark.operators import ann_index as ai
+from datafusion_tpch_spark.operators import artifact_io as aio
 from datafusion_tpch_spark.queries import extensions as ext
 from datafusion_tpch_spark.session import forget
 
@@ -129,17 +130,23 @@ def test_artifact_io_roundtrip_through_hadoop_fs(spark, tmp_path):
 
 
 def test_manifest_io_reaches_scheme_qualified_paths(spark, tmp_path):
-    """The full manifest lifecycle (write, read, update, current-check,
-    delete) over a ``file:`` URI — proof the index metadata can live on
+    """The full manifest lifecycle (publish, read, update, current-check,
+    republish) over a ``file:`` URI — proof the index metadata can live on
     whatever store the parquet artifacts do."""
     path = f"file://{tmp_path}/idx"
-    ai.write_manifest(path, {"format": ai.FORMAT_VERSION,
-                             "fingerprint": "f1", "k": 3}, spark=spark)
-    assert ai.read_manifest(path, spark=spark)["k"] == 3
-    assert ai.index_is_current(path, "f1", spark=spark)
-    assert not ai.index_is_current(path, "f2", spark=spark)
-    ai.update_manifest(path, spark=spark, ingested=True)
-    assert ai.read_manifest(path, spark=spark)["ingested"] is True
+    aio.publish(spark, path, ai.FORMAT_VERSION, "f1", {"k": 3},
+                {"t": spark.range(2)})
+    assert aio.read_manifest(path, spark=spark)["k"] == 3
+    assert aio.load(spark, path, "t").count() == 2
+    assert aio.is_current(spark, path, ai.FORMAT_VERSION, "f1", {"k": 3})
+    assert not aio.is_current(spark, path, ai.FORMAT_VERSION, "f2", {})
+    assert not aio.is_current(spark, path, ai.FORMAT_VERSION + 1, "f1", {})
+    aio.update_manifest(path, spark=spark, ingested=True)
+    assert aio.read_manifest(path, spark=spark)["ingested"] is True
+    # a republish replaces the manifest: markers of the old build are gone
+    aio.publish(spark, path, ai.FORMAT_VERSION, "f2", {})
+    assert aio.read_manifest(path, spark=spark) == {
+        "format": ai.FORMAT_VERSION, "fingerprint": "f2"}
 
 
 def test_fingerprint_sensitive_to_non_leading_dims(spark):
@@ -179,11 +186,16 @@ def test_corpus_change_invalidates(spark, index_dir):
     emb = ext._t(spark, SF_DIR, "embeddings")[0]
     fp = ai.corpus_fingerprint(emb)
     params = {"ivf_k": ext._IVF_K, "ivf_iters": ext._IVF_ITERS}
-    assert not ai.index_is_current(path, fp, params)  # nothing written yet
+
+    def current(fp, params, fmt=ai.FORMAT_VERSION):
+        return aio.is_current(spark, path, fmt, fp, params)
+
+    assert not current(fp, params)  # nothing written yet
     _fresh_build(spark, index_dir)
-    assert ai.index_is_current(path, fp, params)
-    assert not ai.index_is_current(path, fp + "x", params)       # corpus moved
-    assert not ai.index_is_current(path, fp, {"ivf_k": 7})       # params moved
+    assert current(fp, params)
+    assert not current(fp + "x", params)                # corpus moved
+    assert not current(fp, {"ivf_k": 7})                # params moved
+    assert not current(fp, params, ai.FORMAT_VERSION - 1)  # format moved
 
 
 def test_serve_scan_is_partition_pruned(spark, index_dir):
@@ -225,17 +237,16 @@ def test_persisted_ingest_durable_serve(spark, index_dir, monkeypatch):
 def test_persisted_ingest_rebuilds_after_unclean_ingest(spark, index_dir):
     """A manifest without the ingested mark (killed mid-stream) must not
     be served: the gate rebuilds and re-ingests."""
-    from datafusion_tpch_spark.operators import ann_index as ai
     from datafusion_tpch_spark.queries import stream as st
 
     rows1 = st.ann_persisted_ingest_topk(spark, SF_DIR).collect()
     path = ai.index_path(SF_DIR, index_dir) + "_ingest"
-    m = ai.read_manifest(path)
+    m = aio.read_manifest(path)
     assert m and m.get("ingested") is True
     # simulate the kill: un-mark the manifest (appends may be partial)
-    ai.update_manifest(path, ingested=False)
+    aio.update_manifest(path, ingested=False)
     rows2 = st.ann_persisted_ingest_topk(spark, SF_DIR).collect()
-    assert ai.read_manifest(path).get("ingested") is True
+    assert aio.read_manifest(path).get("ingested") is True
     assert [tuple(r) for r in rows2] == [tuple(r) for r in rows1]
 
 

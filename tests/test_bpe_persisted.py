@@ -12,7 +12,7 @@ import os
 
 import pytest
 
-from datafusion_tpch_spark.operators import ann_index as ai
+from datafusion_tpch_spark.operators import artifact_io as aio
 from datafusion_tpch_spark.queries import curation as cu
 
 from tests.conftest import SF_DIR
@@ -66,30 +66,10 @@ def test_fresh_session_encodes_without_learning(spark, index_dir,
     assert [tuple(r) for r in rows2] == [tuple(r) for r in rows1]
 
 
-def test_killed_train_leaves_no_manifest(spark, index_dir, monkeypatch):
-    """Crash discipline: a train job killed after the artifact writes but
-    before the manifest leaves an unservable directory — next session
-    retrains."""
-    path = cu._bpe_artifact_path(SF_DIR)
-    real = ai.write_manifest
-
-    def killed(*a, **k):
-        raise RuntimeError("simulated kill before manifest")
-
-    monkeypatch.setattr(ai, "write_manifest", killed)
-    with pytest.raises(RuntimeError, match="simulated kill"):
-        cu.docs_bpe_persisted_encode(spark, SF_DIR).collect()
-    assert not os.path.exists(os.path.join(path, "manifest.json"))
-
-    monkeypatch.setattr(ai, "write_manifest", real)
-    rows = cu.docs_bpe_persisted_encode(spark, SF_DIR).collect()
-    assert rows and ai.read_manifest(path) is not None
-
-
 def test_param_change_invalidates(spark, index_dir, monkeypatch):
     cu.docs_bpe_persisted_encode(spark, SF_DIR).collect()
     path = cu._bpe_artifact_path(SF_DIR)
-    assert ai.read_manifest(path)["enc_k"] == cu._BPE_ENC_K
+    assert aio.read_manifest(path)["enc_k"] == cu._BPE_ENC_K
     calls = []
     real = cu._write_bpe_artifacts
 

@@ -57,9 +57,7 @@ def test_kill_mid_swap_serves_old_index(spark, index_dir, monkeypatch):
     # v2 artifacts fully landed, but the alias never flipped
     assert os.path.exists(os.path.join(base, "v2", "manifest.json"))
     assert not os.path.exists(st._drift_alias_path(base))
-    fp = ext._cached_corpus_fingerprint(
-        spark, SF_DIR, ext._t(spark, SF_DIR, "embeddings")[0]
-    )
+    fp = ext._corpus_fingerprint(spark, SF_DIR, "embeddings")
     version, serve = st._drift_serve_active(spark, SF_DIR, fp)
     assert version == "v1"
     served = serve.collect()

@@ -12,7 +12,7 @@ import os
 
 import pytest
 
-from datafusion_tpch_spark.operators import ann_index as ai
+from datafusion_tpch_spark.operators import artifact_io as aio
 from datafusion_tpch_spark.queries import curation as cu
 from datafusion_tpch_spark.queries import extensions as ext
 
@@ -35,7 +35,7 @@ def test_resumable_equals_one_shot(spark, index_dir):
 def test_stage_artifacts_and_manifest(spark, index_dir):
     cu.docs_pipeline_resumable(spark, SF_DIR).collect()
     path = cu._funnel_path(SF_DIR)
-    m = ai.read_manifest(path)
+    m = aio.read_manifest(path)
     assert m is not None and m["stages_done"] == [1, 2, 3, 4, 5, 6]
     for idx in range(1, 7):
         assert os.path.isdir(cu._funnel_stage_dir(path, idx)), idx
@@ -59,7 +59,7 @@ def test_kill_between_stages_resumes_without_recompute(spark, index_dir,
     with pytest.raises(RuntimeError, match="simulated kill"):
         cu.docs_pipeline_resumable(spark, SF_DIR).collect()
     path = cu._funnel_path(SF_DIR)
-    assert ai.read_manifest(path)["stages_done"] == [1, 2, 3]
+    assert aio.read_manifest(path)["stages_done"] == [1, 2, 3]
 
     def only_late_stages(spark_, sf_dir_, path_, idx_):
         assert idx_ >= 4, f"stage {idx_} was recomputed after the kill"
@@ -67,7 +67,7 @@ def test_kill_between_stages_resumes_without_recompute(spark, index_dir,
 
     monkeypatch.setattr(cu, "_funnel_stage_build", only_late_stages)
     got = cu.docs_pipeline_resumable(spark, SF_DIR).collect()
-    assert ai.read_manifest(path)["stages_done"] == [1, 2, 3, 4, 5, 6]
+    assert aio.read_manifest(path)["stages_done"] == [1, 2, 3, 4, 5, 6]
     want = cu.docs_pipeline_yield_full(spark, SF_DIR).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
@@ -87,10 +87,10 @@ def test_completed_run_reports_with_zero_stage_builds(spark, index_dir,
 def test_param_change_invalidates_checkpoints(spark, index_dir, monkeypatch):
     cu.docs_pipeline_resumable(spark, SF_DIR).collect()
     path = cu._funnel_path(SF_DIR)
-    assert ai.read_manifest(path)["stages_done"] == [1, 2, 3, 4, 5, 6]
+    assert aio.read_manifest(path)["stages_done"] == [1, 2, 3, 4, 5, 6]
     # a different length floor is a different funnel: full restart
     monkeypatch.setattr(cu, "_YIELD_MIN_TOK", cu._YIELD_MIN_TOK + 1)
     cu.docs_pipeline_resumable(spark, SF_DIR).collect()
-    m = ai.read_manifest(path)
+    m = aio.read_manifest(path)
     assert m["min_tok"] == cu._YIELD_MIN_TOK
     assert m["stages_done"] == [1, 2, 3, 4, 5, 6]

@@ -13,7 +13,7 @@ import os
 
 import pytest
 
-from datafusion_tpch_spark.operators import ann_index as ai
+from datafusion_tpch_spark.operators import artifact_io as aio
 from datafusion_tpch_spark.operators import dedup
 from datafusion_tpch_spark.operators import lsh_index as li
 from datafusion_tpch_spark.queries import extensions as ext
@@ -66,36 +66,15 @@ def test_corpus_change_invalidates(spark, index_dir):
     path = li.lsh_index_path(SF_DIR, index_dir)
     params = {"bands": dedup.MH_BANDS, "rows": dedup.MH_ROWS,
               "split": ext._INCR_SPLIT}
-    assert not li.lsh_index_is_current(path, fp, params)  # nothing written
+
+    def current(fp, params):
+        return aio.is_current(spark, path, li.FORMAT_VERSION, fp, params)
+
+    assert not current(fp, params)  # nothing written
     ext.dedup_persisted_lsh(spark, SF_DIR).collect()
-    assert li.lsh_index_is_current(path, fp, params)
-    assert not li.lsh_index_is_current(path, fp + "x", params)   # corpus moved
-    assert not li.lsh_index_is_current(path, fp, {"bands": 99})  # geometry moved
-
-
-def test_killed_build_leaves_no_manifest(spark, index_dir, monkeypatch):
-    """Crash discipline: a build killed after the cell write but before
-    the manifest leaves an UNSERVABLE directory — the next session
-    rebuilds instead of admitting against half-written cells."""
-    path = li.lsh_index_path(SF_DIR, index_dir)
-
-    real_write_manifest = ai.write_manifest
-
-    def killed(*a, **k):
-        raise RuntimeError("simulated kill before manifest")
-
-    monkeypatch.setattr(ai, "write_manifest", killed)
-    with pytest.raises(RuntimeError, match="simulated kill"):
-        ext.dedup_persisted_lsh(spark, SF_DIR).collect()
-    assert not os.path.exists(os.path.join(path, "manifest.json"))
-    docs = ext._t(spark, SF_DIR, "documents")[0]
-    fp = li.corpus_text_fingerprint(docs)
-    assert not li.lsh_index_is_current(path, fp)
-
-    monkeypatch.setattr(ai, "write_manifest", real_write_manifest)
-    rows = ext.dedup_persisted_lsh(spark, SF_DIR).collect()  # rebuilds
-    assert len(rows) > 0
-    assert os.path.exists(os.path.join(path, "manifest.json"))
+    assert current(fp, params)
+    assert not current(fp + "x", params)   # corpus moved
+    assert not current(fp, {"bands": 99})  # geometry moved
 
 
 def test_band_probe_is_partition_pruned(spark, index_dir):
@@ -104,7 +83,7 @@ def test_band_probe_is_partition_pruned(spark, index_dir):
     listed."""
     ext.dedup_persisted_lsh(spark, SF_DIR).collect()
     path = li.lsh_index_path(SF_DIR, index_dir)
-    df = li.load_lsh_cells(spark, path, bands=[0, 2])
+    df = aio.load(spark, path, "cells", "band", [0, 2])
     plan = df._jdf.queryExecution().executedPlan().toString()
     pruned = [ln for ln in plan.splitlines()
               if "PartitionFilters: [band#" in ln]
@@ -146,7 +125,7 @@ def test_persisted_ingest_stream_durable_serve(spark, index_dir, monkeypatch):
 
     # index growth: admitted docs' membership appended as from_stream rows
     path = li.lsh_index_path(SF_DIR, index_dir) + "_ingest"
-    stored = li.load_lsh_cells(spark, path)
+    stored = aio.load(spark, path, "cells")
     grown = {r.doc_id for r in
              stored.filter("from_stream").select("doc_id").distinct().collect()}
     assert grown == {r.doc_id for r in rows1 if r.kept}
@@ -168,11 +147,11 @@ def test_persisted_ingest_stream_rebuilds_after_unclean_ingest(spark,
 
     rows1 = st.dedup_persisted_ingest_stream(spark, SF_DIR).collect()
     path = li.lsh_index_path(SF_DIR, index_dir) + "_ingest"
-    m = ai.read_manifest(path)
+    m = aio.read_manifest(path)
     assert m and m.get("ingested") is True
-    ai.update_manifest(path, ingested=False)  # simulate the kill
+    aio.update_manifest(path, ingested=False)  # simulate the kill
     rows2 = st.dedup_persisted_ingest_stream(spark, SF_DIR).collect()
-    assert ai.read_manifest(path).get("ingested") is True
+    assert aio.read_manifest(path).get("ingested") is True
     assert [tuple(r) for r in rows2] == [tuple(r) for r in rows1]
 
 

@@ -48,15 +48,29 @@ def test_compact_reduces_file_count_keeps_rows(spark, tmpdirs, fragmented):
     assert s(after) == s(before)
 
 
-def test_compact_shuffle_mode(spark, tmpdirs, fragmented):
-    out = os.path.join(tmpdirs, "compacted_sh")
-    n = compact(spark, fragmented, out, target_records_per_file=500,
-                shuffle=True)
-    # 1500 rows / 500 per file -> 3 partitions; round-robin imbalance may
-    # push one partition past the cap and split it
-    assert 3 <= n <= 4
+def test_compact_keeps_partition_column(spark, tmpdirs):
+    """With a partition column the rewrite keeps the ``partitionBy``
+    layout (probes of the compacted table stay pruned) and leaves ~one
+    file per partition value, whatever the input fragmentation."""
+    src = os.path.join(tmpdirs, "parted")
+    (
+        load_table(spark, SF_DIR, "orders")
+        .withColumn("band", (F.col("o_orderkey") % 4).cast("int"))
+        .repartition(16).write.partitionBy("band").parquet(src)
+    )
+    assert data_file_count(src) > 4
+    out = os.path.join(tmpdirs, "parted_compact")
+    n = compact(spark, src, out, target_records_per_file=10_000,
+                partition_col="band")
+    assert n == data_file_count(out) == 4
+    assert sorted(d for d in os.listdir(out) if d.startswith("band=")) == [
+        f"band={b}" for b in range(4)]
     after = spark.read.parquet(out)
-    assert after.count() == 1500
+    assert after.count() == spark.read.parquet(src).count()
+    plan = (after.filter(F.col("band").isin([1]))
+            ._jdf.queryExecution().executedPlan().toString())
+    assert "PartitionFilters: [isnotnull(band" in plan or \
+        "PartitionFilters: [band#" in plan, plan
 
 
 def test_sized_partitions_derives_from_volume():

@@ -13,6 +13,7 @@ import os
 import pytest
 
 from datafusion_tpch_spark.operators import ann_index as ai
+from datafusion_tpch_spark.operators import artifact_io as aio
 from datafusion_tpch_spark.operators import pq_index as pqi
 from datafusion_tpch_spark.queries import extensions as ext
 from datafusion_tpch_spark.session import forget
@@ -41,7 +42,7 @@ def test_codes_artifact_is_narrow(spark, index_dir):
     reconstruction (which would be the corpus back at full width)."""
     ext.ann_pq_persisted_topk(spark, SF_DIR).collect()
     path = pqi.pq_index_path(SF_DIR, index_dir)
-    codes = pqi.load_pq_codes(spark, path)
+    codes = aio.load(spark, path, "codes")
     assert set(codes.columns) == {"vec_id", "codes"}
     sample = codes.limit(5).collect()
     assert all(len(r.codes) == ext._PQ_M for r in sample)
@@ -75,11 +76,15 @@ def test_corpus_or_param_change_invalidates(spark, index_dir):
     emb = ext._t(spark, SF_DIR, "embeddings")[0]
     fp = ai.corpus_fingerprint(emb)
     params = {"pq_m": ext._PQ_M, "pq_k": ext._PQ_K, "pq_sub": ext._PQ_SUB}
-    assert not ai.index_is_current(path, fp, params)  # nothing written yet
+
+    def current(fp, params):
+        return aio.is_current(spark, path, ai.FORMAT_VERSION, fp, params)
+
+    assert not current(fp, params)  # nothing written yet
     ext.ann_pq_persisted_topk(spark, SF_DIR).collect()
-    assert ai.index_is_current(path, fp, params)
-    assert not ai.index_is_current(path, fp + "x", params)
-    assert not ai.index_is_current(path, fp, {"pq_k": 99})
+    assert current(fp, params)
+    assert not current(fp + "x", params)
+    assert not current(fp, {"pq_k": 99})
 
 
 def test_ivfpq_persisted_matches_in_session(spark, index_dir):

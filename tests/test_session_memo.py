@@ -32,10 +32,8 @@ def test_memo_is_per_session_and_sweeps_stopped_sessions(spark):
     other = ext._session_table(fresh, SF_DIR, "memo_probe", build(fresh))
     assert built == [spark, fresh], "newSession() got the first session's frame"
     assert other.sparkSession is fresh
-    for df in forget(spark, "table").values():
-        df.unpersist()
-    for df in forget(fresh, "table").values():
-        df.unpersist()
+    forget(spark, "table")
+    forget(fresh, "table")
 
     class _FakeSC:
         _jsc = None  # what a stopped SparkContext leaves behind
@@ -54,3 +52,17 @@ def test_memo_is_per_session_and_sweeps_stopped_sessions(spark):
     assert load_table(spark, SF_DIR, "nation") is frame, "live entry lost"
     gc.collect()
     assert dead_ref() is None, "stopped session's entry survived an access"
+
+
+def test_forget_unpersists_what_it_drops(spark):
+    """``forget`` leaves Spark's cache as it found it before the gate ran,
+    so a gate run after it is cold."""
+    def persistent_rdds():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    forget(spark)
+    before = persistent_rdds()
+    ext.dedup_minhash_lsh(spark, SF_DIR).collect()
+    assert persistent_rdds() > before
+    forget(spark)
+    assert persistent_rdds() == before

@@ -56,11 +56,7 @@ def _drop_session_tables(spark):
     rebuilds its own (they are memoized per (session, fixture))."""
     from datafusion_tpch_spark.session import forget
 
-    for df in forget(spark, "table").values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+    forget(spark, "table")  # unpersists what it drops
 
 
 def _time_one(spark, spec, sf_dir, runs):
