@@ -124,19 +124,21 @@ def exists(path: str, spark: SparkSession | None = None) -> bool:
     return bool(fs.exists(hpath))
 
 
-def _child(path: str, name: str) -> str:
-    # object-store prefixes are URIs — never os.path.join a scheme'd path
+def table_path(path: str, name: str) -> str:
+    """Location of table (or file) ``name`` inside the artifact at
+    ``path``.  Object-store prefixes are URIs, so a scheme'd path is never
+    ``os.path.join``-ed."""
     return path.rstrip("/") + "/" + name
 
 
 def _write_manifest(path: str, manifest: dict,
                     spark: SparkSession | None = None) -> None:
-    write_text(_child(path, "manifest.json"),
+    write_text(table_path(path, "manifest.json"),
                json.dumps(manifest, sort_keys=True) + "\n", spark=spark)
 
 
 def read_manifest(path: str, spark: SparkSession | None = None) -> dict | None:
-    text = read_text(_child(path, "manifest.json"), spark=spark)
+    text = read_text(table_path(path, "manifest.json"), spark=spark)
     if text is None:
         return None
     try:
@@ -174,12 +176,12 @@ def publish(spark: SparkSession, path: str, fmt: int, fingerprint: str,
     that makes them current: stale manifest deleted FIRST, tables next
     (a table named in ``partition_by`` is written ``partitionBy`` that
     column), manifest LAST."""
-    delete(_child(path, "manifest.json"), spark=spark)
+    delete(table_path(path, "manifest.json"), spark=spark)
     for name, df in (tables or {}).items():
         writer = df.write.mode("overwrite")
         if name in (partition_by or {}):
             writer = writer.partitionBy(partition_by[name])
-        writer.parquet(_child(path, name))
+        writer.parquet(table_path(path, name))
     _write_manifest(
         path, {"format": fmt, "fingerprint": fingerprint, **params},
         spark=spark,
@@ -191,7 +193,7 @@ def load(spark: SparkSession, path: str, table: str,
     """Table ``table`` of the artifact at ``path``; with ``column`` given,
     a static IN-filter on that partition column, so the scan lists only
     the directories of ``values``."""
-    df = spark.read.parquet(_child(path, table))
+    df = spark.read.parquet(table_path(path, table))
     if column is None:
         return df
     return df.filter(F.col(column).isin(list(values)))

@@ -53,20 +53,21 @@ def _update_centroids(assigned: DataFrame, prev: Centroids,
     return [(cid, by_cell.get(cid, vec)) for cid, vec in prev]
 
 
-def md5_seeds(emb: DataFrame, k: int, id_col: str = "vec_id",
-              vec_col: str = "embedding") -> Centroids:
+def md5_seeds(emb: DataFrame, k: int) -> Centroids:
     """The deterministic seed sample every index build starts from: the
-    ``k`` vectors with the smallest ``md5(id)``, ties broken by id, as
-    ``(id, vector)`` — one bounded collect of k rows.  The oracle CTEs
-    replay the same order in SQL (``ROW_NUMBER() OVER (ORDER BY
-    md5(CAST(vec_id AS VARCHAR)), vec_id)``)."""
+    ``k`` rows of ``(vec_id, embedding)`` with the smallest
+    ``md5(vec_id)``, ties broken by ``vec_id``, as ``(vec_id, vector)`` —
+    one bounded collect of k rows.  The oracle CTEs replay the same order
+    in SQL (``ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
+    vec_id)``)."""
     rows = (
-        emb.select(id_col, vec_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
+        emb.select("vec_id", "embedding")
+        .orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
         .limit(k)
         .collect()
     )
-    return [(int(r[id_col]), [float(x) for x in r[vec_col]]) for r in rows]
+    return [(int(r["vec_id"]), [float(x) for x in r["embedding"]])
+            for r in rows]
 
 
 def kmeans_refine(emb: DataFrame, seeds: Centroids, iters: int = 3,

@@ -1,4 +1,5 @@
-"""Table-maintenance operators: compaction (bin-packing small files).
+"""Table-maintenance operators: compaction (bin-packing small files) and
+the incremental OPTIMIZE of a persisted artifact's tables.
 
 Streaming ingest and fine-grained writes leave thousands of small files
 per partition; scans then pay per-file open + footer-read + scheduling
@@ -8,7 +9,9 @@ an unpartitioned table is coalesced (no shuffle), a ``partitionBy`` table
 is repartitioned on its partition column (one shuffle) so each partition
 directory ends up with ~one file.  It is a pure DataFrame write — no
 table format required; with Delta/Iceberg the same plan runs under their
-OPTIMIZE entry point.
+OPTIMIZE entry point.  ``optimize`` is the one incremental OPTIMIZE every
+persisted-artifact compaction gate calls: it skips a table whose layout
+has not changed since its last rewrite.
 """
 
 from __future__ import annotations
@@ -16,6 +19,13 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from . import artifact_io
+
+# compaction bin-packing target of the persisted-artifact compactions;
+# partition counts are DERIVED from row counts against it
+# (``sized_partitions``), so the same plan packs a 1x and a 100x table
+_COMPACT_TARGET_RECORDS = 1_000_000
 
 
 def data_file_count(path: str, spark: SparkSession | None = None) -> int:
@@ -27,8 +37,6 @@ def data_file_count(path: str, spark: SparkSession | None = None) -> int:
     silently return 0 there, which made the incremental-OPTIMIZE markers
     (``compact_src_files``) record 0 and permanently skip recompaction.
     """
-    from datafusion_tpch_spark.operators import artifact_io
-
     def _is_data(name: str) -> bool:
         return name.endswith(".parquet") and not name.startswith(("_", "."))
 
@@ -87,3 +95,23 @@ def compact(
         .parquet(out_path)
     )
     return data_file_count(out_path, spark)
+
+
+def optimize(spark: SparkSession, path: str, table: str, marker: str,
+             partition_col: str | None = None) -> None:
+    """Incremental OPTIMIZE of table ``table`` of the artifact at ``path``
+    into ``<table>_compact``: skipped when the table's file count equals
+    the manifest's ``marker`` (real OPTIMIZE skips already-compacted
+    tables; new appends change the count and trigger a re-compact).  The
+    marker lands AFTER the rewrite, so a killed compaction re-runs instead
+    of serving half a rewrite."""
+    src = artifact_io.table_path(path, table)
+    n_before = data_file_count(src, spark)
+    if artifact_io.read_manifest(path, spark=spark).get(marker) == n_before:
+        return
+    n_after = compact(spark, src, src + "_compact", _COMPACT_TARGET_RECORDS,
+                      partition_col)
+    # a coalesced empty table still writes one file
+    bound = n_before if partition_col else max(n_before, 1)
+    assert n_after <= bound, (table, n_after, n_before)
+    artifact_io.update_manifest(path, spark=spark, **{marker: n_before})

@@ -839,8 +839,8 @@ def dedup_persisted_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame
 
     docs = load_table(spark, sf_dir, "documents")
     path = li.lsh_index_path(sf_dir) + "_ingest"
-    verd_dir = path.rstrip("/") + "/verdicts"
-    cells_dir = path.rstrip("/") + "/cells"
+    verd_dir = aio.table_path(path, "verdicts")
+    cells_dir = aio.table_path(path, "cells")
     fp = _corpus_fingerprint(spark, sf_dir, "documents")
     params = {"variant": "ingest", "bands": dedup.MH_BANDS,
               "rows": dedup.MH_ROWS, "split": _INCR_SPLIT}
@@ -907,34 +907,6 @@ def dedup_persisted_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-# compaction bin-packing target — one OPTIMIZE knob shared by every
-# persisted-artifact compaction gate; partition counts are DERIVED from
-# row counts against it (operators/maintenance.sized_partitions), so the
-# same plan packs a 1x and a 100x table correctly
-_COMPACT_TARGET_RECORDS = 1_000_000
-
-
-def _optimize(spark: SparkSession, path: str, table: str, marker: str,
-              partition_col: str | None = None) -> None:
-    """Incremental OPTIMIZE of one table of the artifact at ``path`` into
-    ``<table>_compact``: skipped when the table's file count equals the
-    manifest's ``marker`` (real OPTIMIZE skips already-compacted tables;
-    new appends change the count and trigger a re-compact).  The marker
-    lands AFTER the rewrite, so a killed compaction re-runs instead of
-    serving half a rewrite."""
-    from ..operators import artifact_io as aio
-    from ..operators.maintenance import compact, data_file_count
-
-    src = path.rstrip("/") + "/" + table
-    n_before = data_file_count(src, spark)
-    if aio.read_manifest(path, spark=spark).get(marker) == n_before:
-        return
-    n_after = compact(spark, src, src + "_compact", _COMPACT_TARGET_RECORDS,
-                      partition_col)
-    assert n_after <= max(n_before, 1), (table, n_after, n_before)
-    aio.update_manifest(path, spark=spark, **{marker: n_before})
-
-
 def dedup_persisted_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPTIMIZE for the durable admission index — the maintenance job the
     streamed appends make necessary: every ``dedup_persisted_ingest_stream``
@@ -946,9 +918,9 @@ def dedup_persisted_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     count derived from the row count — + ``maxRecordsPerFile``),
     PRESERVING the band partitioning so probe pruning still works, and
     the unpartitioned verdicts table via a narrow coalesce.  Incremental
-    OPTIMIZE semantics (``_optimize``): each source file count is recorded
-    in the manifest AFTER its rewrite, so an unchanged layout skips the
-    job and a killed compaction re-runs.  The gate then proves the rewrite by
+    OPTIMIZE semantics (``maintenance.optimize``): each source file count
+    is recorded in the manifest AFTER its rewrite, so an unchanged layout
+    skips the job and a killed compaction re-runs.  The gate then proves the rewrite by
     SERVING from the compacted layout: admission verdicts for the
     incoming batch against the corpus-capped cells, identical to
     ``dedup_incremental_lsh`` (same oracle) — compaction changed the file
@@ -963,14 +935,15 @@ def dedup_persisted_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import artifact_io as aio
     from ..operators import lsh_index as li
     from ..catalog import load_table
+    from ..operators.maintenance import optimize
     from ..streaming.maintenance import admit_batch
     from .extensions import _INCR_SPLIT, _LSH_MAX_BUCKET
 
     # ensure the streamed index exists (idempotent, manifest-gated)
     dedup_persisted_ingest_stream(spark, sf_dir)
     path = li.lsh_index_path(sf_dir) + "_ingest"
-    _optimize(spark, path, "cells", "compact_src_files", "band")
-    _optimize(spark, path, "verdicts", "compact_src_verdict_files")
+    optimize(spark, path, "cells", "compact_src_files", "band")
+    optimize(spark, path, "verdicts", "compact_src_verdict_files")
     # serve FROM THE COMPACTED LAYOUT: corpus-capped admission, the same
     # contract (and oracle) as the live index
     corpus_cells = (
@@ -1186,7 +1159,9 @@ def _drift_base_path(sf_dir: str) -> str:
 
 
 def _drift_alias_path(base: str) -> str:
-    return base.rstrip("/") + "/active.json"
+    from ..operators import artifact_io as aio
+
+    return aio.table_path(base, "active.json")
 
 
 def _drift_v1_params() -> dict:
@@ -1631,7 +1606,7 @@ def _ensure_ann_ingest_index(spark: SparkSession, sf_dir: str):
             emb.filter(F.col("vec_id") < _EMB_SPLIT), centroids, path, fp,
             params,
         )
-        cells_dir = path.rstrip("/") + "/cells"
+        cells_dir = aio.table_path(path, "cells")
 
         def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
             if batch_df.isEmpty():
@@ -1718,10 +1693,12 @@ def ann_persisted_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking identical to ``ann_persisted_ingest_topk`` (same oracle).
     ``tests/test_ann_index.py`` pins the file-count drop and pruning on
     the compacted directory."""
+    from ..operators.maintenance import optimize
+
     # ensure the streamed index exists (idempotent, manifest-gated) —
     # without building the serve gate's probe plan
     path, emb = _ensure_ann_ingest_index(spark, sf_dir)
-    _optimize(spark, path, "cells", "compact_src_files", "cell")
+    optimize(spark, path, "cells", "compact_src_files", "cell")
     return _serve_ingest_ann(spark, emb, path, cells_subdir="cells_compact")
 
 
