@@ -26,10 +26,10 @@ from ..streaming import (
     dedup_keys_stream,
     hourly_agg_stream,
     read_events_stream,
-    run_stream_to_df,
     session_window_stream,
     sliding_agg_stream,
 )
+from ..streaming.runner import file_feed, run_fold, run_stream_to_df
 from . import QuerySpec
 
 
@@ -37,7 +37,7 @@ def events_hourly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked tumbling-window aggregation, streaming execution."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = hourly_agg_stream(read_events_stream(spark, sf_dir))
-    return run_stream_to_df(spark, stream, "events_hourly_stream", reuse_key=sf_dir).orderBy(
+    return run_stream_to_df(spark, stream, "events_hourly_stream", sf_dir).orderBy(
         "hour", "event_type"
     )
 
@@ -61,7 +61,7 @@ def events_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # window/type aggregates, so it profits from more state partitions
     # (measured at sf0.1: 2/4/8 parts = 1.19/1.03/0.96 s)
     return run_stream_to_df(
-        spark, stream, "events_session_stream", partitions=8, reuse_key=sf_dir
+        spark, stream, "events_session_stream", sf_dir, partitions=8
     ).orderBy("user_id", "session_start")
 
 
@@ -112,7 +112,7 @@ def events_enriched_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum(F.col("value")).alias("sum_value"),
         )
     )
-    return run_stream_to_df(spark, enriched, "events_enriched_stream", reuse_key=sf_dir).orderBy(
+    return run_stream_to_df(spark, enriched, "events_enriched_stream", sf_dir).orderBy(
         "c_mktsegment", "event_type"
     )
 
@@ -131,7 +131,7 @@ def events_sliding_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows every hour."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = sliding_agg_stream(read_events_stream(spark, sf_dir))
-    return run_stream_to_df(spark, stream, "events_sliding_stream", reuse_key=sf_dir).orderBy(
+    return run_stream_to_df(spark, stream, "events_sliding_stream", sf_dir).orderBy(
         "win_start", "event_type"
     )
 
@@ -158,8 +158,7 @@ def events_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = dedup_keys_stream(read_events_stream(spark, sf_dir))
     return run_stream_to_df(
-        spark, stream, "events_dedup_stream", output_mode="append",
-        reuse_key=sf_dir,
+        spark, stream, "events_dedup_stream", sf_dir, output_mode="append"
     ).orderBy("user_id", "event_type")
 
 
@@ -177,8 +176,7 @@ def events_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = click_purchase_join_stream(read_events_stream(spark, sf_dir))
     return run_stream_to_df(
-        spark, stream, "events_stream_stream_join", output_mode="append",
-        reuse_key=sf_dir,
+        spark, stream, "events_stream_stream_join", sf_dir, output_mode="append"
     ).orderBy("purchase_id", "click_id")
 
 
@@ -212,8 +210,8 @@ def events_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         stream,
         "events_stateful_sessions",
+        sf_dir,
         output_mode="append",
-        reuse_key=sf_dir,
         # the per-key state machine runs in Python workers; keep enough
         # partitions for worker parallelism (store-commit cost is minor
         # next to the Arrow/Python path here)
@@ -289,7 +287,7 @@ def events_hll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "bucket")
         .agg(F.max("rank").alias("r"))
     )
-    regs = run_stream_to_df(spark, regs_stream, "events_hll_stream", reuse_key=sf_dir)
+    regs = run_stream_to_df(spark, regs_stream, "events_hll_stream", sf_dir)
     denom = regs.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("m_used"),
         F.sum(
@@ -316,8 +314,8 @@ def events_hll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def events_multibatch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE multi-micro-batch streaming gate: the fixture events are
-    re-laid-out as 4 files and streamed with ``maxFilesPerTrigger=1``,
-    so the hourly aggregation is genuinely maintained INCREMENTALLY
+    re-laid-out as 4 files and streamed one file per trigger
+    (``file_feed``), so the hourly aggregation is genuinely maintained INCREMENTALLY
     across 4 micro-batches — watermark advancing, state updated per
     batch — not collapsed into the single batch the one-file fixture
     otherwise yields.  The final complete-mode answer must equal the
@@ -326,19 +324,10 @@ def events_multibatch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctness (3 batch boundaries prove it as firmly as any larger
     count, at half the trigger overhead of the earlier 8-batch form).
     Layout is written once per (process, fixture)."""
-    from ..streaming.pipeline import hourly_agg_stream, run_stream_to_df
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = _split4_layout(spark, sf_dir)
-    schema = spark.read.parquet(path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    agg = hourly_agg_stream(stream)
+    agg = hourly_agg_stream(file_feed(spark, _events_split4(spark, sf_dir)))
     return run_stream_to_df(
-        spark, agg, "events_multibatch_stream", reuse_key=sf_dir
+        spark, agg, "events_multibatch_stream", sf_dir
     ).orderBy("hour", "event_type")
 
 
@@ -366,7 +355,7 @@ def events_trending_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("window.start").alias("win_start"), "event_type", "n_events"
         )
     )
-    counts = run_stream_to_df(spark, agg, "events_trending_stream", reuse_key=sf_dir)
+    counts = run_stream_to_df(spark, agg, "events_trending_stream", sf_dir)
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("win_start").orderBy(
@@ -434,28 +423,53 @@ ORDER BY event_type
 EVENTS_HLL_STREAM_SQL = _hll_stream_sql()
 
 
-def _split4_layout(spark: SparkSession, sf_dir: str) -> str:
-    """The 4-file arbitrary-split events layout used to force real
-    micro-batch boundaries (events_multibatch_stream, events_cdc_stream);
-    written once per (process, fixture)."""
+def _layout4(spark: SparkSession, sf_dir: str, tag: str, table: str,
+             where=None, cols=("*",)) -> str:
+    """``table``'s rows passing ``where`` written as 4 arbitrary parquet
+    files, so ``file_feed`` streams them as 4 real micro-batches; written
+    once per (process, fixture)."""
     import os
 
     from ..catalog import load_table
     from .advanced import _scratch_path
 
-    path = _scratch_path("events_split4", sf_dir)
+    path = _scratch_path(tag, sf_dir)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        load_table(spark, sf_dir, "events").repartition(4).write.mode(
-            "overwrite"
-        ).parquet(path)
+        df = load_table(spark, sf_dir, table)
+        if where is not None:
+            df = df.filter(where)
+        df.select(*cols).repartition(4).write.mode("overwrite").parquet(path)
     return path
+
+
+def _events_split4(spark: SparkSession, sf_dir: str) -> str:
+    """The fixture events split 4 ways (events_multibatch_stream,
+    events_cdc_stream)."""
+    return _layout4(spark, sf_dir, "events_split4", "events")
+
+
+def _docs_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The incoming crawl (doc_id >= split) as a 4-batch file feed."""
+    from .extensions import _INCR_SPLIT
+
+    return file_feed(spark, _layout4(
+        spark, sf_dir, "docs_incoming4", "documents",
+        F.col("doc_id") >= _INCR_SPLIT, ("doc_id", "text", "source")))
+
+
+def _emb_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The incoming vector slice (vec_id >= split) as a 4-batch file
+    feed."""
+    return file_feed(spark, _layout4(
+        spark, sf_dir, "emb_incoming4", "embeddings",
+        F.col("vec_id") >= _EMB_SPLIT, ("vec_id", "embedding")))
 
 
 def _timeordered_week_layout(spark: SparkSession, sf_dir: str) -> str:
     """Write the fixture events as four single-file time-quartile slices whose
     file MODIFICATION TIMES increase with event time — Spark's file
     stream source orders new files by (mtime, path), so streaming this
-    layout with ``maxFilesPerTrigger=1`` delivers micro-batches in event
+    layout one file per trigger (``file_feed``) delivers micro-batches in event
     time order, modeling the per-key-ordered changelog a Kafka/CDC feed
     guarantees.  (A plain repartitionByRange write does NOT stream in
     range order — measured: batches arrived 2,3,0,1 — hence the explicit
@@ -501,7 +515,7 @@ def _timeordered_week_layout(spark: SparkSession, sf_dir: str) -> str:
 def events_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming SCD2 maintenance: the incremental-materialized-view form
     of ``events_scd2_history``.  The change feed streams in event-time
-    order (4 time-quartile files, ``maxFilesPerTrigger=1`` — see
+    order (4 time-quartile files, ``file_feed`` — see
     ``_timeordered_week_layout``) and ``foreachBatch`` maintains TWO
     localCheckpointed state tables: per-(user, type) closed-version
     aggregates (version count, closed dwell) and the per-user OPEN
@@ -519,59 +533,15 @@ def events_scd2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-joins against |keys|-row state; nothing retained grows with
     stream length (the deployed form of a continuously-maintained
     dimension-history table)."""
-    from ..streaming.maintenance import (
-        run_foreach_batch,
-        scd2_apply_batch,
-        scd2_empty_state,
-        scd2_finalize,
-    )
+    from ..streaming.maintenance import scd2_finalize, scd2_fold
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
-    def maintain() -> tuple[DataFrame, DataFrame, int]:
-        empty_agg, empty_open = scd2_empty_state(spark)
-        holder = {
-            "agg": empty_agg.localCheckpoint(),
-            "open": empty_open.localCheckpoint(),
-            "n": 0,
-            "max_us": None,
-        }
+    def maintain() -> tuple[tuple, int]:
+        feed = file_feed(spark, _timeordered_week_layout(spark, sf_dir))
+        return run_fold(spark, "events_scd2_stream", feed, scd2_fold(spark))
 
-        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-            us = F.unix_micros(F.col("ts"))
-            b = batch_df.select(
-                "user_id", "event_id", F.col("event_type").alias("state_type"),
-                us.alias("us"),
-            ).localCheckpoint()
-            bounds = b.agg(
-                F.min("us").alias("lo"), F.max("us").alias("hi")
-            ).collect()[0]
-            if bounds["lo"] is None:
-                return
-            if (holder["max_us"] is not None
-                    and bounds["lo"] < holder["max_us"]):
-                raise AssertionError(
-                    "feed violated event-time order across micro-batches"
-                )
-            holder["max_us"] = bounds["hi"]
-            new_agg, new_open = scd2_apply_batch(
-                holder["agg"], holder["open"], b
-            )
-            holder["agg"] = new_agg.localCheckpoint()
-            holder["open"] = new_open.localCheckpoint()
-            holder["n"] += 1
-
-        layout = _timeordered_week_layout(spark, sf_dir)
-        schema = spark.read.parquet(layout).schema
-        feed = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(layout)
-        )
-        run_foreach_batch(spark, feed, apply_batch, "events_scd2_stream")
-        return holder["agg"], holder["open"], holder["n"]
-
-    state = memo(spark, ("stream", "events_scd2_stream", sf_dir), maintain)
+    state, _ = memo(spark, ("stream", "events_scd2_stream", sf_dir), maintain)
     return scd2_finalize(state[0], state[1])
 
 
@@ -601,7 +571,7 @@ ORDER BY user_id, state_type
 def events_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CDC upsert maintenance (the lakehouse streaming-MERGE
     shape): the post-cutoff change feed arrives as a REAL multi-batch
-    stream (4-file layout, ``maxFilesPerTrigger=1``) and ``foreachBatch``
+    stream (4-file layout, ``file_feed``) and ``foreachBatch``
     merges each micro-batch into a persistent state table — compact the
     batch to latest-per-key, union with current state, re-reduce with one
     ``max(struct(ts, event_id, …))`` hash aggregate.  That reducer is
@@ -627,54 +597,24 @@ def events_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         _CDC_UNSNAPPED_MOD,
     )
 
-    from ..streaming.maintenance import (
-        cdc_compact,
-        cdc_finalize,
-        cdc_merge_batch,
-        run_foreach_batch,
-    )
+    from ..streaming.maintenance import cdc_finalize, cdc_fold
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     def maintain() -> tuple[DataFrame, int]:
         cut = F.lit(_CDC_CUTOFF).cast("timestamp")
-
-        # base snapshot: compacted pre-cutoff state for the snapshotted keys
+        # base snapshot: pre-cutoff events of the snapshotted keys
         ev = load_table(spark, sf_dir, "events")
         snap = ev.filter(
             (F.col("ts") < cut) & (F.col("user_id") % _CDC_UNSNAPPED_MOD != 0)
         )
-        holder = {
-            "state": cdc_compact(snap, is_feed=False).localCheckpoint(),
-            "n": 0,
-        }
-
-        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                # don't count no-op batches: the >=2-batch test must prove
-                # the incremental merge really ran across boundaries
-                return
-            comp = cdc_compact(batch_df, is_feed=True)
-            holder["state"] = cdc_merge_batch(
-                holder["state"], comp
-            ).localCheckpoint()
-            holder["n"] += 1
-
         # the same 4-file layout events_multibatch_stream proves batch
         # boundaries with
-        path = _split4_layout(spark, sf_dir)
-        schema = spark.read.parquet(path).schema
-        feed = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-            .filter(
-                (F.col("ts") >= cut)
-                & (F.col("user_id") % _CDC_QUIET_MOD != _CDC_QUIET_REM)
-            )
+        feed = file_feed(spark, _events_split4(spark, sf_dir)).filter(
+            (F.col("ts") >= cut)
+            & (F.col("user_id") % _CDC_QUIET_MOD != _CDC_QUIET_REM)
         )
-        run_foreach_batch(spark, feed, apply_batch, "events_cdc_stream")
-        return holder["state"], holder["n"]
+        return run_fold(spark, "events_cdc_stream", feed, cdc_fold(snap))
 
     state = memo(spark, ("stream", "events_cdc_stream", sf_dir), maintain)
     return cdc_finalize(state[0], _CDC_TOMBSTONE)
@@ -724,33 +664,10 @@ EVENTS_CDC_STREAM_SQL = _cdc_stream_oracle()
 
 
 
-def _docs_incoming_layout(spark: SparkSession, sf_dir: str) -> str:
-    """The incoming-crawl slice (doc_id >= split) written as 4 arbitrary
-    parquet files so ``maxFilesPerTrigger=1`` forces ≥4 real micro-batch
-    boundaries; written once per (process, fixture)."""
-    import os
-
-    from ..catalog import load_table
-    from .advanced import _scratch_path
-    from .extensions import _INCR_SPLIT
-
-    path = _scratch_path("docs_incoming4", sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            load_table(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") >= _INCR_SPLIT)
-            .select("doc_id", "text", "source")
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    return path
-
-
 def docs_dedup_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming near-dup ADMISSION — the continuously-ingesting-corpus
     path the batch dedup family lacks: newly crawled documents arrive as
-    a real multi-batch stream (4-file layout, ``maxFilesPerTrigger=1``)
+    a real multi-batch stream (4-file layout, ``file_feed``)
     and ``foreachBatch`` probes each micro-batch against the corpus's
     prebuilt, corpus-capped LSH bucket index
     (``dedup_incremental_lsh``'s session-cached index), appending the
@@ -766,44 +683,17 @@ def docs_dedup_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     one (band, bkey) semi-join against the index — the corpus is never
     reshuffled per batch, which is what lets admission run continuously
     at crawl scale."""
-    from ..streaming.maintenance import admit_batch, admit_merge, run_foreach_batch
+    from ..streaming.maintenance import admission_fold
     from .extensions import _corpus_index_cells, _lsh_buckets_raw
 
     def maintain() -> tuple[DataFrame, int]:
         corpus_cells = _corpus_index_cells(
             _lsh_buckets_raw(spark, sf_dir)
         ).localCheckpoint()
-        holder: dict = {"verdicts": None, "n": 0}
-
-        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            v = admit_batch(
-                dedup.lsh_buckets(batch_df), batch_df.select("doc_id"), corpus_cells
-            ).localCheckpoint()
-            holder["verdicts"] = admit_merge(holder["verdicts"], v)
-            holder["n"] += 1
-            # the merge is a pure append, so lineage grows one union node per
-            # batch — flatten it periodically so a long-running stream's plan
-            # stays O(1) deep (per-batch cost stays O(batch): the checkpoint
-            # only re-materializes every 8th batch)
-            if holder["n"] % 8 == 0:
-                holder["verdicts"] = holder["verdicts"].localCheckpoint()
-
-        path = _docs_incoming_layout(spark, sf_dir)
-        schema = spark.read.parquet(path).schema
-        feed = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-        )
-        run_foreach_batch(spark, feed, apply_batch, "docs_dedup_ingest_stream")
-        if holder["verdicts"] is None:  # empty incoming slice
-            holder["verdicts"] = spark.createDataFrame(
-                [], "doc_id bigint, n_hit_buckets bigint, kept boolean"
-            )
-        final = holder["verdicts"].localCheckpoint()
-        return final, holder["n"]
+        verdicts, n = run_fold(spark, "docs_dedup_ingest_stream",
+                               _docs_feed(spark, sf_dir),
+                               admission_fold(corpus_cells))
+        return verdicts.localCheckpoint(), n
 
     state = memo(spark, ("stream", "docs_dedup_ingest_stream", sf_dir),
                  maintain)
@@ -834,7 +724,8 @@ def dedup_persisted_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..operators import artifact_io as aio
     from ..operators import lsh_index as li
     from ..catalog import load_table
-    from ..streaming.maintenance import admit_batch, run_foreach_batch
+    from ..streaming.maintenance import admit_batch
+    from ..streaming.runner import run_foreach_batch
     from .extensions import _INCR_SPLIT, _LSH_MAX_BUCKET, _corpus_fingerprint
 
     docs = load_table(spark, sf_dir, "documents")
@@ -883,14 +774,7 @@ def dedup_persisted_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame
                 .write.mode("append").partitionBy("band").parquet(cells_dir)
             )
 
-        layout = _docs_incoming_layout(spark, sf_dir)
-        schema = spark.read.parquet(layout).schema
-        feed = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(layout)
-        )
-        run_foreach_batch(spark, feed, apply_batch,
+        run_foreach_batch(spark, _docs_feed(spark, sf_dir), apply_batch,
                           "dedup_persisted_ingest_stream")
         corpus_cells.unpersist()
         aio.update_manifest(path, spark=spark, ingested=True)  # LAST
@@ -972,28 +856,6 @@ _EMB_DRIFT_TH = 0.12   # per-dim |cell mean - centroid| flagged as shifted
 _EMB_DRIFT_DIMS = 16   # cell drift trigger: more than this many shifted dims
 
 
-def _emb_incoming_layout(spark: SparkSession, sf_dir: str) -> str:
-    """The incoming vector slice (vec_id >= split) written as 4 arbitrary
-    parquet files so ``maxFilesPerTrigger=1`` forces ≥4 real micro-batch
-    boundaries; written once per (process, fixture)."""
-    import os
-
-    from ..catalog import load_table
-    from .advanced import _scratch_path
-
-    path = _scratch_path("emb_incoming4", sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            load_table(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id") >= _EMB_SPLIT)
-            .select("vec_id", "embedding")
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    return path
-
-
 def _emb_corpus_centroids(spark: SparkSession, sf_dir: str) -> list:
     """The deployed IVF index: the 64 CORPUS vectors (vec_id < split)
     with smallest md5(vec_id) — the seed recipe ann_ivf_topk's trained
@@ -1016,7 +878,7 @@ def embeddings_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuously-ingesting-corpus path for the embedding side, completing
     what docs_dedup_ingest_stream does for text: newly embedded vectors
     arrive as a real multi-batch stream (4-file layout,
-    ``maxFilesPerTrigger=1``) and ``foreachBatch`` assigns each
+    ``file_feed``) and ``foreachBatch`` assigns each
     micro-batch to the session's fixed IVF centroids (the corpus-built
     index), folding per-(cell, dim) occupancy counts and exact quantized
     sums into a maintained table.  Sums and counts are associative, so
@@ -1035,41 +897,13 @@ def embeddings_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is never reshuffled, the state is O(k·d) however long the
     stream runs, and the finalize joins the state against a 64-row
     literal centroid table."""
-    from ..inline import inline_table
-    from ..streaming.maintenance import (
-        ivf_ingest_batch,
-        ivf_ingest_merge,
-        run_foreach_batch,
-    )
+    from ..streaming.maintenance import ivf_fold
 
     def maintain() -> tuple[DataFrame, int, list]:
         centroids = _emb_corpus_centroids(spark, sf_dir)
-        holder: dict = {"occ": None, "n": 0}
-
-        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            occ = ivf_ingest_batch(batch_df, centroids)
-            holder["occ"] = ivf_ingest_merge(
-                holder["occ"], occ
-            ).localCheckpoint()
-            holder["n"] += 1
-
-        path = _emb_incoming_layout(spark, sf_dir)
-        schema = spark.read.parquet(path).schema
-        feed = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-        )
-        run_foreach_batch(spark, feed, apply_batch, "embeddings_ingest_stream")
-        if holder["occ"] is None:  # empty incoming slice
-            holder["occ"] = spark.createDataFrame(
-                [], "cell bigint, dim int, sumq decimal(38,0), n bigint"
-            )
-        # holder["occ"] is already a localCheckpoint (apply_batch
-        # checkpoints every merge), so cache it as-is
-        return holder["occ"], holder["n"], centroids
+        return (*run_fold(spark, "embeddings_ingest_stream",
+                          _emb_feed(spark, sf_dir), ivf_fold(centroids)),
+                centroids)
 
     key = ("stream", "embeddings_ingest_stream", sf_dir)
     occ, _, centroids = memo(spark, key, maintain)
@@ -1298,7 +1132,9 @@ def embeddings_drift_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 emb, _ivf_trained_centroids(spark, sf_dir), v2_path, fp,
                 _drift_v2_params(),
             )
-        _flip_alias(spark, base, "v2", fp)
+        # a warm serve finds v2 already active and writes nothing
+        if _drift_active_version(spark, base, fp) != "v2":
+            _flip_alias(spark, base, "v2", fp)
     version, serve = _drift_serve_active(spark, sf_dir, fp)
     return (
         serve
@@ -1430,7 +1266,7 @@ def ann_ingest_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``embeddings_ingest_stream`` MONITORS the deployed IVF index (cell
     occupancy + drift), this gate SERVES queries against the post-ingest
     index state.  The incoming vector slice arrives as a real multi-batch
-    stream (4-file layout, ``maxFilesPerTrigger=1``); ``foreachBatch``
+    stream (4-file layout, ``file_feed``); ``foreachBatch``
     assigns each micro-batch to the frozen corpus-trained centroids (the
     same vectorized kernel the batch gates use) and appends it to the
     maintained cell-assigned index table.  The gate then answers the
@@ -1449,8 +1285,7 @@ def ann_ingest_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     double-ingested a batch hash-fails."""
     from ..catalog import load_table
     from ..functions import vectors
-    from ..operators.similarity import ivf_assign
-    from ..streaming.maintenance import run_foreach_batch
+    from ..streaming.maintenance import ann_index_fold
     from .extensions import _TOPK, _ivf_query_probes
 
     from pyspark.sql.window import Window
@@ -1460,36 +1295,9 @@ def ann_ingest_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus = load_table(spark, sf_dir, "embeddings").filter(
             F.col("vec_id") < _EMB_SPLIT
         )
-        # per-batch cost = one assignment kernel pass + one checkpoint of
-        # THAT BATCH ONLY; segments union lazily at serve time (appending
-        # a cell-keyed partition, never re-materializing the accumulated
-        # index — checkpointing the running union here would make batch k
-        # re-copy the corpus plus k-1 prior batches)
-        segments: list[DataFrame] = [
-            ivf_assign(corpus, centroids).localCheckpoint()
-        ]
-
-        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            segments.append(
-                ivf_assign(
-                    batch_df.select("vec_id", "embedding"), centroids
-                ).localCheckpoint()
-            )
-
-        path = _emb_incoming_layout(spark, sf_dir)
-        schema = spark.read.parquet(path).schema
-        feed = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-        )
-        run_foreach_batch(spark, feed, apply_batch, "ann_ingest_topk")
-        idx = segments[0]
-        for seg in segments[1:]:
-            idx = idx.unionByName(seg)
-        return idx, len(segments) - 1, centroids
+        return (*run_fold(spark, "ann_ingest_topk", _emb_feed(spark, sf_dir),
+                          ann_index_fold(corpus, centroids)),
+                centroids)
 
     idx, _, centroids = memo(spark, ("stream", "ann_ingest_topk", sf_dir),
                              maintain)
@@ -1587,7 +1395,7 @@ def _ensure_ann_ingest_index(spark: SparkSession, sf_dir: str):
     from ..operators import ann_index as ai
     from ..operators import artifact_io as aio
     from ..operators.similarity import ivf_assign
-    from ..streaming.maintenance import run_foreach_batch
+    from ..streaming.runner import run_foreach_batch
     from .extensions import _corpus_fingerprint
 
     path = ai.index_path(sf_dir) + "_ingest"
@@ -1616,14 +1424,8 @@ def _ensure_ann_ingest_index(spark: SparkSession, sf_dir: str):
                 .write.mode("append").partitionBy("cell").parquet(cells_dir)
             )
 
-        layout = _emb_incoming_layout(spark, sf_dir)
-        schema = spark.read.parquet(layout).schema
-        feed = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(layout)
-        )
-        run_foreach_batch(spark, feed, apply_batch, "ann_persisted_ingest")
+        run_foreach_batch(spark, _emb_feed(spark, sf_dir), apply_batch,
+                          "ann_persisted_ingest")
         aio.update_manifest(path, spark=spark, ingested=True)  # durability point — LAST
     return path, emb
 
@@ -1707,7 +1509,7 @@ def ann_persisted_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def docs_token_meter_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming TOKEN METERING — the ingestion-side counter every
     training-data pipeline runs continuously: newly crawled documents
-    stream in (same 4-file incoming layout, ``maxFilesPerTrigger=1``) and
+    stream in (same 4-file incoming layout, ``file_feed``) and
     ``foreachBatch`` costs each micro-batch against the DEPLOYED
     tokenizer table (the session-cached BPE vocab from
     ``_bpe_vocab_tok`` — word → token count under the learned merges,
@@ -1722,38 +1524,14 @@ def docs_token_meter_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast); each micro-batch costs one explode + one vocab join +
     a |sources|-row aggregate — the corpus never reshuffles, and the
     maintained table is |sources| rows however long the stream runs."""
-    from ..streaming.maintenance import (
-        meter_batch,
-        meter_merge,
-        run_foreach_batch,
-    )
+    from ..streaming.maintenance import meter_fold
     from .curation import _bpe_vocab_tok
 
     def maintain() -> tuple[DataFrame, int]:
         vocab_tok = _bpe_vocab_tok(spark, sf_dir)  # session-cached
-        holder: dict = {"meter": None, "n": 0}
-
-        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            m = meter_batch(batch_df, vocab_tok)
-            holder["meter"] = meter_merge(holder["meter"], m).localCheckpoint()
-            holder["n"] += 1
-
-        path = _docs_incoming_layout(spark, sf_dir)
-        schema = spark.read.parquet(path).schema
-        feed = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-        )
-        run_foreach_batch(spark, feed, apply_batch, "docs_token_meter_stream")
-        if holder["meter"] is None:  # empty incoming slice
-            holder["meter"] = spark.createDataFrame(
-                [], "source string, n_docs bigint, n_tokens bigint"
-            )
-        final = holder["meter"].localCheckpoint()
-        return final, holder["n"]
+        meter, n = run_fold(spark, "docs_token_meter_stream",
+                            _docs_feed(spark, sf_dir), meter_fold(vocab_tok))
+        return meter.localCheckpoint(), n
 
     state = memo(spark, ("stream", "docs_token_meter_stream", sf_dir),
                  maintain)
@@ -1810,7 +1588,7 @@ def docs_substring_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming EXACT-SUBSTRING admission — the ingest-time form of
     docs_exact_substring_dedup (Lee et al. 2022's ExactSubstr, applied
     the way a live crawl must apply it): newly crawled documents arrive
-    as a real multi-batch stream (4-file layout, ``maxFilesPerTrigger=1``)
+    as a real multi-batch stream (4-file layout, ``file_feed``)
     and ``foreachBatch`` probes each micro-batch's positional 8-token
     grams against the corpus's prebuilt span index, appending per-doc
     verdicts (span count, recycled-span count, kept iff at most half the
@@ -1824,44 +1602,13 @@ def docs_substring_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus, hash-partitioned); each micro-batch costs one gram
     explode + one hash equi-join against the index — the corpus is
     never re-tokenized or reshuffled per batch."""
-    from ..streaming.maintenance import (
-        admit_merge,
-        run_foreach_batch,
-        span_admit_batch,
-    )
+    from ..streaming.maintenance import span_fold
 
     def maintain() -> tuple[DataFrame, int]:
         idx = _span_index(spark, sf_dir)  # session-cached, checkpointed
-        holder: dict = {"verdicts": None, "n": 0}
-
-        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            v = span_admit_batch(batch_df, idx).localCheckpoint()
-            holder["verdicts"] = admit_merge(holder["verdicts"], v)
-            holder["n"] += 1
-            # pure append: flatten the union lineage periodically so a
-            # long-running stream's plan stays O(1) deep
-            if holder["n"] % 8 == 0:
-                holder["verdicts"] = holder["verdicts"].localCheckpoint()
-
-        path = _docs_incoming_layout(spark, sf_dir)
-        schema = spark.read.parquet(path).schema
-        feed = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-        )
-        run_foreach_batch(
-            spark, feed, apply_batch, "docs_substring_ingest_stream"
-        )
-        if holder["verdicts"] is None:  # empty incoming slice
-            holder["verdicts"] = spark.createDataFrame(
-                [], "doc_id bigint, n_spans bigint, n_dup_spans bigint,"
-                " kept boolean"
-            )
-        final = holder["verdicts"].localCheckpoint()
-        return final, holder["n"]
+        verdicts, n = run_fold(spark, "docs_substring_ingest_stream",
+                               _docs_feed(spark, sf_dir), span_fold(idx))
+        return verdicts.localCheckpoint(), n
 
     state = memo(spark, ("stream", "docs_substring_ingest_stream", sf_dir),
                  maintain)
@@ -2046,6 +1793,6 @@ SPECS: list[QuerySpec] = [
         "events_multibatch_stream",
         events_multibatch_stream,
         EVENTS_MULTIBATCH_STREAM_SQL,
-        "4 forced micro-batches (maxFilesPerTrigger=1) == batch answer",
+        "4 forced micro-batches (one file per trigger) == batch answer",
     ),
 ]

@@ -14,7 +14,7 @@ from .pipeline import (  # noqa: F401
     dedup_keys_stream,
     hourly_agg_stream,
     read_events_stream,
-    run_stream_to_df,
     session_window_stream,
     sliding_agg_stream,
 )
+from .runner import run_stream_to_df  # noqa: F401

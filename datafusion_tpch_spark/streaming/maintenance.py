@@ -1,24 +1,19 @@
-"""Incremental-maintenance algebra for the foreachBatch gates.
+"""Incremental-maintenance algebra of the foreachBatch gates.
 
-The streaming gates (queries/stream.py: ``events_cdc_stream``,
-``events_scd2_stream``) maintain state tables one micro-batch at a time.
-The per-batch merge logic lives HERE, as pure DataFrame→DataFrame
-functions over explicit state, so its defining properties are testable
-without a streaming runtime:
+Seven gates in queries/stream.py maintain state one micro-batch at a
+time.  Each runs ONE ``Fold`` (built by its ``*_fold`` factory here) over
+its feed; the per-batch merge logic is pure DataFrame→DataFrame functions
+over explicit state, so its defining properties are testable without a
+streaming runtime — ``tests/test_maintenance_algebra.py`` calls the same
+folds on hypothesis-chosen batch boundaries:
 
-- **CDC upsert state** is an order-INSENSITIVE fold: the state after any
-  partition of the feed into batches — in any order — equals one global
-  argmax-per-key reduction (``max(struct(ts, event_id, …))`` is
-  associative and commutative).
-- **SCD2 interval state** is an order-DEPENDENT fold: batches must
-  arrive in event-time order (the per-key ordering a Kafka/CDC feed
-  guarantees), but WHERE the boundaries fall must not matter.  The
-  property test cuts the same feed at random time-ordered boundaries and
-  requires the final state to be identical.
-
-Both gates call these functions from their foreachBatch closures;
-``tests/test_maintenance_algebra.py`` drives them directly with
-hypothesis-chosen batch boundaries.
+- **Order-INSENSITIVE folds** (CDC upsert argmax, admission and span
+  verdict appends, token and IVF-occupancy sums, the appended IVF index):
+  the state after any partition of the feed into batches — in any order —
+  equals the one-batch answer.
+- **SCD2 interval state** is order-DEPENDENT: batches must arrive in
+  event-time order (the per-key ordering a Kafka/CDC feed guarantees),
+  but WHERE the boundaries fall must not matter.
 """
 
 from __future__ import annotations
@@ -27,41 +22,56 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-def run_foreach_batch(
-    spark: SparkSession, feed: DataFrame, apply_batch, name: str,
-    timeout_s: int = 300, partitions: int = 2,
-) -> None:
-    """Drive a bounded foreachBatch maintenance stream to completion:
-    RAM-backed checkpoint dir, state-sized shuffle-partition override
-    (restored after), AvailableNow trigger, checkpoint cleanup.  Shared
-    by the CDC and SCD2 gates so the runner plumbing can't drift between
-    them."""
-    import os
-    import shutil
-    import tempfile
 
-    ckpt_base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt-{name}-", dir=ckpt_base)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-    try:
-        query = (
-            feed.writeStream.foreachBatch(apply_batch)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not query.awaitTermination(timeout_s):
-                raise TimeoutError(
-                    f"{name} did not finish in {timeout_s}s"
-                )
-        finally:
-            query.stop()
-            shutil.rmtree(ckpt, ignore_errors=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+class Fold:
+    """The one maintained-state fold of the foreachBatch gates, called
+    once per micro-batch: as the foreachBatch function of
+    ``runner.run_fold``, or on hypothesis-cut slices in
+    ``tests/test_maintenance_algebra.py`` — the gates' own fold either way.
+
+    ``step(state, batch)`` returns what ``batch`` contributes, or None for
+    an empty batch, which folds nothing and is not counted in ``n``.
+    Every state the fold holds is localCheckpointed (each frame of a tuple
+    state), so lineage never grows with stream length.  By default the
+    step returns the next state.  With ``append`` it returns the batch's
+    own rows, checkpointed alone and unioned onto the state, so a batch
+    never re-materializes what earlier batches appended.  ``state`` is the
+    base state (None: no base); ``empty`` (DDL) types the zero-row result
+    when there is neither a base nor a non-empty batch."""
+
+    def __init__(self, step, state=None, empty: str | None = None,
+                 append: bool = False):
+        self.step, self.empty, self.append = step, empty, append
+        self.state = None if state is None else _checkpoint(state)
+        self.n = 0
+
+    def __call__(self, batch: DataFrame, batch_id: int | None = None) -> None:
+        out = self.step(self.state, batch)
+        if out is None:
+            return
+        if self.append:
+            seg = out.localCheckpoint()
+            self.state = seg if self.state is None else self.state.unionByName(seg)
+        else:
+            self.state = _checkpoint(out)
+        self.n += 1
+
+    def result(self, spark: SparkSession):
+        if self.state is None:
+            return spark.createDataFrame([], self.empty)
+        return self.state
+
+
+def _checkpoint(state):
+    if isinstance(state, tuple):
+        return tuple(_checkpoint(x) for x in state)
+    return state.localCheckpoint() if isinstance(state, DataFrame) else state
+
+
+def _nonempty(step):
+    """``step`` behind one ``isEmpty`` job: an empty batch contributes
+    nothing (so the batch count proves real incremental merges)."""
+    return lambda state, batch: None if batch.isEmpty() else step(state, batch)
 
 
 # ----------------------------------------------------------- CDC upsert
@@ -132,6 +142,15 @@ def cdc_finalize(state: DataFrame, tombstone: str) -> DataFrame:
         state.filter(~(F.col("is_feed") & is_tomb))
         .select("user_id", "state_value", "state_ts", "state_type")
         .orderBy("user_id")
+    )
+
+
+def cdc_fold(snapshot: DataFrame) -> Fold:
+    """CDC upsert state over a change feed, based on the compacted
+    ``snapshot`` events (``events_cdc_stream``)."""
+    return Fold(
+        _nonempty(lambda s, b: cdc_merge_batch(s, cdc_compact(b, is_feed=True))),
+        cdc_compact(snapshot, is_feed=False),
     )
 
 
@@ -227,6 +246,30 @@ def scd2_finalize(agg: DataFrame, opn: DataFrame) -> DataFrame:
     )
 
 
+def scd2_fold(spark: SparkSession) -> Fold:
+    """SCD2 state ``(closed aggregates, open versions, last event us)``
+    over an event-time-ordered feed (``events_scd2_stream``).  Each batch
+    must start no earlier than the previous one ended — asserted per
+    batch; its emptiness comes from that bounds collect, not an extra
+    ``isEmpty`` job."""
+    return Fold(_scd2_step, (*scd2_empty_state(spark), None))
+
+
+def _scd2_step(state, batch: DataFrame):
+    us = F.unix_micros(F.col("ts"))
+    b = batch.select(
+        "user_id", "event_id", F.col("event_type").alias("state_type"),
+        us.alias("us"),
+    ).localCheckpoint()
+    lo, hi = b.agg(F.min("us"), F.max("us")).collect()[0]
+    if lo is None:
+        return None
+    agg, opn, last_us = state
+    if last_us is not None and lo < last_us:
+        raise AssertionError("feed violated event-time order across micro-batches")
+    return (*scd2_apply_batch(agg, opn, b), hi)
+
+
 # ------------------------------------------- near-dup ingest admission
 
 def admit_batch(
@@ -254,15 +297,19 @@ def admit_batch(
     )
 
 
-def admit_merge(state: DataFrame | None, batch_verdicts: DataFrame) -> DataFrame:
-    """Fold one batch's verdicts into the maintained table.  Incoming
-    doc_ids are unique across batches (a file feed delivers each doc
-    once), so the merge is a pure append — associative and commutative,
-    the trivial end of the maintenance algebra spectrum, kept explicit
-    so the property test pins the contract."""
-    if state is None:
-        return batch_verdicts
-    return state.unionByName(batch_verdicts)
+def admission_fold(corpus_cells: DataFrame) -> Fold:
+    """Appended admission verdicts of an incoming crawl against the
+    corpus's LSH cells (``docs_dedup_ingest_stream``).  Incoming doc_ids
+    are unique across batches (a file feed delivers each doc once), so
+    the merge is a pure append."""
+    from ..operators.dedup import lsh_buckets
+
+    return Fold(
+        _nonempty(lambda _, b: admit_batch(
+            lsh_buckets(b), b.select("doc_id"), corpus_cells)),
+        empty="doc_id bigint, n_hit_buckets bigint, kept boolean",
+        append=True,
+    )
 
 
 # --------------------------------------------------- stream token metering
@@ -306,6 +353,15 @@ def meter_merge(state: DataFrame | None, batch_meter: DataFrame) -> DataFrame:
             F.sum("n_docs").cast("long").alias("n_docs"),
             F.sum("n_tokens").cast("long").alias("n_tokens"),
         )
+    )
+
+
+def meter_fold(vocab_tok: DataFrame) -> Fold:
+    """Per-source token totals of an incoming crawl against the deployed
+    tokenizer table (``docs_token_meter_stream``)."""
+    return Fold(
+        _nonempty(lambda s, b: meter_merge(s, meter_batch(b, vocab_tok))),
+        empty="source string, n_docs bigint, n_tokens bigint",
     )
 
 
@@ -358,6 +414,29 @@ def ivf_ingest_merge(state: DataFrame | None, batch: DataFrame) -> DataFrame:
     )
 
 
+def ivf_fold(centroids) -> Fold:
+    """Per-(cell, dim) occupancy of an incoming vector feed against the
+    deployed centroids (``embeddings_ingest_stream``)."""
+    return Fold(
+        _nonempty(lambda s, b: ivf_ingest_merge(s, ivf_ingest_batch(b, centroids))),
+        empty="cell bigint, dim int, sumq decimal(38,0), n bigint",
+    )
+
+
+def ann_index_fold(corpus: DataFrame, centroids) -> Fold:
+    """The cell-assigned search index of ``ann_ingest_topk``: the corpus
+    assigned to the frozen centroids, each incoming batch appended as its
+    own assigned segment — assignment is row-wise against constants, so
+    the index is independent of batch boundaries and order."""
+    from ..operators.similarity import ivf_assign
+
+    return Fold(
+        _nonempty(lambda _, b: ivf_assign(b.select("vec_id", "embedding"), centroids)),
+        ivf_assign(corpus, centroids),
+        append=True,
+    )
+
+
 # -------------------------------------- stream exact-substring admission
 
 def span_admit_batch(
@@ -397,4 +476,14 @@ def span_admit_batch(
             F.lit(2) * F.coalesce(F.col("n_dup_spans"), F.lit(0))
             <= F.coalesce(F.col("n_spans"), F.lit(0))
         ).alias("kept"),
+    )
+
+
+def span_fold(corpus_span_idx: DataFrame) -> Fold:
+    """Appended ExactSubstr admission verdicts of an incoming crawl
+    against the corpus span index (``docs_substring_ingest_stream``)."""
+    return Fold(
+        _nonempty(lambda _, b: span_admit_batch(b, corpus_span_idx)),
+        empty="doc_id bigint, n_spans bigint, n_dup_spans bigint, kept boolean",
+        append=True,
     )

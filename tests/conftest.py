@@ -22,7 +22,10 @@ def memoized(spark, *key):
 # bare CI runner the generator/UDTF/hash tests still run (they synthesize
 # their own data) and everything fixture-bound skips with a clear reason.
 _FIXTURES_PRESENT = os.path.isdir(SF_DIR)
-_FIXTURE_FREE_FILES = {"test_tpch_gen.py", "test_sql_udtf.py", "test_dead_code.py"}
+_FIXTURE_FREE_FILES = {
+    "test_tpch_gen.py", "test_sql_udtf.py", "test_dead_code.py",
+    "test_streaming_structure.py",
+}
 
 
 def pytest_collection_modifyitems(config, items):

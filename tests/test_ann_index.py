@@ -220,7 +220,7 @@ def test_persisted_ingest_durable_serve(spark, index_dir, monkeypatch):
     session with BOTH training and streaming forcibly disabled must serve
     corpus + streamed rows from the artifacts alone."""
     from datafusion_tpch_spark.queries import stream as st
-    from datafusion_tpch_spark.streaming import maintenance as mt
+    from datafusion_tpch_spark.streaming import runner
 
     rows1 = st.ann_persisted_ingest_topk(spark, SF_DIR).collect()
     assert any(r.from_stream for r in rows1), "streamed rows must be searchable"
@@ -229,7 +229,7 @@ def test_persisted_ingest_durable_serve(spark, index_dir, monkeypatch):
         raise AssertionError("durable serve touched training/streaming")
 
     monkeypatch.setattr(st, "_ingest_trained_centroids", boom)
-    monkeypatch.setattr(mt, "run_foreach_batch", boom)
+    monkeypatch.setattr(runner, "run_foreach_batch", boom)
     rows2 = st.ann_persisted_ingest_topk(spark, SF_DIR).collect()
     assert [tuple(r) for r in rows2] == [tuple(r) for r in rows1]
 

@@ -92,3 +92,14 @@ def test_alias_ignored_when_target_stale(spark, index_dir):
     # and an alias naming a generation with no current manifest: v1
     st._flip_alias(spark, base, "v3", fp)
     assert st._drift_active_version(spark, base, fp) == "v1"
+
+
+def test_warm_run_leaves_alias_unwritten(spark, index_dir):
+    """Once v2 is active for this corpus, a later run serves it without
+    rewriting the alias (no object-store PUT per query)."""
+    st.embeddings_drift_retrain(spark, SF_DIR).collect()
+    alias = st._drift_alias_path(st._drift_base_path(SF_DIR))
+    os.utime(alias, (1_000_000_000, 1_000_000_000))
+    rows = st.embeddings_drift_retrain(spark, SF_DIR).collect()
+    assert rows and all(r.index_version == 2 for r in rows)
+    assert os.stat(alias).st_mtime == 1_000_000_000

@@ -115,7 +115,7 @@ def test_persisted_ingest_stream_durable_serve(spark, index_dir, monkeypatch):
     verdict table from the artifacts alone, and the stored index must have
     GROWN by exactly the admitted docs' membership."""
     from datafusion_tpch_spark.queries import stream as st
-    from datafusion_tpch_spark.streaming import maintenance as mt
+    from datafusion_tpch_spark.streaming import runner
 
     rows1 = st.dedup_persisted_ingest_stream(spark, SF_DIR).collect()
     assert rows1, "incoming slice must produce verdicts"
@@ -133,7 +133,7 @@ def test_persisted_ingest_stream_durable_serve(spark, index_dir, monkeypatch):
     def boom(*a, **k):  # pragma: no cover - failure path
         raise AssertionError("durable serve touched hashing/streaming")
 
-    monkeypatch.setattr(mt, "run_foreach_batch", boom)
+    monkeypatch.setattr(runner, "run_foreach_batch", boom)
     monkeypatch.setattr(dedup, "lsh_buckets", boom)
     rows2 = st.dedup_persisted_ingest_stream(spark, SF_DIR).collect()
     assert [tuple(r) for r in rows2] == [tuple(r) for r in rows1]

@@ -1,14 +1,15 @@
 """Property tests for the foreachBatch maintenance algebra
-(streaming/maintenance.py), driven with hypothesis-chosen batch
-boundaries — the property the single 4-way streaming run can't pin:
-the final state is identical for EVERY way of cutting the feed into
-micro-batches (any cuts and any batch ORDER for CDC; any time-ordered
-cuts for SCD2)."""
+(streaming/maintenance.py): each gate's own ``Fold``, called on
+hypothesis-chosen batch boundaries — the property the single 4-way
+streaming run can't pin: the final state is identical for EVERY way of
+cutting the feed into micro-batches (any cuts and any batch ORDER for the
+order-insensitive folds; any time-ordered cuts for SCD2)."""
 
 from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -16,10 +17,11 @@ from pyspark.sql import functions as F
 from datafusion_tpch_spark.streaming.maintenance import (
     cdc_compact,
     cdc_finalize,
-    cdc_merge_batch,
+    cdc_fold,
     scd2_apply_batch,
     scd2_empty_state,
     scd2_finalize,
+    scd2_fold,
 )
 
 _EPOCH = dt.datetime(2024, 1, 1)
@@ -66,11 +68,10 @@ def test_cdc_state_is_boundary_and_order_independent(spark):
         rows = ev.orderBy("event_id").collect()
         slices = _cuts_to_slices(len(rows), cuts)
         rnd.shuffle(slices)  # CDC must tolerate ANY batch order
-        state = cdc_compact(ev.limit(0), is_feed=False)
+        fold = cdc_fold(ev.limit(0))
         for a, b in slices:
-            batch = spark.createDataFrame(rows[a:b], ev.schema)
-            state = cdc_merge_batch(state, cdc_compact(batch, is_feed=True))
-        got = cdc_finalize(state, "error").collect()
+            fold(spark.createDataFrame(rows[a:b], ev.schema))
+        got = cdc_finalize(fold.result(spark), "error").collect()
         want = cdc_finalize(
             cdc_compact(ev, is_feed=True), "error"
         ).collect()
@@ -86,18 +87,17 @@ def test_scd2_state_is_boundary_independent(spark):
         st.lists(st.integers(0, 80), min_size=0, max_size=3),
     )
     def prop(seed, cuts):
-        ev = _events(spark, seed, 80)
+        ev = _events(spark, seed, 80).localCheckpoint()
         b_all = ev.select(
             "user_id", "event_id",
             F.col("event_type").alias("state_type"),
             F.unix_micros("ts").alias("us"),
-        ).localCheckpoint()
-        rows = b_all.orderBy("us", "event_id").collect()  # time-ordered feed
-        agg, opn = scd2_empty_state(spark)
+        )
+        rows = ev.orderBy("ts", "event_id").collect()  # time-ordered feed
+        fold = scd2_fold(spark)
         for a, b in _cuts_to_slices(len(rows), cuts):
-            batch = spark.createDataFrame(rows[a:b], b_all.schema)
-            agg, opn = scd2_apply_batch(agg, opn, batch)
-            agg, opn = agg.localCheckpoint(), opn.localCheckpoint()
+            fold(spark.createDataFrame(rows[a:b], ev.schema))
+        agg, opn, _ = fold.result(spark)
         got = scd2_finalize(agg, opn).collect()
         agg1, opn1 = scd2_apply_batch(*scd2_empty_state(spark), b_all)
         want = scd2_finalize(agg1, opn1).collect()
@@ -138,8 +138,8 @@ def test_ingest_admission_is_boundary_and_order_independent(spark):
         _INCR_SPLIT,
     )
     from datafusion_tpch_spark.streaming.maintenance import (
+        admission_fold,
         admit_batch,
-        admit_merge,
     )
 
     @settings(max_examples=6, deadline=None)
@@ -156,16 +156,10 @@ def test_ingest_admission_is_boundary_and_order_independent(spark):
         rows = incoming.orderBy("doc_id").collect()
         slices = _cuts_to_slices(len(rows), cuts)
         rnd.shuffle(slices)  # admission must tolerate ANY batch order
-        state = None
+        fold = admission_fold(cells)
         for a, b in slices:
-            batch = spark.createDataFrame(rows[a:b], incoming.schema)
-            state = admit_merge(
-                state,
-                admit_batch(
-                    lsh_buckets(batch), batch.select("doc_id"), cells
-                ).localCheckpoint(),
-            )
-        got = sorted(tuple(r) for r in state.collect()) if state else []
+            fold(spark.createDataFrame(rows[a:b], incoming.schema))
+        got = sorted(tuple(r) for r in fold.result(spark).collect())
         want = sorted(
             tuple(r)
             for r in admit_batch(
@@ -185,7 +179,7 @@ def test_token_meter_is_boundary_and_order_independent(spark):
 
     from datafusion_tpch_spark.streaming.maintenance import (
         meter_batch,
-        meter_merge,
+        meter_fold,
     )
 
     @settings(max_examples=6, deadline=None)
@@ -217,13 +211,10 @@ def test_token_meter_is_boundary_and_order_independent(spark):
         ordered = docs.orderBy("doc_id").collect()
         slices = _cuts_to_slices(len(ordered), cuts)
         rnd.shuffle(slices)
-        state = None
+        fold = meter_fold(vocab_tok)
         for a, b in slices:
-            batch = spark.createDataFrame(ordered[a:b], docs.schema)
-            state = meter_merge(
-                state, meter_batch(batch, vocab_tok)
-            ).localCheckpoint()
-        got = sorted(tuple(r) for r in state.collect()) if state else []
+            fold(spark.createDataFrame(ordered[a:b], docs.schema))
+        got = sorted(tuple(r) for r in fold.result(spark).collect())
         want = sorted(
             tuple(r) for r in meter_batch(docs, vocab_tok).collect()
         )
@@ -296,8 +287,8 @@ def test_ivf_ingest_is_boundary_and_order_independent(spark):
     import random
 
     from datafusion_tpch_spark.streaming.maintenance import (
+        ivf_fold,
         ivf_ingest_batch,
-        ivf_ingest_merge,
     )
 
     @settings(max_examples=5, deadline=None)
@@ -323,13 +314,10 @@ def test_ivf_ingest_is_boundary_and_order_independent(spark):
         ordered = emb.orderBy("vec_id").collect()
         slices = _cuts_to_slices(len(ordered), cuts)
         rnd.shuffle(slices)
-        state = None
+        fold = ivf_fold(centroids)
         for a, b in slices:
-            batch = spark.createDataFrame(ordered[a:b], emb.schema)
-            state = ivf_ingest_merge(
-                state, ivf_ingest_batch(batch, centroids)
-            ).localCheckpoint()
-        got = sorted(tuple(r) for r in state.collect()) if state else []
+            fold(spark.createDataFrame(ordered[a:b], emb.schema))
+        got = sorted(tuple(r) for r in fold.result(spark).collect())
         want = sorted(
             tuple(r) for r in ivf_ingest_batch(emb, centroids).collect()
         )
@@ -346,8 +334,8 @@ def test_span_admission_is_boundary_and_order_independent(spark):
     from datafusion_tpch_spark.functions import hashing, text
     from datafusion_tpch_spark.queries.extensions import _INCR_SPLIT
     from datafusion_tpch_spark.streaming.maintenance import (
-        admit_merge,
         span_admit_batch,
+        span_fold,
     )
 
     @settings(max_examples=6, deadline=None)
@@ -374,13 +362,10 @@ def test_span_admission_is_boundary_and_order_independent(spark):
         rows = incoming.orderBy("doc_id").collect()
         slices = _cuts_to_slices(len(rows), cuts)
         rnd.shuffle(slices)  # admission must tolerate ANY batch order
-        state = None
+        fold = span_fold(idx)
         for a, b in slices:
-            batch = spark.createDataFrame(rows[a:b], incoming.schema)
-            state = admit_merge(
-                state, span_admit_batch(batch, idx).localCheckpoint()
-            )
-        got = sorted(tuple(r) for r in state.collect()) if state else []
+            fold(spark.createDataFrame(rows[a:b], incoming.schema))
+        got = sorted(tuple(r) for r in fold.result(spark).collect())
         want = sorted(
             tuple(r) for r in span_admit_batch(incoming, idx).collect()
         )
@@ -399,6 +384,7 @@ def test_ann_ingest_index_is_boundary_and_order_independent(spark):
     import random
 
     from datafusion_tpch_spark.operators.similarity import ivf_assign
+    from datafusion_tpch_spark.streaming.maintenance import ann_index_fold
 
     @settings(max_examples=5, deadline=None)
     @given(
@@ -420,18 +406,14 @@ def test_ann_ingest_index_is_boundary_and_order_independent(spark):
         emb = spark.createDataFrame(
             rows, "vec_id long, embedding array<float>"
         ).localCheckpoint()
-        ordered = emb.orderBy("vec_id").collect()
+        # the first 10 vectors are the indexed corpus, the rest stream in
+        ordered = emb.orderBy("vec_id").collect()[10:]
         slices = _cuts_to_slices(len(ordered), cuts)
         rnd.shuffle(slices)
-        idx = None
+        fold = ann_index_fold(emb.filter(F.col("vec_id") < 10), centroids)
         for a, b in slices:
-            batch = spark.createDataFrame(ordered[a:b], emb.schema)
-            assigned = ivf_assign(batch, centroids)
-            idx = assigned if idx is None else idx.unionByName(assigned)
-            idx = idx.localCheckpoint()
-        got = (
-            sorted((r.vec_id, r.cell) for r in idx.collect()) if idx else []
-        )
+            fold(spark.createDataFrame(ordered[a:b], emb.schema))
+        got = sorted((r.vec_id, r.cell) for r in fold.result(spark).collect())
         want = sorted(
             (r.vec_id, r.cell)
             for r in ivf_assign(emb, centroids).collect()
@@ -439,3 +421,38 @@ def test_ann_ingest_index_is_boundary_and_order_independent(spark):
         assert got == want
 
     prop()
+
+
+_DOCS_FEED = "doc_id bigint, text string, source string"
+_EMB_FEED = "vec_id bigint, embedding array<float>"
+
+
+@pytest.mark.parametrize("gate", [
+    "docs_dedup_ingest_stream", "docs_token_meter_stream",
+    "embeddings_ingest_stream", "docs_substring_ingest_stream",
+])
+def test_fold_over_empty_feed_is_typed_and_zero(spark, tmp_path, gate):
+    """A gate's fold run over a feed that delivers no rows counts no batch
+    and returns a zero-row frame of the gate's own state schema (the fold
+    holds no base state, so its ``empty`` DDL types the result)."""
+    from datafusion_tpch_spark.queries import all_queries
+    from datafusion_tpch_spark.streaming import maintenance as mt
+    from datafusion_tpch_spark.streaming.runner import file_feed, run_fold
+
+    from tests.conftest import SF_DIR, memoized
+
+    # no batch carries rows, so the steps never run and need no index
+    fold, feed_ddl = {
+        "docs_dedup_ingest_stream": (lambda: mt.admission_fold(None), _DOCS_FEED),
+        "docs_token_meter_stream": (lambda: mt.meter_fold(None), _DOCS_FEED),
+        "embeddings_ingest_stream": (lambda: mt.ivf_fold([]), _EMB_FEED),
+        "docs_substring_ingest_stream": (lambda: mt.span_fold(None), _DOCS_FEED),
+    }[gate]
+    path = str(tmp_path / "empty_feed")
+    spark.createDataFrame([], feed_ddl).write.parquet(path)
+    state, n = run_fold(spark, f"t_empty_{gate}", file_feed(spark, path), fold())
+    assert n == 0
+    assert state.count() == 0
+    all_queries()[gate].build(spark, SF_DIR)
+    want = memoized(spark, "stream", gate, SF_DIR)[0]
+    assert state.dtypes == want.dtypes

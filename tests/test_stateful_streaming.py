@@ -22,7 +22,9 @@ def _final_sessions(df):
 
 def test_stateful_sessionize_equals_batch(spark):
     stream = sessionize_with_state(read_events_stream(spark, SF_DIR))
-    raw = run_stream_to_df(spark, stream, "t_state_sessions", output_mode="append")
+    raw = run_stream_to_df(
+        spark, stream, "t_state_sessions", SF_DIR, output_mode="append"
+    )
     got = (
         _final_sessions(raw)
         .groupBy("user_id")

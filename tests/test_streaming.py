@@ -23,7 +23,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def test_hourly_stream_equals_batch(spark):
     stream = hourly_agg_stream(read_events_stream(spark, SF_DIR))
-    got = run_stream_to_df(spark, stream, "t_hourly").orderBy("hour", "event_type")
+    got = run_stream_to_df(spark, stream, "t_hourly", SF_DIR).orderBy("hour", "event_type")
 
     ev = load_table(spark, SF_DIR, "events")
     want = (
@@ -36,7 +36,7 @@ def test_hourly_stream_equals_batch(spark):
 
 def test_session_stream_total_events_conserved(spark):
     stream = session_window_stream(read_events_stream(spark, SF_DIR))
-    got = run_stream_to_df(spark, stream, "t_sessions")
+    got = run_stream_to_df(spark, stream, "t_sessions", SF_DIR)
     total = got.agg(F.sum("n_events")).collect()[0][0]
     n_rows = load_table(spark, SF_DIR, "events").count()
     assert total == n_rows
@@ -69,7 +69,7 @@ def test_session_stream_gap_property(spark):
     """Within a reconstructed session no gap >= 30min; session starts align
     with the first event of each session."""
     stream = session_window_stream(read_events_stream(spark, SF_DIR))
-    got = run_stream_to_df(spark, stream, "t_sessions2")
+    got = run_stream_to_df(spark, stream, "t_sessions2", SF_DIR)
     starts = {(r.user_id, r.session_start) for r in got.collect()}
     ev = load_table(spark, SF_DIR, "events").select("user_id", "ts").collect()
     by_user: dict[int, list] = {}
@@ -114,7 +114,8 @@ def test_dedup_stream_collapses_redelivery(spark, tmp_path):
     else:
         events = spark.readStream.schema(EVENTS_MICROS_SCHEMA).parquet(str(src))
     got = run_stream_to_df(
-        spark, dedup_keys_stream(events), "t_dedup_redeliver", output_mode="append"
+        spark, dedup_keys_stream(events), "t_dedup_redeliver", SF_DIR,
+        output_mode="append",
     )
     want = (
         load_table(spark, SF_DIR, "events")
@@ -132,7 +133,7 @@ def test_stream_stream_join_equals_batch(spark):
 
     stream = click_purchase_join_stream(read_events_stream(spark, SF_DIR))
     got = run_stream_to_df(
-        spark, stream, "t_ssjoin", output_mode="append"
+        spark, stream, "t_ssjoin", SF_DIR, output_mode="append"
     ).orderBy("purchase_id", "click_id")
 
     ev = load_table(spark, SF_DIR, "events")
@@ -184,12 +185,12 @@ def test_multibatch_stream_equals_batch_hourly(spark):
 
 
 def test_sink_reuse_returns_identical_results_without_rerun(spark):
-    """Always-on sink reuse (round 6): the first reuse_key call runs the
+    """Always-on sink reuse (round 6): the first call per fixture runs the
     stream and registers completion; the second returns the SAME rows from
     the completed sink — no new streaming query starts."""
     stream = hourly_agg_stream(read_events_stream(spark, SF_DIR))
     first = run_stream_to_df(
-        spark, stream, "t_reuse_hourly", reuse_key=SF_DIR
+        spark, stream, "t_reuse_hourly", SF_DIR
     ).orderBy("hour", "event_type").collect()
     sink = "t_reuse_hourly__" + re.sub(r"[^A-Za-z0-9]", "_", SF_DIR)
     memoized(spark, "stream", sink)  # first call registered completion
@@ -198,7 +199,7 @@ def test_sink_reuse_returns_identical_results_without_rerun(spark):
     # streaming query is ever started for this sink again
     stream2 = hourly_agg_stream(read_events_stream(spark, SF_DIR))
     second = run_stream_to_df(
-        spark, stream2, "t_reuse_hourly", reuse_key=SF_DIR
+        spark, stream2, "t_reuse_hourly", SF_DIR
     ).orderBy("hour", "event_type").collect()
     assert second == first
     assert all(q.name != sink for q in spark.streams.active)
@@ -212,13 +213,13 @@ def test_sink_reuse_is_session_scoped_not_app_scoped(spark):
     the stream in the new session and return identical rows."""
     stream = hourly_agg_stream(read_events_stream(spark, SF_DIR))
     first = run_stream_to_df(
-        spark, stream, "t_reuse_scope", reuse_key=SF_DIR
+        spark, stream, "t_reuse_scope", SF_DIR
     ).orderBy("hour", "event_type").collect()
 
     fresh = spark.newSession()
     stream2 = hourly_agg_stream(read_events_stream(fresh, SF_DIR))
     second = run_stream_to_df(
-        fresh, stream2, "t_reuse_scope", reuse_key=SF_DIR
+        fresh, stream2, "t_reuse_scope", SF_DIR
     ).orderBy("hour", "event_type").collect()
     assert second == first
 
@@ -243,7 +244,8 @@ def test_cdc_stream_recovers_from_checkpoint_after_crash(spark, tmp_path):
         _CDC_TOMBSTONE,
         _CDC_UNSNAPPED_MOD,
     )
-    from datafusion_tpch_spark.queries.stream import _split4_layout
+    from datafusion_tpch_spark.queries.stream import _events_split4
+    from datafusion_tpch_spark.streaming.runner import file_feed
     from datafusion_tpch_spark.streaming.maintenance import (
         cdc_compact,
         cdc_finalize,
@@ -267,16 +269,9 @@ def test_cdc_stream_recovers_from_checkpoint_after_crash(spark, tmp_path):
         return snaps[-1] if snaps else None
 
     def make_feed():
-        path = _split4_layout(spark, SF_DIR)
-        schema = spark.read.parquet(path).schema
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-            .filter(
-                (F.col("ts") >= cut)
-                & (F.col("user_id") % _CDC_QUIET_MOD != _CDC_QUIET_REM)
-            )
+        return file_feed(spark, _events_split4(spark, SF_DIR)).filter(
+            (F.col("ts") >= cut)
+            & (F.col("user_id") % _CDC_QUIET_MOD != _CDC_QUIET_REM)
         )
 
     def run_phase(holder, crash_on_nth_nonempty=None):
@@ -371,6 +366,7 @@ def test_scd2_stream_recovers_from_checkpoint_after_crash(spark, tmp_path):
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from datafusion_tpch_spark.queries.stream import _timeordered_week_layout
+    from datafusion_tpch_spark.streaming.runner import file_feed
     from datafusion_tpch_spark.streaming.maintenance import (
         scd2_apply_batch,
         scd2_empty_state,
@@ -393,13 +389,7 @@ def test_scd2_stream_recovers_from_checkpoint_after_crash(spark, tmp_path):
         return snaps[-1] if snaps else None
 
     def make_feed():
-        layout = _timeordered_week_layout(spark, SF_DIR)
-        schema = spark.read.parquet(layout).schema
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(layout)
-        )
+        return file_feed(spark, _timeordered_week_layout(spark, SF_DIR))
 
     def run_phase(holder, crash_on_nth_nonempty=None):
         seen, crashed = [], {}
