@@ -172,6 +172,71 @@ def decode_image(content: bytes) -> np.ndarray:
     )
 
 
+# --- the one row kernel and the encoded-asset table -------------------------
+
+
+def _row_kernel(df: DataFrame, schema: str, fn) -> DataFrame:
+    """The one per-row Python kernel of this module: ``df.mapInPandas``
+    over Arrow batches, where ``fn(row)`` (an ``itertuples`` row) yields
+    that row's output tuples — one for a 1:1 kernel, none or several for
+    a fan-out (frame sampling).  ``schema`` is a flat DDL string
+    (``"name type, ..."``); the pandas column labels are its field names,
+    so each kernel writes its output schema once."""
+    columns = [field.split()[0] for field in schema.split(",")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            for row in pdf.itertuples(index=False):
+                out.extend(fn(row))
+            yield pd.DataFrame(out, columns=columns)
+
+    return df.mapInPandas(run, schema)
+
+
+ASSET_SCHEMA = "asset_id long, modality string, mime string, content binary"
+
+
+def _asset_table(docs: DataFrame, modality: str, mime: str, blob_of) -> DataFrame:
+    """The encoded-asset table of every ``documents_as_*_assets``: per
+    document one ``(doc_id, modality, mime, blob_of(doc_id))`` row, the
+    blob a genuine file encoded inside the Arrow kernel — born
+    distributed, never on the driver."""
+
+    def encode(row):
+        aid = int(row.doc_id)
+        yield aid, modality, mime, blob_of(aid)
+
+    return _row_kernel(docs.select("doc_id"), ASSET_SCHEMA, encode)
+
+
+# --- closed-form rasters ----------------------------------------------------
+#
+# Every synthetic raster below is SQL-recomputable: the oracle texts replay
+# the same closed forms over ``range`` instead of decoding a byte.
+
+# Knuth multiplicative-hash constant: sample i of asset a is (a*K + i) % m.
+_PX_K = 2654435761
+
+
+def _flat_raster(aid: int, n: int, m: int = 256) -> np.ndarray:
+    """The flat raster ``v[i] = (aid*K + i) % m`` for i < n (int64)."""
+    return (aid * _PX_K + np.arange(n, dtype=np.int64)) % m
+
+
+def _block_raster(aid: int, w: int, h: int, cell: int,
+                  offset: int = 0) -> np.ndarray:
+    """(h, w) uint8 gray raster CONSTANT PER ``cell``×``cell`` GRID CELL:
+    pixel (y, x) = (aid*K + offset + (y//cell)*nbx + x//cell) % 256 with
+    nbx = ceil(w / cell).  Block-constant rasters have exactly-integer DCT
+    coefficients (DC = 8·(c−128), AC = 0), so JPEG round trips are
+    bit-exact and the oracle sums over the block grid."""
+    nbx = (w + cell - 1) // cell
+    bi = np.arange(h, dtype=np.int64)[:, None] // cell
+    bj = np.arange(w, dtype=np.int64)[None, :] // cell
+    return ((aid * _PX_K + offset + bi * nbx + bj) % 256).astype(np.uint8)
+
+
 def sample_frames(
     assets: DataFrame, every_ms: int = 1000, frame_bytes: int = 64
 ) -> DataFrame:
@@ -184,27 +249,20 @@ def sample_frames(
     bounded by duration metadata — is the real thing.  Production swaps the
     slice for an ffmpeg keyframe seek."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                if row.duration_ms is None or row.content is None:
-                    continue
-                # ceil: sample at every t = i*every_ms with t < duration
-                # (the old floor dropped the last partial interval's frame
-                # whenever duration wasn't an exact multiple)
-                n_frames = max(-(-int(row.duration_ms) // every_ms), 1)
-                blob = bytes(row.content)
-                for i in range(n_frames):
-                    off = (i * frame_bytes) % max(len(blob), 1)
-                    frame = blob[off : off + frame_bytes]
-                    out.append((row.asset_id, i, i * every_ms, frame))
-            yield pd.DataFrame(
-                out, columns=["asset_id", "frame_idx", "ts_ms", "frame"]
-            )
+    def frames(row):
+        if row.duration_ms is None or row.content is None:
+            return
+        # ceil: sample at every t = i*every_ms with t < duration
+        # (the old floor dropped the last partial interval's frame
+        # whenever duration wasn't an exact multiple)
+        n_frames = max(-(-int(row.duration_ms) // every_ms), 1)
+        blob = bytes(row.content)
+        for i in range(n_frames):
+            off = (i * frame_bytes) % max(len(blob), 1)
+            yield row.asset_id, i, i * every_ms, blob[off : off + frame_bytes]
 
-    return assets.mapInPandas(
-        run, "asset_id long, frame_idx int, ts_ms long, frame binary"
+    return _row_kernel(
+        assets, "asset_id long, frame_idx int, ts_ms long, frame binary", frames
     )
 
 
@@ -222,9 +280,6 @@ def documents_as_assets(docs: DataFrame) -> DataFrame:
     )
 
 
-# Knuth multiplicative-hash constant: pixel i of asset a is (a*K + i) % 256.
-_PX_K = 2654435761
-
 PIXEL_STATS_SCHEMA = (
     "asset_id long, n_bytes long, mean_px double, max_px long, sum_px long"
 )
@@ -239,27 +294,12 @@ def asset_pixel_stats(assets: DataFrame) -> DataFrame:
     kernel, features out).  ``n_bytes`` measures the actual blob, proving
     the binary column itself crossed Arrow intact."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                n = int(row.width) * int(row.height)
-                px = (int(row.asset_id) * _PX_K + np.arange(n, dtype=np.int64)) % 256
-                out.append(
-                    (
-                        row.asset_id,
-                        len(row.content),
-                        float(px.mean()),
-                        int(px.max()),
-                        int(px.sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["asset_id", "n_bytes", "mean_px", "max_px", "sum_px"],
-            )
+    def stats(row):
+        px = _flat_raster(int(row.asset_id), int(row.width) * int(row.height))
+        yield (row.asset_id, len(row.content), float(px.mean()),
+               int(px.max()), int(px.sum()))
 
-    return assets.mapInPandas(run, PIXEL_STATS_SCHEMA)
+    return _row_kernel(assets, PIXEL_STATS_SCHEMA, stats)
 
 
 def documents_as_pgm_assets(docs: DataFrame) -> DataFrame:
@@ -268,23 +308,11 @@ def documents_as_pgm_assets(docs: DataFrame) -> DataFrame:
     — SQL-recomputable) ENCODED AS BINARY PGM inside the Arrow kernel.
     The blob is a genuine image file, born distributed."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                aid = int(row.doc_id)
-                w, h = 8 + aid % 9, 8 + aid % 7
-                px = (aid * _PX_K + np.arange(h * w, dtype=np.int64)) % 256
-                img = px.astype(np.uint8).reshape(h, w)
-                out.append((aid, "image", "image/x-portable-graymap",
-                            encode_pgm(img)))
-            yield pd.DataFrame(
-                out, columns=["asset_id", "modality", "mime", "content"]
-            )
+    def pgm(aid: int) -> bytes:
+        w, h = 8 + aid % 9, 8 + aid % 7
+        return encode_pgm(_flat_raster(aid, h * w).astype(np.uint8).reshape(h, w))
 
-    return docs.select("doc_id").mapInPandas(
-        run, "asset_id long, modality string, mime string, content binary"
-    )
+    return _asset_table(docs, "image", "image/x-portable-graymap", pgm)
 
 
 DECODED_STATS_SCHEMA = (
@@ -301,26 +329,15 @@ def decoded_image_stats(assets: DataFrame) -> DataFrame:
     column → Arrow → header parse → raster decode → features, with every
     output SQL-recomputable from the closed-form raster."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                img = decode_image(row.content)
-                if img.ndim == 3:
-                    img = img.mean(axis=2).astype(np.uint8)
-                px = img.astype(np.int64)
-                out.append(
-                    (row.asset_id, len(row.content),
-                     img.shape[1], img.shape[0],
-                     float(px.mean()), int(px.max()), int(px.sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["asset_id", "n_bytes", "width", "height",
-                         "mean_px", "max_px", "sum_px"],
-            )
+    def stats(row):
+        img = decode_image(row.content)
+        if img.ndim == 3:
+            img = img.mean(axis=2).astype(np.uint8)
+        px = img.astype(np.int64)
+        yield (row.asset_id, len(row.content), img.shape[1], img.shape[0],
+               float(px.mean()), int(px.max()), int(px.sum()))
 
-    return assets.mapInPandas(run, DECODED_STATS_SCHEMA)
+    return _row_kernel(assets, DECODED_STATS_SCHEMA, stats)
 
 
 def documents_as_audio(docs: DataFrame) -> DataFrame:
@@ -341,48 +358,33 @@ AUDIO_ENERGY_SCHEMA = (
 )
 
 
-def audio_frame_energy(assets: DataFrame, frame_bytes: int = 64) -> DataFrame:
+_AUDIO_FRAME_BYTES = 64
+
+
+def audio_frame_energy(assets: DataFrame) -> DataFrame:
     """Framed audio-energy extraction via Arrow-batched mapInPandas: the
-    blob is read as unsigned 8-bit PCM, split into ``frame_bytes``-sample
-    frames (last frame ragged), and each frame's energy is the
+    blob is read as unsigned 8-bit PCM, split into 64-sample frames
+    (last frame ragged), and each frame's energy is the
     integer-exact Σ(s−128)² — the VAD/silence-trim primitive.  Unlike the
     pixel-stats stub, the kernel computes on the REAL blob bytes
     (np.frombuffer over the Arrow binary column), so the gate proves
     bytes→numpy→features end to end.  Ties in the peak frame break to the
     earliest frame (np.argmax first-hit).  One narrow pass, no shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                b = np.frombuffer(bytes(row.content), dtype=np.uint8)
-                d = b.astype(np.int64) - 128
-                sq = d * d
-                n = len(b)
-                n_frames = -(-n // frame_bytes) if n else 0
-                energies = np.add.reduceat(
-                    sq, np.arange(0, n, frame_bytes)
-                ) if n else np.array([], dtype=np.int64)
-                peak = int(np.argmax(energies)) if n_frames else 0
-                out.append(
-                    (
-                        row.asset_id,
-                        n,
-                        n_frames,
-                        int(sq.sum()),
-                        peak,
-                        int(energies[peak]) if n_frames else 0,
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "asset_id", "n_samples", "n_frames", "total_energy",
-                    "peak_frame", "peak_energy",
-                ],
-            )
+    def energy(row):
+        b = np.frombuffer(bytes(row.content), dtype=np.uint8)
+        d = b.astype(np.int64) - 128
+        sq = d * d
+        n = len(b)
+        n_frames = -(-n // _AUDIO_FRAME_BYTES) if n else 0
+        energies = np.add.reduceat(
+            sq, np.arange(0, n, _AUDIO_FRAME_BYTES)
+        ) if n else np.array([], dtype=np.int64)
+        peak = int(np.argmax(energies)) if n_frames else 0
+        yield (row.asset_id, n, n_frames, int(sq.sum()), peak,
+               int(energies[peak]) if n_frames else 0)
 
-    return assets.mapInPandas(run, AUDIO_ENERGY_SCHEMA)
+    return _row_kernel(assets, AUDIO_ENERGY_SCHEMA, energy)
 
 
 # --------------------------------------------------------------- WAV codec
@@ -477,29 +479,17 @@ def documents_as_wav_assets(docs: DataFrame) -> DataFrame:
     ``fmt `` and ``data`` so downstream decoders must really walk the
     chunk list.  The blob is a playable audio file, born distributed."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                aid = int(row.doc_id)
-                n = 200 + aid % 113
-                s = (
-                    aid * _WAV_SAMPLE_K_A
-                    + np.arange(n, dtype=np.int64) * _WAV_SAMPLE_K_B
-                ) % 65536 - 32768
-                rate = 8000 + (aid % 3) * 4000
-                note = (b"note", b"x" * (1 + aid % 5))
-                out.append(
-                    (aid, "audio", "audio/wav",
-                     encode_wav_pcm16(s, rate, extra_chunks=(note,)))
-                )
-            yield pd.DataFrame(
-                out, columns=["asset_id", "modality", "mime", "content"]
-            )
+    def wav(aid: int) -> bytes:
+        n = 200 + aid % 113
+        s = (
+            aid * _WAV_SAMPLE_K_A
+            + np.arange(n, dtype=np.int64) * _WAV_SAMPLE_K_B
+        ) % 65536 - 32768
+        rate = 8000 + (aid % 3) * 4000
+        note = (b"note", b"x" * (1 + aid % 5))
+        return encode_wav_pcm16(s, rate, extra_chunks=(note,))
 
-    return docs.select("doc_id").mapInPandas(
-        run, "asset_id long, modality string, mime string, content binary"
-    )
+    return _asset_table(docs, "audio", "audio/wav", wav)
 
 
 WAV_STATS_SCHEMA = (
@@ -516,23 +506,13 @@ def decoded_wav_stats(assets: DataFrame) -> DataFrame:
     proves encode → binary column → Arrow → chunk walk → PCM decode →
     features, every output SQL-recomputable from the closed form."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                rate, s = decode_wav(row.content)
-                v = s.astype(np.int64)
-                out.append(
-                    (row.asset_id, rate, len(v),
-                     int((v * v).sum()), int(np.abs(v).max()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["asset_id", "sample_rate", "n_samples",
-                         "energy", "peak"],
-            )
+    def stats(row):
+        rate, s = decode_wav(row.content)
+        v = s.astype(np.int64)
+        yield (row.asset_id, rate, len(v), int((v * v).sum()),
+               int(np.abs(v).max()))
 
-    return assets.mapInPandas(run, WAV_STATS_SCHEMA)
+    return _row_kernel(assets, WAV_STATS_SCHEMA, stats)
 
 
 # --------------------------------------------------------------- PNG codec
@@ -1956,9 +1936,6 @@ def _jpg_idct_planes(coefs, comps, fh, fw, max_h, max_v) -> np.ndarray:
     raise NotImplementedError(f"JPEG with {ncomp} components")
 
 
-_PNG_PX_K = 2654435761  # raster closed form: v[i] = (id*K + i) % 256
-
-
 def documents_as_png_assets(docs: DataFrame) -> DataFrame:
     """Compressed-format asset table: per document, a deterministic
     (8+id%7) × (8+id%9) RGB raster (``v[i] = (id*K + i) % 256`` over the
@@ -1967,30 +1944,28 @@ def documents_as_png_assets(docs: DataFrame) -> DataFrame:
     exercises all five scanline filters.  The blob is a real compressed
     image file, born distributed."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                aid = int(row.doc_id)
-                w, h = 8 + aid % 9, 8 + aid % 7
-                v = (aid * _PNG_PX_K + np.arange(h * w * 3, dtype=np.int64)) % 256
-                img = v.astype(np.uint8).reshape(h, w, 3)
-                out.append((aid, "image", "image/png",
-                            encode_png(img, filter_per_line=True)))
-            yield pd.DataFrame(
-                out, columns=["asset_id", "modality", "mime", "content"]
-            )
+    def png(aid: int) -> bytes:
+        w, h = 8 + aid % 9, 8 + aid % 7
+        img = _flat_raster(aid, h * w * 3).astype(np.uint8).reshape(h, w, 3)
+        return encode_png(img, filter_per_line=True)
 
-    return docs.select("doc_id").mapInPandas(
-        run, "asset_id long, modality string, mime string, content binary"
-    )
+    return _asset_table(docs, "image", "image/png", png)
 
 
-# Closed-form 16-color palette for the paletted gate: channel c of entry
-# p is (p*m_c + b_c) % 256 — SQL-recomputable without a palette table.
+# Closed-form 16-color palette of the paletted gates (PNG type 3, GIF):
+# channel c of entry p is (p*m_c + b_c) % 256 with m = (37, 59, 83),
+# b = (11, 7, 3) — SQL-recomputable without a palette table.
 _PNG_PAL_N = 16
-_PNG_PAL_MULS = (37, 59, 83)
-_PNG_PAL_ADDS = (11, 7, 3)
+_PALETTE = np.stack(
+    [(np.arange(_PNG_PAL_N) * m + b) % 256
+     for m, b in zip((37, 59, 83), (11, 7, 3))],
+    axis=1,
+).astype(np.uint8)
+
+
+def _index_raster(aid: int, w: int, h: int) -> np.ndarray:
+    """(h, w) uint8 palette-index raster ``idx[i] = (aid*K + i) % 16``."""
+    return _flat_raster(aid, h * w, _PNG_PAL_N).astype(np.uint8).reshape(h, w)
 
 
 def documents_as_palette_png_assets(docs: DataFrame) -> DataFrame:
@@ -1998,31 +1973,12 @@ def documents_as_palette_png_assets(docs: DataFrame) -> DataFrame:
     (8+id%5) × (8+id%8) INDEX raster (``idx[i] = (id*K + i) % 16``) and
     the closed-form 16-color palette, encoded as a genuine paletted PNG
     (PLTE chunk + filtered index scanlines, ``filter_per_line=True``)."""
-    pal = np.stack(
-        [
-            (np.arange(_PNG_PAL_N) * m + b) % 256
-            for m, b in zip(_PNG_PAL_MULS, _PNG_PAL_ADDS)
-        ],
-        axis=1,
-    ).astype(np.uint8)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                aid = int(row.doc_id)
-                w, h = 8 + aid % 8, 8 + aid % 5
-                v = (aid * _PNG_PX_K + np.arange(h * w, dtype=np.int64)) % _PNG_PAL_N
-                idx = v.astype(np.uint8).reshape(h, w)
-                out.append((aid, "image", "image/png",
-                            encode_png_palette(idx, pal, filter_per_line=True)))
-            yield pd.DataFrame(
-                out, columns=["asset_id", "modality", "mime", "content"]
-            )
+    def png(aid: int) -> bytes:
+        idx = _index_raster(aid, 8 + aid % 8, 8 + aid % 5)
+        return encode_png_palette(idx, _PALETTE, filter_per_line=True)
 
-    return docs.select("doc_id").mapInPandas(
-        run, "asset_id long, modality string, mime string, content binary"
-    )
+    return _asset_table(docs, "image", "image/png", png)
 
 
 def documents_as_png16_assets(docs: DataFrame) -> DataFrame:
@@ -2032,23 +1988,13 @@ def documents_as_png16_assets(docs: DataFrame) -> DataFrame:
     SQL-recomputable) encoded as a genuine 16-bit PNG
     (``filter_per_line=True``: the byte-level filters run at bpp=6)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                aid = int(row.doc_id)
-                w, h = 8 + aid % 6, 8 + aid % 10
-                v = (aid * _PNG_PX_K + np.arange(h * w * 3, dtype=np.int64)) % 65536
-                img = v.astype(np.uint16).reshape(h, w, 3)
-                out.append((aid, "image", "image/png",
-                            encode_png(img, filter_per_line=True)))
-            yield pd.DataFrame(
-                out, columns=["asset_id", "modality", "mime", "content"]
-            )
+    def png(aid: int) -> bytes:
+        w, h = 8 + aid % 6, 8 + aid % 10
+        v = _flat_raster(aid, h * w * 3, 65536)
+        return encode_png(v.astype(np.uint16).reshape(h, w, 3),
+                          filter_per_line=True)
 
-    return docs.select("doc_id").mapInPandas(
-        run, "asset_id long, modality string, mime string, content binary"
-    )
+    return _asset_table(docs, "image", "image/png", png)
 
 
 def documents_as_adam7_png_assets(docs: DataFrame) -> DataFrame:
@@ -2059,24 +2005,12 @@ def documents_as_adam7_png_assets(docs: DataFrame) -> DataFrame:
     present for these dims, each pass filtering independently with the
     full five-type rotation)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                aid = int(row.doc_id)
-                w, h = 8 + aid % 13, 8 + aid % 3
-                v = (aid * _PNG_PX_K + np.arange(h * w * 3, dtype=np.int64)) % 256
-                img = v.astype(np.uint8).reshape(h, w, 3)
-                out.append((aid, "image", "image/png",
-                            encode_png(img, filter_per_line=True,
-                                       interlace=True)))
-            yield pd.DataFrame(
-                out, columns=["asset_id", "modality", "mime", "content"]
-            )
+    def png(aid: int) -> bytes:
+        w, h = 8 + aid % 13, 8 + aid % 3
+        img = _flat_raster(aid, h * w * 3).astype(np.uint8).reshape(h, w, 3)
+        return encode_png(img, filter_per_line=True, interlace=True)
 
-    return docs.select("doc_id").mapInPandas(
-        run, "asset_id long, modality string, mime string, content binary"
-    )
+    return _asset_table(docs, "image", "image/png", png)
 
 
 def documents_as_gif_assets(docs: DataFrame) -> DataFrame:
@@ -2084,29 +2018,10 @@ def documents_as_gif_assets(docs: DataFrame) -> DataFrame:
     (8+id%12) INDEX raster (``idx[i] = (id*K + i) % 16``) and the same
     closed-form 16-color palette as the paletted-PNG gate, encoded as a
     genuine LZW-compressed GIF87a."""
-    pal = np.stack(
-        [
-            (np.arange(_PNG_PAL_N) * m + b) % 256
-            for m, b in zip(_PNG_PAL_MULS, _PNG_PAL_ADDS)
-        ],
-        axis=1,
-    ).astype(np.uint8)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                aid = int(row.doc_id)
-                w, h = 8 + aid % 12, 8 + aid % 4
-                v = (aid * _PNG_PX_K + np.arange(h * w, dtype=np.int64)) % _PNG_PAL_N
-                idx = v.astype(np.uint8).reshape(h, w)
-                out.append((aid, "image", "image/gif", encode_gif(idx, pal)))
-            yield pd.DataFrame(
-                out, columns=["asset_id", "modality", "mime", "content"]
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        run, "asset_id long, modality string, mime string, content binary"
+    return _asset_table(
+        docs, "image", "image/gif",
+        lambda aid: encode_gif(_index_raster(aid, 8 + aid % 12, 8 + aid % 4),
+                               _PALETTE),
     )
 
 
@@ -2117,30 +2032,10 @@ def documents_as_gif89a_assets(docs: DataFrame) -> DataFrame:
     a genuine 89a stream — Graphic Control Extension block + four-pass
     interlaced row order — so the decoder's extension walk and
     de-interlace scatter are both on the hash path."""
-    pal = np.stack(
-        [
-            (np.arange(_PNG_PAL_N) * m + b) % 256
-            for m, b in zip(_PNG_PAL_MULS, _PNG_PAL_ADDS)
-        ],
-        axis=1,
-    ).astype(np.uint8)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                aid = int(row.doc_id)
-                w, h = 8 + aid % 11, 8 + aid % 6
-                v = (aid * _PNG_PX_K + np.arange(h * w, dtype=np.int64)) % _PNG_PAL_N
-                idx = v.astype(np.uint8).reshape(h, w)
-                out.append((aid, "image", "image/gif",
-                            encode_gif(idx, pal, interlace=True, gif89a=True)))
-            yield pd.DataFrame(
-                out, columns=["asset_id", "modality", "mime", "content"]
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        run, "asset_id long, modality string, mime string, content binary"
+    return _asset_table(
+        docs, "image", "image/gif",
+        lambda aid: encode_gif(_index_raster(aid, 8 + aid % 11, 8 + aid % 6),
+                               _PALETTE, interlace=True, gif89a=True),
     )
 
 
@@ -2157,92 +2052,58 @@ def decoded_gif_stats_positional(assets: DataFrame) -> DataFrame:
     row-major index (Σ (i+1)·(r+g+b)), putting the row order itself on
     the hash path."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                img = decode_gif(row.content)
-                px = img.astype(np.int64)
-                h, w = img.shape[:2]
-                wts = np.arange(1, h * w + 1, dtype=np.int64).reshape(h, w)
-                out.append(
-                    (row.asset_id, w, h, int(px.max()),
-                     int(px[:, :, 0].sum()), int(px[:, :, 1].sum()),
-                     int(px[:, :, 2].sum()),
-                     int((wts * px.sum(axis=2)).sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["asset_id", "width", "height", "max_px",
-                         "sum_r", "sum_g", "sum_b", "wsum"],
-            )
+    def stats(row):
+        img = decode_gif(row.content)
+        px = img.astype(np.int64)
+        h, w = img.shape[:2]
+        wts = np.arange(1, h * w + 1, dtype=np.int64).reshape(h, w)
+        yield (row.asset_id, w, h, int(px.max()),
+               int(px[:, :, 0].sum()), int(px[:, :, 1].sum()),
+               int(px[:, :, 2].sum()), int((wts * px.sum(axis=2)).sum()))
 
-    return assets.mapInPandas(run, GIF_POS_STATS_SCHEMA)
+    return _row_kernel(assets, GIF_POS_STATS_SCHEMA, stats)
 
 
-def decoded_gif_stats(assets: DataFrame) -> DataFrame:
-    """GIF twin of :func:`decoded_png_stats`: LZW-decompress + palette-map
-    each blob strictly from its bytes (``decode_gif``) and emit the same
-    integer-exact per-channel statistics."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                img = decode_gif(row.content)
-                px = img.astype(np.int64)
-                out.append(
-                    (row.asset_id, img.shape[1], img.shape[0],
-                     float(px.mean()), int(px.max()),
-                     int(px[:, :, 0].sum()), int(px[:, :, 1].sum()),
-                     int(px[:, :, 2].sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["asset_id", "width", "height", "mean_px",
-                         "max_px", "sum_r", "sum_g", "sum_b"],
-            )
-
-    return assets.mapInPandas(run, PNG_STATS_SCHEMA)
-
-
-PNG_STATS_SCHEMA = (
+RGB_STATS_SCHEMA = (
     "asset_id long, width int, height int, mean_px double, max_px long, "
     "sum_r long, sum_g long, sum_b long"
 )
 
 
-_JPG_PX_K = 2654435761  # block grid closed form: v(cell) = (id*K + cell) % 256
+def decoded_rgb_stats(assets: DataFrame, decode) -> DataFrame:
+    """REAL end-to-end compressed decode: ``decode`` (``decode_png``,
+    ``decode_gif`` or ``decode_jpeg``) parses each blob strictly from its
+    bytes into an (h, w, 3) raster, and the kernel emits integer-exact
+    per-channel statistics.  Paired with ``documents_as_png_assets`` this
+    proves encode → DEFLATE → binary column → Arrow → chunk walk →
+    inflate → unfilter (all five types) → features; with the GIF assets,
+    LZW decompress + palette map; with the 3-component JPEG assets,
+    entropy decode + dequantize + IDCT + chroma upsample + YCbCr→RGB.
+    Every output is SQL-recomputable from the closed-form raster, so a
+    decoder that mis-unfilters a single Paeth scanline hash-fails."""
+
+    def stats(row):
+        img = decode(row.content)
+        px = img.astype(np.int64)
+        yield (row.asset_id, img.shape[1], img.shape[0],
+               float(px.mean()), int(px.max()),
+               int(px[:, :, 0].sum()), int(px[:, :, 1].sum()),
+               int(px[:, :, 2].sum()))
+
+    return _row_kernel(assets, RGB_STATS_SCHEMA, stats)
 
 
 def documents_as_jpeg_assets(docs: DataFrame) -> DataFrame:
     """Baseline-JPEG asset table: per document, a deterministic grayscale
     raster of (6+id%17) × (6+id%13) pixels that is CONSTANT PER 8×8 BLOCK
-    GRID CELL — pixel (y, x) = (id*K + (y//8)*nbx + x//8) % 256 — encoded
-    as a genuine Huffman-coded JFIF stream with all-ones quant tables.
-    Block-constant rasters have exactly-integer DCT coefficients
-    (DC = 8·(c−128), AC = 0), so the decode is bit-exact and the oracle
-    recomputes pixel statistics closed-form over the block grid; the
-    non-multiple-of-8 dimensions force real partial-block padding on
-    every image."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                aid = int(row.doc_id)
-                w, h = 6 + aid % 17, 6 + aid % 13
-                nbx = (w + 7) // 8
-                bi = np.arange(h, dtype=np.int64)[:, None] // 8
-                bj = np.arange(w, dtype=np.int64)[None, :] // 8
-                img = ((aid * _JPG_PX_K + bi * nbx + bj) % 256).astype(np.uint8)
-                out.append((aid, "image", "image/jpeg", encode_jpeg(img)))
-            yield pd.DataFrame(
-                out, columns=["asset_id", "modality", "mime", "content"]
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        run, "asset_id long, modality string, mime string, content binary"
+    GRID CELL (``_block_raster``) — encoded as a genuine Huffman-coded
+    JFIF stream with all-ones quant tables, so the decode is bit-exact
+    and the oracle recomputes pixel statistics closed-form over the block
+    grid; the non-multiple-of-8 dimensions force real partial-block
+    padding on every image."""
+    return _asset_table(
+        docs, "image", "image/jpeg",
+        lambda aid: encode_jpeg(_block_raster(aid, 6 + aid % 17, 6 + aid % 13, 8)),
     )
 
 
@@ -2258,26 +2119,11 @@ def documents_as_jpeg420_assets(docs: DataFrame) -> DataFrame:
     stream genuinely interleaves 4 luma + 2 chroma Huffman-coded blocks
     per MCU."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                aid = int(row.doc_id)
-                w, h = 10 + aid % 23, 10 + aid % 19
-                nbx = (w + 15) // 16
-                bi = np.arange(h, dtype=np.int64)[:, None] // 16
-                bj = np.arange(w, dtype=np.int64)[None, :] // 16
-                g = ((aid * _JPG_PX_K + bi * nbx + bj) % 256).astype(np.uint8)
-                rgb = np.stack([g, g, g], axis=2)
-                out.append((aid, "image", "image/jpeg",
-                            encode_jpeg(rgb, subsampling="420")))
-            yield pd.DataFrame(
-                out, columns=["asset_id", "modality", "mime", "content"]
-            )
+    def jpeg(aid: int) -> bytes:
+        g = _block_raster(aid, 10 + aid % 23, 10 + aid % 19, 16)
+        return encode_jpeg(np.stack([g, g, g], axis=2), subsampling="420")
 
-    return docs.select("doc_id").mapInPandas(
-        run, "asset_id long, modality string, mime string, content binary"
-    )
+    return _asset_table(docs, "image", "image/jpeg", jpeg)
 
 
 GRAY_STATS_SCHEMA = (
@@ -2286,86 +2132,19 @@ GRAY_STATS_SCHEMA = (
 )
 
 
-def decoded_jpeg_rgb_stats(assets: DataFrame) -> DataFrame:
-    """RGB twin of :func:`decoded_jpeg_stats` for 3-component JPEGs:
-    entropy-decode + dequantize + IDCT + chroma upsample + YCbCr→RGB
-    strictly from blob bytes, emitting the same per-channel statistics as
-    the PNG/GIF gates."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                img = decode_jpeg(row.content)
-                px = img.astype(np.int64)
-                out.append(
-                    (row.asset_id, img.shape[1], img.shape[0],
-                     float(px.mean()), int(px.max()),
-                     int(px[:, :, 0].sum()), int(px[:, :, 1].sum()),
-                     int(px[:, :, 2].sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["asset_id", "width", "height", "mean_px",
-                         "max_px", "sum_r", "sum_g", "sum_b"],
-            )
-
-    return assets.mapInPandas(run, PNG_STATS_SCHEMA)
-
-
 def decoded_jpeg_stats(assets: DataFrame) -> DataFrame:
-    """Grayscale twin of :func:`decoded_png_stats`: Huffman-decode +
+    """Grayscale twin of :func:`decoded_rgb_stats`: Huffman-decode +
     dequantize + IDCT each JPEG strictly from its bytes (``decode_jpeg``)
     and emit integer-exact pixel statistics — a decoder that mis-reads a
     single Huffman code or mis-pads one partial block hash-fails."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                img = decode_jpeg(row.content)
-                px = img.astype(np.int64)
-                out.append(
-                    (row.asset_id, img.shape[1], img.shape[0],
-                     float(px.mean()), int(px.max()), int(px.sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["asset_id", "width", "height", "mean_px",
-                         "max_px", "sum_px"],
-            )
+    def stats(row):
+        img = decode_jpeg(row.content)
+        px = img.astype(np.int64)
+        yield (row.asset_id, img.shape[1], img.shape[0],
+               float(px.mean()), int(px.max()), int(px.sum()))
 
-    return assets.mapInPandas(run, GRAY_STATS_SCHEMA)
-
-
-def decoded_png_stats(assets: DataFrame) -> DataFrame:
-    """REAL end-to-end compressed decode: inflate + unfilter each PNG
-    strictly from its bytes (``decode_png``) and emit integer-exact
-    per-channel statistics.  Paired with ``documents_as_png_assets`` this
-    proves encode → DEFLATE → binary column → Arrow → chunk walk →
-    inflate → unfilter (all five types) → features, every output
-    SQL-recomputable from the closed-form raster — a decoder that
-    mis-unfilters a single Paeth scanline hash-fails."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                img = decode_png(row.content)
-                px = img.astype(np.int64)
-                out.append(
-                    (row.asset_id, img.shape[1], img.shape[0],
-                     float(px.mean()), int(px.max()),
-                     int(px[:, :, 0].sum()), int(px[:, :, 1].sum()),
-                     int(px[:, :, 2].sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["asset_id", "width", "height", "mean_px",
-                         "max_px", "sum_r", "sum_g", "sum_b"],
-            )
-
-    return assets.mapInPandas(run, PNG_STATS_SCHEMA)
+    return _row_kernel(assets, GRAY_STATS_SCHEMA, stats)
 
 
 # ------------------------------------------- perceptual-hash image dedup
@@ -2398,7 +2177,7 @@ def _ph_raster(doc_id: int) -> np.ndarray:
         (copy // 4 % 2) * _PH_D2,
         0,
     )
-    v = (scene * _PNG_PX_K + i + delta) % 256
+    v = (scene * _PX_K + i + delta) % 256
     return v.astype(np.uint8).reshape(h, w, 3)
 
 
@@ -2407,20 +2186,9 @@ def documents_as_scene_png_assets(docs: DataFrame) -> DataFrame:
     raster with its copy perturbation (``_ph_raster``) encoded as a genuine
     PNG (``filter_per_line=True``) in one Arrow kernel.  The blob is a real
     compressed image file, born distributed."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                aid = int(row.doc_id)
-                out.append((aid, "image", "image/png",
-                            encode_png(_ph_raster(aid), filter_per_line=True)))
-            yield pd.DataFrame(
-                out, columns=["asset_id", "modality", "mime", "content"]
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        run, "asset_id long, modality string, mime string, content binary"
+    return _asset_table(
+        docs, "image", "image/png",
+        lambda aid: encode_png(_ph_raster(aid), filter_per_line=True),
     )
 
 
@@ -2453,15 +2221,11 @@ def decoded_phash_signatures(assets: DataFrame) -> DataFrame:
     the raster never crosses an exchange (the 100 TB shape: blobs stay
     where they were scanned; only 3 small ints per image shuffle)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                hi, lo = dhash_64(decode_png(row.content))
-                out.append((row.asset_id, hi, lo))
-            yield pd.DataFrame(out, columns=["doc_id", "sig_hi", "sig_lo"])
+    def signature(row):
+        hi, lo = dhash_64(decode_png(row.content))
+        yield row.asset_id, hi, lo
 
-    return assets.mapInPandas(run, "doc_id long, sig_hi long, sig_lo long")
+    return _row_kernel(assets, "doc_id long, sig_hi long, sig_lo long", signature)
 
 
 def documents_as_jpeg_dri_assets(docs: DataFrame) -> DataFrame:
@@ -2472,27 +2236,12 @@ def documents_as_jpeg_dri_assets(docs: DataFrame) -> DataFrame:
     one to five real byte-aligned RSTn markers with predictor resets, and
     a third of them end on a short final restart run."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                aid = int(row.doc_id)
-                w, h = 17 + aid % 32, 17 + aid % 16
-                nbx = (w + 15) // 16
-                bi = np.arange(h, dtype=np.int64)[:, None] // 16
-                bj = np.arange(w, dtype=np.int64)[None, :] // 16
-                g = ((aid * _JPG_PX_K + bi * nbx + bj) % 256).astype(np.uint8)
-                rgb = np.stack([g, g, g], axis=2)
-                blob = encode_jpeg(rgb, subsampling="420",
-                                   restart_interval=1 + aid % 3)
-                out.append((aid, "image", "image/jpeg", blob))
-            yield pd.DataFrame(
-                out, columns=["asset_id", "modality", "mime", "content"]
-            )
+    def jpeg(aid: int) -> bytes:
+        g = _block_raster(aid, 17 + aid % 32, 17 + aid % 16, 16)
+        return encode_jpeg(np.stack([g, g, g], axis=2), subsampling="420",
+                           restart_interval=1 + aid % 3)
 
-    return docs.select("doc_id").mapInPandas(
-        run, "asset_id long, modality string, mime string, content binary"
-    )
+    return _asset_table(docs, "image", "image/jpeg", jpeg)
 
 
 # ----------------------------------------------------- AVI / MJPEG video
@@ -2654,76 +2403,52 @@ def documents_as_avi_assets(docs: DataFrame) -> DataFrame:
     real DRI-carrying baseline JPEG (interval ``1 + id % 3``), the
     container a real RIFF walk."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                aid = int(row.doc_id)
-                w, h = 17 + aid % 32, 17 + aid % 16
-                n = 2 + aid % 5
-                nbx = (w + 15) // 16
-                bi = np.arange(h, dtype=np.int64)[:, None] // 16
-                bj = np.arange(w, dtype=np.int64)[None, :] // 16
-                jpgs = []
-                for f in range(n):
-                    g = ((aid * _JPG_PX_K + f * 131 + bi * nbx + bj) % 256
-                         ).astype(np.uint8)
-                    jpgs.append(encode_jpeg(
-                        np.stack([g, g, g], axis=2), subsampling="420",
-                        restart_interval=1 + aid % 3,
-                    ))
-                out.append((aid, "video", "video/x-msvideo",
-                            encode_avi_mjpeg(jpgs, w, h)))
-            yield pd.DataFrame(
-                out, columns=["asset_id", "modality", "mime", "content"]
-            )
+    def avi(aid: int) -> bytes:
+        w, h = 17 + aid % 32, 17 + aid % 16
+        jpgs = []
+        for f in range(2 + aid % 5):
+            g = _block_raster(aid, w, h, 16, f * 131)
+            jpgs.append(encode_jpeg(
+                np.stack([g, g, g], axis=2), subsampling="420",
+                restart_interval=1 + aid % 3,
+            ))
+        return encode_avi_mjpeg(jpgs, w, h)
 
-    return docs.select("doc_id").mapInPandas(
-        run, "asset_id long, modality string, mime string, content binary"
-    )
+    return _asset_table(docs, "video", "video/x-msvideo", avi)
 
 
-def decoded_video_frame_stats(assets: DataFrame, stride: int = 2) -> DataFrame:
+# The frame-sampling kernels keep every second frame.
+_FRAME_STRIDE = 2
+
+
+def decoded_video_frame_stats(assets: DataFrame) -> DataFrame:
     """Container walk + FRAME SAMPLING + decode, fused in one Arrow
-    kernel: parse each AVI strictly from its bytes, keep every
-    ``stride``-th frame, decode ONLY the sampled frames (the whole point
+    kernel: parse each AVI strictly from its bytes, keep every second
+    frame, decode ONLY the sampled frames (the whole point
     of sampling — unsampled JPEG payloads are never entropy-decoded),
     and emit integer-exact per-frame channel stats.  Blobs never cross
     an exchange; one row per sampled frame leaves the kernel."""
-    if stride < 1:
-        raise ValueError(f"stride must be >= 1, got {stride}")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                w, h, frames = decode_avi_mjpeg(row.content)
-                for f in range(0, len(frames), stride):
-                    img = decode_jpeg(frames[f])
-                    if img.ndim != 3:
-                        raise ValueError(
-                            "AVI: expected a 3-component MJPEG frame"
-                        )
-                    if img.shape[0] != h or img.shape[1] != w:
-                        raise ValueError(
-                            "AVI: frame dims disagree with container header"
-                        )
-                    px = img.astype(np.int64)
-                    out.append(
-                        (row.asset_id, f, len(frames), w, h,
-                         int(px[:, :, 0].sum()), int(px[:, :, 1].sum()),
-                         int(px[:, :, 2].sum()))
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=["asset_id", "frame_idx", "n_frames", "width",
-                         "height", "sum_r", "sum_g", "sum_b"],
-            )
+    def frame_stats(row):
+        w, h, frames = decode_avi_mjpeg(row.content)
+        for f in range(0, len(frames), _FRAME_STRIDE):
+            img = decode_jpeg(frames[f])
+            if img.ndim != 3:
+                raise ValueError("AVI: expected a 3-component MJPEG frame")
+            if img.shape[0] != h or img.shape[1] != w:
+                raise ValueError(
+                    "AVI: frame dims disagree with container header"
+                )
+            px = img.astype(np.int64)
+            yield (row.asset_id, f, len(frames), w, h,
+                   int(px[:, :, 0].sum()), int(px[:, :, 1].sum()),
+                   int(px[:, :, 2].sum()))
 
-    return assets.mapInPandas(
-        run,
+    return _row_kernel(
+        assets,
         "asset_id long, frame_idx int, n_frames int, width int, height int,"
         " sum_r long, sum_g long, sum_b long",
+        frame_stats,
     )
 
 
@@ -2941,87 +2666,51 @@ def documents_as_gif_anim_assets(docs: DataFrame) -> DataFrame:
     (persist), even frames disposal 2 (restored to the background color
     after display).  All SQL-recomputable; the shared 16-color palette
     is the closed-form one of the paletted-PNG gate."""
-    pal = np.stack(
-        [
-            (np.arange(_PNG_PAL_N) * m + b) % 256
-            for m, b in zip(_PNG_PAL_MULS, _PNG_PAL_ADDS)
-        ],
-        axis=1,
-    ).astype(np.uint8)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                aid = int(row.doc_id)
-                w, h = 12 + aid % 8, 6 + aid % 5
-                n = 2 + aid % 4
-                y = np.arange(h, dtype=np.int64)[:, None]
-                xg = np.arange(w, dtype=np.int64)[None, :]
-                base = ((aid * _PNG_PX_K + y * w + xg) % 15).astype(np.uint8)
-                frames = [(0, 0, base)]
-                disposals = [1]
-                for g in range(1, n):
-                    xs = 3 * (g - 1)
-                    xb = np.arange(xs, xs + 3, dtype=np.int64)[None, :]
-                    vals = (aid * _PNG_PX_K + g * 97 + y * w + xb) % 15
-                    band = np.where((xb + y) % 3 == 0, 15, vals).astype(
-                        np.uint8
-                    )
-                    frames.append((xs, 0, band))
-                    disposals.append(2 if g % 2 == 0 else 1)
-                blob = encode_gif_anim(
-                    frames, pal, (w, h),
-                    transparent_idx=15, disposals=disposals,
-                )
-                out.append((aid, "image", "image/gif", blob))
-            yield pd.DataFrame(
-                out, columns=["asset_id", "modality", "mime", "content"]
-            )
+    def gif(aid: int) -> bytes:
+        w, h = 12 + aid % 8, 6 + aid % 5
+        base = _flat_raster(aid, h * w, 15).astype(np.uint8).reshape(h, w)
+        y = np.arange(h, dtype=np.int64)[:, None]
+        frames = [(0, 0, base)]
+        disposals = [1]
+        for g in range(1, 2 + aid % 4):
+            xs = 3 * (g - 1)
+            xb = np.arange(xs, xs + 3, dtype=np.int64)[None, :]
+            vals = (aid * _PX_K + g * 97 + y * w + xb) % 15
+            band = np.where((xb + y) % 3 == 0, 15, vals).astype(np.uint8)
+            frames.append((xs, 0, band))
+            disposals.append(2 if g % 2 == 0 else 1)
+        return encode_gif_anim(frames, _PALETTE, (w, h),
+                               transparent_idx=15, disposals=disposals)
 
-    return docs.select("doc_id").mapInPandas(
-        run, "asset_id long, modality string, mime string, content binary"
-    )
+    return _asset_table(docs, "image", "image/gif", gif)
 
 
-def decoded_gif_anim_stats(assets: DataFrame, stride: int = 2) -> DataFrame:
+def decoded_gif_anim_stats(assets: DataFrame) -> DataFrame:
     """Animated-GIF decode + composition + frame sampling in one Arrow
     kernel: every frame must be LZW-decoded (GIF frames are deltas over
     a persistent canvas, so unlike MJPEG there is no skip-decode), the
-    composed canvases at every ``stride``-th frame leave the kernel as
+    composed canvases at every second frame leave the kernel as
     integer-exact channel sums plus a position-weighted checksum —
     channel sums alone are permutation-invariant (the GIF interlace
     lesson), and a composition bug is exactly a permutation-shaped
     failure."""
-    if stride < 1:
-        raise ValueError(f"stride must be >= 1, got {stride}")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                w, h, frames = decode_gif_frames(row.content)
-                posw = (
-                    np.arange(h * w, dtype=np.int64).reshape(h, w) + 1
-                )
-                for f in range(0, len(frames), stride):
-                    px = frames[f].astype(np.int64)
-                    out.append(
-                        (row.asset_id, f, len(frames), w, h,
-                         int(px[:, :, 0].sum()), int(px[:, :, 1].sum()),
-                         int(px[:, :, 2].sum()),
-                         int((posw * px.sum(axis=2)).sum()))
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=["asset_id", "frame_idx", "n_frames", "width",
-                         "height", "sum_r", "sum_g", "sum_b", "poschk"],
-            )
+    def frame_stats(row):
+        w, h, frames = decode_gif_frames(row.content)
+        posw = np.arange(h * w, dtype=np.int64).reshape(h, w) + 1
+        for f in range(0, len(frames), _FRAME_STRIDE):
+            px = frames[f].astype(np.int64)
+            yield (row.asset_id, f, len(frames), w, h,
+                   int(px[:, :, 0].sum()), int(px[:, :, 1].sum()),
+                   int(px[:, :, 2].sum()),
+                   int((posw * px.sum(axis=2)).sum()))
 
-    return assets.mapInPandas(
-        run,
+    return _row_kernel(
+        assets,
         "asset_id long, frame_idx int, n_frames int, width int, height int,"
         " sum_r long, sum_g long, sum_b long, poschk long",
+        frame_stats,
     )
 
 
@@ -3402,24 +3091,10 @@ def documents_as_jpeg_prog_assets(docs: DataFrame) -> DataFrame:
     bit-exact; block-constant content makes every AC scan a pure
     EOB-run stream, exercising the EOBn decode path at scale."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                aid = int(row.doc_id)
-                w, h = 6 + aid % 19, 6 + aid % 11
-                nbx = (w + 7) // 8
-                bi = np.arange(h, dtype=np.int64)[:, None] // 8
-                bj = np.arange(w, dtype=np.int64)[None, :] // 8
-                img = ((aid * _JPG_PX_K + bi * nbx + bj) % 256).astype(np.uint8)
-                out.append((aid, "image", "image/jpeg",
-                            encode_jpeg_progressive(img)))
-            yield pd.DataFrame(
-                out, columns=["asset_id", "modality", "mime", "content"]
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        run, "asset_id long, modality string, mime string, content binary"
+    return _asset_table(
+        docs, "image", "image/jpeg",
+        lambda aid: encode_jpeg_progressive(
+            _block_raster(aid, 6 + aid % 19, 6 + aid % 11, 8)),
     )
 
 
@@ -3430,29 +3105,16 @@ def documents_as_stereo_wav_assets(docs: DataFrame) -> DataFrame:
     ``150 + id % 97`` frames at ``16000 + (id % 2) * 28100`` Hz, encoded
     as a genuine 2-channel RIFF/WAVE file (block align 4)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                aid = int(row.doc_id)
-                n = 150 + aid % 97
-                i = np.arange(n, dtype=np.int64)
-                left = (aid * _WAV_SAMPLE_K_A + i * _WAV_SAMPLE_K_B) % 65536 - 32768
-                right = (
-                    aid * _WAV_SAMPLE_K_A + i * _WAV_SAMPLE_K_B + 7919
-                ) % 65536 - 32768
-                st = np.stack([left, right], axis=1)
-                rate = 16000 + (aid % 2) * 28100
-                out.append(
-                    (aid, "audio", "audio/wav", encode_wav_pcm16(st, rate))
-                )
-            yield pd.DataFrame(
-                out, columns=["asset_id", "modality", "mime", "content"]
-            )
+    def wav(aid: int) -> bytes:
+        i = np.arange(150 + aid % 97, dtype=np.int64)
+        left = (aid * _WAV_SAMPLE_K_A + i * _WAV_SAMPLE_K_B) % 65536 - 32768
+        right = (
+            aid * _WAV_SAMPLE_K_A + i * _WAV_SAMPLE_K_B + 7919
+        ) % 65536 - 32768
+        rate = 16000 + (aid % 2) * 28100
+        return encode_wav_pcm16(np.stack([left, right], axis=1), rate)
 
-    return docs.select("doc_id").mapInPandas(
-        run, "asset_id long, modality string, mime string, content binary"
-    )
+    return _asset_table(docs, "audio", "audio/wav", wav)
 
 
 def decoded_stereo_wav_stats(assets: DataFrame) -> DataFrame:
@@ -3460,30 +3122,21 @@ def decoded_stereo_wav_stats(assets: DataFrame) -> DataFrame:
     interleave is the thing a stereo bug scrambles, so energies are per
     channel and a cross-channel integer covariance rides along."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                rate, s = decode_wav(row.content)
-                if s.ndim != 2 or s.shape[1] != 2:
-                    raise ValueError("expected a stereo stream")
-                ch = s.astype(np.int64)
-                out.append(
-                    (row.asset_id, rate, ch.shape[0],
-                     int((ch[:, 0] * ch[:, 0]).sum()),
-                     int((ch[:, 1] * ch[:, 1]).sum()),
-                     int((ch[:, 0] * ch[:, 1]).sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["asset_id", "sample_rate", "n_frames",
-                         "energy_l", "energy_r", "cross"],
-            )
+    def stats(row):
+        rate, s = decode_wav(row.content)
+        if s.ndim != 2 or s.shape[1] != 2:
+            raise ValueError("expected a stereo stream")
+        ch = s.astype(np.int64)
+        yield (row.asset_id, rate, ch.shape[0],
+               int((ch[:, 0] * ch[:, 0]).sum()),
+               int((ch[:, 1] * ch[:, 1]).sum()),
+               int((ch[:, 0] * ch[:, 1]).sum()))
 
-    return assets.mapInPandas(
-        run,
+    return _row_kernel(
+        assets,
         "asset_id long, sample_rate int, n_frames long, energy_l long,"
         " energy_r long, cross long",
+        stats,
     )
 
 
@@ -3500,24 +3153,15 @@ def documents_as_mixed_codec_assets(docs: DataFrame) -> DataFrame:
     pixel-derived signature) must therefore match ACROSS codecs, which is
     exactly what byte-level (hash-the-blob) dedup can never do."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                aid = int(row.doc_id)
-                img = _ph_raster(aid)
-                if aid % 2 == 0:
-                    blob, mime = encode_png(img, filter_per_line=True), "image/png"
-                else:
-                    blob, mime = encode_bmp(img), "image/bmp"
-                out.append((aid, "image", mime, blob))
-            yield pd.DataFrame(
-                out, columns=["asset_id", "modality", "mime", "content"]
-            )
+    def encode(row):
+        aid = int(row.doc_id)
+        img = _ph_raster(aid)
+        if aid % 2 == 0:
+            yield aid, "image", "image/png", encode_png(img, filter_per_line=True)
+        else:
+            yield aid, "image", "image/bmp", encode_bmp(img)
 
-    return docs.select("doc_id").mapInPandas(
-        run, "asset_id long, modality string, mime string, content binary"
-    )
+    return _row_kernel(docs.select("doc_id"), ASSET_SCHEMA, encode)
 
 
 def decoded_codec_signatures(assets: DataFrame) -> DataFrame:
@@ -3528,25 +3172,19 @@ def decoded_codec_signatures(assets: DataFrame) -> DataFrame:
     metadata, or a BMP reader that forgot the bottom-up row order or the
     4-byte row padding, produces a different signature and hash-fails."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                buf = bytes(row.content)
-                if buf[:8] == _PNG_SIG:
-                    codec = "png"
-                elif buf[:2] == b"BM":
-                    codec = "bmp"
-                else:
-                    raise ValueError(f"unexpected image magic {buf[:4]!r}")
-                hi, lo = dhash_64(decode_image(buf))
-                out.append((row.asset_id, codec, hi, lo))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "codec", "sig_hi", "sig_lo"]
-            )
+    def signature(row):
+        buf = bytes(row.content)
+        if buf[:8] == _PNG_SIG:
+            codec = "png"
+        elif buf[:2] == b"BM":
+            codec = "bmp"
+        else:
+            raise ValueError(f"unexpected image magic {buf[:4]!r}")
+        hi, lo = dhash_64(decode_image(buf))
+        yield row.asset_id, codec, hi, lo
 
-    return assets.mapInPandas(
-        run, "doc_id long, codec string, sig_hi long, sig_lo long"
+    return _row_kernel(
+        assets, "doc_id long, codec string, sig_hi long, sig_lo long", signature
     )
 
 
@@ -3574,30 +3212,22 @@ def _afp_samples(doc_id: int) -> tuple[np.ndarray, int]:
     return (amp * base).astype(np.int16), 8000 + (scene % 3) * 4000
 
 
+def _afp_wav(doc_id: int, samples_of) -> bytes:
+    """RIFF/WAVE file of one crawled audio copy: ``samples_of(doc_id)``
+    with a variable odd-sized ``note`` chunk before ``data``."""
+    s, rate = samples_of(doc_id)
+    note = (b"note", b"y" * (1 + doc_id % 3))
+    return encode_wav_pcm16(s, rate, extra_chunks=(note,))
+
+
 def documents_as_tone_wav_assets(docs: DataFrame) -> DataFrame:
     """Real-container audio assets for the fingerprint-dedup gate: per
     document the ``_afp_samples`` stream encoded as a genuine RIFF/WAVE
     file (with a variable odd-sized ``note`` chunk so decoders must walk
     the chunk list), born distributed in one Arrow kernel."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                aid = int(row.doc_id)
-                s, rate = _afp_samples(aid)
-                note = (b"note", b"y" * (1 + aid % 3))
-                out.append(
-                    (aid, "audio", "audio/wav",
-                     encode_wav_pcm16(s, rate, extra_chunks=(note,)))
-                )
-            yield pd.DataFrame(
-                out, columns=["asset_id", "modality", "mime", "content"]
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        run, "asset_id long, modality string, mime string, content binary"
-    )
+    return _asset_table(docs, "audio", "audio/wav",
+                        lambda aid: _afp_wav(aid, _afp_samples))
 
 
 def audio_fingerprint_32(samples: np.ndarray) -> int:
@@ -3623,15 +3253,11 @@ def decoded_audio_fingerprints(assets: DataFrame) -> DataFrame:
     shuffle).  The kernel never sees the gain that was applied at encode
     time; invariance is a property of the fingerprint, not a hint."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                _rate, s = decode_wav(row.content)
-                out.append((row.asset_id, audio_fingerprint_32(s)))
-            yield pd.DataFrame(out, columns=["doc_id", "fp"])
+    def fingerprint(row):
+        _rate, s = decode_wav(row.content)
+        yield row.asset_id, audio_fingerprint_32(s)
 
-    return assets.mapInPandas(run, "doc_id long, fp long")
+    return _row_kernel(assets, "doc_id long, fp long", fingerprint)
 
 
 def _afp_shifted_samples(doc_id: int) -> "tuple[np.ndarray, int]":
@@ -3654,24 +3280,8 @@ def documents_as_shifted_wav_assets(docs: DataFrame) -> DataFrame:
     frame offset + gain) encoded as a genuine RIFF/WAVE file, born
     distributed in one Arrow kernel."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                aid = int(row.doc_id)
-                s, rate = _afp_shifted_samples(aid)
-                note = (b"note", b"y" * (1 + aid % 3))
-                out.append(
-                    (aid, "audio", "audio/wav",
-                     encode_wav_pcm16(s, rate, extra_chunks=(note,)))
-                )
-            yield pd.DataFrame(
-                out, columns=["asset_id", "modality", "mime", "content"]
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        run, "asset_id long, modality string, mime string, content binary"
-    )
+    return _asset_table(docs, "audio", "audio/wav",
+                        lambda aid: _afp_wav(aid, _afp_shifted_samples))
 
 
 def decoded_audio_frame_bits(assets: DataFrame) -> DataFrame:
@@ -3682,23 +3292,17 @@ def decoded_audio_frame_bits(assets: DataFrame) -> DataFrame:
     fingerprint is.  Decode + energy + bits fused in ONE Arrow kernel;
     32 (doc, f, bit) ints per clip cross the exchange."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                _rate, s = decode_wav(row.content)
-                v = np.asarray(s).astype(np.int64)
-                if v.ndim != 1 or len(v) != _AFP_N:
-                    raise ValueError(
-                        f"frame bits expect {_AFP_N} mono samples"
-                    )
-                e = (v * v).reshape(_AFP_FRAMES, _AFP_FRAME_N).sum(axis=1)
-                bits = (e[:-1] > e[1:]).astype(np.int64)
-                for f, b in enumerate(bits):
-                    out.append((row.asset_id, f, int(b)))
-            yield pd.DataFrame(out, columns=["doc_id", "f", "bit"])
+    def frame_bits(row):
+        _rate, s = decode_wav(row.content)
+        v = np.asarray(s).astype(np.int64)
+        if v.ndim != 1 or len(v) != _AFP_N:
+            raise ValueError(f"frame bits expect {_AFP_N} mono samples")
+        e = (v * v).reshape(_AFP_FRAMES, _AFP_FRAME_N).sum(axis=1)
+        bits = (e[:-1] > e[1:]).astype(np.int64)
+        for f, b in enumerate(bits):
+            yield row.asset_id, f, int(b)
 
-    return assets.mapInPandas(run, "doc_id long, f int, bit int")
+    return _row_kernel(assets, "doc_id long, f int, bit int", frame_bits)
 
 
 def decoded_video_frame_signatures(assets: DataFrame) -> DataFrame:
@@ -3712,53 +3316,42 @@ def decoded_video_frame_signatures(assets: DataFrame) -> DataFrame:
     ``sig2 = Σ mean_c²`` (magnitude) — fused in ONE Arrow kernel so
     frames never cross an exchange (5 small ints per frame shuffle)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                w, h, frames = decode_avi_mjpeg(bytes(row.content))
-                n = len(frames)
-                for f, payload in enumerate(frames):
-                    img = decode_jpeg(payload)
-                    if img.ndim != 3:
-                        raise ValueError(
-                            "AVI: expected a 3-component MJPEG frame"
-                        )
-                    if img.shape[0] != h or img.shape[1] != w:
-                        raise ValueError(
-                            "AVI: frame dims disagree with container header"
-                        )
-                    px = img.astype(np.int64)
-                    gray = (px[:, :, 0] + 2 * px[:, :, 1] + px[:, :, 2]) // 4
-                    nby, nbx = (h + 15) // 16, (w + 15) // 16
-                    sig1 = sig2 = 0
-                    c = 0
-                    for by in range(nby):
-                        for bx in range(nbx):
-                            blk = gray[by * 16 : by * 16 + 16,
-                                       bx * 16 : bx * 16 + 16]
-                            m = int(blk.sum()) // blk.size
-                            sig1 += m * (c + 1)
-                            sig2 += m * m
-                            c += 1
-                    out.append((row.asset_id, f, n, w, h, sig1, sig2))
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "frame_idx", "n_frames",
-                         "width", "height", "sig1", "sig2"],
-            )
+    def frame_signatures(row):
+        w, h, frames = decode_avi_mjpeg(bytes(row.content))
+        n = len(frames)
+        for f, payload in enumerate(frames):
+            img = decode_jpeg(payload)
+            if img.ndim != 3:
+                raise ValueError("AVI: expected a 3-component MJPEG frame")
+            if img.shape[0] != h or img.shape[1] != w:
+                raise ValueError(
+                    "AVI: frame dims disagree with container header"
+                )
+            px = img.astype(np.int64)
+            gray = (px[:, :, 0] + 2 * px[:, :, 1] + px[:, :, 2]) // 4
+            nby, nbx = (h + 15) // 16, (w + 15) // 16
+            sig1 = sig2 = 0
+            c = 0
+            for by in range(nby):
+                for bx in range(nbx):
+                    blk = gray[by * 16 : by * 16 + 16, bx * 16 : bx * 16 + 16]
+                    m = int(blk.sum()) // blk.size
+                    sig1 += m * (c + 1)
+                    sig2 += m * m
+                    c += 1
+            yield row.asset_id, f, n, w, h, sig1, sig2
 
-    return assets.mapInPandas(
-        run,
+    return _row_kernel(
+        assets,
         "doc_id long, frame_idx int, n_frames int, width int, height int,"
         " sig1 long, sig2 long",
+        frame_signatures,
     )
 
 
 # ------------------------------------------- scale-invariant image dedup
 
 _SI_SCENES = 48
-_SI_K = 2654435761
 
 
 def _si_raster(doc_id: int) -> np.ndarray:
@@ -3773,7 +3366,7 @@ def _si_raster(doc_id: int) -> np.ndarray:
     scene, m = doc_id % _SI_SCENES, 2 + (doc_id // _SI_SCENES) % 3
     by = np.arange(8 * m, dtype=np.int64)[:, None] // m
     bx = np.arange(9 * m, dtype=np.int64)[None, :] // m
-    v = ((scene + 1) * (by * 9 + bx * 13 + 31) + scene * _SI_K) % 256
+    v = ((scene + 1) * (by * 9 + bx * 13 + 31) + scene * _PX_K) % 256
     g = np.broadcast_to(v, (8 * m, 9 * m)).astype(np.uint8)
     return np.stack([g, g, g], axis=2)
 
@@ -3783,19 +3376,9 @@ def documents_as_multires_png_assets(docs: DataFrame) -> DataFrame:
     ``_si_raster`` thumbnail encoded as a genuine PNG in one Arrow
     kernel — real compressed files at three different pixel sizes."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                aid = int(row.doc_id)
-                out.append((aid, "image", "image/png",
-                            encode_png(_si_raster(aid), filter_per_line=True)))
-            yield pd.DataFrame(
-                out, columns=["asset_id", "modality", "mime", "content"]
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        run, "asset_id long, modality string, mime string, content binary"
+    return _asset_table(
+        docs, "image", "image/png",
+        lambda aid: encode_png(_si_raster(aid), filter_per_line=True),
     )
 
 
@@ -3807,21 +3390,14 @@ def decoded_phash_dim_signatures(assets: DataFrame) -> DataFrame:
     are invariant under integer upscaling).  Decode and hash fused in
     one Arrow kernel, as everywhere in this family."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                img = decode_png(row.content)
-                hi, lo = dhash_64(img)
-                out.append(
-                    (row.asset_id, img.shape[1], img.shape[0], hi, lo)
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "width", "height", "sig_hi", "sig_lo"]
-            )
+    def signature(row):
+        img = decode_png(row.content)
+        hi, lo = dhash_64(img)
+        yield row.asset_id, img.shape[1], img.shape[0], hi, lo
 
-    return assets.mapInPandas(
-        run, "doc_id long, width int, height int, sig_hi long, sig_lo long"
+    return _row_kernel(
+        assets, "doc_id long, width int, height int, sig_hi long, sig_lo long",
+        signature,
     )
 
 
@@ -4504,7 +4080,10 @@ def strip_gps_exif(content: bytes) -> bytes:
 
 # -- fixture + kernels -------------------------------------------------------
 
-_EXIF_PX_K = 2654435761
+def _exif_base_jpeg(doc_id: int) -> bytes:
+    """The 8×8 gray baseline JPEG (``v[i] = (id*K + i) % 256``) every
+    EXIF fixture splices its APP1 block into."""
+    return encode_jpeg(_flat_raster(doc_id, 64).astype(np.uint8).reshape(8, 8))
 
 
 def _exif_fixture_meta(doc_id: int):
@@ -4542,29 +4121,19 @@ def documents_as_exif_jpeg_assets(docs: DataFrame) -> DataFrame:
     must survive).  All metadata is closed-form in doc_id, so the oracle
     replays it without parsing a byte."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                aid = int(row.doc_id)
-                v = (aid * _EXIF_PX_K + np.arange(64, dtype=np.int64)) % 256
-                blob = encode_jpeg(v.astype(np.uint8).reshape(8, 8))
-                meta = _exif_fixture_meta(aid)
-                if meta is not None:
-                    app1 = encode_exif_app1(
-                        make=meta["make"], model=meta["model"],
-                        orientation=meta["orientation"],
-                        taken_at=meta["taken_at"], gps=meta["gps"],
-                    )
-                    blob = insert_app1(blob, app1)
-                out.append((aid, "image", "image/jpeg", blob))
-            yield pd.DataFrame(
-                out, columns=["asset_id", "modality", "mime", "content"]
+    def jpeg(aid: int) -> bytes:
+        blob = _exif_base_jpeg(aid)
+        meta = _exif_fixture_meta(aid)
+        if meta is not None:
+            app1 = encode_exif_app1(
+                make=meta["make"], model=meta["model"],
+                orientation=meta["orientation"],
+                taken_at=meta["taken_at"], gps=meta["gps"],
             )
+            blob = insert_app1(blob, app1)
+        return blob
 
-    return docs.select("doc_id").mapInPandas(
-        run, "asset_id long, modality string, mime string, content binary"
-    )
+    return _asset_table(docs, "image", "image/jpeg", jpeg)
 
 
 def decoded_exif_metadata(assets: DataFrame) -> DataFrame:
@@ -4572,30 +4141,23 @@ def decoded_exif_metadata(assets: DataFrame) -> DataFrame:
     EXIF yields NULL columns (has_exif=false); GPS converts to decimal
     degrees in the fixed term order the oracle mirrors."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                m = parse_exif(row.content)
-                if m is None:
-                    out.append((int(row.asset_id), False, None, None,
-                                None, None, False, None, None))
-                else:
-                    has_gps = m["lat_dd"] is not None and m["lon_dd"] is not None
-                    out.append((int(row.asset_id), True, m["make"], m["model"],
-                                m["orientation"], m["taken_at"], has_gps,
-                                m["lat_dd"], m["lon_dd"]))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "has_exif", "make", "model",
-                              "orientation", "taken_at", "has_gps",
-                              "lat_dd", "lon_dd"],
-            ).astype({"orientation": "Int32"})
+    def metadata(row):
+        m = parse_exif(row.content)
+        if m is None:
+            yield (int(row.asset_id), False, None, None,
+                   None, None, False, None, None)
+        else:
+            has_gps = m["lat_dd"] is not None and m["lon_dd"] is not None
+            yield (int(row.asset_id), True, m["make"], m["model"],
+                   m["orientation"], m["taken_at"], has_gps,
+                   m["lat_dd"], m["lon_dd"])
 
-    return assets.mapInPandas(
-        run,
+    return _row_kernel(
+        assets,
         "doc_id long, has_exif boolean, make string, model string, "
         "orientation int, taken_at string, has_gps boolean, "
         "lat_dd double, lon_dd double",
+        metadata,
     )
 
 
@@ -4605,42 +4167,31 @@ def gps_scrub_verdicts(assets: DataFrame) -> DataFrame:
     the other EXIF fields survived, and the PIXELS are bit-identical —
     the scrub rewrites metadata, never the scan data."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                blob = bytes(row.content)
-                before = parse_exif(blob)
-                scrubbed = strip_gps_exif(blob)
-                after = parse_exif(scrubbed)
-                had_gps = (before is not None
-                           and before["lat_dd"] is not None)
-                gps_after = (after is not None
-                             and after["lat_dd"] is not None)
-                o_kept = (before is None and after is None) or (
-                    before is not None and after is not None
-                    and after["orientation"] == before["orientation"]
-                )
-                t_kept = (before is None and after is None) or (
-                    before is not None and after is not None
-                    and after["taken_at"] == before["taken_at"]
-                )
-                intact = bool(np.array_equal(decode_jpeg(blob),
-                                             decode_jpeg(scrubbed)))
-                out.append((int(row.asset_id), before is not None, had_gps,
-                            gps_after, o_kept, t_kept, intact,
-                            len(blob) - len(scrubbed)))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "had_exif", "had_gps", "gps_after",
-                              "orientation_kept", "taken_at_kept",
-                              "raster_intact", "bytes_removed"],
-            )
+    def verdict(row):
+        blob = bytes(row.content)
+        before = parse_exif(blob)
+        scrubbed = strip_gps_exif(blob)
+        after = parse_exif(scrubbed)
+        had_gps = before is not None and before["lat_dd"] is not None
+        gps_after = after is not None and after["lat_dd"] is not None
+        o_kept = (before is None and after is None) or (
+            before is not None and after is not None
+            and after["orientation"] == before["orientation"]
+        )
+        t_kept = (before is None and after is None) or (
+            before is not None and after is not None
+            and after["taken_at"] == before["taken_at"]
+        )
+        intact = bool(np.array_equal(decode_jpeg(blob), decode_jpeg(scrubbed)))
+        yield (int(row.asset_id), before is not None, had_gps, gps_after,
+               o_kept, t_kept, intact, len(blob) - len(scrubbed))
 
-    return assets.mapInPandas(
-        run,
+    return _row_kernel(
+        assets,
         "doc_id long, had_exif boolean, had_gps boolean, gps_after boolean, "
         "orientation_kept boolean, taken_at_kept boolean, "
         "raster_intact boolean, bytes_removed int",
+        verdict,
     )
 
 
@@ -4671,10 +4222,7 @@ def _thumb_fixture_meta(doc_id: int):
     if doc_id % 2 == 0:
         tgps = ("S", (doc_id % 45, (doc_id * 7) % 60, ((doc_id * 13) % 6000, 100)),
                 "W", (doc_id % 90, (doc_id * 9) % 60, ((doc_id * 17) % 6000, 100)))
-    thumb = bytes(
-        int(x) for x in
-        (doc_id * _EXIF_PX_K + np.arange(_THUMB_LEN, dtype=np.int64)) % 256
-    )
+    thumb = bytes(int(x) for x in _flat_raster(doc_id, _THUMB_LEN))
     return {"gps": gps, "tgps": tgps, "thumb": thumb}
 
 
@@ -4688,28 +4236,18 @@ def documents_as_thumb_jpeg_assets(docs: DataFrame) -> DataFrame:
     embedded thumbnail payload — the real camera layout — per
     ``_thumb_fixture_meta``'s closed-form GPS placement."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                aid = int(row.doc_id)
-                v = (aid * _EXIF_PX_K + np.arange(64, dtype=np.int64)) % 256
-                blob = encode_jpeg(v.astype(np.uint8).reshape(8, 8))
-                meta = _thumb_fixture_meta(aid)
-                if meta is not None:
-                    blob = insert_app1(blob, encode_exif_app1(
-                        make="CamCo", orientation=1 + aid % 8,
-                        gps=meta["gps"], thumbnail=meta["thumb"],
-                        thumb_gps=meta["tgps"],
-                    ))
-                out.append((aid, "image", "image/jpeg", blob))
-            yield pd.DataFrame(
-                out, columns=["asset_id", "modality", "mime", "content"]
-            )
+    def jpeg(aid: int) -> bytes:
+        blob = _exif_base_jpeg(aid)
+        meta = _thumb_fixture_meta(aid)
+        if meta is not None:
+            blob = insert_app1(blob, encode_exif_app1(
+                make="CamCo", orientation=1 + aid % 8,
+                gps=meta["gps"], thumbnail=meta["thumb"],
+                thumb_gps=meta["tgps"],
+            ))
+        return blob
 
-    return docs.select("doc_id").mapInPandas(
-        run, "asset_id long, modality string, mime string, content binary"
-    )
+    return _asset_table(docs, "image", "image/jpeg", jpeg)
 
 
 def thumb_scrub_verdicts(assets: DataFrame) -> DataFrame:
@@ -4718,43 +4256,33 @@ def thumb_scrub_verdicts(assets: DataFrame) -> DataFrame:
     relocated thumbnail bytes are intact, the pixels are bit-identical,
     and the shrinkage is exactly {b} bytes per GPS IFD removed."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                blob = bytes(row.content)
-                before0 = parse_exif(blob)
-                before1 = parse_exif_ifd1(blob)
-                scrubbed = strip_gps_exif(blob)
-                after0 = parse_exif(scrubbed)
-                after1 = parse_exif_ifd1(scrubbed)
-                had_gps0 = (before0 is not None
-                            and before0["lat_dd"] is not None)
-                had_tgps = before1 is not None and before1["has_gps"]
-                gps_after = (
-                    (after0 is not None and after0["lat_dd"] is not None)
-                    or (after1 is not None and after1["has_gps"])
-                )
-                thumb_kept = (before1 is None and after1 is None) or (
-                    before1 is not None and after1 is not None
-                    and after1["thumbnail"] == before1["thumbnail"]
-                )
-                intact = bool(np.array_equal(decode_jpeg(blob),
-                                             decode_jpeg(scrubbed)))
-                out.append((int(row.asset_id), before0 is not None,
-                            had_gps0, had_tgps, gps_after, thumb_kept,
-                            intact, len(blob) - len(scrubbed)))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "had_exif", "had_gps", "had_thumb_gps",
-                              "gps_after", "thumb_kept", "raster_intact",
-                              "bytes_removed"],
-            )
+    def verdict(row):
+        blob = bytes(row.content)
+        before0 = parse_exif(blob)
+        before1 = parse_exif_ifd1(blob)
+        scrubbed = strip_gps_exif(blob)
+        after0 = parse_exif(scrubbed)
+        after1 = parse_exif_ifd1(scrubbed)
+        had_gps0 = before0 is not None and before0["lat_dd"] is not None
+        had_tgps = before1 is not None and before1["has_gps"]
+        gps_after = (
+            (after0 is not None and after0["lat_dd"] is not None)
+            or (after1 is not None and after1["has_gps"])
+        )
+        thumb_kept = (before1 is None and after1 is None) or (
+            before1 is not None and after1 is not None
+            and after1["thumbnail"] == before1["thumbnail"]
+        )
+        intact = bool(np.array_equal(decode_jpeg(blob), decode_jpeg(scrubbed)))
+        yield (int(row.asset_id), before0 is not None, had_gps0, had_tgps,
+               gps_after, thumb_kept, intact, len(blob) - len(scrubbed))
 
-    return assets.mapInPandas(
-        run,
+    return _row_kernel(
+        assets,
         "doc_id long, had_exif boolean, had_gps boolean, "
         "had_thumb_gps boolean, gps_after boolean, thumb_kept boolean, "
         "raster_intact boolean, bytes_removed int",
+        verdict,
     )
 
 
@@ -4790,29 +4318,19 @@ def documents_as_full_exif_assets(docs: DataFrame) -> DataFrame:
     camera layout — IFD0 + GPS IFD + ExifIFD (with a chained InteropIFD)
     + IFD1 thumbnail (with its own GPS) — per ``_full_fixture_meta``."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                aid = int(row.doc_id)
-                v = (aid * _EXIF_PX_K + np.arange(64, dtype=np.int64)) % 256
-                blob = encode_jpeg(v.astype(np.uint8).reshape(8, 8))
-                meta = _full_fixture_meta(aid)
-                if meta is not None:
-                    blob = insert_app1(blob, encode_exif_app1(
-                        make="CamCo", orientation=1 + aid % 8,
-                        gps=meta["gps"], thumbnail=meta["thumb"],
-                        thumb_gps=meta["tgps"],
-                        exif_ifd=meta["exif_ifd"], interop=meta["interop"],
-                    ))
-                out.append((aid, "image", "image/jpeg", blob))
-            yield pd.DataFrame(
-                out, columns=["asset_id", "modality", "mime", "content"]
-            )
+    def jpeg(aid: int) -> bytes:
+        blob = _exif_base_jpeg(aid)
+        meta = _full_fixture_meta(aid)
+        if meta is not None:
+            blob = insert_app1(blob, encode_exif_app1(
+                make="CamCo", orientation=1 + aid % 8,
+                gps=meta["gps"], thumbnail=meta["thumb"],
+                thumb_gps=meta["tgps"],
+                exif_ifd=meta["exif_ifd"], interop=meta["interop"],
+            ))
+        return blob
 
-    return docs.select("doc_id").mapInPandas(
-        run, "asset_id long, modality string, mime string, content binary"
-    )
+    return _asset_table(docs, "image", "image/jpeg", jpeg)
 
 
 def full_scrub_verdicts(assets: DataFrame) -> DataFrame:
@@ -4824,50 +4342,39 @@ def full_scrub_verdicts(assets: DataFrame) -> DataFrame:
     pixels are bit-identical, and the shrinkage is exactly {b} bytes per
     GPS IFD removed."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                blob = bytes(row.content)
-                before0 = parse_exif(blob)
-                before1 = parse_exif_ifd1(blob)
-                before_sub = parse_exif_subifd(blob)
-                scrubbed = strip_gps_exif(blob)
-                after0 = parse_exif(scrubbed)
-                after1 = parse_exif_ifd1(scrubbed)
-                after_sub = parse_exif_subifd(scrubbed)
-                had_gps0 = (before0 is not None
-                            and before0["lat_dd"] is not None)
-                had_tgps = before1 is not None and before1["has_gps"]
-                gps_after = (
-                    (after0 is not None and after0["lat_dd"] is not None)
-                    or (after1 is not None and after1["has_gps"])
-                )
-                sub_kept = (before_sub is None and after_sub is None) or (
-                    before_sub is not None and after_sub == before_sub
-                )
-                thumb_kept = (before1 is None and after1 is None) or (
-                    before1 is not None and after1 is not None
-                    and after1["thumbnail"] == before1["thumbnail"]
-                )
-                intact = bool(np.array_equal(decode_jpeg(blob),
-                                             decode_jpeg(scrubbed)))
-                out.append((int(row.asset_id), before0 is not None,
-                            had_gps0, had_tgps, gps_after, sub_kept,
-                            thumb_kept, intact,
-                            len(blob) - len(scrubbed)))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "had_exif", "had_gps",
-                              "had_thumb_gps", "gps_after", "subifd_kept",
-                              "thumb_kept", "raster_intact",
-                              "bytes_removed"],
-            )
+    def verdict(row):
+        blob = bytes(row.content)
+        before0 = parse_exif(blob)
+        before1 = parse_exif_ifd1(blob)
+        before_sub = parse_exif_subifd(blob)
+        scrubbed = strip_gps_exif(blob)
+        after0 = parse_exif(scrubbed)
+        after1 = parse_exif_ifd1(scrubbed)
+        after_sub = parse_exif_subifd(scrubbed)
+        had_gps0 = before0 is not None and before0["lat_dd"] is not None
+        had_tgps = before1 is not None and before1["has_gps"]
+        gps_after = (
+            (after0 is not None and after0["lat_dd"] is not None)
+            or (after1 is not None and after1["has_gps"])
+        )
+        sub_kept = (before_sub is None and after_sub is None) or (
+            before_sub is not None and after_sub == before_sub
+        )
+        thumb_kept = (before1 is None and after1 is None) or (
+            before1 is not None and after1 is not None
+            and after1["thumbnail"] == before1["thumbnail"]
+        )
+        intact = bool(np.array_equal(decode_jpeg(blob), decode_jpeg(scrubbed)))
+        yield (int(row.asset_id), before0 is not None, had_gps0, had_tgps,
+               gps_after, sub_kept, thumb_kept, intact,
+               len(blob) - len(scrubbed))
 
-    return assets.mapInPandas(
-        run,
+    return _row_kernel(
+        assets,
         "doc_id long, had_exif boolean, had_gps boolean, "
         "had_thumb_gps boolean, gps_after boolean, subifd_kept boolean, "
         "thumb_kept boolean, raster_intact boolean, bytes_removed int",
+        verdict,
     )
 
 
@@ -4887,7 +4394,7 @@ def _orient_canonical_raster(scene: int) -> np.ndarray:
     make quant-1 encode→decode EXACT, so orientation normalization can
     collapse copies bit-identically; a rotation/flip permutes quadrants,
     never blends them."""
-    q = (scene * _EXIF_PX_K
+    q = (scene * _PX_K
          + np.arange(4, dtype=np.int64) * _ORIENT_Q_MUL) % 256
     img = np.empty((16, 16), dtype=np.uint8)
     for qi in range(4):
@@ -4957,28 +4464,17 @@ def documents_as_oriented_jpeg_assets(docs: DataFrame) -> DataFrame:
     (the tag's documented default), so the dedup must treat absent
     metadata as identity, not as unknown."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                aid = int(row.doc_id)
-                scene, copy = aid % _ORIENT_SCENES, aid // _ORIENT_SCENES
-                orientation = 1 + copy % 8
-                img = apply_exif_orientation(
-                    _orient_canonical_raster(scene), orientation
-                )
-                blob = encode_jpeg(img)
-                if orientation != 1:
-                    blob = insert_app1(blob, encode_exif_app1(
-                        orientation=orientation))
-                out.append((aid, "image", "image/jpeg", blob))
-            yield pd.DataFrame(
-                out, columns=["asset_id", "modality", "mime", "content"]
-            )
+    def jpeg(aid: int) -> bytes:
+        scene, copy = aid % _ORIENT_SCENES, aid // _ORIENT_SCENES
+        orientation = 1 + copy % 8
+        blob = encode_jpeg(apply_exif_orientation(
+            _orient_canonical_raster(scene), orientation
+        ))
+        if orientation != 1:
+            blob = insert_app1(blob, encode_exif_app1(orientation=orientation))
+        return blob
 
-    return docs.select("doc_id").mapInPandas(
-        run, "asset_id long, modality string, mime string, content binary"
-    )
+    return _asset_table(docs, "image", "image/jpeg", jpeg)
 
 
 documents_as_oriented_jpeg_assets.__doc__ = (
@@ -4993,23 +4489,15 @@ def decoded_orientation_signatures(assets: DataFrame) -> DataFrame:
     raster — Σ v[i]·(i+1) over the flattened pixels, so any mis-rotation
     changes the signature (a position-free sum would not)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                blob = bytes(row.content)
-                meta = parse_exif(blob)
-                orientation = 1
-                if meta is not None and meta["orientation"] is not None:
-                    orientation = int(meta["orientation"])
-                img = undo_exif_orientation(decode_jpeg(blob), orientation)
-                v = img.astype(np.int64).ravel()
-                sig = int((v * (np.arange(v.size, dtype=np.int64) + 1)).sum())
-                out.append((int(row.asset_id), orientation, sig))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "orientation", "sig"]
-            ).astype({"orientation": "int32"})
+    def signature(row):
+        blob = bytes(row.content)
+        meta = parse_exif(blob)
+        orientation = 1
+        if meta is not None and meta["orientation"] is not None:
+            orientation = int(meta["orientation"])
+        img = undo_exif_orientation(decode_jpeg(blob), orientation)
+        v = img.astype(np.int64).ravel()
+        sig = int((v * (np.arange(v.size, dtype=np.int64) + 1)).sum())
+        yield int(row.asset_id), orientation, sig
 
-    return assets.mapInPandas(
-        run, "doc_id long, orientation int, sig long"
-    )
+    return _row_kernel(assets, "doc_id long, orientation int, sig long", signature)

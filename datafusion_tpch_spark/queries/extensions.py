@@ -3604,11 +3604,15 @@ def multimodal_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the PGM/BMP gate documents; depth 16 and Adam7 interlace have their
     own gates (multimodal_png16_roundtrip, multimodal_png_adam7_roundtrip),
     leaving JPEG as the honest NotImplementedError edge."""
-    from ..operators.multimodal import decoded_png_stats, documents_as_png_assets
+    from ..operators.multimodal import (
+        decode_png,
+        decoded_rgb_stats,
+        documents_as_png_assets,
+    )
 
     (docs,) = _t(spark, sf_dir, "documents")
     ids = kernel_front(docs)
-    return decoded_png_stats(documents_as_png_assets(ids))
+    return decoded_rgb_stats(documents_as_png_assets(ids), decode_png)
 
 
 MULTIMODAL_PNG_ROUNDTRIP_SQL = """
@@ -3643,13 +3647,14 @@ def multimodal_png_palette_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
     decoder that mis-unfilters an index scanline or mis-maps the palette
     hash-fails.  Same plan shape as multimodal_png_roundtrip."""
     from ..operators.multimodal import (
-        decoded_png_stats,
+        decode_png,
+        decoded_rgb_stats,
         documents_as_palette_png_assets,
     )
 
     (docs,) = _t(spark, sf_dir, "documents")
     ids = kernel_front(docs)
-    return decoded_png_stats(documents_as_palette_png_assets(ids))
+    return decoded_rgb_stats(documents_as_palette_png_assets(ids), decode_png)
 
 
 MULTIMODAL_PNG_PALETTE_SQL = """
@@ -3688,13 +3693,14 @@ def multimodal_png16_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     mis-offsets the byte-level filter or byte-swaps a sample
     hash-fails.  Same parallel plan shape as the other PNG gates."""
     from ..operators.multimodal import (
-        decoded_png_stats,
+        decode_png,
+        decoded_rgb_stats,
         documents_as_png16_assets,
     )
 
     (docs,) = _t(spark, sf_dir, "documents")
     ids = kernel_front(docs)
-    return decoded_png_stats(documents_as_png16_assets(ids))
+    return decoded_rgb_stats(documents_as_png16_assets(ids), decode_png)
 
 
 MULTIMODAL_PNG16_SQL = """
@@ -3727,13 +3733,14 @@ def multimodal_png_adam7_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     scanline, or mis-scatters a single pixel hash-fails.  Same parallel
     plan shape as the other PNG gates."""
     from ..operators.multimodal import (
-        decoded_png_stats,
+        decode_png,
+        decoded_rgb_stats,
         documents_as_adam7_png_assets,
     )
 
     (docs,) = _t(spark, sf_dir, "documents")
     ids = kernel_front(docs)
-    return decoded_png_stats(documents_as_adam7_png_assets(ids))
+    return decoded_rgb_stats(documents_as_adam7_png_assets(ids), decode_png)
 
 
 MULTIMODAL_PNG_ADAM7_SQL = """
@@ -3768,13 +3775,14 @@ def multimodal_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     a dictionary entry or misreads a code width hash-fails.  Same
     parallel plan shape as the PNG gates."""
     from ..operators.multimodal import (
-        decoded_gif_stats,
+        decode_gif,
+        decoded_rgb_stats,
         documents_as_gif_assets,
     )
 
     (docs,) = _t(spark, sf_dir, "documents")
     ids = kernel_front(docs)
-    return decoded_gif_stats(documents_as_gif_assets(ids))
+    return decoded_rgb_stats(documents_as_gif_assets(ids), decode_gif)
 
 
 MULTIMODAL_GIF_SQL = """
@@ -3909,13 +3917,14 @@ def multimodal_jpeg420_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoder that mis-orders the MCU block interleave, mis-sizes a
     subsampled plane, or mis-scatters the upsample hash-fails."""
     from ..operators.multimodal import (
-        decoded_jpeg_rgb_stats,
+        decode_jpeg,
+        decoded_rgb_stats,
         documents_as_jpeg420_assets,
     )
 
     (docs,) = _t(spark, sf_dir, "documents")
     ids = kernel_front(docs)
-    return decoded_jpeg_rgb_stats(documents_as_jpeg420_assets(ids))
+    return decoded_rgb_stats(documents_as_jpeg420_assets(ids), decode_jpeg)
 
 
 MULTIMODAL_JPEG420_SQL = """
@@ -3958,13 +3967,14 @@ def multimodal_jpeg_dri_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     dies in the Huffman tables.  The oracle recomputes the per-channel
     stats closed-form over the 16×16 MCU grid."""
     from ..operators.multimodal import (
-        decoded_jpeg_rgb_stats,
+        decode_jpeg,
+        decoded_rgb_stats,
         documents_as_jpeg_dri_assets,
     )
 
     (docs,) = _t(spark, sf_dir, "documents")
     ids = kernel_front(docs)
-    return decoded_jpeg_rgb_stats(documents_as_jpeg_dri_assets(ids))
+    return decoded_rgb_stats(documents_as_jpeg_dri_assets(ids), decode_jpeg)
 
 
 MULTIMODAL_JPEG_DRI_SQL = """
@@ -4015,7 +4025,7 @@ def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (docs,) = _t(spark, sf_dir, "documents")
     ids = kernel_front(docs)
-    return decoded_video_frame_stats(documents_as_avi_assets(ids), stride=2)
+    return decoded_video_frame_stats(documents_as_avi_assets(ids))
 
 
 MULTIMODAL_VIDEO_FRAMES_SQL = """
@@ -4123,7 +4133,7 @@ def multimodal_gif_anim_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (docs,) = _t(spark, sf_dir, "documents")
     ids = kernel_front(docs)
-    return decoded_gif_anim_stats(documents_as_gif_anim_assets(ids), stride=2)
+    return decoded_gif_anim_stats(documents_as_gif_anim_assets(ids))
 
 
 # i = -1 never occurs: the background color IS palette[0] (11, 7, 3), so

@@ -724,7 +724,7 @@ def dedup_persisted_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..operators import artifact_io as aio
     from ..operators import lsh_index as li
     from ..catalog import load_table
-    from ..streaming.maintenance import admit_batch
+    from ..streaming.maintenance import admit_batch, nonempty_appends
     from ..streaming.runner import run_foreach_batch
     from .extensions import _INCR_SPLIT, _LSH_MAX_BUCKET, _corpus_fingerprint
 
@@ -761,9 +761,7 @@ def dedup_persisted_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame
             [], "doc_id bigint, n_hit_buckets bigint, kept boolean"
         ).write.mode("overwrite").parquet(verd_dir)
 
-        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
+        def write_batch(batch_df: DataFrame) -> None:
             bb = dedup.lsh_buckets(batch_df)
             v = admit_batch(bb, batch_df.select("doc_id"), corpus_cells)
             v.write.mode("append").parquet(verd_dir)
@@ -774,7 +772,8 @@ def dedup_persisted_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame
                 .write.mode("append").partitionBy("band").parquet(cells_dir)
             )
 
-        run_foreach_batch(spark, _docs_feed(spark, sf_dir), apply_batch,
+        run_foreach_batch(spark, _docs_feed(spark, sf_dir),
+                          nonempty_appends(write_batch),
                           "dedup_persisted_ingest_stream")
         corpus_cells.unpersist()
         aio.update_manifest(path, spark=spark, ingested=True)  # LAST
@@ -1395,6 +1394,7 @@ def _ensure_ann_ingest_index(spark: SparkSession, sf_dir: str):
     from ..operators import ann_index as ai
     from ..operators import artifact_io as aio
     from ..operators.similarity import ivf_assign
+    from ..streaming.maintenance import nonempty_appends
     from ..streaming.runner import run_foreach_batch
     from .extensions import _corpus_fingerprint
 
@@ -1416,16 +1416,14 @@ def _ensure_ann_ingest_index(spark: SparkSession, sf_dir: str):
         )
         cells_dir = aio.table_path(path, "cells")
 
-        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
+        def write_batch(batch_df: DataFrame) -> None:
             (
                 ivf_assign(batch_df.select("vec_id", "embedding"), centroids)
                 .write.mode("append").partitionBy("cell").parquet(cells_dir)
             )
 
-        run_foreach_batch(spark, _emb_feed(spark, sf_dir), apply_batch,
-                          "ann_persisted_ingest")
+        run_foreach_batch(spark, _emb_feed(spark, sf_dir),
+                          nonempty_appends(write_batch), "ann_persisted_ingest")
         aio.update_manifest(path, spark=spark, ingested=True)  # durability point — LAST
     return path, emb
 
@@ -1529,9 +1527,8 @@ def docs_token_meter_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def maintain() -> tuple[DataFrame, int]:
         vocab_tok = _bpe_vocab_tok(spark, sf_dir)  # session-cached
-        meter, n = run_fold(spark, "docs_token_meter_stream",
-                            _docs_feed(spark, sf_dir), meter_fold(vocab_tok))
-        return meter.localCheckpoint(), n
+        return run_fold(spark, "docs_token_meter_stream",
+                        _docs_feed(spark, sf_dir), meter_fold(vocab_tok))
 
     state = memo(spark, ("stream", "docs_token_meter_stream", sf_dir),
                  maintain)

@@ -74,6 +74,14 @@ def _nonempty(step):
     return lambda state, batch: None if batch.isEmpty() else step(state, batch)
 
 
+def nonempty_appends(write):
+    """foreachBatch function of a gate whose micro-batches only append
+    files and maintain no state: ``write(batch)`` runs for each non-empty
+    batch, behind the folds' one ``isEmpty`` skip."""
+    step = _nonempty(lambda _, batch: write(batch))
+    return lambda batch, batch_id: step(None, batch)
+
+
 # ----------------------------------------------------------- CDC upsert
 
 CDC_STATE_COLS = (

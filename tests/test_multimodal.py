@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from datafusion_tpch_spark.operators.multimodal import (
@@ -204,17 +205,18 @@ def test_png_decoder_rejects_what_it_cannot_parse():
 
 
 def test_png_gate_matches_closed_form(spark):
-    """decoded_png_stats over real PNG blobs must reflect the actual
+    """decoded_rgb_stats over real PNG blobs must reflect the actual
     inflated+unfiltered raster."""
     from datafusion_tpch_spark.operators.multimodal import (
-        _PNG_PX_K,
-        decoded_png_stats,
+        _PX_K,
+        decode_png,
+        decoded_rgb_stats,
         documents_as_png_assets,
     )
 
     docs = load_table(spark, SF_DIR, "documents").limit(8)
     rows = (
-        decoded_png_stats(documents_as_png_assets(docs))
+        decoded_rgb_stats(documents_as_png_assets(docs), decode_png)
         .orderBy("asset_id")
         .collect()
     )
@@ -222,7 +224,7 @@ def test_png_gate_matches_closed_form(spark):
     for r in rows:
         w, h = 8 + r.asset_id % 9, 8 + r.asset_id % 7
         assert (r.width, r.height) == (w, h)
-        v = (r.asset_id * _PNG_PX_K + np.arange(w * h * 3, dtype=np.int64)) % 256
+        v = (r.asset_id * _PX_K + np.arange(w * h * 3, dtype=np.int64)) % 256
         assert r.sum_r == int(v[0::3].sum())
         assert r.sum_g == int(v[1::3].sum())
         assert r.sum_b == int(v[2::3].sum())
@@ -1113,7 +1115,7 @@ def test_video_frame_sampling_skips_unsampled(spark):
 
     docs = load_table(spark, SF_DIR, "documents").limit(10)
     assets = documents_as_avi_assets(docs)
-    rows = decoded_video_frame_stats(assets, stride=2).collect()
+    rows = decoded_video_frame_stats(assets).collect()
     blobs = {r.asset_id: r.content for r in assets.collect()}
     seen = {}
     for r in rows:
@@ -1128,10 +1130,6 @@ def test_video_frame_sampling_skips_unsampled(spark):
     for aid, idxs in seen.items():
         _, _, frames = decode_avi_mjpeg(blobs[aid])
         assert sorted(idxs) == list(range(0, len(frames), 2))
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        decoded_video_frame_stats(assets, stride=0)
 
 
 def test_gif_anim_composition_and_boundaries():
@@ -1505,14 +1503,14 @@ def test_audio_shifted_copies_share_shifted_bit_streams():
 
 def _exif_jpeg(aid: int) -> bytes:
     from datafusion_tpch_spark.operators.multimodal import (
-        _EXIF_PX_K,
+        _PX_K,
         _exif_fixture_meta,
         encode_exif_app1,
         encode_jpeg,
         insert_app1,
     )
 
-    v = (aid * _EXIF_PX_K + np.arange(64, dtype=np.int64)) % 256
+    v = (aid * _PX_K + np.arange(64, dtype=np.int64)) % 256
     blob = encode_jpeg(v.astype(np.uint8).reshape(8, 8))
     meta = _exif_fixture_meta(aid)
     if meta is not None:
@@ -2081,7 +2079,7 @@ def test_exif_full_layout_scrub_invariants():
     IFD1 + dual GPS): exact 114-byte shrinkage per GPS IFD, ExifIFD view
     value-identical after relocation, thumbnail and pixels intact."""
     from datafusion_tpch_spark.operators.multimodal import (
-        _EXIF_PX_K,
+        _PX_K,
         _full_fixture_meta,
         decode_jpeg,
         encode_exif_app1,
@@ -2094,7 +2092,7 @@ def test_exif_full_layout_scrub_invariants():
     )
 
     for did in range(30):
-        v = (did * _EXIF_PX_K + np.arange(64, dtype=np.int64)) % 256
+        v = (did * _PX_K + np.arange(64, dtype=np.int64)) % 256
         blob = encode_jpeg(v.astype(np.uint8).reshape(8, 8))
         meta = _full_fixture_meta(did)
         if meta is not None:
@@ -2205,3 +2203,125 @@ def test_kernel_front_output_ordered_above_width_one(spark, tmp_path):
     widths, ids = _ordered_pixel_stats(spark, str(tmp_path))
     assert widths and widths[0] > 1, widths
     assert len(ids) == table.num_rows and ids == sorted(ids)
+
+
+# --- empty input --------------------------------------------------------------
+
+_SIG = "doc_id long, sig_hi long, sig_lo long"
+_SCRUB = ("doc_id long, had_exif boolean, had_gps boolean, "
+          "had_thumb_gps boolean, gps_after boolean")
+# (encoder, decoder, declared output schema) for every kernel pair a gate runs
+_GATE_PAIRS = {
+    "pixel_stats": ("documents_as_assets", lambda m, a: m.asset_pixel_stats(a),
+                    "asset_id long, n_bytes long, mean_px double, max_px long, "
+                    "sum_px long"),
+    "frame_sample": ("documents_as_assets",
+                     lambda m, a: m.sample_frames(
+                         a.withColumn("duration_ms", F.lit(1000).cast("long"))),
+                     "asset_id long, frame_idx int, ts_ms long, frame binary"),
+    "audio_energy": ("documents_as_audio", lambda m, a: m.audio_frame_energy(a),
+                     "asset_id long, n_samples long, n_frames long, "
+                     "total_energy long, peak_frame long, peak_energy long"),
+    "decode_roundtrip": ("documents_as_pgm_assets",
+                         lambda m, a: m.decoded_image_stats(a),
+                         "asset_id long, n_bytes long, width int, height int, "
+                         "mean_px double, max_px long, sum_px long"),
+    "wav": ("documents_as_wav_assets", lambda m, a: m.decoded_wav_stats(a),
+            "asset_id long, sample_rate int, n_samples long, energy long, "
+            "peak int"),
+    "wav_stereo": ("documents_as_stereo_wav_assets",
+                   lambda m, a: m.decoded_stereo_wav_stats(a),
+                   "asset_id long, sample_rate int, n_frames long, "
+                   "energy_l long, energy_r long, cross long"),
+    **{
+        name: (enc, lambda m, a, d=dec: m.decoded_rgb_stats(a, getattr(m, d)),
+               "asset_id long, width int, height int, mean_px double, "
+               "max_px long, sum_r long, sum_g long, sum_b long")
+        for name, enc, dec in [
+            ("png", "documents_as_png_assets", "decode_png"),
+            ("png_palette", "documents_as_palette_png_assets", "decode_png"),
+            ("png16", "documents_as_png16_assets", "decode_png"),
+            ("png_adam7", "documents_as_adam7_png_assets", "decode_png"),
+            ("gif", "documents_as_gif_assets", "decode_gif"),
+            ("jpeg420", "documents_as_jpeg420_assets", "decode_jpeg"),
+            ("jpeg_dri", "documents_as_jpeg_dri_assets", "decode_jpeg"),
+        ]
+    },
+    "gif89a": ("documents_as_gif89a_assets",
+               lambda m, a: m.decoded_gif_stats_positional(a),
+               "asset_id long, width int, height int, max_px long, "
+               "sum_r long, sum_g long, sum_b long, wsum long"),
+    **{
+        name: (enc, lambda m, a: m.decoded_jpeg_stats(a),
+               "asset_id long, width int, height int, mean_px double, "
+               "max_px long, sum_px long")
+        for name, enc in [("jpeg", "documents_as_jpeg_assets"),
+                          ("jpeg_prog", "documents_as_jpeg_prog_assets")]
+    },
+    "video_frames": ("documents_as_avi_assets",
+                     lambda m, a: m.decoded_video_frame_stats(a),
+                     "asset_id long, frame_idx int, n_frames int, width int, "
+                     "height int, sum_r long, sum_g long, sum_b long"),
+    "video_frame_sigs": ("documents_as_avi_assets",
+                         lambda m, a: m.decoded_video_frame_signatures(a),
+                         "doc_id long, frame_idx int, n_frames int, width int, "
+                         "height int, sig1 long, sig2 long"),
+    "gif_anim": ("documents_as_gif_anim_assets",
+                 lambda m, a: m.decoded_gif_anim_stats(a),
+                 "asset_id long, frame_idx int, n_frames int, width int, "
+                 "height int, sum_r long, sum_g long, sum_b long, poschk long"),
+    "phash": ("documents_as_scene_png_assets",
+              lambda m, a: m.decoded_phash_signatures(a), _SIG),
+    "cross_codec": ("documents_as_mixed_codec_assets",
+                    lambda m, a: m.decoded_codec_signatures(a),
+                    "doc_id long, codec string, sig_hi long, sig_lo long"),
+    "audio_fp": ("documents_as_tone_wav_assets",
+                 lambda m, a: m.decoded_audio_fingerprints(a),
+                 "doc_id long, fp long"),
+    "audio_clip": ("documents_as_shifted_wav_assets",
+                   lambda m, a: m.decoded_audio_frame_bits(a),
+                   "doc_id long, f int, bit int"),
+    "scale_invariant": ("documents_as_multires_png_assets",
+                        lambda m, a: m.decoded_phash_dim_signatures(a),
+                        "doc_id long, width int, height int, sig_hi long, "
+                        "sig_lo long"),
+    "exif_census": ("documents_as_exif_jpeg_assets",
+                    lambda m, a: m.decoded_exif_metadata(a),
+                    "doc_id long, has_exif boolean, make string, "
+                    "model string, orientation int, taken_at string, "
+                    "has_gps boolean, lat_dd double, lon_dd double"),
+    "exif_gps_scrub": ("documents_as_exif_jpeg_assets",
+                       lambda m, a: m.gps_scrub_verdicts(a),
+                       "doc_id long, had_exif boolean, had_gps boolean, "
+                       "gps_after boolean, orientation_kept boolean, "
+                       "taken_at_kept boolean, raster_intact boolean, "
+                       "bytes_removed int"),
+    "exif_thumb_scrub": ("documents_as_thumb_jpeg_assets",
+                         lambda m, a: m.thumb_scrub_verdicts(a),
+                         _SCRUB + ", thumb_kept boolean, "
+                         "raster_intact boolean, bytes_removed int"),
+    "exif_full_scrub": ("documents_as_full_exif_assets",
+                        lambda m, a: m.full_scrub_verdicts(a),
+                        _SCRUB + ", subifd_kept boolean, thumb_kept boolean, "
+                        "raster_intact boolean, bytes_removed int"),
+    "orientation": ("documents_as_oriented_jpeg_assets",
+                    lambda m, a: m.decoded_orientation_signatures(a),
+                    "doc_id long, orientation int, sig long"),
+}
+
+
+@pytest.mark.parametrize(
+    "encoder,decode,ddl",
+    [pytest.param(*v, id=k) for k, v in _GATE_PAIRS.items()],
+)
+def test_gate_kernels_on_zero_rows(spark, encoder, decode, ddl):
+    """Every encoder → decoder pair the multimodal gates run, fed a
+    zero-row documents frame through the gates' kernel front: zero rows
+    out, typed with the kernel's declared schema."""
+    from datafusion_tpch_spark.operators import multimodal as m
+    from datafusion_tpch_spark.operators.fanout import kernel_front
+
+    docs = load_table(spark, SF_DIR, "documents").filter(F.col("doc_id") < 0)
+    out = decode(m, getattr(m, encoder)(kernel_front(docs, "text")))
+    assert out.collect() == []
+    assert out.schema == spark.createDataFrame([], ddl).schema
