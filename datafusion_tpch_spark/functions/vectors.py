@@ -35,10 +35,23 @@ def norm(a: Column) -> Column:
     return F.sqrt(exact_dot(a, a))
 
 
+def cosine(a: Column, b: Column) -> Column:
+    """Exact cosine: :func:`exact_dot` over the product of the two norms."""
+    return exact_dot(a, b) / (norm(a) * norm(b))
+
+
 def exact_dot_sql(a: str, b: str) -> str:
     """Oracle mirror of :func:`exact_dot` (DuckDB list lambdas)."""
     return (
         f"(CAST(list_aggregate(list_transform(list_zip({a}, {b}), "
         f"p -> CAST(floor(CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE) * {_Q:.1f}) AS BIGINT)), "
         f"'sum') AS DOUBLE) / {_Q:.1f})"
+    )
+
+
+def cosine_sql(a: str, b: str) -> str:
+    """Oracle mirror of :func:`cosine`."""
+    return (
+        f"{exact_dot_sql(a, b)} / (sqrt({exact_dot_sql(a, a)})"
+        f" * sqrt({exact_dot_sql(b, b)}))"
     )

@@ -29,7 +29,7 @@ Centroids = list[tuple[int, list[float]]]
 
 
 def _update_centroids(assigned: DataFrame, prev: Centroids,
-                      vec_col: str, exact: bool = False) -> Centroids:
+                      exact: bool = False) -> Centroids:
     """One centroid-update step: per-cell dimension means (k x dim rows
     through the shuffle, k rows to the driver).  ``exact=True`` uses the
     floor-quantized fixed-point mean (functions/exact.davg) so the means
@@ -40,7 +40,7 @@ def _update_centroids(assigned: DataFrame, prev: Centroids,
 
     mean = davg(F.col("v")) if exact else F.avg("v")
     rows = (
-        assigned.select("cell", F.posexplode(F.col(vec_col)).alias("dim", "v"))
+        assigned.select("cell", F.posexplode("embedding").alias("dim", "v"))
         .groupBy("cell", "dim")
         .agg(mean.alias("m"))
         .groupBy("cell")
@@ -71,9 +71,7 @@ def md5_seeds(emb: DataFrame, k: int) -> Centroids:
 
 
 def kmeans_refine(emb: DataFrame, seeds: Centroids, iters: int = 3,
-                  id_col: str = "vec_id", vec_col: str = "embedding",
-                  exact: bool = False,
-                  ) -> tuple[Centroids, DataFrame]:
+                  exact: bool = False) -> tuple[Centroids, DataFrame]:
     """Refine fixed-k seed centroids with ``iters`` Lloyd iterations.
 
     Returns ``(centroids, assigned)`` where ``assigned`` is the input frame
@@ -85,13 +83,12 @@ def kmeans_refine(emb: DataFrame, seeds: Centroids, iters: int = 3,
     """
     centroids = seeds
     for _ in range(iters):
-        assigned = ivf_assign(emb, centroids, id_col=id_col, vec_col=vec_col)
-        centroids = _update_centroids(assigned, centroids, vec_col, exact=exact)
-    return centroids, ivf_assign(emb, centroids, id_col=id_col, vec_col=vec_col)
+        assigned = ivf_assign(emb, centroids)
+        centroids = _update_centroids(assigned, centroids, exact=exact)
+    return centroids, ivf_assign(emb, centroids)
 
 
-def inertia(assigned: DataFrame, centroids: Centroids,
-            vec_col: str = "embedding") -> float:
+def inertia(assigned: DataFrame, centroids: Centroids) -> float:
     """Sum of squared L2 distances to the assigned centroid — the k-means
     objective; one broadcast join + one scalar aggregate.
 
@@ -104,7 +101,7 @@ def inertia(assigned: DataFrame, centroids: Centroids,
     )
     dist2 = F.aggregate(
         F.zip_with(
-            F.col(vec_col).cast("array<double>"),
+            F.col("embedding").cast("array<double>"),
             F.col("cvec").cast("array<double>"),
             lambda a, b: (a - b) * (a - b),
         ),

@@ -237,13 +237,15 @@ def _block_raster(aid: int, w: int, h: int, cell: int,
     return ((aid * _PX_K + offset + bi * nbx + bj) % 256).astype(np.uint8)
 
 
-def sample_frames(
-    assets: DataFrame, every_ms: int = 1000, frame_bytes: int = 64
-) -> DataFrame:
+_FRAME_EVERY_MS = 1000
+_FRAME_BYTES = 64
+
+
+def sample_frames(assets: DataFrame) -> DataFrame:
     """Frame-sampling for video-modality blobs: one input row fans out to
-    ceil(duration_ms / every_ms) frame rows (min 1) — a sample is taken at
-    every t = i*every_ms strictly inside the duration.  The codec is
-    stubbed (frames
+    ceil(duration_ms / _FRAME_EVERY_MS) frame rows (min 1) — a sample is
+    taken at every t = i*_FRAME_EVERY_MS strictly inside the duration, and
+    each frame is ``_FRAME_BYTES`` long.  The codec is stubbed (frames
     are deterministic slices of the blob); the distributed shape — blob in,
     multiple frame rows out via the same Arrow-batched iterator, fan-out
     bounded by duration metadata — is the real thing.  Production swaps the
@@ -252,14 +254,15 @@ def sample_frames(
     def frames(row):
         if row.duration_ms is None or row.content is None:
             return
-        # ceil: sample at every t = i*every_ms with t < duration
+        # ceil: sample at every t = i*_FRAME_EVERY_MS with t < duration
         # (the old floor dropped the last partial interval's frame
         # whenever duration wasn't an exact multiple)
-        n_frames = max(-(-int(row.duration_ms) // every_ms), 1)
+        n_frames = max(-(-int(row.duration_ms) // _FRAME_EVERY_MS), 1)
         blob = bytes(row.content)
         for i in range(n_frames):
-            off = (i * frame_bytes) % max(len(blob), 1)
-            yield row.asset_id, i, i * every_ms, blob[off : off + frame_bytes]
+            off = (i * _FRAME_BYTES) % max(len(blob), 1)
+            yield (row.asset_id, i, i * _FRAME_EVERY_MS,
+                   blob[off : off + _FRAME_BYTES])
 
     return _row_kernel(
         assets, "asset_id long, frame_idx int, ts_ms long, frame binary", frames

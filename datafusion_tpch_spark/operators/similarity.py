@@ -29,8 +29,9 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 _Q = 1e9
 
@@ -196,8 +197,6 @@ def pairwise_cosine(
 def ivf_assign(
     df: DataFrame,
     centroids: "list[tuple[int, list[float]]]",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Assign every vector to its nearest centroid by floor-quantized L2 —
     the same fixed-point metric as the JVM expression and the DuckDB
@@ -216,7 +215,7 @@ def ivf_assign(
             if len(pdf) == 0:
                 continue
             x = np.asarray(
-                [np.asarray(v, np.float64) for v in pdf[vec_col]], np.float64
+                [np.asarray(v, np.float64) for v in pdf["embedding"]], np.float64
             )
             # blocked (rows x centroids x dim) quantized distances
             cells = np.empty(len(pdf), dtype=np.int64)
@@ -226,20 +225,18 @@ def ivf_assign(
                 diff = x[lo:hi, None, :] - b_mat[None, :, :]
                 d2 = np.floor(diff * diff * _Q).astype(np.int64).sum(axis=2)
                 cells[lo:hi] = b_ids[np.argmin(d2, axis=1)]
-            out = pdf[[id_col, vec_col]].copy()
+            out = pdf[["vec_id", "embedding"]].copy()
             out["cell"] = cells
             yield out
 
-    schema = f"{id_col} long, {vec_col} array<float>, cell long"
-    return df.select(id_col, vec_col).mapInPandas(assign, schema)
+    return df.select("vec_id", "embedding").mapInPandas(
+        assign, "vec_id long, embedding array<float>, cell long"
+    )
 
 
 def pq_encode(
     df: DataFrame,
     codebook: "list[list[list[float]]]",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_col: str = "recon",
 ) -> DataFrame:
     """Product-quantization encode: per subspace, code = argmin of the
     floor-quantized L2 distance to a (k x sub)-entry sub-codebook
@@ -260,7 +257,7 @@ def pq_encode(
             if len(pdf) == 0:
                 continue
             x = np.asarray(
-                [np.asarray(v, np.float64) for v in pdf[vec_col]], np.float64
+                [np.asarray(v, np.float64) for v in pdf["embedding"]], np.float64
             )
             recon = np.empty((len(pdf), m * sub), dtype=np.float64)
             for s in range(m):
@@ -268,20 +265,18 @@ def pq_encode(
                 diff = xs[:, None, :] - cb[s][None, :, :]
                 d2 = np.floor(diff * diff * _Q).astype(np.int64).sum(axis=2)
                 recon[:, s * sub:(s + 1) * sub] = cb[s][np.argmin(d2, axis=1)]
-            out = pdf[[id_col, vec_col]].copy()
-            out[out_col] = list(recon)
+            out = pdf[["vec_id", "embedding"]].copy()
+            out["recon"] = list(recon)
             yield out
 
-    schema = f"{id_col} long, {vec_col} array<float>, {out_col} array<double>"
-    return df.select(id_col, vec_col).mapInPandas(encode, schema)
+    return df.select("vec_id", "embedding").mapInPandas(
+        encode, "vec_id long, embedding array<float>, recon array<double>"
+    )
 
 
 def pq_codes(
     df: DataFrame,
     codebook: "list[list[list[float]]]",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_col: str = "codes",
 ) -> DataFrame:
     """Product-quantization encode emitting the CODES (m small ints per
     vector) instead of the reconstruction — the m-byte artifact a
@@ -296,7 +291,7 @@ def pq_codes(
             if len(pdf) == 0:
                 continue
             x = np.asarray(
-                [np.asarray(v, np.float64) for v in pdf[vec_col]], np.float64
+                [np.asarray(v, np.float64) for v in pdf["embedding"]], np.float64
             )
             codes = np.empty((len(pdf), m), dtype=np.int32)
             for s in range(m):
@@ -304,20 +299,19 @@ def pq_codes(
                 diff = xs[:, None, :] - cb[s][None, :, :]
                 d2 = np.floor(diff * diff * _Q).astype(np.int64).sum(axis=2)
                 codes[:, s] = np.argmin(d2, axis=1)
-            out = pdf[[id_col]].copy()
-            out[out_col] = list(codes)
+            out = pdf[["vec_id"]].copy()
+            out["codes"] = list(codes)
             yield out
 
-    schema = f"{id_col} long, {out_col} array<int>"
-    return df.select(id_col, vec_col).mapInPandas(encode, schema)
+    return df.select("vec_id", "embedding").mapInPandas(
+        encode, "vec_id long, codes array<int>"
+    )
 
 
 def ivf_pq_encode(
     df: DataFrame,
     centroids: "list[tuple[int, list[float]]]",
     codebook: "list[list[list[float]]]",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF cell assignment + PQ encoding fused into ONE corpus pass — the
     FAISS IVF-PQ layout: every vector gets its coarse cell (argmin
@@ -343,7 +337,7 @@ def ivf_pq_encode(
             if len(pdf) == 0:
                 continue
             x = np.asarray(
-                [np.asarray(v, np.float64) for v in pdf[vec_col]], np.float64
+                [np.asarray(v, np.float64) for v in pdf["embedding"]], np.float64
             )
             cells = np.empty(len(pdf), dtype=np.int64)
             step = max(1, 64_000_000 // (b_mat.shape[0] * b_mat.shape[1] * 8))
@@ -358,23 +352,20 @@ def ivf_pq_encode(
                 diff = xs[:, None, :] - b_cb[s][None, :, :]
                 d2 = np.floor(diff * diff * _Q).astype(np.int64).sum(axis=2)
                 recon[:, s * sub:(s + 1) * sub] = b_cb[s][np.argmin(d2, axis=1)]
-            out = pdf[[id_col, vec_col]].copy()
+            out = pdf[["vec_id", "embedding"]].copy()
             out["cell"] = cells
             out["recon"] = list(recon)
             yield out
 
-    schema = (
-        f"{id_col} long, {vec_col} array<float>, cell long, recon array<double>"
+    return df.select("vec_id", "embedding").mapInPandas(
+        encode, "vec_id long, embedding array<float>, cell long, recon array<double>"
     )
-    return df.select(id_col, vec_col).mapInPandas(encode, schema)
 
 
 def ivf_pq_codes(
     df: DataFrame,
     centroids: "list[tuple[int, list[float]]]",
     codebook: "list[list[list[float]]]",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF cell assignment + PQ CODES fused into one corpus pass — the
     persisted-index twin of ``ivf_pq_encode``: instead of the full-width
@@ -396,7 +387,7 @@ def ivf_pq_codes(
             if len(pdf) == 0:
                 continue
             x = np.asarray(
-                [np.asarray(v, np.float64) for v in pdf[vec_col]], np.float64
+                [np.asarray(v, np.float64) for v in pdf["embedding"]], np.float64
             )
             cells = np.empty(len(pdf), dtype=np.int64)
             step = max(1, 64_000_000 // (b_mat.shape[0] * b_mat.shape[1] * 8))
@@ -411,21 +402,19 @@ def ivf_pq_codes(
                 diff = xs[:, None, :] - b_cb[s][None, :, :]
                 d2 = np.floor(diff * diff * _Q).astype(np.int64).sum(axis=2)
                 codes[:, s] = np.argmin(d2, axis=1)
-            out = pdf[[id_col]].copy()
+            out = pdf[["vec_id"]].copy()
             out["cell"] = cells
             out["codes"] = list(codes)
             yield out
 
-    schema = f"{id_col} long, cell long, codes array<int>"
-    return df.select(id_col, vec_col).mapInPandas(encode, schema)
+    return df.select("vec_id", "embedding").mapInPandas(
+        encode, "vec_id long, cell long, codes array<int>"
+    )
 
 
 def srp_bucket(
     df: DataFrame,
     signs: "list[list[int]]",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_col: str = "bucket",
     pair_probe_col: "str | None" = None,
     keep_cols: "tuple[str, ...]" = (),
 ) -> DataFrame:
@@ -453,7 +442,7 @@ def srp_bucket(
             if len(pdf) == 0:
                 continue
             x = np.asarray(
-                [np.asarray(v, np.float64) for v in pdf[vec_col]], np.float64
+                [np.asarray(v, np.float64) for v in pdf["embedding"]], np.float64
             )
             d = x.shape[1]
             # (rows x planes x dim) quantized signed projections
@@ -462,8 +451,8 @@ def srp_bucket(
                 .astype(np.int64)
                 .sum(axis=2)
             )
-            out = pdf[[id_col, vec_col, *keep_cols]].copy()
-            out[out_col] = ((proj >= 0) * weights).sum(axis=1)
+            out = pdf[["vec_id", "embedding", *keep_cols]].copy()
+            out["bucket"] = ((proj >= 0) * weights).sum(axis=1)
             if pair_probe_col is not None:
                 # key = |proj| * 8 + p is lexicographic (|proj|, p) ONLY
                 # while p < 8; the oracle SQL mirrors the same * 8 / % 8
@@ -483,12 +472,10 @@ def srp_bucket(
             (c, dict(df.dtypes)[c]) for c in keep_cols
         )
     )
-    schema = (
-        f"{id_col} long, {vec_col} array<float>{keep_schema}, {out_col} long"
-    )
+    schema = f"vec_id long, embedding array<float>{keep_schema}, bucket long"
     if pair_probe_col is not None:
         schema += f", {pair_probe_col} array<long>"
-    return df.select(id_col, vec_col, *keep_cols).mapInPandas(bucketize, schema)
+    return df.select("vec_id", "embedding", *keep_cols).mapInPandas(bucketize, schema)
 
 
 def srp_band_buckets(
@@ -597,8 +584,6 @@ def topk_cosine(
     No gate calls it: it is the independent numpy reference that
     ``tests/test_dedup_pipeline.py::test_topk_kernel_agrees_with_jvm_expression_query``
     checks the JVM-expression ``ann_bruteforce_topk`` gate against."""
-    from pyspark.sql.window import Window
-
     spark = df.sparkSession
     qpdf = df.filter(F.col(id_col).isin(query_ids)).select(id_col, vec_col).toPandas()
     q_ids = qpdf[id_col].to_numpy()
@@ -634,3 +619,52 @@ def topk_cosine(
         .filter(F.col("rank") <= k)
         .orderBy("query_id", "rank")
     )
+
+
+# --- probe -> score -> rank -> cut ------------------------------------------
+# Every ANN index family (brute force, SRP, IVF, PQ, IVF-PQ, refine,
+# persisted, ingest) only produces candidate pairs; these helpers are the
+# one exact ranking after it, and their *_sql twins its oracle mirror.
+
+def probe_join(q: DataFrame, c: DataFrame, score: str, value: Column,
+               on: "str | None" = None) -> DataFrame:
+    """Broadcast the query side ``q`` (``query_id``, ``q<on>``) against the
+    candidates ``c`` (``cand_id``, ``c<on>``), equal on the probe key
+    ``on`` (every pair when None), without the self-pair, and add column
+    ``score`` = ``value``."""
+    pair = F.col("query_id") != F.col("cand_id")
+    if on is not None:
+        pair = (F.col(f"q{on}") == F.col(f"c{on}")) & pair
+    return F.broadcast(q).join(c, pair).withColumn(score, value)
+
+
+def query_rank(score: str, descending: bool) -> Column:
+    """Row number per ``query_id`` by ``score`` (descending for a cosine,
+    ascending for an ADC distance); ties go to the smaller ``cand_id``."""
+    order = F.col(score).desc() if descending else F.col(score).asc()
+    return F.row_number().over(
+        Window.partitionBy("query_id").orderBy(order, F.col("cand_id"))
+    )
+
+
+def query_topk(pairs: DataFrame, score: str, descending: bool, k: int) -> DataFrame:
+    """The ``k`` best candidates of each query, numbered 1.. in ``rank``."""
+    return (pairs.withColumn("rank", query_rank(score, descending))
+            .filter(F.col("rank") <= k))
+
+
+def query_rank_sql(src: str, order: str, rank: str = "rank") -> str:
+    """Oracle mirror of :func:`query_rank`: ``src`` plus its row number per
+    query in ``rank``; ``order`` is the score with its SQL direction."""
+    return (f"\n  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id"
+            f"\n    ORDER BY {order}, cand_id) AS {rank}\n  FROM {src}")
+
+
+def query_topk_sql(order: str, k: int, cols: str) -> str:
+    """Oracle mirror of :func:`query_topk` as the tail of a query whose
+    CTE ``scored`` holds the pairs: the ``ranked`` CTE, then ``cols`` and
+    the rank of the ``k`` best candidates per query."""
+    return f"""ranked AS ({query_rank_sql('scored', order)})
+SELECT {cols}, CAST(rank AS INTEGER) AS rank
+FROM ranked WHERE rank <= {k}
+ORDER BY query_id, rank"""

@@ -21,6 +21,13 @@ from ..functions.exact import davg, davg_sql, dsum, dsum_sql
 from ..operators import dedup
 from ..operators.fanout import kernel_front
 from ..operators.reuse import evaluate_once
+from ..operators.similarity import (
+    probe_join,
+    query_rank,
+    query_rank_sql,
+    query_topk,
+    query_topk_sql,
+)
 from ..session import memo
 from . import QuerySpec
 
@@ -572,29 +579,24 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (emb,) = _t(spark, sf_dir, "embeddings")
     n_corpus = emb.agg(F.count(F.lit(1)).alias("nc"))
     out = None
-    for method, pairs_build, order in (
-        ("ivf", lambda: _ivf_pairs(spark, sf_dir), F.col("cos_sim").desc()),
+    for method, pairs_build, score in (
+        ("ivf", lambda: _ivf_pairs(spark, sf_dir), "cos_sim"),
         # ivfpq probes the SAME cells as ivf but ranks by compressed ADC
         # distance — its recall delta vs the ivf row is exactly what the
         # 64x compression costs the SEARCH (distortion audit covers the
         # reconstruction side)
-        ("ivfpq", lambda: _ivf_pq_pairs(spark, sf_dir),
-         F.col("adc_dist").asc()),
+        ("ivfpq", lambda: _ivf_pq_pairs(spark, sf_dir), "adc_dist"),
         # the refine row's cand_frac counts RAW-vector reads (the refine
         # IO budget: _PQ_REFINE_R per query), not the ADC scan behind it
         ("ivfpq_refine", lambda: _ivf_pq_refine_pairs(spark, sf_dir),
-         F.col("cos_sim").desc()),
-        ("srp", lambda: _srp_multiprobe_pairs(spark, sf_dir),
-         F.col("cos_sim").desc()),
+         "cos_sim"),
+        ("srp", lambda: _srp_multiprobe_pairs(spark, sf_dir), "cos_sim"),
     ):
         pairs = _session_table(
             spark, sf_dir, f"audit_pairs_{method}", pairs_build
         )
-        w = Window.partitionBy("query_id").orderBy(order, F.col("cand_id"))
-        top = (
-            pairs.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= _TOPK)
-            .select(F.col("query_id").alias("aq"), F.col("cand_id").alias("ac"))
+        top = query_topk(pairs, score, score == "cos_sim", _TOPK).select(
+            F.col("query_id").alias("aq"), F.col("cand_id").alias("ac")
         )
         per_q = (
             gold.join(
@@ -777,13 +779,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DEDUP_EMBEDDING_COSINE_SQL = f"""
 SELECT a.vec_id AS id1, b.vec_id AS id2,
-       {vectors.exact_dot_sql('a.embedding', 'b.embedding')}
-         / (sqrt({vectors.exact_dot_sql('a.embedding', 'a.embedding')})
-            * sqrt({vectors.exact_dot_sql('b.embedding', 'b.embedding')})) AS cos_sim
+       {vectors.cosine_sql('a.embedding', 'b.embedding')} AS cos_sim
 FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE {vectors.exact_dot_sql('a.embedding', 'b.embedding')}
-        / (sqrt({vectors.exact_dot_sql('a.embedding', 'a.embedding')})
-           * sqrt({vectors.exact_dot_sql('b.embedding', 'b.embedding')})) >= {_COS_T}
+WHERE {vectors.cosine_sql('a.embedding', 'b.embedding')} >= {_COS_T}
 ORDER BY id1, id2
 """
 
@@ -884,11 +882,7 @@ def _sem_ctes() -> str:
         f" FROM embeddings"
         for b in range(_SEM_BANDS)
     )
-    cos = (
-        f"{vectors.exact_dot_sql('e1.embedding', 'e2.embedding')}"
-        f" / (sqrt({vectors.exact_dot_sql('e1.embedding', 'e1.embedding')})"
-        f" * sqrt({vectors.exact_dot_sql('e2.embedding', 'e2.embedding')}))"
-    )
+    cos = vectors.cosine_sql("e1.embedding", "e2.embedding")
     return f"""long_form AS (
 {band_rows}),
 capped AS (
@@ -1243,36 +1237,32 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
     c = emb.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("ce"))
-    cos = vectors.exact_dot(F.col("qe"), F.col("ce")) / (
-        vectors.norm(F.col("qe")) * vectors.norm(F.col("ce"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
+    pairs = probe_join(q, c, "cos_sim", vectors.cosine(F.col("qe"), F.col("ce")))
+    return _topk(pairs, "cos_sim")
+
+
+def _topk(pairs: DataFrame, score: str, *cols: str) -> DataFrame:
+    """The top-k output of the ANN gates, ``query_id, cand_id, *cols,
+    score, rank`` in rank order: ``cos_sim`` ranks descending, the PQ
+    gates' ``adc_dist`` ascending."""
     return (
-        F.broadcast(q)
-        .join(c, F.col("query_id") != F.col("cand_id"))
-        .withColumn("cos_sim", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOPK)
-        .select("query_id", "cand_id", "cos_sim", "rank")
+        query_topk(pairs, score, score == "cos_sim", _TOPK)
+        .select("query_id", "cand_id", *cols, score, "rank")
         .orderBy("query_id", "rank")
     )
+
+
+_COS_TOPK_SQL = query_topk_sql("cos_sim DESC", _TOPK, "query_id, cand_id, cos_sim")
+_ADC_TOPK_SQL = query_topk_sql("adc_dist", _TOPK, "query_id, cand_id, adc_dist")
 
 
 ANN_BRUTEFORCE_SQL = f"""
 WITH scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-         {vectors.exact_dot_sql('q.embedding', 'c.embedding')}
-           / (sqrt({vectors.exact_dot_sql('q.embedding', 'q.embedding')})
-              * sqrt({vectors.exact_dot_sql('c.embedding', 'c.embedding')})) AS cos_sim
+         {vectors.cosine_sql('q.embedding', 'c.embedding')} AS cos_sim
   FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
   WHERE q.vec_id < {_NQUERY}),
-ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, cand_id) AS rank
-  FROM scored)
-SELECT query_id, cand_id, cos_sim, CAST(rank AS INTEGER) AS rank
-FROM ranked WHERE rank <= {_TOPK}
-ORDER BY query_id, rank
+{_COS_TOPK_SQL}
 """
 
 
@@ -1348,20 +1338,12 @@ def embeddings_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     sq_cos = vectors.exact_dot(F.col("qe"), F.col("re")) / (
         F.col("qn") * F.col("rn")
     )
-    w_exact = Window.partitionBy("query_id").orderBy(
-        F.col("exact_cos").desc(), F.col("cand_id")
-    )
-    w_sq = Window.partitionBy("query_id").orderBy(
-        F.col("sq_cos").desc(), F.col("cand_id")
-    )
     hit = (F.col("exact_rank") <= _TOPK) & (F.col("sq_rank") <= _TOPK)
     return (
-        F.broadcast(q)
-        .join(c, F.col("query_id") != F.col("cand_id"))
-        .withColumn("exact_cos", exact_cos)
+        probe_join(q, c, "exact_cos", exact_cos)
         .withColumn("sq_cos", sq_cos)
-        .withColumn("exact_rank", F.row_number().over(w_exact))
-        .withColumn("sq_rank", F.row_number().over(w_sq))
+        .withColumn("exact_rank", query_rank("exact_cos", True))
+        .withColumn("sq_rank", query_rank("sq_cos", True))
         .groupBy("query_id")
         .agg(
             F.sum(F.when(hit, 1).otherwise(0)).cast("int").alias("n_hits"),
@@ -1517,32 +1499,24 @@ def _srp_multiprobe_pairs(
         pair_probe_col="pair_masks",
     ).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"),
-        F.explode(probes).alias("qb"),
+        F.explode(probes).alias("qbucket"),
     )
     cand_src = emb if cand_filter is None else emb.filter(cand_filter)
     # bucketing runs in the vectorized numpy kernel (same quantized
     # arithmetic as the previous JVM expression and the oracle SQL)
     cols = [
         F.col("vec_id").alias("cand_id"), F.col("embedding").alias("ce"),
-        F.col("bucket").alias("cb"),
+        F.col("bucket").alias("cbucket"),
     ]
-    out_cols = ["query_id", "cand_id", "cos_sim", "rank"]
+    label = ["cand_label"] if keep_label else []
     if keep_label:
         cols.append(F.col("label").cast("int").alias("cand_label"))
-        out_cols.insert(2, "cand_label")
     c = srp_bucket(
         cand_src, signs, keep_cols=("label",) if keep_label else ()
     ).select(*cols)
-    cos = vectors.exact_dot(F.col("qe"), F.col("ce")) / (
-        vectors.norm(F.col("qe")) * vectors.norm(F.col("ce"))
-    )
-    pre_rank = [c for c in out_cols if c != "rank"]
-    return (
-        F.broadcast(q)
-        .join(c, (F.col("qb") == F.col("cb")) & (F.col("query_id") != F.col("cand_id")))
-        .withColumn("cos_sim", cos)
-        .select(*pre_rank)
-    )
+    return probe_join(
+        q, c, "cos_sim", vectors.cosine(F.col("qe"), F.col("ce")), on="bucket"
+    ).select("query_id", "cand_id", *label, "cos_sim")
 
 
 def _srp_multiprobe_topk(
@@ -1554,18 +1528,7 @@ def _srp_multiprobe_topk(
     pairs = _srp_multiprobe_pairs(
         spark, sf_dir, cand_filter=cand_filter, keep_label=keep_label
     )
-    out_cols = ["query_id", "cand_id", "cos_sim", "rank"]
-    if keep_label:
-        out_cols.insert(2, "cand_label")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOPK)
-        .select(*out_cols)
-        .orderBy("query_id", "rank")
-    )
+    return _topk(pairs, "cos_sim", *(["cand_label"] if keep_label else []))
 
 
 _ANN_FILTER_LABELS = (1, 3, 5, 7)  # the metadata predicate of the filtered gate
@@ -1642,22 +1605,14 @@ q AS (
     SELECT vec_id, embedding, bucket, {_MARGIN_KEYS_SQL} AS k
     FROM e WHERE vec_id < {_NQUERY}))
 SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-       {vectors.exact_dot_sql('q.embedding', 'c.embedding')}
-         / (sqrt({vectors.exact_dot_sql('q.embedding', 'q.embedding')})
-            * sqrt({vectors.exact_dot_sql('c.embedding', 'c.embedding')})) AS cos_sim
+       {vectors.cosine_sql('q.embedding', 'c.embedding')} AS cos_sim
 FROM q JOIN e c ON c.bucket = q.qb AND q.vec_id <> c.vec_id
 """
 
 
 ANN_LSH_SQL = f"""
 WITH scored AS ({_SRP_SCORED_SQL}),
-ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, cand_id) AS rank
-  FROM scored)
-SELECT query_id, cand_id, cos_sim, CAST(rank AS INTEGER) AS rank
-FROM ranked WHERE rank <= {_TOPK}
-ORDER BY query_id, rank
+{_COS_TOPK_SQL}
 """
 
 
@@ -1675,18 +1630,10 @@ q AS (
     WHERE vec_id < {_NQUERY})),
 scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS cand_id, c.label AS cand_label,
-         {vectors.exact_dot_sql('q.embedding', 'c.embedding')}
-           / (sqrt({vectors.exact_dot_sql('q.embedding', 'q.embedding')})
-              * sqrt({vectors.exact_dot_sql('c.embedding', 'c.embedding')})) AS cos_sim
+         {vectors.cosine_sql('q.embedding', 'c.embedding')} AS cos_sim
   FROM q JOIN e c ON c.bucket = q.qb AND q.vec_id <> c.vec_id),
-ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, cand_id) AS rank
-  FROM scored)
-SELECT query_id, cand_id, CAST(cand_label AS INTEGER) AS cand_label,
-       cos_sim, CAST(rank AS INTEGER) AS rank
-FROM ranked WHERE rank <= {_TOPK}
-ORDER BY query_id, rank
+{query_topk_sql('cos_sim DESC', _TOPK,
+                'query_id, cand_id, CAST(cand_label AS INTEGER) AS cand_label, cos_sim')}
 """
 
 
@@ -1778,20 +1725,22 @@ def _ivf_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ann_recall_audit`` so the audit measures exactly the plan the gate
     runs.  No pair appears twice: probes are distinct cells and each
     candidate lives in exactly one cell."""
-    q = _ivf_qprobe_table(spark, sf_dir)
     c = _ivf_assigned_table(spark, sf_dir).select(
         F.col("vec_id").alias("cand_id"), F.col("embedding").alias("ce"),
         F.col("cell").alias("ccell"),
     )
-    cos = vectors.exact_dot(F.col("qe"), F.col("ce")) / (
-        vectors.norm(F.col("qe")) * vectors.norm(F.col("ce"))
+    return _ivf_cos_pairs(_ivf_qprobe_table(spark, sf_dir), c).select(
+        "query_id", "cand_id", "cos_sim"
     )
-    return (
-        F.broadcast(q)
-        .join(c, (F.col("qcell") == F.col("ccell"))
-              & (F.col("query_id") != F.col("cand_id")))
-        .withColumn("cos_sim", cos)
-        .select("query_id", "cand_id", "cos_sim")
+
+
+def _ivf_cos_pairs(q: DataFrame, c: DataFrame) -> DataFrame:
+    """Probed-cell pairs with exact cosine: query probes ``q``
+    (``query_id, qe, qcell``) against cell members ``c`` (``cand_id, ce,
+    ccell``) — the IVF-flat candidate step of the in-session, persisted
+    and ingest gates."""
+    return probe_join(
+        q, c, "cos_sim", vectors.cosine(F.col("qe"), F.col("ce")), on="cell"
     )
 
 
@@ -1812,16 +1761,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-pruned scans; recall scales with nprobe — parameter
     change, same plan.
     """
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id")
-    )
-    return (
-        _ivf_pairs(spark, sf_dir)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOPK)
-        .select("query_id", "cand_id", "cos_sim", "rank")
-        .orderBy("query_id", "rank")
-    )
+    return _topk(_ivf_pairs(spark, sf_dir), "cos_sim")
 
 
 ann_ivf_topk.__doc__ = (ann_ivf_topk.__doc__ or "").format(
@@ -1889,18 +1829,16 @@ def _ivf_cent_ctes(prefix: str = "", corpus_where: str = "") -> str:
     return ",\n".join(parts)
 
 
-def _ivf_probe_ctes(prefix: str = "", assign_from: str | None = None,
-                    query_from: str = "embeddings") -> str:
+def _ivf_probe_ctes(prefix: str = "", assign_from: str | None = None) -> str:
     """Corpus assignment + query nprobe-cell probes against the trained
     ``{prefix}cent`` table — the oracle mirror of ``ivf_assign`` +
     ``_ivf_query_probes``, shared by the IVF-flat, IVF-PQ, and
     streaming-ingest oracles.  ``assign_from`` overrides the assignment
     slice (the ingest gate trains on the pre-stream corpus but assigns
-    corpus + streamed rows).  ``query_from`` is the table the query
-    probes scan — it deliberately does NOT follow ``_ivf_cent_ctes``'s
-    ``corpus_where``: restricting the TRAINING slice must not restrict
-    which vectors may act as queries (both current callers want the full
-    table; a caller slicing the corpus must choose explicitly)."""
+    corpus + streamed rows).  The query probes always scan the whole
+    ``embeddings`` table — they deliberately do NOT follow
+    ``_ivf_cent_ctes``'s ``corpus_where``: restricting the TRAINING
+    slice must not restrict which vectors may act as queries."""
     p = prefix
     src = assign_from or f"{p}ebase"
     return f"""{p}assigned AS MATERIALIZED (
@@ -1915,7 +1853,7 @@ def _ivf_probe_ctes(prefix: str = "", assign_from: str | None = None,
     SELECT q.vec_id, q.embedding, c.cid,
            ROW_NUMBER() OVER (PARTITION BY q.vec_id
                               ORDER BY {_l2q_sql('q.embedding', 'c.ce')}, c.cid) AS rn
-    FROM {query_from} q CROSS JOIN {p}cent c
+    FROM embeddings q CROSS JOIN {p}cent c
     WHERE q.vec_id < {_NQUERY})
   WHERE rn <= {_IVF_NPROBE})"""
 
@@ -1924,22 +1862,14 @@ _IVF_SCORED_SQL = f"""
 WITH {_ivf_cent_ctes()},
 {_ivf_probe_ctes()}
 SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-       {vectors.exact_dot_sql('q.embedding', 'c.embedding')}
-         / (sqrt({vectors.exact_dot_sql('q.embedding', 'q.embedding')})
-            * sqrt({vectors.exact_dot_sql('c.embedding', 'c.embedding')})) AS cos_sim
+       {vectors.cosine_sql('q.embedding', 'c.embedding')} AS cos_sim
 FROM qprobe q JOIN assigned c ON c.cell = q.cid AND q.vec_id <> c.vec_id
 """
 
 
 ANN_IVF_SQL = f"""
 WITH scored AS ({_IVF_SCORED_SQL}),
-ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, cand_id) AS rank
-  FROM scored)
-SELECT query_id, cand_id, cos_sim, CAST(rank AS INTEGER) AS rank
-FROM ranked WHERE rank <= {_TOPK}
-ORDER BY query_id, rank
+{_COS_TOPK_SQL}
 """
 
 
@@ -1994,49 +1924,45 @@ def _corpus_fingerprint(spark: SparkSession, sf_dir: str, table: str) -> str:
                 lambda: fingerprint(_t(spark, sf_dir, table)[0]))
 
 
-def _serve_persisted_ivf_topk(
+def _persisted_probes(
     spark: SparkSession, sf_dir: str, path: str
-) -> DataFrame:
-    """The serve-session plan: artifacts in, top-k out, zero training."""
+) -> tuple[DataFrame, list[int]]:
+    """The query probes against a persisted IVF index's centroids, and
+    the sorted cells they probe.  ONE bounded collect (<= nq x nprobe
+    rows): the probe rows become an inline literal table, so the probe
+    plan executes exactly once — not again as the join's broadcast side —
+    and the probed cells become the STATIC partition filter on the
+    cells scan."""
     from ..inline import inline_table
     from ..operators import ann_index as ai
-    from ..operators import artifact_io as aio
 
     centroids = ai.load_centroids(spark, path)
     (emb,) = _t(spark, sf_dir, "embeddings")
-    # ONE bounded collect (<= nq x nprobe rows): the probe rows become an
-    # inline literal table, so the probe plan executes exactly once — not
-    # again as the join's broadcast side — and the distinct probed cells
-    # become the STATIC partition filter on the cells scan
     rows = _ivf_query_probes(emb, centroids).collect()
-    probed = sorted({int(r.qcell) for r in rows})
     probes = inline_table(
         spark,
         [(int(r.query_id), [float(x) for x in r.qe], int(r.qcell))
          for r in rows],
         "query_id long, qe array<float>, qcell long",
     )
-    cells = aio.load(spark, path, "cells", "cell", probed).select(
+    return probes, sorted({int(r.qcell) for r in rows})
+
+
+def _serve_persisted_ivf_topk(
+    spark: SparkSession, sf_dir: str, path: str, cells: str = "cells"
+) -> DataFrame:
+    """The serve-session plan: artifacts in, top-k out, zero training.
+    ``cells`` names the cell layout served; the ingest index serves its
+    live ``cells`` and its compacted ``cells_compact``."""
+    from ..operators import artifact_io as aio
+
+    probes, probed = _persisted_probes(spark, sf_dir, path)
+    c = aio.load(spark, path, cells, "cell", probed).select(
         F.col("vec_id").alias("cand_id"),
         F.col("embedding").alias("ce"),
         F.col("cell").cast("long").alias("ccell"),
     )
-    cos = vectors.exact_dot(F.col("qe"), F.col("ce")) / (
-        vectors.norm(F.col("qe")) * vectors.norm(F.col("ce"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id")
-    )
-    return (
-        F.broadcast(probes)
-        .join(cells, (F.col("qcell") == F.col("ccell"))
-              & (F.col("query_id") != F.col("cand_id")))
-        .withColumn("cos_sim", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOPK)
-        .select("query_id", "cand_id", "cos_sim", "rank")
-        .orderBy("query_id", "rank")
-    )
+    return _topk(_ivf_cos_pairs(probes, c), "cos_sim")
 
 
 _PQ_M = 4       # subspaces (64-dim embedding -> 4 x 16-dim subvectors)
@@ -2145,21 +2071,18 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
     c = coded.select(F.col("vec_id").alias("cand_id"), F.col("recon").alias("cr"))
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "cand_id")
-    return (
-        F.broadcast(q)
-        .join(c, F.col("query_id") != F.col("cand_id"))
-        .withColumn("adc_dist", _l2q(F.col("qe"), F.col("cr")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOPK)
-        .select("query_id", "cand_id", "adc_dist", "rank")
-        .orderBy("query_id", "rank")
-    )
+    return _topk(_adc_pairs(q, c), "adc_dist")
 
 
 ann_pq_topk.__doc__ = (ann_pq_topk.__doc__ or "").format(
     m=_PQ_M, sub=_PQ_SUB, k=_PQ_K
 )
+
+
+def _adc_pairs(q: DataFrame, c: DataFrame, on: str | None = None) -> DataFrame:
+    """Pairs scored by asymmetric distance: raw queries ``qe`` against
+    candidate PQ reconstructions ``cr``, on probe key ``on``."""
+    return probe_join(q, c, "adc_dist", _l2q(F.col("qe"), F.col("cr")), on=on)
 
 
 ANN_PQ_SQL = f"""
@@ -2169,13 +2092,7 @@ scored AS (
          CAST({_l2q_sql('q.embedding', 'r.recon')} AS BIGINT) AS adc_dist
   FROM embeddings q JOIN recon r ON q.vec_id <> r.vec_id
   WHERE q.vec_id < {_NQUERY}),
-ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY adc_dist, cand_id) AS rank
-  FROM scored)
-SELECT query_id, cand_id, adc_dist, CAST(rank AS INTEGER) AS rank
-FROM ranked WHERE rank <= {_TOPK}
-ORDER BY query_id, rank
+{_ADC_TOPK_SQL}
 """
 
 
@@ -2235,16 +2152,7 @@ def _serve_persisted_pq_topk(
         F.col("vec_id").alias("cand_id"),
         pqi.pq_recon_expr(codebook).alias("cr"),
     )
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "cand_id")
-    return (
-        F.broadcast(q)
-        .join(c, F.col("query_id") != F.col("cand_id"))
-        .withColumn("adc_dist", _l2q(F.col("qe"), F.col("cr")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOPK)
-        .select("query_id", "cand_id", "adc_dist", "rank")
-        .orderBy("query_id", "rank")
-    )
+    return _topk(_adc_pairs(q, c), "adc_dist")
 
 
 def pq_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2324,13 +2232,7 @@ def _ivf_pq_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cand_id"), F.col("cell").alias("ccell"),
         F.col("recon").alias("cr"),
     )
-    return (
-        F.broadcast(q)
-        .join(c, (F.col("qcell") == F.col("ccell"))
-              & (F.col("query_id") != F.col("cand_id")))
-        .withColumn("adc_dist", _l2q(F.col("qe"), F.col("cr")))
-        .select("query_id", "cand_id", "adc_dist")
-    )
+    return _adc_pairs(q, c, on="cell").select("query_id", "cand_id", "adc_dist")
 
 
 _PQ_REFINE_R = 64  # raw vectors re-read per query by the refine step —
@@ -2348,27 +2250,20 @@ def _ivf_pq_refine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     query however large the corpus — the standard way production stores
     buy back the recall the 64x compression costs (measured side by
     side in ``ann_recall_audit``)."""
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "cand_id")
-    short = (
-        _ivf_pq_pairs(spark, sf_dir)
-        .withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= _PQ_REFINE_R)
-        .select("query_id", "cand_id")
-    )
+    short = query_topk(
+        _ivf_pq_pairs(spark, sf_dir), "adc_dist", False, _PQ_REFINE_R
+    ).select("query_id", "cand_id")
     (emb,) = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < _NQUERY).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
     c = emb.select(F.col("vec_id").alias("cand_id"),
                    F.col("embedding").alias("ce"))
-    cos = vectors.exact_dot(F.col("qe"), F.col("ce")) / (
-        vectors.norm(F.col("qe")) * vectors.norm(F.col("ce"))
-    )
     sq = short.join(F.broadcast(q), "query_id")
     return (
         F.broadcast(sq)
         .join(c, "cand_id")
-        .withColumn("cos_sim", cos)
+        .withColumn("cos_sim", vectors.cosine(F.col("qe"), F.col("ce")))
         .select("query_id", "cand_id", "cos_sim")
     )
 
@@ -2382,16 +2277,7 @@ def ann_ivf_pq_refine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     CONSTANT per-query raw-IO budget — recall@5 measured in
     ``ann_recall_audit`` rises from ~10% (pure ADC) to ~55-70% at
     {r} raw reads/query on the near-uniform fixture."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id")
-    )
-    return (
-        _ivf_pq_refine_pairs(spark, sf_dir)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOPK)
-        .select("query_id", "cand_id", "cos_sim", "rank")
-        .orderBy("query_id", "rank")
-    )
+    return _topk(_ivf_pq_refine_pairs(spark, sf_dir), "cos_sim")
 
 
 ann_ivf_pq_refine_topk.__doc__ = (ann_ivf_pq_refine_topk.__doc__ or "").format(
@@ -2419,14 +2305,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The reference has no ANN surface (`/root/reference/src/lib.rs` stops
     at generate+register+COPY); this extends it per the north star."""
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "cand_id")
-    return (
-        _ivf_pq_pairs(spark, sf_dir)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOPK)
-        .select("query_id", "cand_id", "adc_dist", "rank")
-        .orderBy("query_id", "rank")
-    )
+    return _topk(_ivf_pq_pairs(spark, sf_dir), "adc_dist")
 
 
 ann_ivf_pq_topk.__doc__ = (ann_ivf_pq_topk.__doc__ or "").format(
@@ -2448,13 +2327,7 @@ JOIN recon r ON r.vec_id = a.vec_id
 
 ANN_IVF_PQ_SQL = f"""
 WITH scored AS ({_IVF_PQ_SCORED_SQL}),
-ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY adc_dist, cand_id) AS rank
-  FROM scored)
-SELECT query_id, cand_id, adc_dist, CAST(rank AS INTEGER) AS rank
-FROM ranked WHERE rank <= {_TOPK}
-ORDER BY query_id, rank
+{_ADC_TOPK_SQL}
 """
 
 
@@ -2502,51 +2375,26 @@ def _serve_persisted_ivfpq_topk(
 ) -> DataFrame:
     """The serve-session plan: centroid + codebook + probed code cells in,
     ADC top-k out, zero training."""
-    from ..inline import inline_table
-    from ..operators import ann_index as ai
     from ..operators import artifact_io as aio
     from ..operators import pq_index as pqi
 
-    centroids = ai.load_centroids(spark, path)
+    probes, probed = _persisted_probes(spark, sf_dir, path)
     codebook = pqi.load_pq_codebook(spark, path)
-    (emb,) = _t(spark, sf_dir, "embeddings")
-    rows = _ivf_query_probes(emb, centroids).collect()
-    probed = sorted({int(r.qcell) for r in rows})
-    probes = inline_table(
-        spark,
-        [(int(r.query_id), [float(x) for x in r.qe], int(r.qcell))
-         for r in rows],
-        "query_id long, qe array<float>, qcell long",
-    )
     cells = aio.load(spark, path, "cells", "cell", probed).select(
         F.col("vec_id").alias("cand_id"),
         F.col("cell").cast("long").alias("ccell"),
         pqi.pq_recon_expr(codebook).alias("cr"),
     )
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "cand_id")
-    return (
-        F.broadcast(probes)
-        .join(cells, (F.col("qcell") == F.col("ccell"))
-              & (F.col("query_id") != F.col("cand_id")))
-        .withColumn("adc_dist", _l2q(F.col("qe"), F.col("cr")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOPK)
-        .select("query_id", "cand_id", "adc_dist", "rank")
-        .orderBy("query_id", "rank")
-    )
+    return _topk(_adc_pairs(probes, cells, on="cell"), "adc_dist")
 
 
 _IVF_PQ_REFINE_SCORED_SQL = f"""
 WITH adc AS ({_IVF_PQ_SCORED_SQL}),
 short AS (
-  SELECT query_id, cand_id FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                 ORDER BY adc_dist, cand_id) AS r
-    FROM adc) WHERE r <= {_PQ_REFINE_R})
+  SELECT query_id, cand_id FROM ({query_rank_sql('adc', 'adc_dist', 'r')})
+  WHERE r <= {_PQ_REFINE_R})
 SELECT s.query_id, s.cand_id,
-       {vectors.exact_dot_sql('q.embedding', 'c.embedding')}
-         / (sqrt({vectors.exact_dot_sql('q.embedding', 'q.embedding')})
-            * sqrt({vectors.exact_dot_sql('c.embedding', 'c.embedding')})) AS cos_sim
+       {vectors.cosine_sql('q.embedding', 'c.embedding')} AS cos_sim
 FROM short s
 JOIN embeddings q ON q.vec_id = s.query_id
 JOIN embeddings c ON c.vec_id = s.cand_id
@@ -2555,13 +2403,7 @@ JOIN embeddings c ON c.vec_id = s.cand_id
 
 ANN_IVF_PQ_REFINE_SQL = f"""
 WITH scored AS ({_IVF_PQ_REFINE_SCORED_SQL}),
-ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, cand_id) AS rank
-  FROM scored)
-SELECT query_id, cand_id, cos_sim, CAST(rank AS INTEGER) AS rank
-FROM ranked WHERE rank <= {_TOPK}
-ORDER BY query_id, rank
+{_COS_TOPK_SQL}
 """
 
 
@@ -5798,7 +5640,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the kernel emits frame_idx ascending per asset and assets arrive
     # range-partitioned/sorted, so the output is already globally ordered
     # by (asset_id, frame_idx)
-    frames = sample_frames(assets, every_ms=1000, frame_bytes=64)
+    frames = sample_frames(assets)
     return frames.select(
         "asset_id",
         "frame_idx",
@@ -7735,10 +7577,8 @@ def _ann_recall_audit_sql() -> str:
         return f"""{tag}_sc AS MATERIALIZED (
   SELECT query_id, cand_id, {score} FROM ({scored_sql})),
 {tag}_top AS (
-  SELECT query_id, cand_id FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                 ORDER BY {score} {direction}, cand_id) AS rank
-    FROM {tag}_sc) WHERE rank <= {_TOPK}),
+  SELECT query_id, cand_id FROM ({query_rank_sql(f'{tag}_sc', f'{score} {direction}')})
+  WHERE rank <= {_TOPK}),
 {tag}_pq AS (
   SELECT g.query_id, COUNT(a.cand_id) AS h, COUNT(*) AS g
   FROM gold g LEFT JOIN {tag}_top a

@@ -1151,20 +1151,15 @@ def _drift_retrain_oracle() -> str:
     the incoming slice) AND the post-swap serve — the trained-IVF chain
     when any cell drifted, the v1 raw-seed serve when none did."""
     from ..functions import vectors
+    from ..operators.similarity import query_rank_sql
     from .extensions import (
-        _IVF_NPROBE,
-        _NQUERY,
         _TOPK,
         _ivf_cent_ctes,
         _ivf_probe_ctes,
         _l2q_sql,
     )
 
-    cos = (
-        f"{vectors.exact_dot_sql('q.embedding', 'c.embedding')}"
-        f" / (sqrt({vectors.exact_dot_sql('q.embedding', 'q.embedding')})"
-        f" * sqrt({vectors.exact_dot_sql('c.embedding', 'c.embedding')}))"
-    )
+    cos = vectors.cosine_sql("q.embedding", "c.embedding")
     return f"""
 WITH {_ivf_cent_ctes()},
 {_ivf_probe_ctes()},
@@ -1203,22 +1198,16 @@ drflag AS (
 v2scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS cand_id, {cos} AS cos_sim
   FROM qprobe q JOIN assigned c ON c.cell = q.cid AND q.vec_id <> c.vec_id),
-v2ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, cand_id) AS rank
-  FROM v2scored),
+v2ranked AS ({query_rank_sql('v2scored', 'cos_sim DESC')}),
 v1ebase AS MATERIALIZED (
   SELECT vec_id, embedding FROM embeddings WHERE vec_id < {_EMB_SPLIT}),
 v1cent AS MATERIALIZED (SELECT cid, ce FROM drcent),
-{_ivf_probe_ctes(prefix="v1", query_from="embeddings")},
+{_ivf_probe_ctes(prefix="v1")},
 v1scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS cand_id, {cos} AS cos_sim
   FROM v1qprobe q JOIN v1assigned c
     ON c.cell = q.cid AND q.vec_id <> c.vec_id),
-v1ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, cand_id) AS rank
-  FROM v1scored)
+v1ranked AS ({query_rank_sql('v1scored', 'cos_sim DESC')})
 SELECT query_id, cand_id, cos_sim, CAST(rank AS INTEGER) AS rank,
        CAST((SELECT n_drifted FROM drflag) AS INTEGER) AS n_drifted_cells,
        CAST(CASE WHEN (SELECT n_drifted FROM drflag) > 0 THEN 2 ELSE 1 END
@@ -1283,11 +1272,8 @@ def ann_ingest_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus + stream in one closed form, so a stream that dropped or
     double-ingested a batch hash-fails."""
     from ..catalog import load_table
-    from ..functions import vectors
     from ..streaming.maintenance import ann_index_fold
-    from .extensions import _TOPK, _ivf_query_probes
-
-    from pyspark.sql.window import Window
+    from .extensions import _ivf_cos_pairs, _ivf_query_probes, _topk
 
     def maintain() -> tuple[DataFrame, int, list]:
         centroids = _ingest_trained_centroids(spark, sf_dir)
@@ -1301,37 +1287,29 @@ def ann_ingest_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx, _, centroids = memo(spark, ("stream", "ann_ingest_topk", sf_dir),
                              maintain)
     emb = load_table(spark, sf_dir, "embeddings")
-    q = _ivf_query_probes(emb, centroids)
     c = idx.select(
         F.col("vec_id").alias("cand_id"), F.col("embedding").alias("ce"),
         F.col("cell").alias("ccell"),
     )
-    cos = vectors.exact_dot(F.col("qe"), F.col("ce")) / (
-        vectors.norm(F.col("qe")) * vectors.norm(F.col("ce"))
+    return _from_stream(
+        _topk(_ivf_cos_pairs(_ivf_query_probes(emb, centroids), c), "cos_sim")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id")
-    )
-    return (
-        F.broadcast(q)
-        .join(c, (F.col("qcell") == F.col("ccell"))
-              & (F.col("query_id") != F.col("cand_id")))
-        .withColumn("cos_sim", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOPK)
-        .select(
-            "query_id", "cand_id",
-            (F.col("cand_id") >= F.lit(_EMB_SPLIT)).alias("from_stream"),
-            "cos_sim", "rank",
-        )
-        .orderBy("query_id", "rank")
+
+
+def _from_stream(topk: DataFrame) -> DataFrame:
+    """The ingest gates' top-k with ``from_stream``: whether each ranked
+    neighbor arrived through the stream rather than the corpus slice."""
+    return topk.select(
+        "query_id", "cand_id",
+        (F.col("cand_id") >= F.lit(_EMB_SPLIT)).alias("from_stream"),
+        "cos_sim", "rank",
     )
 
 
 def _ann_ingest_oracle() -> str:
     from ..functions import vectors
+    from ..operators.similarity import query_topk_sql
     from .extensions import (
-        _NQUERY,
         _TOPK,
         _ivf_cent_ctes,
         _ivf_probe_ctes,
@@ -1343,18 +1321,10 @@ WITH {_ivf_cent_ctes(prefix='ig', corpus_where=f'vec_id < {_EMB_SPLIT}')},
 , scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
          c.vec_id >= {_EMB_SPLIT} AS from_stream,
-         {vectors.exact_dot_sql('q.embedding', 'c.embedding')}
-           / (sqrt({vectors.exact_dot_sql('q.embedding', 'q.embedding')})
-              * sqrt({vectors.exact_dot_sql('c.embedding', 'c.embedding')})) AS cos_sim
+         {vectors.cosine_sql('q.embedding', 'c.embedding')} AS cos_sim
   FROM igqprobe q JOIN igassigned c
     ON c.cell = q.cid AND q.vec_id <> c.vec_id),
-ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, cand_id) AS rank
-  FROM scored)
-SELECT query_id, cand_id, from_stream, cos_sim, CAST(rank AS INTEGER) AS rank
-FROM ranked WHERE rank <= {_TOPK}
-ORDER BY query_id, rank
+{query_topk_sql('cos_sim DESC', _TOPK, 'query_id, cand_id, from_stream, cos_sim')}
 """
 
 
@@ -1380,14 +1350,16 @@ def ann_persisted_ingest_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed cells (static partition filter), ranking exactly as
     ``ann_ingest_topk`` — same oracle, so durability provably changed the
     index's lifetime, not its answers."""
-    path, emb = _ensure_ann_ingest_index(spark, sf_dir)
+    from .extensions import _serve_persisted_ivf_topk
+
+    path = _ensure_ann_ingest_index(spark, sf_dir)
     # serve session: artifacts + probed cells only, no training state
-    return _serve_ingest_ann(spark, emb, path)
+    return _from_stream(_serve_persisted_ivf_topk(spark, sf_dir, path))
 
 
 def _ensure_ann_ingest_index(spark: SparkSession, sf_dir: str):
     """Build-if-needed for the durable ingest index (manifest-gated);
-    returns ``(path, embeddings)``.  Shared by the serve gate and the
+    returns its path.  Shared by the serve gate and the
     compaction job, so OPTIMIZE never pays a serve-plan probe collect
     just to check the index exists."""
     from ..catalog import load_table
@@ -1425,60 +1397,7 @@ def _ensure_ann_ingest_index(spark: SparkSession, sf_dir: str):
         run_foreach_batch(spark, _emb_feed(spark, sf_dir),
                           nonempty_appends(write_batch), "ann_persisted_ingest")
         aio.update_manifest(path, spark=spark, ingested=True)  # durability point — LAST
-    return path, emb
-
-
-def _serve_ingest_ann(spark: SparkSession, emb: DataFrame, path: str,
-                      cells_subdir: str = "cells") -> DataFrame:
-    """The durable-index serve plan, shared by the live and the COMPACTED
-    cell layouts: one bounded collect (the probe rows join as an inline
-    literal table so the probe plan never re-executes as the broadcast
-    side) + a statically partition-pruned scan of the probed cells."""
-    from ..functions import vectors
-    from ..operators import ann_index as ai
-    from ..operators import artifact_io as aio
-    from ..inline import inline_table
-    from .extensions import _TOPK, _ivf_query_probes
-
-    from pyspark.sql.window import Window
-
-    centroids = ai.load_centroids(spark, path)
-    rows = _ivf_query_probes(emb, centroids).collect()
-    probed = sorted({int(r.qcell) for r in rows})
-    q = inline_table(
-        spark,
-        [(int(r.query_id), [float(x) for x in r.qe], int(r.qcell))
-         for r in rows],
-        "query_id long, qe array<float>, qcell long",
-    )
-    c = (
-        aio.load(spark, path, cells_subdir, "cell", probed)
-        .select(
-            F.col("vec_id").alias("cand_id"),
-            F.col("embedding").alias("ce"),
-            F.col("cell").cast("long").alias("ccell"),
-        )
-    )
-    cos = vectors.exact_dot(F.col("qe"), F.col("ce")) / (
-        vectors.norm(F.col("qe")) * vectors.norm(F.col("ce"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id")
-    )
-    return (
-        F.broadcast(q)
-        .join(c, (F.col("qcell") == F.col("ccell"))
-              & (F.col("query_id") != F.col("cand_id")))
-        .withColumn("cos_sim", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOPK)
-        .select(
-            "query_id", "cand_id",
-            (F.col("cand_id") >= F.lit(_EMB_SPLIT)).alias("from_stream"),
-            "cos_sim", "rank",
-        )
-        .orderBy("query_id", "rank")
-    )
+    return path
 
 
 def ann_persisted_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1494,12 +1413,15 @@ def ann_persisted_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``tests/test_ann_index.py`` pins the file-count drop and pruning on
     the compacted directory."""
     from ..operators.maintenance import optimize
+    from .extensions import _serve_persisted_ivf_topk
 
     # ensure the streamed index exists (idempotent, manifest-gated) —
     # without building the serve gate's probe plan
-    path, emb = _ensure_ann_ingest_index(spark, sf_dir)
+    path = _ensure_ann_ingest_index(spark, sf_dir)
     optimize(spark, path, "cells", "compact_src_files", "cell")
-    return _serve_ingest_ann(spark, emb, path, cells_subdir="cells_compact")
+    return _from_stream(
+        _serve_persisted_ivf_topk(spark, sf_dir, path, "cells_compact")
+    )
 
 
 

@@ -2,7 +2,7 @@
 
 Every gate runs a Structured Streaming query over bounded input with the
 AvailableNow trigger, and this module is the only place that starts one
-(``tests/test_streaming_structure.py`` fails on a stream writer, a
+(``tests/test_structure.py`` fails on a stream writer, a
 files-per-trigger option or a wait for termination anywhere else in the
 package).  ``_run`` is the core both sink kinds share: a RAM-backed
 checkpoint dir, a scoped shuffle-partition override, the run to

@@ -24,7 +24,7 @@ def memoized(spark, *key):
 _FIXTURES_PRESENT = os.path.isdir(SF_DIR)
 _FIXTURE_FREE_FILES = {
     "test_tpch_gen.py", "test_sql_udtf.py", "test_dead_code.py",
-    "test_streaming_structure.py", "test_kernel_structure.py",
+    "test_structure.py",
 }
 
 

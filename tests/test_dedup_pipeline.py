@@ -4,14 +4,19 @@ baseline; kernel implementations agree with each other."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from datafusion_tpch_spark.catalog import load_table
-from datafusion_tpch_spark.functions import text
+from datafusion_tpch_spark.functions import text, vectors
 from datafusion_tpch_spark.operators.dedup import shingle_hashes
-from datafusion_tpch_spark.operators.similarity import topk_cosine
+from datafusion_tpch_spark.operators.similarity import (
+    probe_join,
+    query_topk,
+    topk_cosine,
+)
 from datafusion_tpch_spark.queries import all_queries
-from datafusion_tpch_spark.queries.extensions import _JACCARD_T
+from datafusion_tpch_spark.queries.extensions import _JACCARD_T, _l2q
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -90,6 +95,44 @@ def test_topk_kernel_agrees_with_jvm_expression_query(spark):
     )
     want = all_queries()["ann_bruteforce_topk"].build(spark, SF_DIR).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
+
+
+# two queries probing cell 0; candidates 4 and 5 are the same vector (an
+# exact score tie), 1 and 2 are the queries themselves, 6 sits in cell 1
+_RANK_Q = [(1, [1.0, 0.0], 0), (2, [0.0, 1.0], 0)]
+_RANK_C = [(1, [1.0, 0.0], 0), (2, [0.0, 1.0], 0), (3, [2.0, 0.0], 0),
+           (4, [1.0, 1.0], 0), (5, [1.0, 1.0], 0), (6, [1.0, 0.0], 1)]
+# per query, the candidates in rank order, by k
+_RANK_WANT = {
+    ("cosine", 3): {1: [3, 4, 5], 2: [4, 5, 1]},
+    ("cosine", 10): {1: [3, 4, 5, 2], 2: [4, 5, 1, 3]},
+    ("adc", 3): {1: [3, 4, 5], 2: [4, 5, 1]},
+    ("adc", 10): {1: [3, 4, 5, 2], 2: [4, 5, 1, 3]},
+}
+
+
+@pytest.mark.parametrize("score", ["cosine", "adc"])
+@pytest.mark.parametrize("k,cands", [(3, _RANK_C), (10, _RANK_C), (3, [])],
+                         ids=["cut", "fewer_than_k", "no_candidates"])
+def test_probe_rank_cut(spark, score, k, cands):
+    """The shared probe -> score -> rank -> cut: the probe key and the
+    self-pair filter select the candidates; ties go to the smaller
+    cand_id; fewer than k candidates are all returned, ranked 1..n; no
+    candidates give no rows under the declared schema.  Cosine ranks
+    descending, ADC distance ascending."""
+    q = spark.createDataFrame(_RANK_Q, "query_id long, qe array<float>, qcell long")
+    c = spark.createDataFrame(cands, "cand_id long, ce array<float>, ccell long")
+    value = (vectors.cosine if score == "cosine" else _l2q)(F.col("qe"), F.col("ce"))
+    out = query_topk(probe_join(q, c, "s", value, on="cell"), "s",
+                     score == "cosine", k)
+    assert out.columns == ["query_id", "qe", "qcell", "cand_id", "ce", "ccell",
+                           "s", "rank"]
+    assert out.schema["rank"].dataType.simpleString() == "int"
+    got: dict[int, list] = {}
+    for r in out.orderBy("query_id", "rank").collect():
+        got.setdefault(r.query_id, []).append((r.rank, r.cand_id))
+    want = _RANK_WANT[(score, k)] if cands else {}
+    assert got == {qid: list(enumerate(ids, 1)) for qid, ids in want.items()}
 
 
 def test_srp_band_buckets_band0_matches_srp_bucket(spark):

@@ -27,7 +27,7 @@ def test_sample_frames_fanout(spark):
         [(i, (i + 1) * 1000, bytes(range(256))) for i in range(6)],
         "asset_id long, duration_ms long, content binary",
     )
-    frames = sample_frames(vids, every_ms=1000, frame_bytes=32).collect()
+    frames = sample_frames(vids).collect()
     # asset i yields i+1 frames
     per_asset = {}
     for r in frames:
@@ -37,7 +37,7 @@ def test_sample_frames_fanout(spark):
         assert [r.frame_idx for r in sorted(rows, key=lambda x: x.frame_idx)] == list(
             range(len(rows))
         )
-        assert all(len(r.frame) == 32 for r in rows)
+        assert all(len(r.frame) == 64 for r in rows)
         assert all(r.ts_ms == r.frame_idx * 1000 for r in rows)
 
 
